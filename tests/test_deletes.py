@@ -12,6 +12,7 @@ this is the maintenance surface a long-lived 10^12-file index needs.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 import numpy as np
 import pytest
@@ -31,6 +32,7 @@ from torchtrajectory_spark.operators.index import (
     read_doc_stats,
     read_manifest,
     read_index_config,
+    read_postings,
     tombstone_ids,
 )
 from torchtrajectory_spark.operators.wand import (
@@ -196,6 +198,51 @@ def test_merge_carries_tombstones(spark, corpus, tmp_path):
     assert dead not in {
         r["doc_id"] for r in topk_bm25_index(spark, dm, Q, K).collect()
     }
+
+
+@contextmanager
+def _arrow_batch_rows(spark, n: int):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_merge_carries_runs_across_arrow_batches(
+        spark, corpus, base_dir, del_dir, tmp_path):
+    """The merge streams each sorted shuffle partition batch by batch and
+    carries a batch's trailing (term, salt) run into the next. With
+    3-row Arrow batches nearly every run straddles a boundary: the build
+    must still equal the default-batch build, and a compaction that
+    purges tombstones must still equal a fresh build without them."""
+    d = str(tmp_path / "small_batches")
+    src, top1 = del_dir
+    dst = str(tmp_path / "purged")
+    with _arrow_batch_rows(spark, 3):
+        _build(spark, corpus, d)
+        compact_index(spark, src, dst)
+    cols = ["segment", "bucket", "term", "salt", "block_id", "n_docs",
+            "first_doc", "last_doc", "max_tf", "min_dl",
+            "doc_gaps", "tfs", "dls"]
+    a = read_postings(spark, base_dir).select(*cols)
+    b = read_postings(spark, d).select(*cols)
+    assert a.subtract(b).count() == 0
+    assert b.subtract(a).count() == 0
+
+    assert postings_flat(spark, dst, live_only=False).where(
+        F.col("doc_id") == top1
+    ).count() == 0
+    assert read_manifest(spark, dst).first()["row_count"] == N_ROWS - 1
+    fresh = str(tmp_path / "fresh")
+    _build(spark, corpus.where(F.col("doc_id") != top1), fresh)
+    got = topk_bm25_index(spark, dst, Q, K).collect()
+    exp = topk_bm25_index(spark, fresh, Q, K).collect()
+    assert [(r["doc_id"], round(r["score"], 12)) for r in got] == [
+        (r["doc_id"], round(r["score"], 12)) for r in exp
+    ]
 
 
 # ------------------------------- prefix ---------------------------------

@@ -884,6 +884,25 @@ def test_batch_afters_match_single_search_after(spark, engine):
     assert got["b"] == single_b1  # page-1 member untouched
 
 
+def test_batch_afters_int_ids_and_unknown_key(spark, engine):
+    """``afters`` keys are coerced like the query ids (an int id pages
+    its query), and a key that names no query raises instead of silently
+    serving page 1."""
+    eng, _ = engine
+    k = 5
+    qs = {1: ["spark", "join"], 2: ["dup", "scan"]}
+    p1 = eng.find_topk(qs[1], k).collect()
+    cur = (float(p1[-1]["score"]), int(p1[-1]["doc_id"]))
+    single = [(r["doc_id"], r["score"])
+              for r in eng.find_topk(qs[1], k, after=cur).collect()]
+    rows = eng.find_topk_many(qs, k, afters={1: cur}).collect()
+    got = sorted(((r["doc_id"], r["score"]) for r in rows
+                  if r["query_id"] == "1"), key=lambda x: (-x[1], x[0]))
+    assert got == single
+    with pytest.raises(ValueError, match="not query ids"):
+        eng.find_topk_many(qs, k, afters={"l": cur})
+
+
 def test_phrase_scored_matches_brute_reference(spark, engine):
     """Scored PhraseQuery == brute pandas reference: summed
     constituent-term idf × tf_sat(phrase occurrences, dl)."""

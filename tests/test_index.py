@@ -308,28 +308,43 @@ def test_write_debug_index_roundtrip(spark, tmp_path):
     pd.testing.assert_frame_equal(got, exp)
 
 
-def test_parallel_segments_identical_to_serial(spark, corpus, tmp_path_factory):
-    """Overlapped segment commits produce the same postings + doc_stats as
-    the serial loop (segments are independent atomic commits; completion
-    order must not matter)."""
-    d_ser = str(tmp_path_factory.mktemp("idx_ser"))
-    d_par = str(tmp_path_factory.mktemp("idx_par"))
+@pytest.mark.parametrize("with_positions", [False, True],
+                         ids=["tf", "positions"])
+def test_segments_equal_single_segment_builds(spark, corpus, index_dir,
+                                              tmp_path_factory,
+                                              with_positions):
+    """The one-pass build shares its map, shuffle and doc_stats pass
+    across segments; segment ``s`` must still equal a one-segment build
+    of exactly its shard of the corpus: every block column, doc_stats,
+    and the manifest fingerprint, row_count and sum_dl."""
+    meta = ("repo", "path", "commit", "lang")
     kw = dict(id_col="doc_id", text_col="content", analyzer="code",
-              n_segments=SEGS, buckets=BUCKETS)
-    build_index(spark, corpus, d_ser, parallel_segments=1, **kw)
-    build_index(spark, corpus, d_par, parallel_segments=SEGS, **kw)
-    cols = ["segment", "bucket", "term", "salt", "block_id", "n_docs",
-            "first_doc", "last_doc", "max_tf", "min_dl",
-            "doc_gaps", "tfs", "dls"]
-    a = read_postings(spark, d_ser).select(*cols)
-    b = read_postings(spark, d_par).select(*cols)
-    assert a.subtract(b).count() == 0
-    assert b.subtract(a).count() == 0
-    ma = read_manifest(spark, d_ser).toPandas().set_index("segment")
-    mb = read_manifest(spark, d_par).toPandas().set_index("segment")
+              meta_cols=meta, buckets=BUCKETS,
+              with_positions=with_positions)
+    full = index_dir
+    if with_positions:
+        full = str(tmp_path_factory.mktemp("idx_pos"))
+        build_index(spark, corpus, full, n_segments=SEGS, **kw)
+    cols = ["bucket", "term", "salt", "block_id", "n_docs", "first_doc",
+            "last_doc", "max_tf", "min_dl", "doc_gaps", "tfs", "dls"]
+    if with_positions:
+        cols.append("poss")
+    m_full = read_manifest(spark, full).toPandas().set_index("segment")
     for s in range(SEGS):
-        assert ma.loc[s, "input_fingerprint"] == mb.loc[s, "input_fingerprint"]
-        assert ma.loc[s, "row_count"] == mb.loc[s, "row_count"]
+        one = str(tmp_path_factory.mktemp(f"idx_shard{s}"))
+        shard = corpus.where(
+            F.pmod(F.xxhash64(F.col("doc_id")), F.lit(SEGS)) == s)
+        build_index(spark, shard, one, n_segments=1, **kw)
+        for read, c in ((read_postings, cols), (read_doc_stats, None)):
+            a = read(spark, full).where(F.col("segment") == s)
+            b = read(spark, one)
+            a, b = (x.select(*c) if c else x.drop("segment") for x in (a, b))
+            assert a.count() > 0
+            assert a.subtract(b).count() == 0
+            assert b.subtract(a).count() == 0
+        m_one = read_manifest(spark, one).first()
+        for f in ("input_fingerprint", "row_count", "sum_dl"):
+            assert m_full.loc[s, f] == m_one[f], (s, f)
 
 
 def test_min_input_partitions_resplits_and_preserves_results(

@@ -8,11 +8,17 @@ segmented, resumable Spark job:
   tokenize + per-doc tf aggregation *inside* the Arrow batch, so the raw
   position stream never hits a shuffle (the per-partition in-memory
   accumulation of ``EdgeInvertedIndex.index:41-49``, done right: true tf).
-* **merge** (ONE shuffle): repartition by ``(bucket=crc32(term)%B, salt)``;
-  hot terms (df above a fraction of the segment) are salted into
-  ``SALT_FACTOR`` independent sub-lists (SURVEY.md §4.3.2) — each sub-list
-  is internally docID-sorted, and WAND treats sub-lists as extra block
-  streams, so no re-merge is ever needed.
+  One map pass covers every segment a build still has to write: rows
+  carry their segment id, and each map task encodes its mini-blocks per
+  (segment, term, salt).
+* **merge** (ONE shuffle for all segments): repartition by
+  ``(segment, bucket=crc32(term)%B, salt)``, sort each shuffle partition
+  by ``(segment, bucket, salt, term)`` and merge it in vectorized passes
+  over the sorted stream (one pandas call per Arrow batch, not per
+  group). Hot terms (df above a fraction of the segment's local docs)
+  are salted into ``SALT_FACTOR`` independent sub-lists (SURVEY.md
+  §4.3.2) — each sub-list is internally docID-sorted, and WAND treats
+  sub-lists as extra block streams, so no re-merge is ever needed.
 * **blocks**: per term(+salt), docID-sorted postings are cut into
   <=BLOCK_SIZE-doc blocks; docIDs delta+varint, tfs varint, dls varint
   (codec.py = analog of JavaFastPFOR at ``InvertedIndex.java:116-117``).
@@ -22,11 +28,14 @@ segmented, resumable Spark job:
   reference's ``restDistance`` remaining-score bound
   (``EdgeInvertedIndex.java:148-151,226-227``).
 * **segments** (checkpoint/resume): the corpus is split into S doc-shards
-  by ``pmod(xxhash64(id), S)``; each shard's doc_stats + postings are
-  written atomically under ``segment=<s>/`` followed by a manifest row with
-  input fingerprint, row/byte counts and duration. A restarted build skips
-  segments whose manifest row says ``ok`` (the reference has no real
-  resume — SURVEY.md §4.3.4; this is new engineering).
+  by ``pmod(xxhash64(id), S)``. One pass writes every pending shard's
+  postings, doc_stats and terms to a staging directory readers never
+  list; each segment then commits in order — its directories renamed
+  under ``segment=<s>/``, its sorted dictionary, and last a manifest row
+  with input fingerprint, row/byte counts and duration. A restarted build
+  filters the segments whose manifest row says ``ok`` out of its one pass
+  (the reference has no real resume — SURVEY.md §4.3.4; this is new
+  engineering).
 
 At 10^12-file scale: S = O(10^4) segments, B = O(10^3) buckets; every stage
 is bounded by segment x bucket, nothing ever collects postings to the
@@ -72,6 +81,17 @@ POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", poss binary"
 
 EMIT_SCHEMA = "term string, doc_id bigint, tf int, dl bigint"
 EMIT_POS_SCHEMA = EMIT_SCHEMA + ", positions array<int>"
+
+# Segment id of a build's in-flight rows (corpus, mini-blocks, blocks,
+# doc_stats, terms). Staged artifacts are laid out by it as
+# ``_seg=<s>/`` directories; committing a segment renames its directory
+# to ``segment=<s>/``.
+SEG_COL = "_seg"
+
+
+def _stage_schema(with_positions: bool) -> str:
+    return f"{SEG_COL} int, " + (POSTINGS_POS_SCHEMA if with_positions
+                                 else POSTINGS_SCHEMA)
 
 
 def bucket_of(term: str, buckets: int) -> int:
@@ -132,7 +152,10 @@ def _emit_chunk_fn(id_col: str, text_col: str, analyzer: str,
     of its emit time in ``agg(positions=("pos", list))`` building one
     Python list per posting (measured 4.8 s vs 0.25 s per 2k-doc chunk —
     the 4-5x positional build-throughput multiplier of VERDICT r4 #6),
-    and the flat stream is what the block cutter wants anyway."""
+    and the flat stream is what the block cutter wants anyway.
+
+    A ``SEG_COL`` input column (the build's segment tag) is carried onto
+    every output row."""
 
     def emit_chunk(pdf: pd.DataFrame
                    ) -> tuple[pd.DataFrame, np.ndarray | None] | None:
@@ -142,6 +165,8 @@ def _emit_chunk_fn(id_col: str, text_col: str, analyzer: str,
         ids = pdf[id_col].to_numpy()
         doc_rep = np.repeat(ids, lens)
         dl_rep = np.repeat(lens, lens)
+        seg_rep = (np.repeat(pdf[SEG_COL].to_numpy(), lens)
+                   if SEG_COL in pdf.columns else None)
         if doc_rep.size == 0:
             return None
         flat = np.concatenate([np.asarray(t, dtype=object) for t in toks
@@ -167,6 +192,8 @@ def _emit_chunk_fn(id_col: str, text_col: str, analyzer: str,
             "tf": tf.astype(np.int32),
             "dl": dl_rep[order][starts].astype(np.int64),
         })
+        if seg_rep is not None:
+            rows[SEG_COL] = seg_rep[order][starts]
         return rows, (pos[order] if with_positions else None)
 
     return emit_chunk
@@ -238,8 +265,9 @@ def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarra
     return flat, starts
 
 
-_BLOCK_COLS = ["bucket", "term", "salt", "block_id", "n_docs", "first_doc",
-               "last_doc", "max_tf", "min_dl", "doc_gaps", "tfs", "dls"]
+_BLOCK_COLS = [SEG_COL, "bucket", "term", "salt", "block_id", "n_docs",
+               "first_doc", "last_doc", "max_tf", "min_dl", "doc_gaps", "tfs",
+               "dls"]
 
 
 def _gather_runs(flat: np.ndarray, starts: np.ndarray,
@@ -259,11 +287,12 @@ def _build_blocks(pdf: pd.DataFrame, block_size: int,
                   with_positions: bool = False,
                   presorted: bool = False,
                   flat_positions: np.ndarray | None = None) -> pd.DataFrame:
-    """Posting rows (term, doc_id, tf, dl, bucket, salt[, positions]) ->
-    compressed <=block_size blocks.
+    """Posting rows (_seg, term, doc_id, tf, dl, bucket, salt[, positions])
+    -> compressed <=block_size blocks.
 
-    Sorts by (term, salt, doc_id) once (the frame may span many buckets /
-    salts — the SPIMI map path), then cuts every (term, salt) run into
+    Sorts by (_seg, term, salt, doc_id) once (the frame may span many
+    segments / buckets / salts — the SPIMI map path), then cuts every
+    (_seg, term, salt) run into
     <=block_size blocks FULLY VECTORIZED: block boundaries via repeat/
     cumsum, per-block metadata via ``ufunc.reduceat``, and all three
     payload streams via the batch run-sliced codec (one varint pass over
@@ -277,19 +306,20 @@ def _build_blocks(pdf: pd.DataFrame, block_size: int,
         return pd.DataFrame({k: [] for k in keys})
     if not presorted:
         if flat_positions is None:
-            pdf = pdf.sort_values(["term", "salt", "doc_id"],
+            pdf = pdf.sort_values([SEG_COL, "term", "salt", "doc_id"],
                                   kind="mergesort")
         else:
             # explicit permutation so the row-aligned flat position
             # stream can be gathered under the SAME order (a pandas
             # re-sort would desync it). factorize(sort=True) + lexsort
             # reproduces sort_values' codepoint string order exactly;
-            # (term, salt, doc_id) is a total order here (doc unique per
-            # term within a map task), so stability is moot.
+            # (_seg, term, salt, doc_id) is a total order here (doc unique
+            # per term within a map task), so stability is moot.
             t_codes, _ = pd.factorize(pdf["term"], sort=True)
             order = np.lexsort((pdf["doc_id"].to_numpy(dtype=np.int64),
                                 pdf["salt"].to_numpy(dtype=np.int64),
-                                t_codes))
+                                t_codes,
+                                pdf[SEG_COL].to_numpy(dtype=np.int64)))
             tf0 = pdf["tf"].to_numpy(dtype=np.int64)
             starts0 = np.concatenate(([0], np.cumsum(tf0)[:-1]))
             flat_positions = _gather_runs(
@@ -297,15 +327,17 @@ def _build_blocks(pdf: pd.DataFrame, block_size: int,
                 starts0[order], tf0[order])
             pdf = pdf.iloc[order]
     n = len(pdf)
+    segs = pdf[SEG_COL].to_numpy(dtype=np.int64)
     terms = pdf["term"].to_numpy()
     salts = pdf["salt"].to_numpy(dtype=np.int64)
     buckets_arr = pdf["bucket"].to_numpy(dtype=np.int64)
     docs = pdf["doc_id"].to_numpy(dtype=np.int64)
     tfs = pdf["tf"].to_numpy(dtype=np.int64)
     dls = pdf["dl"].to_numpy(dtype=np.int64)
-    # (term, salt) run boundaries
+    # (_seg, term, salt) run boundaries
     change = np.flatnonzero(
         (terms[1:] != terms[:-1]) | (salts[1:] != salts[:-1])
+        | (segs[1:] != segs[:-1])
     ) + 1
     run_starts = np.concatenate(([0], change))
     run_ends = np.concatenate((change, [n]))
@@ -317,6 +349,7 @@ def _build_blocks(pdf: pd.DataFrame, block_size: int,
     bs = run_starts[rep] + block_id * block_size
     be = np.minimum(bs + block_size, run_ends[rep])
     out = pd.DataFrame({
+        SEG_COL: segs[bs],
         "bucket": buckets_arr[bs],
         "term": terms[bs],
         "salt": salts[bs],
@@ -392,22 +425,32 @@ def build_segment_postings(
        others is still correct — salt groups are just independent
        sub-lists, which every query path already handles.
     2. **the ONE shuffle** moves *compressed bytes* keyed by
-       ``(bucket=crc32(term)%B, salt)`` — ~2 orders of magnitude fewer
-       rows than shuffling raw (term, doc, tf) postings.
+       ``(segment, bucket=crc32(term)%B, salt)`` — ~2 orders of magnitude
+       fewer rows than shuffling raw (term, doc, tf) postings.
     3. **reduce**: per (term, salt), mini-blocks are decoded, merged
        docID-sorted, and re-cut into canonical <=block_size blocks
        (deterministic regardless of shuffle arrival order).
-    """
-    minis = seg_corpus.select(id_col, text_col).mapInPandas(
+
+    This is the single-segment view of the build's one pass (the same
+    map and merge ``build_index`` runs over all its segments at once)."""
+    tagged = seg_corpus.withColumn(SEG_COL, F.lit(0))
+    minis = _spimi_minis(tagged, id_col, text_col, analyzer, buckets,
+                         block_size, hot_fraction, salt_factor,
+                         with_positions)
+    return _merge_blocks(minis, block_size, with_positions).drop(SEG_COL)
+
+
+def _spimi_minis(tagged: DataFrame, id_col: str, text_col: str,
+                 analyzer: str, buckets: int, block_size: int,
+                 hot_fraction: float = HOT_TERM_DF_FRACTION,
+                 salt_factor: int = SALT_FACTOR,
+                 with_positions: bool = False) -> DataFrame:
+    """SEG_COL-tagged corpus -> SEG_COL-tagged mini-blocks (the map)."""
+    return tagged.select(SEG_COL, id_col, text_col).mapInPandas(
         _spimi_map_fn(id_col, text_col, analyzer, buckets, block_size,
                       hot_fraction, salt_factor, with_positions),
-        schema=POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA,
+        schema=_stage_schema(with_positions),
     )
-    blocks = minis.groupBy("bucket", "salt").applyInPandas(
-        lambda pdf: _merge_minis(pdf, block_size, with_positions),
-        schema=POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA,
-    )
-    return blocks
 
 
 def _spimi_map_fn(id_col: str, text_col: str, analyzer: str, buckets: int,
@@ -415,10 +458,13 @@ def _spimi_map_fn(id_col: str, text_col: str, analyzer: str, buckets: int,
                   with_positions: bool):
     """Map task: whole input partition -> encoded mini-blocks.
 
-    Accumulates the partition's (term, doc, tf, dl[, pos]) postings via
-    the chunked emit, then sorts once and encodes per-term mini-blocks.
-    Hot terms (local df >= hot_fraction x local docs) get
-    ``salt = doc_id % salt_factor`` — deterministic given the input
+    Accumulates the partition's (segment, term, doc, tf, dl[, pos])
+    postings via the chunked emit, then sorts once and encodes per
+    (segment, term, salt) mini-blocks. Hot terms get
+    ``salt = doc_id % salt_factor``; the decision is made per
+    (partition, segment) — local df >= hot_fraction x the segment's
+    local docs — so every segment gets exactly the salts a pass over
+    that segment alone would give it. Deterministic given the input
     partitioning, no global pass.
     """
     emit_chunk = _emit_chunk_fn(id_col, text_col, analyzer, with_positions)
@@ -435,23 +481,81 @@ def _spimi_map_fn(id_col: str, text_col: str, analyzer: str, buckets: int,
         pdf = pd.concat(frames, ignore_index=True)
         flat_pos = (np.concatenate(streams) if with_positions
                     else None)
-        bmap = {t: zlib.crc32(t.encode("utf-8")) % buckets
-                for t in pdf["term"].unique()}
-        pdf["bucket"] = pdf["term"].map(bmap).astype("int32")
-        n_local_docs = pdf["doc_id"].nunique()
-        cut = max(2, int(hot_fraction * n_local_docs))
-        df_local = pdf.groupby("term", sort=False)["doc_id"].size()
-        hot = set(df_local[df_local >= cut].index)
-        if hot:
-            pdf["salt"] = np.where(
-                pdf["term"].isin(hot),
-                pdf["doc_id"].to_numpy() % salt_factor,
-                0,
-            ).astype("int32")
-        else:
-            pdf["salt"] = np.int32(0)
+        t_codes, uniq = pd.factorize(pdf["term"], sort=False)
+        pdf["bucket"] = np.fromiter(
+            (bucket_of(t, buckets) for t in uniq),
+            dtype=np.int32, count=len(uniq))[t_codes]
+        s_codes, s_uniq = pd.factorize(pdf[SEG_COL], sort=False)
+        docs = pdf["doc_id"].to_numpy()
+        # local docs per segment (a doc id maps to one segment) and local
+        # df per (segment, term)
+        _, first = np.unique(docs, return_index=True)
+        n_local = np.bincount(s_codes[first], minlength=len(s_uniq))
+        cut = np.maximum(2, (hot_fraction * n_local).astype(np.int64))
+        key = s_codes.astype(np.int64) * len(uniq) + t_codes
+        hot = np.bincount(key)[key] >= cut[s_codes]
+        pdf["salt"] = np.where(hot, docs % salt_factor, 0).astype("int32")
         yield _build_blocks(pdf, block_size, with_positions,
                             flat_positions=flat_pos)
+
+    return run
+
+
+# the merge key: a run of equal keys is one (segment, term, salt)
+# sub-list (bucket is a function of the term)
+_MERGE_KEY = [SEG_COL, "bucket", "salt", "term"]
+
+
+def _merge_blocks(minis: DataFrame, block_size: int, with_positions: bool,
+                  tombstones: np.ndarray | None = None) -> DataFrame:
+    """The ONE shuffle of a build or compaction: SEG_COL-tagged
+    mini-blocks -> canonical SEG_COL-tagged blocks. Rows are
+    hash-partitioned by ``(segment, bucket, salt)``, sorted within each
+    partition by ``_MERGE_KEY``, and merged by :func:`_merge_stream_fn`.
+    ``tombstones`` (sorted doc ids) are purged before the blocks are cut
+    (compaction)."""
+    bc = (minis.sparkSession.sparkContext.broadcast(tombstones)
+          if tombstones is not None else None)
+    return (
+        minis.repartition(SEG_COL, "bucket", "salt")
+        .sortWithinPartitions(*_MERGE_KEY)
+        .mapInPandas(_merge_stream_fn(block_size, with_positions, bc),
+                     schema=_stage_schema(with_positions))
+    )
+
+
+def _merge_stream_fn(block_size: int, with_positions: bool, tombstones):
+    """Reduce task over one sorted shuffle partition: each Arrow batch is
+    merged in one vectorized :func:`_merge_minis` call. The batch's
+    trailing key may continue in the next batch, so its rows are carried
+    over instead of merged — memory stays bounded by one batch plus the
+    largest (term, salt) run."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        blocked = tombstones.value if tombstones is not None else None
+
+        def merged(part: pd.DataFrame) -> list[pd.DataFrame]:
+            if len(part) == 0:
+                return []
+            out = _merge_minis(part, block_size, with_positions, blocked)
+            return [out] if len(out) else []
+
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if len(pdf) == 0:
+                continue
+            tail = np.ones(len(pdf), dtype=bool)
+            for c in _MERGE_KEY:
+                a = pdf[c].to_numpy()
+                tail &= a == a[-1]
+            # sorted input: the rows equal to the last key are a suffix
+            n_done = len(pdf) - int(tail.sum())
+            carry = pdf.iloc[n_done:]
+            yield from merged(pdf.iloc[:n_done])
+        if carry is not None:
+            yield from merged(carry)
 
     return run
 
@@ -459,30 +563,31 @@ def _spimi_map_fn(id_col: str, text_col: str, analyzer: str, buckets: int,
 def _merge_minis(pdf: pd.DataFrame, block_size: int,
                  with_positions: bool,
                  blocked: np.ndarray | None = None) -> pd.DataFrame:
-    """Reduce task: one (bucket, salt) group of mini-blocks -> canonical
-    blocks. Decode all minis, merge docID-sorted per term, re-encode.
-    Deterministic for any shuffle arrival order (docIDs are unique per
-    term within a segment, so the sort is a total order).
+    """Reduce step: mini-blocks, each ``_MERGE_KEY`` run contiguous ->
+    canonical blocks. Decode all minis, merge docID-sorted per run,
+    re-encode. Deterministic for any shuffle arrival order (docIDs are
+    unique per term within a segment, so the sort is a total order).
 
-    Fully vectorized: every payload column is decoded in ONE concat-varint
-    pass (streams are self-delimiting; per-mini delta bases re-zeroed from
-    the n_docs counts), postings are lexsorted by (term, doc) group-wide,
-    the position stream is gather-permuted with repeat/cumsum index
-    arithmetic, and the canonical blocks are cut by the same vectorized
-    ``_build_blocks`` as the map phase."""
+    Fully vectorized over any number of runs: every payload column is
+    decoded in ONE concat-varint pass (streams are self-delimiting;
+    per-mini delta bases re-zeroed from the n_docs counts), postings are
+    lexsorted by (run, doc), the position stream is gather-permuted with
+    repeat/cumsum index arithmetic, and the canonical blocks are cut by
+    the same vectorized ``_build_blocks`` as the map phase."""
     cols = _BLOCK_COLS + (["poss"] if with_positions else [])
-    if len(pdf) == 0:
-        return pd.DataFrame({k: [] for k in cols})
-    pdf = pdf.sort_values("term", kind="mergesort")
     counts = pdf["n_docs"].to_numpy(dtype=np.int64)
     docs = codec.decode_sorted_concat(pdf["doc_gaps"].tolist(), counts)
     tfs = codec.decode_u64_concat(pdf["tfs"].tolist(), counts).astype(np.int64)
     dls = codec.decode_u64_concat(pdf["dls"].tolist(), counts).astype(np.int64)
-    term_codes, uniq_terms = pd.factorize(pdf["term"], sort=False)
-    term_rep = np.repeat(term_codes, counts)
-    # terms already grouped ascending (sorted above, factorize preserves
-    # first-seen = sorted order); stable-sort docs within each term run
-    order = np.lexsort((docs, term_rep))
+    keys = {c: pdf[c].to_numpy() for c in _MERGE_KEY}
+    new_run = np.zeros(len(pdf), dtype=bool)
+    new_run[0] = True
+    for a in keys.values():
+        new_run[1:] |= a[1:] != a[:-1]
+    heads = np.flatnonzero(new_run)
+    run_rep = np.repeat(np.cumsum(new_run) - 1, counts)
+    # runs are already in order; stable-sort docs within each run
+    order = np.lexsort((docs, run_rep))
     flat_pos = None
     if with_positions:
         # per-mini position counts = sum of its postings' tfs; the gap
@@ -500,11 +605,9 @@ def _merge_minis(pdf: pd.DataFrame, block_size: int,
         flat = flat.astype(np.int64)
         # gather the per-posting position slices into sorted posting order
         flat_pos = _gather_runs(flat, ps[order], tfs[order])
-    uniq_arr = np.asarray(uniq_terms, dtype=object)
+    run_of = run_rep[order]
     flat_df = pd.DataFrame({
-        "term": uniq_arr[term_rep[order]],
-        "salt": np.int64(pdf["salt"].iloc[0]),
-        "bucket": np.int64(pdf["bucket"].iloc[0]),
+        **{c: a[heads][run_of] for c, a in keys.items()},
         "doc_id": docs[order],
         "tf": tfs[order],
         "dl": dls[order],
@@ -527,6 +630,45 @@ def _merge_minis(pdf: pd.DataFrame, block_size: int,
                          flat_positions=flat_pos)
 
 
+def _doc_stats(tagged: DataFrame, id_col: str, text_col: str,
+               analyzer: str, meta_cols: tuple[str, ...]) -> DataFrame:
+    """SEG_COL-tagged corpus -> SEG_COL-tagged doc_stats rows: one Arrow
+    pass (dl + sha256 invariant + metadata). JVM regexp_extract_all costs
+    ~3x the Python tokenizer for the code analyzer (measured), so dl and
+    sha256 are computed batch-at-a-time in the same chunked UDF style as
+    the emit."""
+    import hashlib
+
+    types = dict(tagged.dtypes)
+    schema = (f"{SEG_COL} int, doc_id bigint, dl bigint, "
+              "content_sha256 string"
+              + "".join(f", {c} {types[c]}" for c in meta_cols))
+
+    def doc_stats_fn(batches):
+        for full in batches:
+            for cs in range(0, len(full), EMIT_CHUNK_DOCS):
+                pdf = full.iloc[cs:cs + EMIT_CHUNK_DOCS]
+                texts = pdf[text_col]
+                out = pd.DataFrame({
+                    SEG_COL: pdf[SEG_COL].to_numpy(),
+                    "doc_id": pdf[id_col].to_numpy(),
+                    "dl": np.fromiter(
+                        (len(tokenize_py(t or "", analyzer)) for t in texts),
+                        dtype=np.int64, count=len(pdf),
+                    ),
+                    "content_sha256": [
+                        hashlib.sha256((t or "").encode("utf-8")).hexdigest()
+                        for t in texts
+                    ],
+                })
+                for c in meta_cols:
+                    out[c] = pdf[c].to_numpy()
+                yield out
+
+    return tagged.select(SEG_COL, id_col, text_col, *meta_cols).mapInPandas(
+        doc_stats_fn, schema=schema)
+
+
 def build_index(
     spark: SparkSession,
     corpus: DataFrame,
@@ -542,24 +684,25 @@ def build_index(
     fail_after_segments: int | None = None,
     with_positions: bool = False,
     table_format: str = "parquet",
-    parallel_segments: int = 4,
     min_input_partitions: int | None = None,
 ) -> None:
     """Full segmented, resumable index build.
 
+    One pass over the corpus builds every segment not yet committed: the
+    map tokenizes each input partition once and tags its rows with
+    ``pmod(xxhash64(id), n_segments)``, one shuffle keyed by (segment,
+    bucket, salt) merges the mini-blocks, one doc_stats pass covers all
+    segments, and the segments then commit one by one, in order (see
+    :func:`_commit_pass`). A map task's SPIMI run spans its whole input
+    partition, whatever the segment count — the same memory bound a
+    one-segment build has. With ``resume`` the segments whose manifest
+    marker says ``ok`` are filtered out of the pass.
+
     ``fail_after_segments`` injects a crash after that many segments have
-    committed — used by the resume test (FIXTURES.md §5); it forces
-    serial segment execution so the injection point is deterministic.
+    committed — used by the resume test (FIXTURES.md §5).
     ``table_format`` selects the registered commit writer (parquet
     default; ``register_table_writer`` adds e.g. an Iceberg snapshot
     writer — see the table-format seam notes above).
-    ``parallel_segments`` overlaps up to that many segment commits via
-    concurrent Spark job submission (each segment is an independent
-    atomic commit, so completion order is irrelevant — exactly the
-    property that makes the build resumable). Per-segment stages leave
-    scheduler/IO gaps that a serial loop pays 1x per segment; on a
-    multi-executor cluster this is the standard many-jobs-one-scheduler
-    pattern and the FIFO scheduler pipelines the waves.
 
     ``min_input_partitions`` guards against an UNDER-SPLIT input table:
     the emit stage's parallelism comes from the corpus scan's splits, so
@@ -584,58 +727,29 @@ def build_index(
         "with_positions": with_positions, "table_format": table_format,
         "format_version": INDEX_FORMAT_VERSION,
     })
-    done = _done_segments(spark, paths) if resume else set()
 
     if min_input_partitions is not None:
         n_in = corpus.rdd.getNumPartitions()
         if n_in < min_input_partitions:
             corpus = corpus.repartition(min_input_partitions)
 
-    # NOTE deliberately no .persist() of the per-segment corpus: Spark's
-    # columnar cache build costs more than the 2 extra re-scans it saves
+    # NOTE deliberately no .persist() of the corpus: Spark's columnar
+    # cache build costs more than the extra doc_stats re-scan it saves
     # and anti-scales with cores (measured; BASELINE.md scaling notes).
     # Inputs are parquet/synthetic — cheap to re-scan in parallel.
-    if n_segments > 1:
-        shard = F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_segments)).cast("int")
-        corpus = corpus.withColumn("_seg", shard)
-
-    # AQE's partition coalescing would collapse the (tiny, byte-sized)
-    # mini-block merge shuffle onto one task and serialize the reduce —
-    # off for the duration of the build, restored after.
-    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev_coalesce = spark.conf.get(coalesce_key, "true")
-    spark.conf.set(coalesce_key, "false")
-    try:
-        with use_table_format(table_format):
-            todo = [s for s in range(n_segments) if s not in done]
-
-            def one(s: int) -> None:
-                seg = (corpus.where(F.col("_seg") == s).drop("_seg")
-                       if n_segments > 1 else corpus)
-                commit_segment(
-                    spark, seg, s, paths, id_col, text_col, analyzer,
-                    meta_cols, buckets, block_size, with_positions,
-                )
-
-            workers = 1 if fail_after_segments is not None \
-                else min(parallel_segments, max(1, len(todo)))
-            if workers <= 1:
-                built = 0
-                for s in todo:
-                    one(s)
-                    built += 1
-                    if fail_after_segments is not None \
-                            and built >= fail_after_segments:
-                        raise RuntimeError(
-                            f"injected failure after {built} segments")
-            else:
-                from concurrent.futures import ThreadPoolExecutor
-
-                with ThreadPoolExecutor(max_workers=workers) as pool:
-                    for f in [pool.submit(one, s) for s in todo]:
-                        f.result()
-    finally:
-        spark.conf.set(coalesce_key, prev_coalesce)
+    with use_table_format(table_format):
+        done = _done_segments(spark, paths) if resume else set()
+        todo = [s for s in range(n_segments) if s not in done]
+        if not todo:
+            return
+        shard = (F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_segments))
+                 if n_segments > 1 else F.lit(0))
+        tagged = corpus.withColumn(SEG_COL, shard.cast("int"))
+        if done:
+            tagged = tagged.where(~F.col(SEG_COL).isin(sorted(done)))
+        _build_and_commit(spark, tagged, todo, paths, id_col, text_col,
+                          analyzer, meta_cols, buckets, block_size,
+                          with_positions, fail_after_segments)
 
 
 def commit_segment(
@@ -652,125 +766,155 @@ def commit_segment(
     with_positions: bool = False,
 ) -> None:
     """Build + atomically commit ONE doc segment (postings, doc_stats,
-    manifest-last). Shared by the batch build loop and the streaming
-    ``foreachBatch`` sink (one micro-batch == one segment).
+    terms, manifest-last) — the streaming ``foreachBatch`` sink's commit
+    (one micro-batch == one segment), through the same one-pass core as
+    ``build_index``."""
+    _build_and_commit(spark, seg.withColumn(SEG_COL, F.lit(s).cast("int")),
+                      [s], paths, id_col, text_col, analyzer, meta_cols,
+                      buckets, block_size, with_positions)
 
-    Exactly ONE full Python tokenize pass per segment (emit -> shuffle ->
-    encode); doc_stats is a separate JVM-only scan (sha256 + token count
-    via the codegen'd analyzer + metadata — no Arrow round-trip), and the
-    manifest fingerprint is derived from the written doc_stats rather than
-    another corpus pass."""
+
+def _build_and_commit(spark: SparkSession, tagged: DataFrame,
+                      segs: list[int], paths: IndexPaths, id_col: str,
+                      text_col: str, analyzer: str,
+                      meta_cols: tuple[str, ...], buckets: int,
+                      block_size: int, with_positions: bool,
+                      fail_after: int | None = None) -> None:
+    """One pass over a SEG_COL-tagged corpus: exactly one full Python
+    tokenize pass for the postings (map -> the one shuffle -> merge) and
+    one for doc_stats (sha256 + token count + metadata), then the
+    per-segment commits."""
+    minis = _spimi_minis(tagged, id_col, text_col, analyzer, buckets,
+                         block_size, with_positions=with_positions)
+    _commit_pass(spark, paths, segs,
+                 _merge_blocks(minis, block_size, with_positions),
+                 _doc_stats(tagged, id_col, text_col, analyzer, meta_cols),
+                 fail_after)
+
+
+STAGING_DIRNAME = "_staging"
+TERMS_SCHEMA = "bucket int, term string, df bigint"
+
+
+def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
+                 blocks: DataFrame, doc_stats: DataFrame,
+                 fail_after: int | None = None) -> None:
+    """The one write-and-commit core of build, streaming sink and
+    compaction. ``blocks`` and ``doc_stats`` are SEG_COL-tagged frames
+    covering the segments ``segs``.
+
+    1. postings and doc_stats are written ONCE each, laid out by segment,
+       to ``<index>/_staging/`` (two concurrent jobs with disjoint
+       outputs); no reader lists it;
+    2. the terms dictionary (precomputed df per term — the analog of the
+       reference's precomputed weight cache, SURVEY.md §4.1) is derived
+       from the staged blocks' metadata columns only (no payload decode)
+       and staged the same way;
+    3. per-segment manifest metrics come from one aggregation over each
+       staged artifact: fingerprint = bit_xor of xxhash64(doc_id,
+       content_sha256), rows and sum_dl from doc_stats; block count and
+       payload bytes from postings;
+    4. each segment commits in order: its staged directories are renamed
+       into place, its ``terms_sorted`` copy is written, and its manifest
+       marker is written LAST — the resume marker, and the point at which
+       readers see the segment. ``fail_after`` raises after that many
+       commits (the resume test's crash injection).
+
+    Every artifact write and read-back goes through the table-format
+    seam."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark.sql import Observation
-
     t0 = time.monotonic()
-
-    # --- postings blocks (the tokenize pass) ---
-    blocks = build_segment_postings(
-        spark, seg, id_col, text_col, analyzer, buckets, block_size,
-        with_positions=with_positions,
-    )
-    wobs = Observation(f"blocks_{s}")
-
-    def write_postings() -> None:
-        _atomic_write(
-            blocks.sortWithinPartitions("bucket", "term").observe(
-                wobs,
-                F.count(F.lit(1)).alias("blocks"),
-                F.sum(
-                    F.octet_length("doc_gaps") + F.octet_length("tfs")
-                    + F.octet_length("dls")
-                ).alias("bytes"),
-            ),
-            paths.seg(paths.postings, s),
+    stage = IndexPaths(os.path.join(paths.root, STAGING_DIRNAME))
+    shutil.rmtree(stage.root, ignore_errors=True)
+    # AQE's partition coalescing would collapse the (tiny, byte-sized)
+    # mini-block merge shuffle onto one task and serialize the reduce —
+    # off for the duration of the pass, restored after.
+    coalesce_key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev_coalesce = spark.conf.get(coalesce_key, "true")
+    spark.conf.set(coalesce_key, "false")
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futs = [
+                pool.submit(_atomic_write, blocks.sortWithinPartitions(
+                    SEG_COL, "bucket", "term"), stage.postings),
+                pool.submit(_atomic_write, doc_stats, stage.doc_stats),
+            ]
+            for f in futs:
+                f.result()
+        metrics = {s: dict(fp=0, rows=0, sum_dl=0, blocks=0, bytes=0)
+                   for s in segs}
+        if _staged_segments(stage.postings):
+            staged = _read_table(spark, stage.postings)
+            _atomic_write(
+                staged.groupBy(SEG_COL, "bucket", "term")
+                .agg(F.sum("n_docs").alias("df"))
+                .sortWithinPartitions(SEG_COL, "bucket", "term"),
+                stage.terms)
+            payload = (F.octet_length("doc_gaps") + F.octet_length("tfs")
+                       + F.octet_length("dls"))
+            for r in staged.groupBy(SEG_COL).agg(
+                    F.count(F.lit(1)).alias("blocks"),
+                    F.sum(payload).alias("bytes")).collect():
+                metrics[r[SEG_COL]].update(blocks=r["blocks"],
+                                           bytes=r["bytes"])
+        if _staged_segments(stage.doc_stats):
+            for r in _read_table(spark, stage.doc_stats).groupBy(SEG_COL).agg(
+                    F.expr("bit_xor(xxhash64(doc_id, content_sha256))")
+                    .alias("fp"),
+                    F.count(F.lit(1)).alias("rows"),
+                    F.sum("dl").alias("sum_dl")).collect():
+                metrics[r[SEG_COL]].update(fp=r["fp"], rows=r["rows"],
+                                           sum_dl=r["sum_dl"])
+        artifacts = (
+            (paths.postings, stage.postings, blocks.drop(SEG_COL).schema),
+            (paths.doc_stats, stage.doc_stats,
+             doc_stats.drop(SEG_COL).schema),
+            (paths.terms, stage.terms, TERMS_SCHEMA),
         )
+        for i, s in enumerate(segs):
+            for base, staged_base, schema in artifacts:
+                src = os.path.join(staged_base, f"{SEG_COL}={s}")
+                dst = paths.seg(base, s)
+                # an uncommitted leftover (no manifest marker) of a
+                # crashed attempt, or the segment a non-resume build
+                # rewrites
+                if os.path.isdir(dst):
+                    shutil.rmtree(dst)
+                if os.path.isdir(src):
+                    os.makedirs(base, exist_ok=True)
+                    os.replace(src, dst)
+                else:
+                    # no rows of this artifact in the segment (no docs,
+                    # or only empty ones): commit an empty table
+                    _atomic_write(spark.createDataFrame([], schema), dst)
+            _write_terms_sorted(spark, paths, s)
+            m = metrics[s]
+            _write_manifest_row(spark, pd.DataFrame([{
+                "segment": s,
+                "input_fingerprint":
+                    format((m["fp"] or 0) & (2**64 - 1), "016x"),
+                "row_count": int(m["rows"] or 0),
+                "sum_dl": int(m["sum_dl"] or 0),
+                "block_count": int(m["blocks"] or 0),
+                "bytes": int(m["bytes"] or 0),
+                "duration_ms": int((time.monotonic() - t0) * 1000),
+                "status": "ok",
+                "attempt": 1,
+            }]), paths.seg(paths.manifest, s))
+            invalidate_index_cache(paths.root)
+            if fail_after is not None and i + 1 >= fail_after:
+                raise RuntimeError(
+                    f"injected failure after {i + 1} segments")
+    finally:
+        spark.conf.set(coalesce_key, prev_coalesce)
+        shutil.rmtree(stage.root, ignore_errors=True)
 
-    # --- doc_stats: one Arrow pass (dl + sha256 invariant + metadata).
-    # JVM regexp_extract_all costs ~3x the Python tokenizer for the code
-    # analyzer (measured), so dl and sha256 are computed batch-at-a-time
-    # in the same chunked UDF style as the emit.
-    import hashlib
 
-    meta_fields = ", ".join(
-        f"{c} {dict(seg.dtypes)[c]}" for c in meta_cols
-    )
-    ds_schema = "doc_id bigint, dl bigint, content_sha256 string" + (
-        ", " + meta_fields if meta_cols else ""
-    )
-
-    def doc_stats_fn(batches):
-        for full in batches:
-            for cs in range(0, len(full), EMIT_CHUNK_DOCS):
-                pdf = full.iloc[cs:cs + EMIT_CHUNK_DOCS]
-                texts = pdf[text_col]
-                out = pd.DataFrame({
-                    "doc_id": pdf[id_col].to_numpy(),
-                    "dl": np.fromiter(
-                        (len(tokenize_py(t or "", analyzer)) for t in texts),
-                        dtype=np.int64, count=len(pdf),
-                    ),
-                    "content_sha256": [
-                        hashlib.sha256((t or "").encode("utf-8")).hexdigest()
-                        for t in texts
-                    ],
-                })
-                for c in meta_cols:
-                    out[c] = pdf[c].to_numpy()
-                yield out
-
-    dobs = Observation(f"ds_{s}")
-    ds = (
-        seg.select(id_col, text_col, *meta_cols)
-        .mapInPandas(doc_stats_fn, schema=ds_schema)
-        .withColumn("_h", F.xxhash64(F.col("doc_id"), F.col("content_sha256")))
-        .observe(dobs, F.expr("bit_xor(_h)").alias("fp"),
-                 F.count(F.lit(1)).alias("rows"),
-                 F.sum("dl").alias("sum_dl"))
-        .drop("_h")
-    )
-
-    def write_doc_stats() -> None:
-        _atomic_write(ds, paths.seg(paths.doc_stats, s))
-
-    # postings and doc_stats are independent corpus scans with disjoint
-    # outputs — submit both jobs concurrently (the manifest marker below
-    # is still written last, so atomicity is unchanged)
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(write_postings), pool.submit(write_doc_stats)]
-        for f in futs:
-            f.result()
-
-    # --- terms dictionary (precomputed df per term — the analog of the
-    # reference's precomputed weight cache, SURVEY.md §4.1): derived from
-    # the written blocks' metadata columns only (no payload decode) ---
-    terms_df = (
-        _read_table(spark, paths.seg(paths.postings, s))
-        .groupBy("bucket", "term")
-        .agg(F.sum("n_docs").alias("df"))
-    )
-    _write_terms(spark, terms_df, paths, s)
-
-    # --- lineage + metrics manifest row (committed last = the marker);
-    # fingerprint/row/byte metrics ride the two writes via Observation —
-    # no read-back jobs ---
-    dsm, wm = dobs.get, wobs.get
-    manifest_row = pd.DataFrame(
-        [{
-            "segment": s,
-            "input_fingerprint": format((dsm["fp"] or 0) & (2**64 - 1), "016x"),
-            "row_count": int(dsm["rows"] or 0),
-            "sum_dl": int(dsm["sum_dl"] or 0),
-            "block_count": int(wm["blocks"] or 0),
-            "bytes": int(wm["bytes"] or 0),
-            "duration_ms": int((time.monotonic() - t0) * 1000),
-            "status": "ok",
-            "attempt": 1,
-        }]
-    )
-    _write_manifest_row(spark, manifest_row,
-                        os.path.join(paths.manifest, f"segment={s}"))
-    invalidate_index_cache(paths.root)
+def _staged_segments(base: str) -> bool:
+    """Whether a staged artifact holds rows of any segment."""
+    return os.path.isdir(base) and any(
+        d.startswith(SEG_COL + "=") for d in os.listdir(base))
 
 
 # target rows per terms_sorted file: the file count scales with the
@@ -780,10 +924,11 @@ def commit_segment(
 TERMS_SORTED_ROWS_PER_FILE = 1 << 18
 
 
-def _write_terms(spark: SparkSession, terms_df: DataFrame,
-                 paths: IndexPaths, s: int) -> None:
-    """Write one segment's term dictionary TWICE (both before the
-    manifest marker, so a committed segment always carries both):
+def _write_terms_sorted(spark: SparkSession, paths: IndexPaths,
+                        s: int) -> None:
+    """Write one segment's secondary dictionary from its committed
+    primary (both before the manifest marker, so a committed segment
+    always carries both):
 
     * ``terms``: crc32-bucketed (bucket, term, df) — co-partitioned with
       the postings, the dictionary the query path joins against.
@@ -797,11 +942,10 @@ def _write_terms(spark: SparkSession, terms_df: DataFrame,
       difference between reading the whole dictionary and a few
       row groups. Vocabulary-sized (sublinear in corpus), read back
       from the just-written primary so the postings-metadata scan that
-      produced ``terms_df`` runs exactly once; the read-back's parquet
-      footers also give the exact vocabulary row count driver-side (no
+      produced it runs exactly once; the read-back's parquet footers
+      also give the exact vocabulary row count driver-side (no
       counting job) to size the range partitioning."""
     seg_terms = paths.seg(paths.terms, s)
-    _atomic_write(terms_df.sortWithinPartitions("bucket", "term"), seg_terms)
     dst = paths.seg(paths.terms_sorted, s)
     if _ACTIVE_FORMAT != "parquet":
         # No parquet directory to footer-count or pyarrow-read under a
@@ -906,11 +1050,13 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     The LSM-style maintenance step the streaming path needs: foreachBatch
     appends one segment per micro-batch, and an old stream leaves
     thousands of small segments; compaction re-merges every term's blocks
-    (segments are doc-disjoint, so the merge is exactly the reduce-side
-    mini-block merge) and unions doc_stats. Metrics compose without a
-    corpus pass: the xor-fingerprint is associative, rows/dl/bytes sum.
-    Writing to a fresh directory keeps the source readable throughout —
-    swap directories (or catalog pointers) after it commits.
+    (segments are doc-disjoint, so the merge is exactly the build's
+    mini-block merge, through the same shuffle and commit core) and
+    unions doc_stats. Metrics need no corpus pass: they aggregate the
+    compacted doc_stats and blocks, so without tombstones the
+    fingerprint is the xor of the source fingerprints and rows/dl/bytes
+    their sums. Writing to a fresh directory keeps the source readable
+    throughout — swap directories (or catalog pointers) after it commits.
     """
     cfg = read_index_config(src_dir)
     if block_size is None:
@@ -918,96 +1064,28 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     with_positions = bool(cfg.get("with_positions", False))
     paths = IndexPaths(dst_dir)
     os.makedirs(paths.manifest, exist_ok=True)
-    _ts = tombstone_ids(src_dir)
-    _write_index_config(dst_dir, {**cfg, "n_segments": 1,
-                                  "compacted_from": src_dir,
-                                  "purged_tombstones":
-                                      int(_ts.size) if _ts is not None else 0})
-    t0 = time.monotonic()
-    with use_table_format(cfg.get("table_format", "parquet")):
-        _compact_body(spark, src_dir, paths, block_size, with_positions, t0)
-    invalidate_index_cache(dst_dir)
-
-
-def _compact_body(spark: SparkSession, src_dir: str, paths: IndexPaths,
-                  block_size: int, with_positions: bool, t0: float) -> None:
-    from pyspark.sql import Observation
-
     # tombstone purge: compaction is the point where masked deletes become
     # physical — postings rows drop, df/block metadata recompute from live
     # docs, doc_stats filters, and the manifest's row_count/sum_dl (hence
     # n_docs/avgdl) shift to the purged corpus. The compacted index
     # carries NO tombstones.
     ts = tombstone_ids(src_dir)
-    bc_ts = spark.sparkContext.broadcast(ts) if ts is not None else None
-
-    src_blocks = read_postings(spark, src_dir).drop("segment")
-    wobs = Observation("compact_blocks")
-    merged = src_blocks.groupBy("bucket", "salt").applyInPandas(
-        lambda pdf: _merge_minis(
-            pdf, block_size, with_positions,
-            blocked=(bc_ts.value if bc_ts is not None else None),
-        ),
-        schema=POSTINGS_POS_SCHEMA if with_positions else POSTINGS_SCHEMA,
-    )
-    _atomic_write(
-        merged.sortWithinPartitions("bucket", "term").observe(
-            wobs,
-            F.count(F.lit(1)).alias("blocks"),
-            F.sum(
-                F.octet_length("doc_gaps") + F.octet_length("tfs")
-                + F.octet_length("dls")
-            ).alias("bytes"),
-        ),
-        paths.seg(paths.postings, 0),
-    )
-    ds = read_doc_stats(spark, src_dir).drop("segment")
-    if ts is not None:
-        dead = spark.createDataFrame(
-            [(int(x),) for x in ts], "doc_id bigint")
-        ds = ds.join(F.broadcast(dead), "doc_id", "left_anti")
-    _atomic_write(ds, paths.seg(paths.doc_stats, 0))
-    terms_df = (
-        _read_table(spark, paths.seg(paths.postings, 0))
-        .groupBy("bucket", "term").agg(F.sum("n_docs").alias("df"))
-    )
-    _write_terms(spark, terms_df, paths, 0)
-
-    src_m = read_manifest(spark, src_dir).toPandas()
-    fp = 0
-    for h in src_m["input_fingerprint"]:
-        fp ^= int(h, 16)
-    wm = wobs.get
-    if ts is not None:
-        # purged compaction: corpus scalars must reflect the LIVE docs —
-        # one aggregation over the just-written (filtered) doc_stats
-        row = _read_table(spark, paths.seg(paths.doc_stats, 0)).agg(
-            F.count("*").alias("n"), F.sum("dl").alias("sdl")).first()
-        row_count, sum_dl = int(row["n"]), int(row["sdl"] or 0)
-    elif "sum_dl" in src_m:
-        row_count = int(src_m["row_count"].sum())
-        sum_dl = int(src_m["sum_dl"].sum())
-    else:
-        # legacy source manifest without sum_dl: recompute from the copied
-        # doc_stats — writing 0 would make _corpus_scalars see the column
-        # present and derive avgdl=0 (degenerate BM25 scores)
-        row_count = int(src_m["row_count"].sum())
-        sum_dl = int(
-            read_doc_stats(spark, src_dir).agg(F.sum("dl")).first()[0] or 0
-        )
-    manifest_row = pd.DataFrame([{
-        "segment": 0,
-        "input_fingerprint": format(fp & (2**64 - 1), "016x"),
-        "row_count": row_count,
-        "sum_dl": sum_dl,
-        "block_count": int(wm["blocks"] or 0),
-        "bytes": int(wm["bytes"] or 0),
-        "duration_ms": int((time.monotonic() - t0) * 1000),
-        "status": "ok",
-        "attempt": 1,
-    }])
-    _write_manifest_row(spark, manifest_row,
-                        os.path.join(paths.manifest, "segment=0"))
+    _write_index_config(dst_dir, {**cfg, "n_segments": 1,
+                                  "compacted_from": src_dir,
+                                  "purged_tombstones":
+                                      int(ts.size) if ts is not None else 0})
+    with use_table_format(cfg.get("table_format", "parquet")):
+        minis = (read_postings(spark, src_dir).drop("segment")
+                 .withColumn(SEG_COL, F.lit(0)))
+        ds = read_doc_stats(spark, src_dir).drop("segment")
+        if ts is not None:
+            dead = spark.createDataFrame(
+                [(int(x),) for x in ts], "doc_id bigint")
+            ds = ds.join(F.broadcast(dead), "doc_id", "left_anti")
+        _commit_pass(spark, paths, [0],
+                     _merge_blocks(minis, block_size, with_positions, ts),
+                     ds.withColumn(SEG_COL, F.lit(0)))
+    invalidate_index_cache(dst_dir)
 
 
 # test-only commit gate (see _rehome_segments); None in production
@@ -1303,11 +1381,16 @@ def read_index_config(index_dir: str) -> dict:
 
 
 def _atomic_write_parquet(df: DataFrame, path: str) -> None:
-    """Write-then-rename for atomic per-segment commit."""
+    """Write-then-rename for atomic per-segment commit. A frame carrying
+    ``SEG_COL`` (a build's staged artifact) is laid out by it, one
+    ``_seg=<s>/`` directory per segment."""
     tmp = path + ".__tmp__"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
-    df.write.mode("overwrite").parquet(tmp)
+    w = df.write.mode("overwrite")
+    if SEG_COL in df.columns:
+        w = w.partitionBy(SEG_COL)
+    w.parquet(tmp)
     if os.path.exists(path):
         shutil.rmtree(path)
     os.replace(tmp, path)
@@ -1327,6 +1410,12 @@ def _atomic_write_parquet(df: DataFrame, path: str) -> None:
 #   write-then-rename        ->  unnecessary under Iceberg (the catalog
 #                                pointer swap IS the atomic commit)
 #   segment=<s> path suffix  ->  partition spec (segment identity column)
+#
+# A build writes each artifact once for all its segments: the frame
+# carries the segment id in ``SEG_COL`` and the writer lays it out as
+# the partition spec (``_seg=<s>/`` under parquet) in a staging
+# location; each segment then commits by renaming its partition into
+# place, manifest marker last.
 #
 # Register a writer + reader pair once per process and pass
 # ``table_format=`` to build_index / compact_index; with an
@@ -1417,14 +1506,27 @@ def _committed_marker_names(manifest_dir: str) -> list[str]:
 
 
 def _done_segments(spark: SparkSession, paths: IndexPaths) -> set[int]:
+    """Committed segments whose manifest marker says ``ok``. Under the
+    parquet format the markers are read driver-side with pyarrow — the
+    way ``_write_manifest_row`` writes them — instead of one Spark job
+    per marker."""
+    import pyarrow.parquet as pq
+
     segs = set()
     for d in _committed_marker_names(paths.manifest):
+        path = os.path.join(paths.manifest, d)
         try:
-            m = spark.read.parquet(os.path.join(paths.manifest, d)).first()
-            if m and m["status"] == "ok":
-                segs.add(int(d.split("=")[1]))
+            if _ACTIVE_FORMAT == "parquet":
+                status = pq.read_table(path, columns=["status"]).column(
+                    0).to_pylist()
+                ok = bool(status) and status[0] == "ok"
+            else:
+                m = spark.read.parquet(path).first()
+                ok = bool(m) and m["status"] == "ok"
         except Exception:
             continue
+        if ok:
+            segs.add(int(d.split("=")[1]))
     return segs
 
 
@@ -1495,7 +1597,7 @@ def invalidate_index_cache(index_dir: str) -> None:
     prefix = root + os.sep
     for k in [k for k in _PLAN_CACHE
               if k[2] == root or k[2].startswith(prefix)]:
-        # pop, not del: parallel segment commits may race the snapshot
+        # pop, not del: a concurrent commit may race the snapshot
         _PLAN_CACHE.pop(k, None)
 
 

@@ -539,10 +539,18 @@ def topk_bm25_index_many(
     ``afters`` maps query_id -> (score, doc_id) cursor: per-query
     searchAfter pagination inside the batch — mixed page-1 and page-N
     members share the one scan and the one decode, each at its own
-    page-one cost.
+    page-one cost. Its keys are coerced with ``str`` like the query ids;
+    a key that names no query raises ``ValueError``.
     """
     qmap = [(str(qid), sorted(set(str(t) for t in terms)))
             for qid, terms in sorted(queries.items())]
+    if afters:
+        afters = {str(qid): cur for qid, cur in afters.items()}
+        unknown = sorted(set(afters) - {qid for qid, _ in qmap})
+        if unknown:
+            raise ValueError(
+                f"topk_bm25_index_many: afters keys {unknown} are not "
+                "query ids")
     all_terms = sorted({t for _, q in qmap for t in q})
     if meta is None:
         meta = query_term_meta(spark, index_dir, all_terms, buckets, scalars)
