@@ -64,7 +64,6 @@ def main() -> None:
     from torchtrajectory_spark.operators.wand import (
         topk_bm25_index,
         topk_bm25_index_boolean,
-        topk_bm25_index_filtered,
         topk_bm25_index_fuzzy,
         topk_bm25_index_many,
         topk_bm25_index_prefix,
@@ -132,12 +131,9 @@ def main() -> None:
                 spark, args.index, terms, args.k,
                 must=args.must or (), must_not=args.must_not or (),
             ).collect()
-        elif pred is not None:
-            rows = topk_bm25_index_filtered(spark, args.index, terms,
-                                            args.k, pred).collect()
         else:
-            rows = topk_bm25_index(spark, args.index, terms,
-                                   args.k).collect()
+            rows = topk_bm25_index(spark, args.index, terms, args.k,
+                                   predicate=pred).collect()
         print(json.dumps({
             "query": terms,
             "langs": args.lang,

@@ -135,19 +135,17 @@ def test_find_topk_plan_touches_only_query_buckets(spark, engine):
         assert "bucket" in seg.split("PushedFilters")[-1][:400]
 
 
-def test_blockmax_skips_payload_decode_on_skewed_corpus(spark, tmp_path):
-    """T5 evidence: on a corpus whose block maxes actually discriminate
+def test_blockmax_ranks_exactly_on_skewed_corpus(spark, tmp_path):
+    """T4/T5 on a corpus whose block maxes actually discriminate
     (tf/length spread — the regime the reference's restDistance abandon
-    targets, ``EdgeInvertedIndex.findTopK:148-170``), the theta-pruned
-    scan must leave most tf/dl payload blocks UNDECODED while returning
-    exactly the brute-force top-k. Pins the lazy-decode claim in
-    ``wand._TermPostings`` with a measured skip, not just a docstring.
+    targets, ``EdgeInvertedIndex.findTopK:148-170``): the theta-pruned
+    scan over this skewed block layout must return exactly the
+    brute-force top-k, and the full Spark path the identical ranking.
 
     Layout: 4096 docs, one segment -> 32 blocks of 128 docs for the
     all-docs term "hot". Docs 0-127 (block 0): tf=40, short dl. The
     rest: tf=1, long dl. UB ordering front-loads block 0; the first
-    1024-candidate chunk settles the top-k and theta stops the scan, so
-    payload decode touches <= ~8 of 32 blocks."""
+    1024-candidate chunk settles the top-k and theta stops the scan."""
     import numpy as np
     import pandas as pd
 
@@ -157,9 +155,8 @@ def test_blockmax_skips_payload_decode_on_skewed_corpus(spark, tmp_path):
     from torchtrajectory_spark.operators.index import build_index, read_postings
     from torchtrajectory_spark.operators.wand import (
         IndexMeta,
-        _build_term_arrays,
         _corpus_scalars,
-        _scan_topk,
+        _segment_topk,
     )
 
     n, hot_tf, k = 4096, 40, 5
@@ -184,16 +181,10 @@ def test_blockmax_skips_payload_decode_on_skewed_corpus(spark, tmp_path):
     assert n_docs == n
     idf = {"hot": idf_py(float(n), n_docs)}
     meta = IndexMeta(n_docs, avgdl, {"hot": float(n)})
-    arrays = _build_term_arrays(
+    got = _segment_topk(
         pdf[["term", "n_docs", "max_tf", "min_dl", "doc_gaps", "tfs",
              "dls"]],
-        idf, avgdl, BM25_K1, BM25_B,
-    )
-    got = _scan_topk(arrays, ["hot"], idf, k, meta, BM25_K1, BM25_B)
-
-    decoded = arrays["hot"].blocks_decoded
-    assert decoded < total_blocks // 2, (
-        f"lazy decode skipped nothing: {decoded}/{total_blocks}"
+        ["hot"], k, meta, BM25_K1, BM25_B,
     )
 
     # brute-force oracle over the SAME stored postings, fully decoded

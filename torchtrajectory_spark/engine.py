@@ -38,7 +38,6 @@ from .operators.wand import (
     IndexMeta,
     query_term_meta,
     topk_bm25_index,
-    topk_bm25_index_filtered,
     topk_bm25_index_many,
 )
 
@@ -110,24 +109,21 @@ class Engine:
         a (score, doc_id) cursor — the last row of the previous page —
         for deep pagination (Lucene ``searchAfter``): only docs ranking
         strictly after it are returned, at page-one cost (the pruned scan
-        never holds a k*page heap). ``where`` and ``after`` compose —
-        filtered rankings paginate too (Lucene searchAfter with a filter
-        clause).
+        never holds a k*page heap). The cursor score must be the exact
+        float64 collected from that row: ties at the cursor compare by
+        float equality, so a score that lost bits in transit (JSON with
+        few digits, float32) drops or repeats rows at the page boundary.
+        ``where`` and ``after`` compose — filtered rankings paginate too
+        (Lucene searchAfter with a filter clause).
 
         Term statistics are fetched per QUERY (``query_term_meta``: a
         bucket-pruned dictionary lookup for just the query terms) — never
         the full dictionary, which is unbounded driver state at the
         10^12-file / hash-bounded-vocabulary posture (SURVEY.md §7.6)."""
-        if where is not None:
-            return topk_bm25_index_filtered(
-                self.spark, self.index_dir, terms, k, where,
-                buckets=self._buckets, k1=self.k1, b=self.b,
-                meta=self._term_meta(terms), after=after,
-            )
         return topk_bm25_index(
             self.spark, self.index_dir, terms, k,
             buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(terms), after=after,
+            meta=self._term_meta(terms), after=after, predicate=where,
         )
 
     def find_topk_boosted(self, weights: dict, k: int = DEFAULT_K) -> DataFrame:

@@ -11,19 +11,27 @@ Reference semantics:
 Two physical strategies:
 * corpus-direct: ``arrays_overlap`` / conjunctive ``array_contains`` on the
   tokenized corpus — single scan, zero shuffles, fully codegen'd.
-* index-backed: semi-join against the postings table (see ``index.py``) —
-  the 10^12-file path, where only matching term buckets are read.
+* index-backed: per-segment union / intersection of the query terms'
+  docID streams, decoded from the compressed postings blocks (see
+  ``index.py``) — the 10^12-file path, where only matching term buckets
+  are read.
 Both return identical (doc_id) sets; tests assert it.
 """
 
 from __future__ import annotations
 
+import math
 from functools import reduce
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import codec
+from .index import read_doc_stats, sorted_isin
 from .stats import tokenized
+from .wand import _per_segment, _terms
 
 
 def bool_or(df: DataFrame, query_terms: list[str], id_col: str = "doc_id",
@@ -46,29 +54,9 @@ def bool_and(df: DataFrame, query_terms: list[str], id_col: str = "doc_id",
     return tok.where(cond).select("doc_id")
 
 
-def bool_or_index(postings_flat: DataFrame, query_terms: list[str]) -> DataFrame:
-    """OR over a flat postings DF (term, doc_id, ...): semi-join + distinct.
-
-    Mirrors J2: ``postings.join(broadcast(qterms), "term").distinct()``.
-    """
-    q = [str(t) for t in query_terms]
-    return (
-        postings_flat.where(F.col("term").isin(q))
-        .select("doc_id")
-        .distinct()
-    )
-
-
-def bool_and_index(postings_flat: DataFrame, query_terms: list[str]) -> DataFrame:
-    """AND via count-matching (relational division), mirrors J3."""
-    terms = sorted({str(t) for t in query_terms})
-    return (
-        postings_flat.where(F.col("term").isin(terms))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("n_match"))
-        .where(F.col("n_match") == F.lit(len(terms)))
-        .select("doc_id")
-    )
+# block columns the match kernels read: docID streams only — no tf/dl
+# payload leaves parquet
+_MATCH_COLS = ("term", "n_docs", "doc_gaps")
 
 
 def _bool_index_blocks(spark, index_dir: str, query_terms: list[str],
@@ -83,50 +71,32 @@ def _bool_index_blocks(spark, index_dir: str, query_terms: list[str],
     a decode-explode stage plus a corpus-keyed shuffle for the same
     answer. Salted sub-lists of a hot term union naturally (np.unique).
     """
-    import numpy as np  # noqa: F401 (sorted_isin operands)
-    import pandas as pd
+    q = _terms(query_terms)
 
-    from .index import sorted_isin, tombstone_ids
-    from .wand import _q_blocks
+    def kernel(pdf, _meta, dead):
+        out = _live_matches(pdf, mode, len(q), dead)
+        return pd.DataFrame({"doc_id": np.empty(0, dtype=np.int64)
+                             if out is None else out})
 
-    q = sorted({str(t) for t in query_terms})
-    nq = len(q)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "doc_gaps"
-    )
-    dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = decode_match_docs(pdf, mode, nq)
-        if out is None:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64")})
-        if dead is not None and out.size:
-            out = out[~sorted_isin(dead, out)]  # tombstone mask
-        return pd.DataFrame({"doc_id": out})
-
-    return blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint"
-    )
+    return _per_segment(spark, index_dir, q, kernel, "doc_id bigint",
+                        cols=_MATCH_COLS, buckets=buckets, scored=False)
 
 
 def decode_match_docs(pdf, mode: str, nq: int):
     """SHARED per-segment boolean kernel: decode each term's docID
-    streams from its compressed blocks (salted sub-lists of a hot term
-    union via np.unique), then union (``or``) / smallest-first intersect
-    (``and``) across terms. Returns a sorted unique ndarray, or None
-    when an ``and`` term has no blocks in this segment (segments are
+    streams from its compressed blocks in one pass (salted sub-lists of
+    a hot term union via np.unique), then union (``or``) / smallest-first
+    intersect (``and``) across terms. Returns a sorted unique ndarray, or
+    None when an ``and`` term has no blocks in this segment (segments are
     doc-disjoint, so absence is final). The single implementation behind
     ``_bool_index_blocks``, ``facet_counts``, and the must/must_not
     clause sets of ``wand.topk_bm25_index_boolean`` — a codec or salting
     change lands in one place."""
-    import numpy as np
-
-    from ..functions import codec
-
-    per_term = []
-    for _term, grp in pdf.groupby("term"):
-        arrs = [codec.decode_sorted(g) for g in grp["doc_gaps"]]
-        per_term.append(np.unique(np.concatenate(arrs)))
+    per_term = [
+        np.unique(codec.decode_sorted_concat(grp["doc_gaps"],
+                                             grp["n_docs"].to_numpy()))
+        for _term, grp in pdf.groupby("term")
+    ]
     if not per_term or (mode == "and" and len(per_term) < nq):
         return None
     if mode == "or":
@@ -140,25 +110,43 @@ def decode_match_docs(pdf, mode: str, nq: int):
     return out
 
 
+def _live_matches(blk, mode: str, nq: int, dead):
+    """:func:`decode_match_docs` with the tombstoned docs masked out."""
+    match = decode_match_docs(blk, mode, nq)
+    return None if match is None else match[~sorted_isin(dead, match)]
+
+
 def match_hit_rows(blk, st, mode: str, nq: int, dead):
     """SHARED per-segment prologue of the match-then-analyze operators
     (``facet_counts`` / ``facet_ranges`` / ``sort_by_field``): boolean
-    docID match via :func:`decode_match_docs`, tombstone mask, then the
-    segment's doc_stats rows for the surviving docs. Returns the hit
-    rows (possibly empty), or None when the segment has no match — a
-    tombstone or matching fix lands in one place."""
-    import numpy as np
-
-    from .index import sorted_isin
-
-    match = decode_match_docs(blk, mode, nq)
-    if match is None:
-        return None
-    if dead is not None and match.size:
-        match = match[~sorted_isin(dead, match)]
-    if match.size == 0 or not len(st):
+    docID match via :func:`_live_matches`, then the segment's doc_stats
+    rows for the surviving docs. Returns the hit rows (possibly empty),
+    or None when the segment has no match — a tombstone or matching fix
+    lands in one place."""
+    match = _live_matches(blk, mode, nq, dead)
+    if match is None or match.size == 0 or not len(st):
         return None
     return st[np.isin(st["doc_id"].to_numpy(), match)]
+
+
+def _match_analyze(spark, index_dir: str, query_terms: list[str],
+                   mode: str, value, kernel, schema: str,
+                   buckets: int | None, op: str) -> DataFrame:
+    """Driver of the match-then-analyze operators: the boolean match
+    cogrouped per segment with the segment's doc_stats (doc_id,
+    ``value``) rows, and ``kernel(hit_rows)`` — see
+    :func:`match_hit_rows` — once per segment."""
+    if mode not in ("or", "and"):
+        raise ValueError(f"{op}: unknown mode {mode!r}")
+    q = _terms(query_terms)
+    stats = read_doc_stats(spark, index_dir).select("segment", "doc_id",
+                                                    value)
+
+    def run(blk, _meta, dead, st):
+        return kernel(match_hit_rows(blk, st, mode, len(q), dead))
+
+    return _per_segment(spark, index_dir, q, run, schema, cols=_MATCH_COLS,
+                        buckets=buckets, scored=False, side=stats)
 
 
 def bool_or_index_blocks(spark, index_dir: str, query_terms: list[str],
@@ -188,43 +176,23 @@ def sort_by_field(spark, index_dir: str, query_terms: list[str],
     and segment-partitioned); only segments x k rows shuffle into the
     global TakeOrderedAndProject merge.
     """
-    import numpy as np
-    import pandas as pd
-
-    from .index import read_doc_stats, tombstone_ids
-    from .wand import _q_blocks
-
-    if mode not in ("or", "and"):
-        raise ValueError(f"sort_by_field: unknown mode {mode!r}")
-    q = sorted({str(t) for t in query_terms})
-    nq = len(q)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "doc_gaps"
-    )
-    stats = read_doc_stats(spark, index_dir).select(
-        "segment", "doc_id",
-        F.col(sort_col).cast("double").alias("sort_value"),
-    )
-    dead = tombstone_ids(index_dir)
     kk = int(k)
-    empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                          "sort_value": pd.Series(dtype="float64")})
 
-    def run(blk: pd.DataFrame, st: pd.DataFrame) -> pd.DataFrame:
-        hit = match_hit_rows(blk, st, mode, nq, dead)
-        if hit is None:
-            return empty
-        hit = hit[hit["sort_value"].notna()]
-        if not len(hit):
-            return empty
+    def kernel(hit):
+        if hit is not None:
+            hit = hit[hit["sort_value"].notna()]
+        if hit is None or not len(hit):
+            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
+                                 "sort_value": pd.Series(dtype="float64")})
         v = hit["sort_value"].to_numpy(dtype=np.float64)
         order = np.lexsort((hit["doc_id"].to_numpy(),
                             v if ascending else -v))[:kk]
         return hit.iloc[order][["doc_id", "sort_value"]]
 
-    per_seg = blocks.groupBy("segment").cogroup(
-        stats.groupBy("segment")
-    ).applyInPandas(run, schema="doc_id bigint, sort_value double")
+    per_seg = _match_analyze(
+        spark, index_dir, query_terms, mode,
+        F.col(sort_col).cast("double").alias("sort_value"), kernel,
+        "doc_id bigint, sort_value double", buckets, "sort_by_field")
     key = (F.col("sort_value").asc() if ascending
            else F.col("sort_value").desc())
     return per_seg.orderBy(key, F.col("doc_id").asc()).limit(kk)
@@ -244,37 +212,18 @@ def facet_counts(spark, index_dir: str, query_terms: list[str],
     never corpus-sized. The reference has no faceting; this is the
     result-set analytics surface a search UI needs.
     """
-    import numpy as np
-    import pandas as pd
-
-    from .index import read_doc_stats, tombstone_ids
-    from .wand import _q_blocks
-
-    if mode not in ("or", "and"):
-        raise ValueError(f"facet_counts: unknown mode {mode!r}")
-    q = sorted({str(t) for t in query_terms})
-    nq = len(q)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "doc_gaps"
-    )
-    stats = read_doc_stats(spark, index_dir).select(
-        "segment", "doc_id", F.col(facet_col).cast("string").alias("value")
-    )
-    dead = tombstone_ids(index_dir)
-
-    def run(blk: pd.DataFrame, st: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"value": pd.Series(dtype="object"),
-                              "cnt": pd.Series(dtype="int64")})
-        hit = match_hit_rows(blk, st, mode, nq, dead)
+    def kernel(hit):
         if hit is None:
-            return empty
+            return pd.DataFrame({"value": pd.Series(dtype="object"),
+                                 "cnt": pd.Series(dtype="int64")})
         vc = hit.groupby("value", dropna=False).size()
         return pd.DataFrame({"value": vc.index.astype(object),
                              "cnt": vc.to_numpy(dtype=np.int64)})
 
-    per_seg = blocks.groupBy("segment").cogroup(
-        stats.groupBy("segment")
-    ).applyInPandas(run, schema="value string, cnt bigint")
+    per_seg = _match_analyze(
+        spark, index_dir, query_terms, mode,
+        F.col(facet_col).cast("string").alias("value"), kernel,
+        "value string, cnt bigint", buckets, "facet_counts")
     return (
         per_seg.groupBy("value").agg(F.sum("cnt").alias("n_docs"))
         # asc_nulls_last: Spark default sorts NULL FIRST in ASC while
@@ -301,49 +250,24 @@ def facet_ranges(spark, index_dir: str, query_terms: list[str],
     shuffle, bucket-cardinality-sized (corpus range / width), never
     corpus-sized.
     """
-    import numpy as np
-    import pandas as pd
-
-    from .index import read_doc_stats, tombstone_ids
-    from .wand import _q_blocks
-
-    if mode not in ("or", "and"):
-        raise ValueError(f"facet_ranges: unknown mode {mode!r}")
-    import math
-
     w = float(width)
     if not (w > 0 and math.isfinite(w)):
         raise ValueError(
             f"facet_ranges: width must be a finite positive number, "
             f"got {width!r}")
-    q = sorted({str(t) for t in query_terms})
-    nq = len(q)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "doc_gaps"
-    )
-    stats = read_doc_stats(spark, index_dir).select(
-        "segment", "doc_id", F.col(facet_col).cast("double").alias("v")
-    )
-    dead = tombstone_ids(index_dir)
 
-    def run(blk: pd.DataFrame, st: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"bucket_lo": pd.Series(dtype="float64"),
-                              "cnt": pd.Series(dtype="int64")})
-        hit = match_hit_rows(blk, st, mode, nq, dead)
-        if hit is None:
-            return empty
-        v = hit["v"].to_numpy(dtype=np.float64)
-        v = v[~np.isnan(v)]
-        if not v.size:
-            return empty
-        lo = np.floor(v / w) * w
-        uniq, cnt = np.unique(lo, return_counts=True)
+    def kernel(hit):
+        v = (np.empty(0) if hit is None
+             else hit["v"].to_numpy(dtype=np.float64))
+        uniq, cnt = np.unique(np.floor(v[~np.isnan(v)] / w) * w,
+                              return_counts=True)
         return pd.DataFrame({"bucket_lo": uniq,
                              "cnt": cnt.astype(np.int64)})
 
-    per_seg = blocks.groupBy("segment").cogroup(
-        stats.groupBy("segment")
-    ).applyInPandas(run, schema="bucket_lo double, cnt bigint")
+    per_seg = _match_analyze(
+        spark, index_dir, query_terms, mode,
+        F.col(facet_col).cast("double").alias("v"), kernel,
+        "bucket_lo double, cnt bigint", buckets, "facet_ranges")
     return (
         per_seg.groupBy("bucket_lo").agg(F.sum("cnt").alias("n_docs"))
         .orderBy(F.col("bucket_lo").asc())

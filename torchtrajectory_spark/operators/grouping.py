@@ -21,7 +21,9 @@ shuffled rows are per-(segment, group) best triples, group-cardinality x
 segments sized, never corpus-sized. Exactness forgoes WAND's theta
 pruning (a doc outside the global top-k can still be its group's best),
 so the cost class is the boolean-OR scan: bounded by the query terms'
-posting sizes, not the corpus.
+posting sizes, not the corpus. The scoring is the all-matches rule of
+the one scoring core (``wand._segment_scores``), the scan and cogroup
+its shared driver prologue (``wand._per_segment``).
 """
 
 from __future__ import annotations
@@ -32,8 +34,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
-from .index import read_doc_stats, tombstone_ids
-from .wand import IndexMeta, _q_blocks, _segment_scores_all, query_term_meta
+from .index import read_doc_stats
+from .wand import IndexMeta, _per_segment, _segment_topk, _terms
 
 
 def collapse_topk(
@@ -51,45 +53,32 @@ def collapse_topk(
     """Top-k groups by best BM25 hit. Returns (value, doc_id, score):
     the group value (cast to string), its best-scoring matching doc, and
     that doc's score; ordered (score DESC, value ASC), limit k."""
-    q = sorted(set(str(t) for t in query_terms))
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets, scalars)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
+    q = _terms(query_terms)
     stats = read_doc_stats(spark, index_dir).select(
         "segment", "doc_id",
         F.col(group_col).cast("string").alias("value"),
     )
-    dead = tombstone_ids(index_dir)
     empty = pd.DataFrame({"value": pd.Series(dtype="object"),
                           "doc_id": pd.Series(dtype="int64"),
                           "score": pd.Series(dtype="float64")})
 
-    def run(blk: pd.DataFrame, st: pd.DataFrame) -> pd.DataFrame:
+    def kernel(blk, meta, dead, st):
         if not len(blk) or not len(st):
             return empty
-        scored = _segment_scores_all(blk.drop(columns=["segment"]), q,
-                                     meta, k1, b, blocked=dead)
-        if not len(scored):
-            return empty
-        hit = scored.merge(st[["doc_id", "value"]], on="doc_id",
-                           how="inner")
+        hit = _segment_topk(blk, q, None, meta, k1, b, blocked=dead).merge(
+            st[["doc_id", "value"]], on="doc_id", how="inner")
         hit = hit[hit["value"].notna()]
-        if not len(hit):
-            return empty
         # per-group argmax (score DESC, doc_id ASC) — numpy lexsort so
         # the tie-break is explicit, then first row per value
         order = np.lexsort((hit["doc_id"].to_numpy(),
                             -hit["score"].to_numpy()))
-        hit = hit.iloc[order]
-        best = hit.drop_duplicates("value", keep="first")
+        best = hit.iloc[order].drop_duplicates("value", keep="first")
         return best[["value", "doc_id", "score"]]
 
-    per_seg = blocks.groupBy("segment").cogroup(
-        stats.groupBy("segment")
-    ).applyInPandas(run, schema="value string, doc_id bigint, score double")
+    per_seg = _per_segment(
+        spark, index_dir, q, kernel,
+        "value string, doc_id bigint, score double",
+        buckets=buckets, meta=meta, scalars=scalars, side=stats)
     # cross-segment combine: lexicographic struct max == argmax by
     # (score DESC, doc_id ASC); a doc's score is complete within its
     # one segment, so the combine is pure selection, no float re-adds

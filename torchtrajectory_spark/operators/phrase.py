@@ -28,14 +28,18 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import BM25_B, BM25_K1
 from ..functions import codec
-from .index import (
-    bucket_of,
-    decode_positions,
-    read_index_config,
-    read_postings,
-)
+from ..functions.bm25 import idf_py, tf_sat_expr
+from .index import decode_positions, read_index_config, sorted_isin
 from .stats import tokenized
+from .wand import (
+    _TermPostings,
+    _per_segment,
+    _terms,
+    _topk_merge,
+    query_term_meta,
+)
 
 
 def phrase_count(df: DataFrame, phrase: list[str], id_col: str = "doc_id",
@@ -189,32 +193,41 @@ def near_count(df: DataFrame, terms: list[str], slop: int = 0,
     )
 
 
-def _gather_term_positions(
+def _phrase_candidates(
     pdf: pd.DataFrame, terms: list[str]
-) -> tuple[dict[str, np.ndarray], dict[str, list[np.ndarray]]] | None:
-    """One segment's positional blocks -> per-term (sorted doc array,
-    aligned per-doc position arrays); None if any query term is absent
-    from the segment (segments are doc-disjoint, so absence is final)."""
+) -> tuple[np.ndarray, list[list[np.ndarray]]] | None:
+    """The candidate step both positional kernels share. Each query
+    term's positional blocks decode in one pass (docIDs, tfs, then all
+    blocks' position deltas at once — they restart at every doc, so the
+    concatenated stream decodes as one) and sort by doc. Candidates are
+    the docs holding every term; each entry of ``terms`` (repeats
+    included) gets its position arrays aligned to the candidates. None
+    when no doc can match: a term absent from the segment (segments are
+    doc-disjoint, so absence is final) or an empty intersection."""
     term_docs: dict[str, np.ndarray] = {}
     term_pos: dict[str, list[np.ndarray]] = {}
     for term, grp in pdf.groupby("term", sort=False):
-        docs_parts, pos_parts = [], []
-        for r in grp.itertuples(index=False):
-            docs = codec.decode_sorted(r.doc_gaps)
-            tfs = codec.decode_u32s(r.tfs)
-            flat, starts = decode_positions(r.poss, tfs)
-            docs_parts.append(docs)
-            splits = np.split(flat, starts[1:]) if docs.size else []
-            pos_parts.extend(splits)
-        if not docs_parts:
-            continue
-        docs = np.concatenate(docs_parts)
+        counts = grp["n_docs"].to_numpy(dtype=np.int64)
+        docs = codec.decode_sorted_concat(grp["doc_gaps"], counts)
+        tfs = codec.decode_u64_concat(grp["tfs"], counts)
+        flat, starts = decode_positions(b"".join(grp["poss"]), tfs)
+        pos = np.split(flat, starts[1:])
         order = np.argsort(docs, kind="mergesort")
         term_docs[term] = docs[order]
-        term_pos[term] = [pos_parts[i] for i in order.tolist()]
-    if any(t not in term_docs for t in dict.fromkeys(terms)):
+        term_pos[term] = [pos[i] for i in order.tolist()]
+    uniq = list(dict.fromkeys(terms))
+    if any(t not in term_docs for t in uniq):
         return None
-    return term_docs, term_pos
+    cand = term_docs[uniq[0]]
+    for t in uniq[1:]:
+        cand = cand[np.isin(cand, term_docs[t])]
+    if cand.size == 0:
+        return None
+    return cand, [
+        [term_pos[t][i]
+         for i in np.searchsorted(term_docs[t], cand).tolist()]
+        for t in terms
+    ]
 
 
 # candidate-rank shift for the vectorized position kernels: positions
@@ -312,51 +325,33 @@ def _phrase_counts_vectorized(cand: np.ndarray,
                        minlength=cand.size).astype(np.int64)
 
 
-def _segment_near(pdf: pd.DataFrame, terms: list[str],
-                  slop: int) -> pd.DataFrame:
+def _segment_occ(pdf: pd.DataFrame, terms: list[str],
+                 slop: int | None = None) -> pd.DataFrame:
     """One segment's positional blocks for the query terms ->
-    (doc, n_occ) under the ordered proximity semantics.
+    (doc_id, n_occ): exact-phrase occurrences (``slop`` None) or ordered
+    proximity tuples within (n-1)+slop, over the shared candidates.
 
-    n=2 (the hot shape — two-term proximity over stopword-grade terms
-    can leave O(corpus) candidates) runs the vectorized pair counter;
-    n>=3 candidates shrink with every intersected term, so the per-doc
-    window recursion stays cheap there."""
-    empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                          "n_occ": pd.Series(dtype="int64")})
-    gathered = _gather_term_positions(pdf, terms)
-    if gathered is None:
-        return empty
-    term_docs, term_pos = gathered
-    uniq = list(dict.fromkeys(terms))
-    cand = term_docs[uniq[0]]
-    for t in uniq[1:]:
-        cand = cand[np.isin(cand, term_docs[t])]
-    if cand.size == 0:
-        return empty
-    per_term_pos = [_cand_positions(term_docs, term_pos, cand, t)
-                    for t in terms]
-    lim = len(terms) - 1 + int(slop)
-    if _fits_vectorized(per_term_pos, lim):
+    Both counters are vectorized over ALL candidate docs at once: the
+    exact phrase propagates starts with one sorted membership probe per
+    phrase offset (the per-doc loop cost 6 s on a 1M-doc index for a
+    two-keyword phrase), proximity expands chains level by level. A doc
+    past the 16M-token rank shift falls back to the per-doc tuple
+    counter (at slop 0 it counts exactly the phrase occurrences)."""
+    got = _phrase_candidates(pdf, terms)
+    if got is None:
+        return pd.DataFrame(_EMPTY_OCC)
+    cand, per_term_pos = got
+    width = 0 if slop is None else int(slop)
+    lim = len(terms) - 1 + width
+    if not _fits_vectorized(per_term_pos, lim):
+        n = np.array([count_near_tuples([pl[i] for pl in per_term_pos], width)
+                      for i in range(cand.size)], dtype=np.int64)
+    elif slop is None:
+        n = _phrase_counts_vectorized(cand, per_term_pos)
+    else:
         n = _near_counts_vectorized(cand, per_term_pos, lim)
-        keep = n > 0
-        return pd.DataFrame({"doc_id": cand[keep], "n_occ": n[keep]})
-    # pathological (>16M-token doc): per-doc fallback
-    out_docs, out_n = [], []
-    for i in range(cand.size):
-        c = count_near_tuples([pl[i] for pl in per_term_pos], slop)
-        if c:
-            out_docs.append(int(cand[i]))
-            out_n.append(c)
-    return pd.DataFrame({"doc_id": np.asarray(out_docs, dtype=np.int64),
-                         "n_occ": np.asarray(out_n, dtype=np.int64)})
-
-
-def _cand_positions(term_docs: dict, term_pos: dict, cand: np.ndarray,
-                    t: str) -> list[np.ndarray]:
-    """Position arrays of term ``t`` aligned to the candidate doc order."""
-    idx = np.searchsorted(term_docs[t], cand)
-    pl = term_pos[t]
-    return [pl[i] for i in idx.tolist()]
+    keep = n > 0
+    return pd.DataFrame({"doc_id": cand[keep], "n_occ": n[keep]})
 
 
 def _fits_vectorized(per_term_pos: list[list[np.ndarray]],
@@ -371,116 +366,52 @@ def _fits_vectorized(per_term_pos: list[list[np.ndarray]],
     )
 
 
+# positional block columns: docIDs, tfs (position run lengths), positions
+_POS_COLS = ("term", "n_docs", "doc_gaps", "tfs", "poss")
+_OCC_SCHEMA = "doc_id bigint, n_occ bigint"
+_EMPTY_OCC = {"doc_id": pd.Series(dtype="int64"),
+              "n_occ": pd.Series(dtype="int64")}
+
+
+def _require_positions(index_dir: str) -> None:
+    if not read_index_config(index_dir).get("with_positions"):
+        raise ValueError(f"index at {index_dir} has no positions")
+
+
+def _live(r: pd.DataFrame, dead) -> pd.DataFrame:
+    """Drop tombstoned docs from a per-segment (doc_id, ...) frame."""
+    return r[~sorted_isin(dead, r["doc_id"].to_numpy())]
+
+
+def _occ_index(spark: SparkSession, index_dir: str, terms: list[str],
+               slop: int | None, buckets: int | None) -> DataFrame:
+    """Positional match counts from the index: the shared driver
+    prologue (only the queried terms' buckets are read) around the
+    per-segment occurrence kernel; doc-disjoint segments union without
+    dedup."""
+    _require_positions(index_dir)
+    terms = list(terms)
+    return _per_segment(
+        spark, index_dir, _terms(terms),
+        lambda blk, _meta, dead: _live(_segment_occ(blk, terms, slop), dead),
+        _OCC_SCHEMA, cols=_POS_COLS, buckets=buckets, scored=False)
+
+
 def near_count_index(spark: SparkSession, index_dir: str,
                      terms: list[str], slop: int = 0,
                      buckets: int | None = None) -> DataFrame:
     """Index-backed ordered proximity query over a positional index —
-    same bucket+term-pruned scan shape as :func:`phrase_count_index`
-    (only the queried terms' buckets are read; per-segment Arrow kernel;
-    doc-disjoint segments union without dedup)."""
+    same bucket+term-pruned scan shape as :func:`phrase_count_index`."""
     if not terms:
         raise ValueError("empty proximity query")
-    cfg = read_index_config(index_dir)
-    if not cfg.get("with_positions"):
-        raise ValueError(f"index at {index_dir} has no positions")
-    if buckets is None:
-        buckets = int(cfg["buckets"])
-    q = sorted(set(terms))
-    bks = sorted({bucket_of(t, buckets) for t in q})
-    blocks = (
-        read_postings(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-        .select("segment", "term", "doc_gaps", "tfs", "poss")
-    )
-    from .index import sorted_isin, tombstone_ids
-
-    dead = tombstone_ids(index_dir)
-    tq = list(terms)
-    s = int(slop)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = _segment_near(pdf.drop(columns=["segment"]), tq, s)
-        if dead is not None and len(r):
-            r = r[~sorted_isin(dead, r["doc_id"].to_numpy())]  # tombstones
-        return r
-
-    return blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, n_occ bigint",
-    )
-
-
-def _segment_phrase(pdf: pd.DataFrame, phrase: list[str]) -> pd.DataFrame:
-    """One segment's positional blocks for the phrase terms -> (doc, n_occ).
-
-    Candidate docs (intersection across terms), then the vectorized
-    start-propagation over rank-keyed flat position arrays — one sorted
-    membership probe per phrase offset for ALL docs at once (the per-doc
-    loop cost 6 s on a 1M-doc index for a two-keyword phrase).
-    """
-    empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                          "n_occ": pd.Series(dtype="int64")})
-    gathered = _gather_term_positions(pdf, phrase)
-    if gathered is None:
-        return empty
-    term_docs, term_pos = gathered
-    uniq_terms = list(dict.fromkeys(phrase))
-    cand = term_docs[uniq_terms[0]]
-    for t in uniq_terms[1:]:
-        cand = cand[np.isin(cand, term_docs[t])]
-    if cand.size == 0:
-        return empty
-    per_term_pos = [_cand_positions(term_docs, term_pos, cand, t)
-                    for t in phrase]
-    if _fits_vectorized(per_term_pos, len(phrase) - 1):
-        n = _phrase_counts_vectorized(cand, per_term_pos)
-        keep = n > 0
-        return pd.DataFrame({"doc_id": cand[keep], "n_occ": n[keep]})
-    # pathological (>16M-token doc): per-doc start propagation
-    out_docs, out_n = [], []
-    for i in range(cand.size):
-        starts = per_term_pos[0][i]
-        for j in range(1, len(phrase)):
-            starts = starts[np.isin(starts + j, per_term_pos[j][i])]
-            if starts.size == 0:
-                break
-        if starts.size:
-            out_docs.append(int(cand[i]))
-            out_n.append(int(starts.size))
-    return pd.DataFrame({"doc_id": np.asarray(out_docs, dtype=np.int64),
-                         "n_occ": np.asarray(out_n, dtype=np.int64)})
+    return _occ_index(spark, index_dir, terms, int(slop), buckets)
 
 
 def phrase_count_index(spark: SparkSession, index_dir: str,
                        phrase: list[str],
                        buckets: int | None = None) -> DataFrame:
     """Index-backed phrase query over a positional index."""
-    cfg = read_index_config(index_dir)
-    if not cfg.get("with_positions"):
-        raise ValueError(f"index at {index_dir} has no positions")
-    if buckets is None:
-        buckets = int(cfg["buckets"])
-    q = sorted(set(phrase))
-    bks = sorted({bucket_of(t, buckets) for t in q})
-    blocks = (
-        read_postings(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-        .select("segment", "term", "doc_gaps", "tfs", "poss")
-    )
-    from .index import sorted_isin, tombstone_ids
-
-    dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        r = _segment_phrase(pdf.drop(columns=["segment"]), phrase)
-        if dead is not None and len(r):
-            r = r[~sorted_isin(dead, r["doc_id"].to_numpy())]  # tombstones
-        return r
-
-    return blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, n_occ bigint",
-    )
+    return _occ_index(spark, index_dir, phrase, None, buckets)
 
 
 def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
@@ -507,77 +438,44 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     tuple count. slop=0 counts the same matches as the exact phrase.
 
     Scale shape: ONE pass — the positional per-segment kernel
-    (`_segment_phrase`, bucket+term-pruned scan) emits
+    (``_segment_occ``, bucket+term-pruned scan) emits
     (doc_id, n_occ, dl) with dl decoded from the SAME blocks (no
     doc-store join), the summed idf is a driver-side constant from the
     per-query dictionary lookup, scoring is a codegen'd expression over
     match-set-sized rows, and the global merge is one
     TakeOrderedAndProject."""
-    from ..config import BM25_B, BM25_K1, DEFAULT_K
-    from ..functions.bm25 import idf_py, tf_sat_expr
-    from .index import sorted_isin, tombstone_ids
-    from .wand import query_term_meta
-
     k1 = BM25_K1 if k1 is None else float(k1)
     b = BM25_B if b is None else float(b)
-    cfg = read_index_config(index_dir)
-    if not cfg.get("with_positions"):
-        raise ValueError(f"index at {index_dir} has no positions")
-    if buckets is None:
-        buckets = int(cfg["buckets"])
+    _require_positions(index_dir)
     phrase = [str(t) for t in phrase]
     if not phrase:
         raise ValueError("empty phrase")
-    q = sorted(set(phrase))
+    q = _terms(phrase)
     meta = query_term_meta(spark, index_dir, q, buckets)
     idf_total = float(sum(idf_py(meta.term_df.get(t, 0.0), meta.n_docs)
                           for t in phrase))
-    bks = sorted({bucket_of(t, buckets) for t in q})
-    blocks = (
-        read_postings(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-        .select("segment", "term", "doc_gaps", "tfs", "poss", "dls")
-    )
-    dead = tombstone_ids(index_dir)
     t0 = min(q, key=lambda t: meta.term_df.get(t, 0.0))  # rarest term
+    s = None if slop is None else int(slop)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "n_occ": pd.Series(dtype="int64"),
-                              "dl": pd.Series(dtype="int64")})
-        blk = pdf[["term", "doc_gaps", "tfs", "poss"]]
-        r = (_segment_phrase(blk, phrase) if slop is None
-             else _segment_near(blk, phrase, int(slop)))
-        if dead is not None and len(r):
-            r = r[~sorted_isin(dead, r["doc_id"].to_numpy())]
+    def kernel(pdf, meta, dead):
+        r = _live(_segment_occ(pdf, phrase, s), dead)
         if not len(r):
-            return empty
-        # dl for the matched docs from the rarest term's blocks (every
+            return pd.DataFrame({**_EMPTY_OCC, "dl": pd.Series(dtype="int64")})
+        # dl for the matched docs from the rarest term's postings (every
         # phrase match contains every term; dl is per-doc) — zero
         # doc-store read
-        docs_parts, dl_parts = [], []
-        for row in pdf[pdf["term"] == t0].itertuples(index=False):
-            docs_parts.append(codec.decode_sorted(row.doc_gaps))
-            dl_parts.append(codec.decode_u32s(row.dls))
-        docs = np.concatenate(docs_parts)
-        dls = np.concatenate(dl_parts)
-        order = np.argsort(docs, kind="mergesort")
-        docs, dls = docs[order], dls[order]
-        hit = r["doc_id"].to_numpy()
-        pos = np.searchsorted(docs, hit)
-        return pd.DataFrame({"doc_id": hit,
-                             "n_occ": r["n_occ"].to_numpy(),
-                             "dl": dls[pos].astype(np.int64)})
+        tp = _TermPostings(pdf[pdf["term"] == t0], meta.avgdl, k1, b)
+        pos = np.searchsorted(tp.docs, r["doc_id"].to_numpy())
+        return r.assign(dl=tp.dl[pos].astype(np.int64))
 
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, n_occ bigint, dl bigint",
-    )
-    scored = per_seg.select(
+    per_seg = _per_segment(
+        spark, index_dir, q, kernel,
+        "doc_id bigint, n_occ bigint, dl bigint",
+        cols=_POS_COLS + ("max_tf", "min_dl", "dls"), buckets=buckets,
+        meta=meta)
+    return _topk_merge(per_seg.select(
         "doc_id",
         (F.lit(idf_total) * tf_sat_expr(
             F.col("n_occ").cast("double"), F.col("dl").cast("double"),
             meta.avgdl, k1, b)).alias("score"),
-    )
-    return (scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(int(k)))
+    ), k)

@@ -14,81 +14,27 @@ family next to ``operators/boolean.py`` (unscored AND/OR) and
   df = max of member dfs (Lucene's blended docFreq), so "spark OR its
   alias" never double-counts idf the way a boolean OR would.
 
-Scale shape (both): the per-segment kernel decodes only the query terms'
-blocks (bucket+term-pruned scan, same as every other indexed query) and
-emits <=k rows per segment into a global TakeOrderedAndProject. Cost class
-is boolean-OR (every match scored — msm candidacy and synonym tf-blending
-are per-doc aggregates over the full match set, so the block-max UB
-machinery is deliberately unused, same trade as grouping/collapse).
+Both are specs on the one scoring core in ``wand.py``, not kernels of
+their own: msm is the min-count candidate rule (docs matching fewer
+than m clauses drop from docID membership alone, before any scoring),
+a synonym group is a multi-member clause. Either way the survivors run
+the same UB-pruned theta scan as a plain query, over the same
+bucket+term-pruned postings scan, into a global TakeOrderedAndProject.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
-from ..functions.bm25 import idf_py, tf_sat_np
-from .index import tombstone_ids
 from .wand import (
-    _EMPTY_TOPK,
+    _TOPK_SCHEMA,
     IndexMeta,
-    _build_term_arrays,
-    _q_blocks,
-    query_term_meta,
+    _per_segment,
+    _segment_topk,
+    _terms,
+    _topk_merge,
 )
-
-_TOPK_SCHEMA = "doc_id bigint, score double"
-
-
-def _live_union_docs(use: dict, blocked: np.ndarray | None) -> np.ndarray:
-    docs = np.unique(np.concatenate([tp.docs for tp in use.values()]))
-    if blocked is not None and blocked.size and docs.size:
-        from .index import sorted_isin
-
-        docs = docs[~sorted_isin(blocked, docs)]
-    return docs
-
-
-def _segment_topk_msm(pdf: pd.DataFrame, q: list[str], m: int, k: int,
-                      meta: IndexMeta, k1: float, b: float,
-                      blocked: np.ndarray | None = None) -> pd.DataFrame:
-    """One segment's exact top-k under minimum-should-match ``m``."""
-    idf = {t: idf_py(meta.term_df.get(t, 0.0), meta.n_docs) for t in q}
-    arrays = _build_term_arrays(pdf, idf, meta.avgdl, k1, b)
-    use = {t: arrays[t] for t in q if t in arrays}
-    if len(use) < m:  # even matching every present term can't reach m
-        return pd.DataFrame(_EMPTY_TOPK)
-    docs = _live_union_docs(use, blocked)
-    if docs.size == 0:
-        return pd.DataFrame(_EMPTY_TOPK)
-    # pass 1 — candidacy from docID membership ALONE (the docID streams
-    # are already decoded; no tf/dl payload is touched), so the usually
-    # large non-qualifying majority never costs a block decode
-    counts = np.zeros(docs.size, dtype=np.int64)
-    for term in sorted(use):
-        tp = use[term]
-        pos = np.clip(np.searchsorted(tp.docs, docs), 0, tp.docs.size - 1)
-        counts[tp.docs[pos] == docs] += 1
-    docs = docs[counts >= m]
-    if docs.size == 0:
-        return pd.DataFrame(_EMPTY_TOPK)
-    # pass 2 — exact BM25 over the qualifying docs only (lazy per-block
-    # payload decode inside tf_dl_at touches just their blocks)
-    scores = np.zeros(docs.size, dtype=np.float64)
-    for term in sorted(use):
-        tp = use[term]
-        pos = np.clip(np.searchsorted(tp.docs, docs), 0, tp.docs.size - 1)
-        hit = tp.docs[pos] == docs
-        hit_idx = pos[hit]
-        if hit_idx.size:
-            tfs, dls = tp.tf_dl_at(hit_idx)
-            scores[hit] += idf[term] * tf_sat_np(tfs, dls, meta.avgdl,
-                                                 k1, b)
-    sel = np.lexsort((docs, -scores))[:k]
-    return pd.DataFrame({"doc_id": docs[sel], "score": scores[sel]})
 
 
 def topk_bm25_index_msm(
@@ -105,71 +51,16 @@ def topk_bm25_index_msm(
     """Top-k BM25 over docs matching >= ``min_should_match`` distinct
     query terms (Lucene ``BooleanQuery.setMinimumNumberShouldMatch``).
     m=1 degenerates to the plain OR ranking; m=len(terms) to AND."""
-    q = sorted(set(str(t) for t in query_terms))
+    q = _terms(query_terms)
     m = int(min_should_match)
     if not 1 <= m <= len(q):
         raise ValueError(
             f"min_should_match={m} out of range 1..{len(q)} for {q!r}")
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
-    dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk_msm(
-            pdf.drop(columns=["segment"]), q, m, k, meta, k1, b,
-            blocked=dead,
-        )
-
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema=_TOPK_SCHEMA,
-    )
-    return (per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(int(k)))
-
-
-def _segment_topk_synonym(pdf: pd.DataFrame, groups: list[list[str]],
-                          gidf: list[float], k: int, meta: IndexMeta,
-                          k1: float, b: float,
-                          blocked: np.ndarray | None = None) -> pd.DataFrame:
-    """One segment's exact top-k under SynonymQuery scoring: per group,
-    tf = sum of member tfs in the doc, idf fixed driver-side from the
-    group's blended (max) df."""
-    all_terms = sorted({t for g in groups for t in g})
-    idf0 = {t: 0.0 for t in all_terms}  # member_ub unused in this kernel
-    arrays = _build_term_arrays(pdf, idf0, meta.avgdl, k1, b)
-    use = {t: arrays[t] for t in all_terms if t in arrays}
-    if not use:
-        return pd.DataFrame(_EMPTY_TOPK)
-    docs = _live_union_docs(use, blocked)
-    if docs.size == 0:
-        return pd.DataFrame(_EMPTY_TOPK)
-    scores = np.zeros(docs.size, dtype=np.float64)
-    for g, idf_g in zip(groups, gidf):
-        tf_sum = np.zeros(docs.size, dtype=np.float64)
-        dl = np.zeros(docs.size, dtype=np.float64)
-        any_hit = np.zeros(docs.size, dtype=bool)
-        for t in sorted(set(g)):
-            tp = use.get(t)
-            if tp is None:
-                continue
-            pos = np.clip(np.searchsorted(tp.docs, docs), 0,
-                          tp.docs.size - 1)
-            hit = tp.docs[pos] == docs
-            hit_idx = pos[hit]
-            if hit_idx.size:
-                tfs, dls = tp.tf_dl_at(hit_idx)
-                tf_sum[hit] += tfs
-                dl[hit] = dls  # dl is per-doc, identical across members
-                any_hit |= hit
-        if any_hit.any():
-            scores[any_hit] += idf_g * tf_sat_np(
-                tf_sum[any_hit], dl[any_hit], meta.avgdl, k1, b)
-    sel = np.lexsort((docs, -scores))[:k]
-    return pd.DataFrame({"doc_id": docs[sel], "score": scores[sel]})
+    return _topk_merge(_per_segment(
+        spark, index_dir, q,
+        lambda blk, meta, dead: _segment_topk(blk, q, k, meta, k1, b,
+                                              blocked=dead, min_match=m),
+        _TOPK_SCHEMA, buckets=buckets, meta=meta), k)
 
 
 def topk_bm25_index_synonym(
@@ -186,33 +77,11 @@ def topk_bm25_index_synonym(
     (Lucene ``SynonymQuery``): tf = sum of member tfs, df = max of member
     dfs. A single-term group is exactly a plain query term, so mixed
     queries compose: ``[["spark", "pyspark"], ["join"]]``."""
-    groups = [sorted({str(t) for t in g}) for g in groups if g]
+    groups = [_terms(g) for g in groups if g]
     if not groups:
         raise ValueError("topk_bm25_index_synonym: no groups")
-    all_terms = sorted({t for g in groups for t in g})
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, all_terms, buckets)
-    # blended statistics driver-side: df_g = max member df (Lucene's
-    # SynonymQuery docFreq), bounded driver state (len(groups) floats)
-    gidf = [
-        idf_py(max((meta.term_df.get(t, 0.0) for t in g), default=0.0),
-               meta.n_docs)
-        for g in groups
-    ]
-    blocks = _q_blocks(spark, index_dir, all_terms, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
-    dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk_synonym(
-            pdf.drop(columns=["segment"]), groups, gidf, k, meta, k1, b,
-            blocked=dead,
-        )
-
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema=_TOPK_SCHEMA,
-    )
-    return (per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-            .limit(int(k)))
+    return _topk_merge(_per_segment(
+        spark, index_dir, _terms(t for g in groups for t in g),
+        lambda blk, meta, dead: _segment_topk(blk, groups, k, meta, k1, b,
+                                              blocked=dead),
+        _TOPK_SCHEMA, buckets=buckets, meta=meta), k)

@@ -58,15 +58,7 @@ def topk_bm25(df: DataFrame, query_terms: list[str], k: int = DEFAULT_K,
     Returns (doc_id, score_u6) ordered (score DESC, doc_id ASC) LIMIT k.
     """
     tok = tokenized(df, id_col, text_col, analyzer)
-    scores = score_terms(term_freqs(tok), tok, query_terms)
-    return (
-        scores.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-        .select(
-            "doc_id",
-            F.round(F.col("score") * 1e6).cast("bigint").alias("score_u6"),
-        )
-    )
+    return _ranked_u6(score_terms(term_freqs(tok), tok, query_terms), k)
 
 
 def topk_bm25_filtered(df: DataFrame, query_terms: list[str], k: int,
@@ -85,9 +77,14 @@ def topk_bm25_filtered(df: DataFrame, query_terms: list[str], k: int,
     tok = tokenized(df, id_col, text_col, analyzer)
     scores = score_terms(term_freqs(tok), tok, query_terms)
     allowed = df.where(predicate).select(F.col(id_col).alias("doc_id"))
+    return _ranked_u6(scores.join(allowed, "doc_id", "left_semi"), k)
+
+
+def _ranked_u6(scores: DataFrame, k: int) -> DataFrame:
+    """Top-k of (doc_id, score) ordered (score DESC, doc_id ASC) as
+    (doc_id, score_u6)."""
     return (
-        scores.join(allowed, "doc_id", "left_semi")
-        .orderBy(F.col("score").desc(), F.col("doc_id").asc())
+        scores.orderBy(F.col("score").desc(), F.col("doc_id").asc())
         .limit(k)
         .select(
             "doc_id",

@@ -17,10 +17,29 @@ bounded top-k min-heap        (T3)          -> running k-th best per chunk
 theta early termination       (T4)          -> stop when bestKth >= next
                                                chunk's max UB
 restDistance DP abandon       (T5)          -> block-max bound IS the
-                                               remaining-score bound
+                                               remaining-score bound: the
+                                               chunks past theta are never
+                                               scored (payloads decode in
+                                               one pass per term — the
+                                               scan scores 93-100% of
+                                               blocks on the bench corpus)
 heap pop                      (T7)          -> per-segment top-k ->
                                                TakeOrderedAndProject merge,
                                                (score DESC, doc_id ASC)
+
+Every indexed query runs on one core (Lucene's Weight/Scorer split,
+Koios' bound-then-verify loop with pluggable candidate rules):
+
+* ``_per_segment`` — the driver prologue: term meta, the bucket+term
+  pruned postings scan, the tombstone set, and one per-segment
+  ``applyInPandas`` (or a cogroup with a doc_stats side frame);
+  ``_topk_merge`` is the global (score DESC, doc_id ASC) merge.
+* ``_TermPostings`` — one term's blocks in a segment, decoded in one pass.
+* ``_segment_scores`` — the one per-segment BM25 primitive: a doc set
+  scored against weighted clauses (a plain term, or a synonym group
+  summing member tf), the candidates chosen by the query's rule —
+  UB-pruned theta scan (with a searchAfter cursor), all live matches, or
+  at least m clauses matched.
 
 The index is doc-sharded into segments; each segment task runs the whole
 pruned scan locally over numpy arrays (one ``applyInPandas`` group per
@@ -37,18 +56,22 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
 from ..functions import codec
-from ..functions.bm25 import idf_py, tf_sat_np
+from ..functions.bm25 import idf_py, tf_sat_expr, tf_sat_np
 from .index import (
     bucket_of,
+    postings_flat,
     read_doc_stats,
     read_index_config,
+    read_manifest,
     read_postings,
     read_terms,
+    read_terms_sorted,
+    sorted_isin,
     tombstone_ids,
 )
 
@@ -63,18 +86,10 @@ class IndexMeta:
 
 def _corpus_scalars(spark: SparkSession, index_dir: str) -> tuple[float, float]:
     """(n_docs, avgdl) straight from the manifest rows — no data scan."""
-    from .index import read_manifest
-
-    m = read_manifest(spark, index_dir)
-    if "sum_dl" in m.columns:
-        row = m.agg(F.sum("row_count").alias("n"),
-                    F.sum("sum_dl").alias("sdl")).first()
-        n = float(row["n"] or 0)
-        return n, (float(row["sdl"] or 0) / n if n else 0.0)
-    # legacy index without sum_dl: fall back to a doc_stats scan
-    ds = read_doc_stats(spark, index_dir)
-    row = ds.agg(F.count("*").alias("n"), F.avg("dl").alias("avgdl")).first()
-    return float(row["n"]), float(row["avgdl"] or 0.0)
+    row = read_manifest(spark, index_dir).agg(
+        F.sum("row_count").alias("n"), F.sum("sum_dl").alias("sdl")).first()
+    n = float(row["n"] or 0)
+    return n, (float(row["sdl"] or 0) / n if n else 0.0)
 
 
 def open_index_meta(spark: SparkSession, index_dir: str) -> IndexMeta:
@@ -84,8 +99,6 @@ def open_index_meta(spark: SparkSession, index_dir: str) -> IndexMeta:
     Small-index convenience ONLY (collects the whole dictionary to the
     driver — unbounded in vocabulary size). Query paths use
     ``query_term_meta``, which touches just the query terms' buckets."""
-    from .index import read_terms
-
     n_docs, avgdl = _corpus_scalars(spark, index_dir)
     dfs = (
         read_terms(spark, index_dir)
@@ -120,8 +133,6 @@ def query_term_meta(spark: SparkSession, index_dir: str,
     commits it pins the reader to a coherent-statistics view (the full
     fix — a point-in-time segment list pinned across all of a query's
     reads, Lucene's IndexReader contract — is the documented seam)."""
-    from .index import read_index_config, read_terms
-
     n_docs, avgdl = (scalars if scalars is not None
                      else _corpus_scalars(spark, index_dir))
     q = sorted(set(query_terms))
@@ -152,135 +163,222 @@ def _q_blocks(spark: SparkSession, index_dir: str, q: list[str],
     )
 
 
-class _TermPostings:
-    """One query term's postings in a segment, payloads decoded lazily.
-
-    docIDs are decoded eagerly (needed for the UB pass and the candidate
-    lookups); tf/dl varint payloads are decoded per BLOCK only when a
-    surviving candidate actually touches that block — the true block-max
-    WAND behavior (reference T5: blocks the θ-pruned scan never reaches
-    are never decompressed).
-
-    Measured caveat: on the synthetic bench corpus the skip rate is ~0%
-    because uniform doc lengths + Zipf tf make block maxes nearly equal,
-    so θ-termination fires only at the very end of the scan. The laziness
-    costs nothing there and pays off exactly when block maxes
-    discriminate (real corpora with length/tf spread).
-    """
-
-    def __init__(self, grp: pd.DataFrame, idf: float, avgdl: float,
-                 k1: float, b: float):
-        docs_list = [codec.decode_sorted(g) for g in grp["doc_gaps"]]
-        n_blocks = len(docs_list)
-        docs = np.concatenate(docs_list)
-        blk_rep = np.repeat(np.arange(n_blocks), grp["n_docs"].to_numpy())
-        off_rep = np.concatenate(
-            [np.arange(d.size, dtype=np.int64) for d in docs_list]
-        )
-        order = np.argsort(docs, kind="mergesort")
-        self.docs = docs[order]
-        self._blk = blk_rep[order]
-        self._off = off_rep[order]
-        self._tf_bufs = [bytes(x) for x in grp["tfs"]]
-        self._dl_bufs = [bytes(x) for x in grp["dls"]]
-        self._decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        self.blocks_decoded = 0
-        blk_ub = idf * tf_sat_np(
-            grp["max_tf"].to_numpy(dtype=np.float64),
-            grp["min_dl"].to_numpy(dtype=np.float64),
-            avgdl, k1, b,
-        )
-        self.member_ub = blk_ub[self._blk]
-
-    def tf_dl_at(self, idx: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-        """(tf, dl) for sorted-posting indices, decoding touched blocks."""
-        blks = self._blk[idx]
-        offs = self._off[idx]
-        tf_out = np.empty(idx.size, dtype=np.float64)
-        dl_out = np.empty(idx.size, dtype=np.float64)
-        for bid in np.unique(blks):
-            dec = self._decoded.get(bid)
-            if dec is None:
-                dec = (codec.decode_u32s(self._tf_bufs[bid]),
-                       codec.decode_u32s(self._dl_bufs[bid]))
-                self._decoded[bid] = dec
-                self.blocks_decoded += 1
-            m = blks == bid
-            tf_out[m] = dec[0][offs[m]]
-            dl_out[m] = dec[1][offs[m]]
-        return tf_out, dl_out
-
-
-def _build_term_arrays(pdf: pd.DataFrame, idf: dict, avgdl: float,
-                       k1: float, b: float) -> dict:
-    """Decode one segment's posting groups into ``_TermPostings``, keyed
-    by term. Shared by the single-query and batch scorers — in the batch
-    path each term is decoded ONCE even when many queries reference it."""
-    return {
-        term: _TermPostings(grp, idf[term], avgdl, k1, b)
-        for term, grp in pdf.groupby("term", sort=True)
-    }
-
-
+# block columns the scorer reads: payloads + bound metadata, never
+# salt/block_id/first/last (ReadSchema shrinks accordingly — EXPLAIN.md)
+_SCORE_COLS = ("term", "n_docs", "max_tf", "min_dl", "doc_gaps", "tfs", "dls")
+_TOPK_SCHEMA = "doc_id bigint, score double"
 _EMPTY_TOPK = {"doc_id": pd.Series(dtype="int64"),
                "score": pd.Series(dtype="float64")}
 
 
-def _scan_topk(term_arrays: dict, q: list[str], idf: dict, k: int,
-               meta: IndexMeta, k1: float, b: float,
-               allowed: np.ndarray | None = None,
-               blocked: np.ndarray | None = None,
-               after: tuple[float, int] | None = None) -> pd.DataFrame:
-    """UB-ordered chunked top-k scan over prebuilt term arrays (the
-    block-max WAND kernel, factored out so the batch path can reuse one
-    set of decoded postings across queries).
+def _terms(terms) -> list[str]:
+    """Normalised query terms: distinct strings, sorted."""
+    return sorted({str(t) for t in terms})
 
-    ``blocked`` (sorted doc_ids) = tombstoned docs: dropped from the
-    candidate set BEFORE the UB ordering (mask semantics — scores keep
-    index-wide statistics until compaction purges the postings).
+
+def _per_segment(spark: SparkSession, index_dir: str, q: list[str],
+                 kernel, schema: str, *, cols=_SCORE_COLS,
+                 buckets: int | None = None, meta: IndexMeta | None = None,
+                 scalars: tuple[float, float] | None = None,
+                 scored: bool = True,
+                 side: DataFrame | None = None) -> DataFrame:
+    """The driver prologue every indexed query shares.
+
+    For a scoring query without a memoized ``meta``, fetches the term
+    meta of ``q`` (``query_term_meta``). Scans ``q``'s postings blocks
+    with the bucket+term predicates pushed into parquet and only
+    ``cols`` projected, reads the tombstone set once, and runs
+    ``kernel(blocks, meta, dead)`` once per segment, ``blocks`` without
+    the ``segment`` column. A ``side`` frame (rows carrying ``segment``,
+    e.g. doc_stats) cogroups with the blocks per segment instead, and
+    the kernel gets the segment's side rows as a fourth argument."""
+    if scored and meta is None:
+        meta = query_term_meta(spark, index_dir, q, buckets, scalars)
+    blocks = _q_blocks(spark, index_dir, q, buckets).select("segment", *cols)
+    dead = tombstone_ids(index_dir)
+    if side is None:
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            return kernel(pdf.drop(columns=["segment"]), meta, dead)
+
+        return blocks.groupBy("segment").applyInPandas(run, schema)
+
+    def run_side(pdf: pd.DataFrame, rows: pd.DataFrame) -> pd.DataFrame:
+        return kernel(pdf.drop(columns=["segment"]), meta, dead, rows)
+
+    return blocks.groupBy("segment").cogroup(
+        side.groupBy("segment")).applyInPandas(run_side, schema)
+
+
+def _topk_merge(df: DataFrame, k: int) -> DataFrame:
+    """Global merge of per-segment top-k lists: (score DESC, doc_id ASC)
+    limit k — one TakeOrderedAndProject."""
+    return df.orderBy(F.col("score").desc(),
+                      F.col("doc_id").asc()).limit(int(k))
+
+
+def _allowed_docs(spark: SparkSession, index_dir: str, predicate) -> DataFrame:
+    """(segment, doc_id) of the docs a doc_stats predicate admits — the
+    side frame of the metadata-filtered scorers (predicate pushed into
+    the doc_stats parquet scan)."""
+    return (read_doc_stats(spark, index_dir).where(predicate)
+            .select("segment", "doc_id"))
+
+
+def _sorted_ids(rows: pd.DataFrame | None) -> np.ndarray | None:
+    return (None if rows is None
+            else np.sort(rows["doc_id"].to_numpy(dtype=np.int64)))
+
+
+class _TermPostings:
+    """One query term's postings in a segment, decoded in one pass.
+
+    All of the term's blocks (salted sub-lists included) decode through
+    the concatenating codec helpers — one varint pass per column — then
+    sort by doc. ``member_ub`` is each posting's block bound
+    tf_sat(max_tf, min_dl) repeated over the block's docs: times a
+    clause weight, it bounds the posting's score contribution (A2).
+
+    Eager because skipping blocks would save almost nothing: the theta
+    scan scores docs in 93-100% of the blocks on the bench corpus
+    (uniform doc lengths + Zipf tf make block maxes nearly equal), and
+    one codec call per column is far cheaper than one per block."""
+
+    def __init__(self, grp: pd.DataFrame, avgdl: float, k1: float,
+                 b: float):
+        counts = grp["n_docs"].to_numpy(dtype=np.int64)
+        docs = codec.decode_sorted_concat(grp["doc_gaps"], counts)
+        order = np.argsort(docs, kind="mergesort")
+        self.docs = docs[order]
+        self.tf = codec.decode_u64_concat(grp["tfs"], counts)[order] \
+            .astype(np.float64)
+        self.dl = codec.decode_u64_concat(grp["dls"], counts)[order] \
+            .astype(np.float64)
+        bound = tf_sat_np(grp["max_tf"].to_numpy(dtype=np.float64),
+                          grp["min_dl"].to_numpy(dtype=np.float64),
+                          avgdl, k1, b)
+        self.member_ub = np.repeat(bound, counts)[order]
+
+
+def _build_term_arrays(pdf: pd.DataFrame, avgdl: float, k1: float,
+                       b: float) -> dict:
+    """Decode one segment's posting groups into ``_TermPostings``, keyed
+    by term — in the batch path each term decodes ONCE even when many
+    queries reference it."""
+    return {
+        term: _TermPostings(grp, avgdl, k1, b)
+        for term, grp in pdf.groupby("term", sort=True)
+    }
+
+
+def _clauses(q: list, meta: IndexMeta, boosts: dict | None = None) -> list:
+    """A query as weighted clauses ``[(weight, member terms)]``, in ``q``
+    order (callers pass normalised, sorted terms — the one summation
+    order every plain-term path shares). A string entry is a plain term:
+    one member, weight = its idf, times its ``BoostQuery`` weight. A
+    list entry is a synonym group (Lucene ``SynonymQuery``): member tf
+    sums per doc under ONE idf from the blended (max member) df."""
+    out = []
+    for c in q:
+        members = (c,) if isinstance(c, str) else tuple(c)
+        w = idf_py(max(meta.term_df.get(t, 0.0) for t in members),
+                   meta.n_docs)
+        if boosts and isinstance(c, str):
+            w *= float(boosts.get(c, 1.0))
+        out.append((w, members))
+    return out
+
+
+def _bm25(use: list, docs: np.ndarray, avgdl: float, k1: float,
+          b: float) -> np.ndarray:
+    """BM25 of ``docs`` against resolved clauses ``[(weight,
+    [_TermPostings])]``: per clause, member tf sums over the docs each
+    member posts (dl is per-doc, the same in every member), then
+    ``weight * tf_sat`` adds in — clause by clause, in list order."""
+    scores = np.zeros(docs.size, dtype=np.float64)
+    for w, tps in use:
+        hit = np.zeros(docs.size, dtype=bool)
+        tf = np.zeros(docs.size, dtype=np.float64)
+        dl = np.zeros(docs.size, dtype=np.float64)
+        for tp in tps:
+            pos = np.clip(np.searchsorted(tp.docs, docs), 0,
+                          tp.docs.size - 1)
+            h = tp.docs[pos] == docs
+            tf[h] += tp.tf[pos[h]]
+            dl[h] = tp.dl[pos[h]]
+            hit |= h
+        if hit.any():
+            scores[hit] += w * tf_sat_np(tf[hit], dl[hit], avgdl, k1, b)
+    return scores
+
+
+def _segment_scores(terms: dict, clauses: list, k: int | None,
+                    avgdl: float, k1: float, b: float, *,
+                    min_match: int = 1,
+                    allowed: np.ndarray | None = None,
+                    blocked: np.ndarray | None = None,
+                    after: tuple[float, int] | None = None) -> pd.DataFrame:
+    """THE per-segment BM25 primitive: score one segment's docs against
+    weighted ``clauses`` (see :func:`_clauses`) over decoded ``terms``.
+
+    Candidates are the docs any clause member posts. ``blocked`` (sorted
+    doc_ids: tombstones, must_not) drops docs and ``allowed`` (sorted
+    doc_ids: a metadata predicate, must) restricts heap MEMBERSHIP to a
+    doc set — F2-in-the-loop (``EdgeInvertedIndex.java:155``); both
+    apply once, before any scoring, while scores keep index-wide
+    statistics. ``min_match`` > 1 keeps docs matching at least that many
+    clauses (Lucene ``minimumNumberShouldMatch``), from docID membership
+    alone. Then the candidate rule:
+
+    * ``k is None`` — every candidate, scored, doc_id ASC (the exact
+      match-set scan behind grouping/collapse and fielded search);
+    * otherwise the UB-pruned theta scan: candidates in UB-descending
+      order (UB = sum of weight * member bound), chunked, stopping once
+      the running k-th best beats the next chunk's UB (T4). Exact for
+      synonym clauses too: tf_sat is concave with tf_sat(0) = 0, so the
+      summed member bounds dominate the blended contribution.
 
     ``after`` = (score, doc_id) cursor (Lucene ``searchAfter``): only
-    docs STRICTLY after the cursor in (score DESC, doc_id ASC) order may
-    enter the heap — deep pagination without deep k. Scored docs are
-    gated AFTER scoring (every exact score is already computed for the
-    chunk), so UB ordering, theta pruning and block skipping all keep
-    working; the heap just never admits page-(<=cursor) rows. One extra
-    pruning lever falls out for free: any candidate whose UB is below
-    the cursor score can still qualify (score < cursor), so no UB-side
-    cut is taken — correctness over cleverness."""
-    use = {t: term_arrays[t] for t in q if t in term_arrays}
+    docs STRICTLY after it in (score DESC, doc_id ASC) order enter the
+    heap. It gates scored rows, so UB ordering and theta pruning keep
+    working; no UB-side cut is taken (a doc whose UB is below the cursor
+    score still qualifies). Ties at the cursor compare by float
+    equality, so the cursor score must be the exact float64 of a
+    collected row."""
+    use = []
+    for w, members in clauses:
+        tps = [terms[t] for t in members if t in terms]
+        if tps:
+            use.append((w, tps))
     if not use:
         return pd.DataFrame(_EMPTY_TOPK)
-    cand = np.concatenate([tp.docs for tp in use.values()])
-    ubs = np.concatenate([tp.member_ub for tp in use.values()])
-    term_arrays = use
-    if blocked is not None and blocked.size and cand.size:
-        pos_b = np.clip(np.searchsorted(blocked, cand),
-                        0, blocked.size - 1)
-        live = blocked[pos_b] != cand
-        cand, ubs = cand[live], ubs[live]
-        if cand.size == 0:
-            return pd.DataFrame(_EMPTY_TOPK)
+    cand = np.concatenate([tp.docs for _, tps in use for tp in tps])
+    keep = ~sorted_isin(blocked, cand)
     if allowed is not None:
-        pos = np.searchsorted(allowed, cand)
-        pos_c = np.clip(pos, 0, max(allowed.size - 1, 0))
-        keep = (allowed.size > 0) & (allowed[pos_c] == cand) \
-            if allowed.size else np.zeros(cand.size, dtype=bool)
-        cand, ubs = cand[keep], ubs[keep]
-        if cand.size == 0:
-            return pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                                 "score": pd.Series(dtype="float64")})
-    # UB(doc) = sum of per-term block-max bounds (reference A2)
-    uniq, inv = np.unique(cand, return_inverse=True)
-    ub_sum = np.zeros(uniq.size, dtype=np.float64)
-    np.add.at(ub_sum, inv, ubs)
+        keep &= sorted_isin(allowed, cand)
+    docs, inv = np.unique(cand[keep], return_inverse=True)
+    if min_match > 1:
+        n_hit = np.zeros(docs.size, dtype=np.int64)
+        for _, tps in use:
+            n_hit += np.any([sorted_isin(tp.docs, docs) for tp in tps],
+                            axis=0)
+        ok = n_hit >= min_match
+    else:
+        ok = np.ones(docs.size, dtype=bool)
+    if k is None:
+        docs = docs[ok]
+        return pd.DataFrame({"doc_id": docs,
+                             "score": _bm25(use, docs, avgdl, k1, b)})
+    # UB(doc) = sum of per-clause block-max bounds (reference A2)
+    ub_sum = np.zeros(docs.size, dtype=np.float64)
+    np.add.at(ub_sum, inv, np.concatenate(
+        [w * tp.member_ub for w, tps in use for tp in tps])[keep])
+    docs, ub_sum = docs[ok], ub_sum[ok]
 
     # scan candidates in UB-descending order, chunked; stop when the
     # running k-th best beats the next chunk's best possible UB (T4)
     order = np.argsort(-ub_sum, kind="mergesort")
-    sorted_docs = uniq[order]
+    sorted_docs = docs[order]
     sorted_ubs = ub_sum[order]
-
     topk_scores = np.empty(0, dtype=np.float64)
     topk_docs = np.empty(0, dtype=np.int64)
     best_kth = -math.inf
@@ -291,21 +389,11 @@ def _scan_topk(term_arrays: dict, q: list[str], idf: dict, k: int,
         if best_kth > sorted_ubs[s] and topk_docs.size >= k:
             break  # theta-pruning: no remaining candidate can enter top-k
         dchunk = sorted_docs[s:s + chunk]
-        scores = np.zeros(dchunk.size, dtype=np.float64)
-        for term in sorted(term_arrays):
-            tp = term_arrays[term]
-            pos = np.searchsorted(tp.docs, dchunk)
-            pos_c = np.clip(pos, 0, tp.docs.size - 1)
-            hit = tp.docs[pos_c] == dchunk
-            hit_idx = pos_c[hit]
-            if hit_idx.size:
-                tfs, dls = tp.tf_dl_at(hit_idx)
-                contrib = idf[term] * tf_sat_np(tfs, dls, meta.avgdl, k1, b)
-                scores[hit] += contrib
+        scores = _bm25(use, dchunk, avgdl, k1, b)
         if after is not None:
             a_s, a_d = float(after[0]), int(after[1])
-            ok = (scores < a_s) | ((scores == a_s) & (dchunk > a_d))
-            dchunk, scores = dchunk[ok], scores[ok]
+            gate = (scores < a_s) | ((scores == a_s) & (dchunk > a_d))
+            dchunk, scores = dchunk[gate], scores[gate]
         topk_docs = np.concatenate([topk_docs, dchunk])
         topk_scores = np.concatenate([topk_scores, scores])
         # keep only current top-k (score DESC, doc ASC)
@@ -316,92 +404,42 @@ def _scan_topk(term_arrays: dict, q: list[str], idf: dict, k: int,
     return pd.DataFrame({"doc_id": topk_docs, "score": topk_scores})
 
 
-def _segment_topk(pdf: pd.DataFrame, q: list[str], k: int, meta: IndexMeta,
-                  k1: float, b: float,
+def _segment_topk(pdf: pd.DataFrame, q: list, k: int | None,
+                  meta: IndexMeta, k1: float, b: float,
                   allowed: np.ndarray | None = None,
                   blocked: np.ndarray | None = None,
                   after: tuple[float, int] | None = None,
-                  boosts: dict | None = None) -> pd.DataFrame:
-    """Exact top-k for one segment: UB-ordered chunked scan, early stop,
-    per-block lazy payload decode.
-
-    ``allowed`` (sorted doc_ids) restricts heap MEMBERSHIP to a
-    predicate-selected doc set while scores keep index-wide statistics —
-    the F2-in-the-loop semantics (``EdgeInvertedIndex.java:155``).
-    Filtering candidates BEFORE the UB-ordered scan keeps theta-pruning
-    and block-skipping fully effective under the predicate.
-
-    ``boosts`` (term -> weight, Lucene BoostQuery): the boost scales the
-    term's idf BEFORE the block bounds are built, so member_ub, theta
-    pruning and the exact scores all see the same boosted weight —
-    pruning stays exact under any positive boost."""
-    idf = {t: idf_py(meta.term_df.get(t, 0.0), meta.n_docs) for t in q}
-    if boosts:
-        idf = {t: v * float(boosts.get(t, 1.0)) for t, v in idf.items()}
-    term_arrays = _build_term_arrays(pdf, idf, meta.avgdl, k1, b)
-    return _scan_topk(term_arrays, q, idf, k, meta, k1, b,
-                      allowed=allowed, blocked=blocked, after=after)
+                  boosts: dict | None = None,
+                  min_match: int = 1) -> pd.DataFrame:
+    """One query over one segment's blocks: decode, then
+    :func:`_segment_scores` — the batch scorer's one-query case.
+    ``boosts`` (term -> weight, Lucene BoostQuery) scale the terms' idf,
+    so member bounds, theta pruning and exact scores all see the same
+    boosted weight — pruning stays exact under any positive boost."""
+    return _segment_scores(
+        _build_term_arrays(pdf, meta.avgdl, k1, b),
+        _clauses(q, meta, boosts), k, meta.avgdl, k1, b,
+        min_match=min_match, allowed=allowed, blocked=blocked, after=after)
 
 
-def _segment_scores_all(pdf: pd.DataFrame, q: list[str], meta: IndexMeta,
-                        k1: float, b: float,
-                        blocked: np.ndarray | None = None) -> pd.DataFrame:
-    """BM25 score for EVERY live document in one segment matching any
-    query term — no top-k pruning. The exact-scoring base of operators
-    whose output is not a global top-k heap (grouping/collapse), where a
-    doc outside the global top-k can still be its group's best. Cost is
-    bounded by the query terms' posting sizes (the boolean-OR cost
-    class); the block-max UB machinery is deliberately unused — every
-    match must be scored for its group to compete."""
-    idf = {t: idf_py(meta.term_df.get(t, 0.0), meta.n_docs) for t in q}
-    term_arrays = _build_term_arrays(pdf, idf, meta.avgdl, k1, b)
-    use = {t: term_arrays[t] for t in q if t in term_arrays}
-    if not use:
-        return pd.DataFrame(_EMPTY_TOPK)
-    docs = np.unique(np.concatenate([tp.docs for tp in use.values()]))
-    if blocked is not None and blocked.size and docs.size:
-        from .index import sorted_isin
-
-        docs = docs[~sorted_isin(blocked, docs)]
-    if docs.size == 0:
-        return pd.DataFrame(_EMPTY_TOPK)
-    scores = np.zeros(docs.size, dtype=np.float64)
-    for term in sorted(use):
-        tp = use[term]
-        pos = np.clip(np.searchsorted(tp.docs, docs), 0,
-                      tp.docs.size - 1)
-        hit = tp.docs[pos] == docs
-        hit_idx = pos[hit]
-        if hit_idx.size:
-            tfs, dls = tp.tf_dl_at(hit_idx)
-            scores[hit] += idf[term] * tf_sat_np(tfs, dls, meta.avgdl,
-                                                 k1, b)
-    return pd.DataFrame({"doc_id": docs, "score": scores})
-
-
-def _segment_topk_many(pdf: pd.DataFrame, queries: list[tuple[str, list[str]]],
+def _segment_topk_many(pdf: pd.DataFrame, queries: list[tuple[str, list]],
                        k: int, meta: IndexMeta,
                        k1: float, b: float,
                        allowed: np.ndarray | None = None,
                        blocked: np.ndarray | None = None,
                        afters: dict | None = None) -> pd.DataFrame:
-    """Batch variant: ONE postings decode per term, then the same
-    block-max WAND scan per query over the shared arrays. Output carries
-    ``query_id``; each query's rows are exactly what ``_segment_topk``
-    would return for it (asserted by the batch rank-identity test).
-    ``allowed`` restricts heap membership for EVERY query in the set
-    (F2-in-the-loop, same semantics as the single-query filtered path).
+    """Batch variant: ONE postings decode per term, then the primitive
+    per query over the shared arrays. Output carries ``query_id``; each
+    query's rows are exactly what ``_segment_topk`` would return for it.
+    ``allowed`` restricts heap membership for EVERY query in the set;
     ``afters`` maps query_id -> (score, doc_id) cursor for the queries
-    being paginated (searchAfter per batch member; absent = page 1)."""
-    all_terms = sorted({t for _, q in queries for t in q})
-    idf = {t: idf_py(meta.term_df.get(t, 0.0), meta.n_docs)
-           for t in all_terms}
-    term_arrays = _build_term_arrays(pdf, idf, meta.avgdl, k1, b)
+    being paginated (absent = page 1)."""
+    terms = _build_term_arrays(pdf, meta.avgdl, k1, b)
     outs = []
     for qid, q in queries:
-        r = _scan_topk(term_arrays, q, idf, k, meta, k1, b,
-                       allowed=allowed, blocked=blocked,
-                       after=(afters or {}).get(qid))
+        r = _segment_scores(terms, _clauses(q, meta), k, meta.avgdl, k1, b,
+                            allowed=allowed, blocked=blocked,
+                            after=(afters or {}).get(qid))
         r.insert(0, "query_id", qid)
         outs.append(r)
     if not outs:
@@ -422,47 +460,45 @@ def topk_bm25_index(
     scalars: tuple[float, float] | None = None,
     after: tuple[float, int] | None = None,
     boosts: dict | None = None,
+    predicate=None,
 ) -> DataFrame:
     """Top-k BM25 from the compressed index. Returns (doc_id, score).
 
     ``after`` = (score, doc_id) cursor for deep pagination (Lucene
     ``searchAfter``): returns the top-k of the docs ranking STRICTLY
     after the cursor under (score DESC, doc_id ASC). Per-segment cost is
-    the same pruned scan as page one — never a k*page heap.
+    the same pruned scan as page one — never a k*page heap. The cursor
+    score must be the exact float64 collected from the previous page's
+    last row: ties at the cursor compare by float equality, so a score
+    that lost bits in transit (JSON with few digits, float32) drops or
+    repeats rows at the page boundary.
 
     ``boosts`` = term -> positive weight (Lucene ``BoostQuery``): scales
-    each term's idf; block bounds scale with it, so pruning stays exact."""
-    q = sorted(set(str(t) for t in query_terms))
+    each term's idf; block bounds scale with it, so pruning stays exact.
+
+    ``predicate`` (a Column over doc_stats' metadata columns, e.g.
+    ``F.col("lang").isin("en")``) restricts heap membership while scores
+    keep index-wide statistics — F2-in-the-loop
+    (``EdgeInvertedIndex.java:155``). The allowed-doc set is pushed into
+    the doc_stats scan and COGROUPED per segment into the same pruned
+    scorer, so theta-pruning survives the filter; ``after`` composes
+    (Lucene searchAfter with a filter clause)."""
+    q = _terms(query_terms)
     if boosts is not None:
         bad = {t: w for t, w in boosts.items() if not float(w) > 0}
         if bad:
             raise ValueError(f"topk_bm25_index: boosts must be > 0: {bad}")
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets, scalars)
-    # column-prune before the Arrow transfer: the scorer needs only the
-    # block payloads + bound metadata, not salt/block_id/first/last/bucket
-    # (ReadSchema shrinks accordingly — checked in EXPLAIN.md)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
+    side = (None if predicate is None
+            else _allowed_docs(spark, index_dir, predicate))
 
-    dead = tombstone_ids(index_dir)
+    def kernel(blk, meta, dead, alw=None):
+        return _segment_topk(blk, q, k, meta, k1, b,
+                             allowed=_sorted_ids(alw), blocked=dead,
+                             after=after, boosts=boosts)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_topk(
-            pdf.drop(columns=["segment"]), q, k, meta, k1, b, blocked=dead,
-            after=after, boosts=boosts,
-        )
-
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        lambda key_pdf: run(key_pdf),
-        schema="doc_id bigint, score double",
-    )
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    return _topk_merge(_per_segment(
+        spark, index_dir, q, kernel, _TOPK_SCHEMA, buckets=buckets,
+        meta=meta, scalars=scalars, side=side), k)
 
 
 def scores_bm25_index_all(
@@ -476,29 +512,17 @@ def scores_bm25_index_all(
     meta: IndexMeta | None = None,
 ) -> DataFrame:
     """(doc_id, score) for EVERY live document matching any query term —
-    the exact-scoring scan with no top-k heap (see
-    :func:`_segment_scores_all`). The building block of operators that
+    the exact-scoring scan with no top-k heap (the all-matches rule of
+    :func:`_segment_scores`). The building block of operators that
     combine scores ACROSS indexes (multi-field search), where a doc
     outside one index's top-k can still win the combined ranking. Cost
     is bounded by the query terms' posting sizes in THIS index."""
-    q = sorted(set(str(t) for t in query_terms))
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets, scalars)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
-    dead = tombstone_ids(index_dir)
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _segment_scores_all(
-            pdf.drop(columns=["segment"]), q, meta, k1, b, blocked=dead
-        )
-
-    return blocks.groupBy("segment").applyInPandas(
-        lambda key_pdf: run(key_pdf),
-        schema="doc_id bigint, score double",
-    )
+    q = _terms(query_terms)
+    return _per_segment(
+        spark, index_dir, q,
+        lambda blk, meta, dead: _segment_topk(blk, q, None, meta, k1, b,
+                                              blocked=dead),
+        _TOPK_SCHEMA, buckets=buckets, meta=meta, scalars=scalars)
 
 
 def topk_bm25_index_many(
@@ -536,13 +560,15 @@ def topk_bm25_index_many(
     batching is the idiomatic Spark re-expression of "run the reference
     query set".
 
+    ``predicate`` applies one doc_stats metadata predicate to every
+    query, with ``topk_bm25_index``'s F2-in-the-loop semantics.
     ``afters`` maps query_id -> (score, doc_id) cursor: per-query
     searchAfter pagination inside the batch — mixed page-1 and page-N
     members share the one scan and the one decode, each at its own
     page-one cost. Its keys are coerced with ``str`` like the query ids;
     a key that names no query raises ``ValueError``.
     """
-    qmap = [(str(qid), sorted(set(str(t) for t in terms)))
+    qmap = [(str(qid), _terms(terms))
             for qid, terms in sorted(queries.items())]
     if afters:
         afters = {str(qid): cur for qid, cur in afters.items()}
@@ -551,121 +577,27 @@ def topk_bm25_index_many(
             raise ValueError(
                 f"topk_bm25_index_many: afters keys {unknown} are not "
                 "query ids")
-    all_terms = sorted({t for _, q in qmap for t in q})
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, all_terms, buckets, scalars)
-    blocks = _q_blocks(spark, index_dir, all_terms, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
+    side = (None if predicate is None
+            else _allowed_docs(spark, index_dir, predicate))
 
-    out_schema = "query_id string, doc_id bigint, score double"
-    dead = tombstone_ids(index_dir)
-    if predicate is not None:
-        # F2-in-the-loop for the whole set: the allowed-doc set cogroups
-        # per segment into the same shared-decode scorer; scores keep
-        # index-wide statistics (identical semantics to the single-query
-        # filtered path, shared-decode identical to the unfiltered batch)
-        from .index import read_doc_stats
+    def kernel(blk, meta, dead, alw=None):
+        return _segment_topk_many(blk, qmap, k, meta, k1, b,
+                                  allowed=_sorted_ids(alw), blocked=dead,
+                                  afters=afters)
 
-        allowed_df = (
-            read_doc_stats(spark, index_dir)
-            .where(predicate)
-            .select("segment", "doc_id")
-        )
-
-        def run_filtered(blk: pd.DataFrame, alw: pd.DataFrame) -> pd.DataFrame:
-            ids = np.sort(alw["doc_id"].to_numpy(dtype=np.int64))
-            return _segment_topk_many(
-                blk.drop(columns=["segment"]), qmap, k, meta, k1, b,
-                allowed=ids, blocked=dead, afters=afters,
-            )
-
-        per_seg = blocks.groupBy("segment").cogroup(
-            allowed_df.groupBy("segment")
-        ).applyInPandas(run_filtered, schema=out_schema)
-    else:
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return _segment_topk_many(
-                pdf.drop(columns=["segment"]), qmap, k, meta, k1, b,
-                blocked=dead, afters=afters,
-            )
-
-        per_seg = blocks.groupBy("segment").applyInPandas(
-            lambda key_pdf: run(key_pdf), schema=out_schema
-        )
+    per_seg = _per_segment(
+        spark, index_dir, _terms(t for _, q in qmap for t in q), kernel,
+        "query_id string, doc_id bigint, score double", buckets=buckets,
+        meta=meta, scalars=scalars, side=side)
     # per-query merge of the tiny per-segment lists: Q x segments x k
     # rows through one window — the same (score DESC, doc_id ASC)
     # tie-break as the single-query TakeOrderedAndProject
-    from pyspark.sql import Window
-
     w = Window.partitionBy("query_id").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
     )
     return (
         per_seg.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k).drop("rn")
-    )
-
-
-def topk_bm25_index_filtered(
-    spark: SparkSession,
-    index_dir: str,
-    query_terms: list[str],
-    k: int,
-    predicate,
-    buckets: int | None = None,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
-    meta: IndexMeta | None = None,
-    after: tuple[float, int] | None = None,
-) -> DataFrame:
-    """Index-backed top-k with a metadata predicate on the candidates.
-
-    F2-in-the-loop semantics (``EdgeInvertedIndex.java:155``): scores use
-    index-wide statistics; ``predicate`` (a Column over doc_stats' metadata
-    columns, e.g. ``F.col("lang").isin("en")``) restricts heap membership.
-    The allowed-doc set is COGROUPED per segment into the same block-max
-    WAND scorer as the unfiltered path, so theta-pruning and lazy block
-    decode stay effective under the predicate (the round-1 formulation
-    fell back to a full groupBy-sum over the query terms' postings with
-    no UB pruning at all). The predicate itself is pushed into the
-    doc_stats parquet scan; postings scans stay bucket+term pruned.
-    ``after`` composes: the (score, doc_id) cursor gates heap admission
-    AFTER the allowed-set filter, so filtered rankings paginate at
-    page-one cost too (Lucene searchAfter with a filter clause).
-    """
-    from .index import read_doc_stats
-
-    q = sorted(set(str(t) for t in query_terms))
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets)
-
-    allowed = (
-        read_doc_stats(spark, index_dir)
-        .where(predicate)
-        .select("segment", "doc_id")
-    )
-    blocks = _q_blocks(spark, index_dir, q, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
-
-    dead = tombstone_ids(index_dir)
-
-    def run(blk: pd.DataFrame, alw: pd.DataFrame) -> pd.DataFrame:
-        ids = np.sort(alw["doc_id"].to_numpy(dtype=np.int64))
-        return _segment_topk(
-            blk.drop(columns=["segment"]), q, k, meta, k1, b,
-            allowed=ids, blocked=dead, after=after,
-        )
-
-    per_seg = blocks.groupBy("segment").cogroup(
-        allowed.groupBy("segment")
-    ).applyInPandas(run, schema="doc_id bigint, score double")
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
     )
 
 
@@ -691,57 +623,37 @@ def topk_bm25_index_boolean(
     clause sets and ONE per-segment kernel resolves them: the must /
     must_not terms' docID streams decode into an allowed set
     (intersection) and an extra blocked set (union, merged with the
-    tombstones), then the standard block-max WAND scan runs over the
-    should blocks with heap membership restricted — theta-pruning and
-    lazy payload decode stay fully effective under the clauses (same
-    shape as the metadata-filtered path, without the doc_stats cogroup).
+    tombstones), then the standard pruned scan runs over the should
+    blocks with heap membership restricted — theta-pruning stays fully
+    effective under the clauses (same shape as the metadata-filtered
+    path, without the doc_stats cogroup).
     """
-    sq = sorted({str(t) for t in should})
+    from .boolean import decode_match_docs
+
+    sq = _terms(should)
     if not sq:
         raise ValueError("boolean top-k requires at least one should term")
-    sm = sorted({str(t) for t in must})
-    sn = sorted({str(t) for t in must_not})
-    if meta is None:
-        meta = query_term_meta(spark, index_dir, sq, buckets)
-    all_terms = sorted(set(sq) | set(sm) | set(sn))
-    blocks = _q_blocks(spark, index_dir, all_terms, buckets).select(
-        "segment", "term", "n_docs", "max_tf", "min_dl",
-        "doc_gaps", "tfs", "dls",
-    )
-    dead = tombstone_ids(index_dir)
-    n_must = len(sm)
+    sm, sn = _terms(must), _terms(must_not)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from .boolean import decode_match_docs
-
-        empty = pd.DataFrame({"doc_id": pd.Series(dtype="int64"),
-                              "score": pd.Series(dtype="float64")})
+    def kernel(pdf, meta, dead):
         allowed = None
         if sm:
-            allowed = decode_match_docs(
-                pdf[pdf["term"].isin(sm)], "and", n_must
-            )
+            allowed = decode_match_docs(pdf[pdf["term"].isin(sm)], "and",
+                                        len(sm))
             if allowed is None or allowed.size == 0:
-                return empty  # a must term absent / nothing matches all
+                return pd.DataFrame(_EMPTY_TOPK)  # a must term matches none
         blocked = dead
         neg = pdf[pdf["term"].isin(sn)]
         if len(neg):
             banned = decode_match_docs(neg, "or", len(sn))
-            if banned is not None:
-                blocked = (banned if blocked is None
-                           else np.union1d(blocked, banned))
-        return _segment_topk(
-            pdf[pdf["term"].isin(sq)].drop(columns=["segment"]),
-            sq, k, meta, k1, b, allowed=allowed, blocked=blocked,
-        )
+            blocked = (banned if blocked is None
+                       else np.union1d(blocked, banned))
+        return _segment_topk(pdf[pdf["term"].isin(sq)], sq, k, meta, k1, b,
+                             allowed=allowed, blocked=blocked)
 
-    per_seg = blocks.groupBy("segment").applyInPandas(
-        run, schema="doc_id bigint, score double"
-    )
-    return (
-        per_seg.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)
-    )
+    return _topk_merge(_per_segment(
+        spark, index_dir, _terms(sq + sm + sn), kernel, _TOPK_SCHEMA,
+        buckets=buckets, meta=meta), k)
 
 
 def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
@@ -762,10 +674,7 @@ def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
     segment first, so only that segment's blocks decode (segments are
     doc-disjoint — measured 1.66 s -> the single-segment share on a
     16-segment 1M index)."""
-    from ..functions.bm25 import idf_py, tf_sat_expr
-    from .index import postings_flat, read_doc_stats
-
-    q = sorted(set(str(t) for t in terms))
+    q = _terms(terms)
     if meta is None:
         meta = query_term_meta(spark, index_dir, q, buckets=buckets)
     known = [t for t in q if t in meta.term_df]
@@ -852,14 +761,34 @@ def expand_prefix(spark: SparkSession, index_dir: str, prefix: str,
     of the vocabulary. Pre-feature indexes (``read_terms_sorted`` →
     ``None``) fall back to the bucketed scan — identical results, only
     the pruning differs."""
-    from .index import read_terms_sorted
+    return _expand_from(*_prefix_scan(spark, index_dir, str(prefix)),
+                        max_terms)
 
-    prefix = str(prefix)
+
+def _prefix_scan(spark: SparkSession, index_dir: str,
+                 prefix: str) -> tuple[DataFrame, object]:
+    """(terms table, predicate) selecting the indexed terms starting with
+    ``prefix``: the ``terms_sorted`` range scan when the index has it,
+    the bucketed StartsWith scan otherwise."""
     srt = read_terms_sorted(spark, index_dir)
     if srt is not None and prefix:
-        return _expand_from(srt, _prefix_range_pred(prefix), max_terms)
-    return _expand_terms(spark, index_dir,
-                         F.col("term").startswith(prefix), max_terms)
+        return srt, _prefix_range_pred(prefix)
+    return read_terms(spark, index_dir), F.col("term").startswith(prefix)
+
+
+def _expand_with_prefix(spark: SparkSession, index_dir: str, lit: str,
+                        pred, max_terms: int) -> dict[str, float]:
+    """Expansion of the terms matching ``pred``, every one of which starts
+    with the literal ``lit``: the literal becomes a range pre-filter on
+    ``terms_sorted`` (a StartsWith on the bucketed table otherwise); no
+    literal scans the whole dictionary."""
+    if lit:
+        srt = read_terms_sorted(spark, index_dir)
+        if srt is not None:
+            return _expand_from(srt, _prefix_range_pred(lit) & pred,
+                                max_terms)
+        pred = F.col("term").startswith(lit) & pred
+    return _expand_terms(spark, index_dir, pred, max_terms)
 
 
 def _expand_terms(spark: SparkSession, index_dir: str, pred,
@@ -896,15 +825,7 @@ def suggest_terms(spark: SparkSession, index_dir: str, prefix: str,
     pruning: O(1) of the vocabulary at any corpus size), the bucketed
     scan otherwise — but returned as a DataFrame: here the ranked terms
     ARE the product, not a query rewrite."""
-    from .index import read_terms, read_terms_sorted
-
-    prefix = str(prefix)
-    srt = read_terms_sorted(spark, index_dir)
-    if srt is not None and prefix:
-        src, pred = srt, _prefix_range_pred(prefix)
-    else:
-        src, pred = (read_terms(spark, index_dir),
-                     F.col("term").startswith(prefix))
+    src, pred = _prefix_scan(spark, index_dir, str(prefix))
     return (
         src.where(pred)
         .groupBy("term").agg(F.sum("df").cast("bigint").alias("df"))
@@ -943,17 +864,9 @@ def expand_wildcard(spark: SparkSession, index_dir: str, pattern: str,
     file's row-group min/max on the sorted ``term`` column. Lucene's
     leading-wildcard slow-path caveat carries over — ``*x`` patterns
     scan the whole (vocabulary-sized) dictionary."""
-    from .index import read_terms_sorted
-
-    pred = F.col("term").rlike(wildcard_regex(str(pattern)))
-    lit = re.split(r"[*?]", str(pattern), maxsplit=1)[0]
-    if lit:
-        srt = read_terms_sorted(spark, index_dir)
-        if srt is not None:
-            return _expand_from(srt, _prefix_range_pred(lit) & pred,
-                                max_terms)
-        pred = F.col("term").startswith(lit) & pred
-    return _expand_terms(spark, index_dir, pred, max_terms)
+    return _expand_with_prefix(
+        spark, index_dir, re.split(r"[*?]", str(pattern), maxsplit=1)[0],
+        F.col("term").rlike(wildcard_regex(str(pattern))), max_terms)
 
 
 def expand_fuzzy(spark: SparkSession, index_dir: str, term: str,
@@ -1042,17 +955,9 @@ def expand_regexp(spark: SparkSession, index_dir: str, pattern: str,
     :func:`regexp_literal_prefix`) prunes via the ``terms_sorted`` range
     scan; prefix-less patterns scan the vocabulary-sized dictionary
     (Lucene's own leading-wildcard cost class)."""
-    from .index import read_terms_sorted
-
-    pred = F.col("term").rlike("^(?:" + str(pattern) + ")$")
-    lit = regexp_literal_prefix(pattern)
-    if lit:
-        srt = read_terms_sorted(spark, index_dir)
-        if srt is not None:
-            return _expand_from(srt, _prefix_range_pred(lit) & pred,
-                                max_terms)
-        pred = F.col("term").startswith(lit) & pred
-    return _expand_terms(spark, index_dir, pred, max_terms)
+    return _expand_with_prefix(
+        spark, index_dir, regexp_literal_prefix(pattern),
+        F.col("term").rlike("^(?:" + str(pattern) + ")$"), max_terms)
 
 
 def spell_suggest_terms(spark: SparkSession, index_dir: str, term: str,
@@ -1188,12 +1093,12 @@ def _topk_expansion(spark, index_dir, dfs_factory, k, *, buckets, k1, b,
     if meta is None:
         dfs = dfs_factory()
         if not dfs:
-            return spark.createDataFrame([], "doc_id bigint, score double")
+            return spark.createDataFrame([], _TOPK_SCHEMA)
         n_docs, avgdl = (scalars if scalars is not None
                          else _corpus_scalars(spark, index_dir))
         meta = IndexMeta(n_docs, avgdl, dfs)
     elif not meta.term_df:
-        return spark.createDataFrame([], "doc_id bigint, score double")
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     return topk_bm25_index(
         spark, index_dir, sorted(meta.term_df), k,
         meta=meta, buckets=buckets, k1=k1, b=b,

@@ -1487,7 +1487,8 @@ def bm25_topk_phrase_sql(phrase: list[str], k: int,
     [sum over phrase positions of idf(term)] * tf_sat(n_occ, dl) —
     the summed constituent-term idf weights the PHRASE frequency
     (duplicated terms contribute once per position, as Lucene's
-    Similarity receives one TermStatistics per phrase term)."""
+    Similarity receives one TermStatistics per phrase term; a term
+    absent from the corpus contributes idf(df=0), as in the engine)."""
     n = len(phrase)
     conds = " AND ".join(
         f"t[i + {j}] = '" + t.replace("'", "''") + "'"
@@ -1531,9 +1532,10 @@ pp AS (
   SELECT * FROM (VALUES {pv}) v(pos, term)
 ),
 widf AS (
-  SELECT sum(ln(1 + (stats.n_docs - dfs.df + 0.5) / (dfs.df + 0.5)))
+  SELECT sum(ln(1 + (stats.n_docs - coalesce(dfs.df, 0) + 0.5)
+                  / (coalesce(dfs.df, 0) + 0.5)))
          AS idf_total
-  FROM pp JOIN dfs USING (term) CROSS JOIN stats
+  FROM pp LEFT JOIN dfs USING (term) CROSS JOIN stats
 ),
 scores AS (
   SELECT occ.doc_id,
@@ -1590,9 +1592,10 @@ pp AS (
   SELECT * FROM (VALUES {pv}) v(pos, term)
 ),
 widf AS (
-  SELECT sum(ln(1 + (stats.n_docs - dfs.df + 0.5) / (dfs.df + 0.5)))
+  SELECT sum(ln(1 + (stats.n_docs - coalesce(dfs.df, 0) + 0.5)
+                  / (coalesce(dfs.df, 0) + 0.5)))
          AS idf_total
-  FROM pp JOIN dfs USING (term) CROSS JOIN stats
+  FROM pp LEFT JOIN dfs USING (term) CROSS JOIN stats
 ),
 scores AS (
   SELECT occ.doc_id,

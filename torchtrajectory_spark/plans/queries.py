@@ -376,7 +376,10 @@ def q_search_after_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deep pagination (Lucene searchAfter): page 2 of the Q_TOPK
     ranking via the (score, doc_id) cursor of page 1's last row — the
     engine never holds a 2k heap. Page 1 is k driver-side rows (bounded
-    cursor state, exactly what a search UI carries between requests)."""
+    cursor state, exactly what a search UI carries between requests).
+    The two pages are two reads of the index, so the cursor is valid
+    only against an unchanged index snapshot: a delete or add committing
+    between them changes the scores the cursor is compared against."""
     idx = ensure_index(spark, sf_dir)
     eng = _engine(spark, idx)
     page1 = eng.find_topk(Q_TOPK, K).collect()
