@@ -98,6 +98,12 @@ def test_sorted_runs_byte_identity(xs, data):
     # each run is sorted within itself, so concat-decode must rebuild v
     back = codec.decode_sorted_concat(got, counts)
     assert (back == v).all()
+    # the restart cumsum alone, over the concatenated gap stream
+    gaps = codec.decode_u64_concat(got, counts)
+    assert (codec.restart_cumsum(gaps, counts) == v).all()
+    # zero-length runs are skipped
+    padded = np.insert(counts, [0, len(counts)], 0)
+    assert (codec.restart_cumsum(gaps, padded) == v).all()
 
 
 def test_runs_empty_and_single():

@@ -938,9 +938,23 @@ def test_phrase_scored_requires_positions(spark, tmp_path):
         topk_bm25_index_phrase(spark, d, ["table", "hash"], 5)
 
 
-def test_phrase_scored_slop_zero_equals_exact(spark, engine):
+def test_phrase_scored_slop_zero_equals_exact(spark, engine, monkeypatch):
     """slop=0 counts exactly the exact-phrase matches, so the sloppy
-    scoring degenerates to the exact PhraseQuery ranking fp-exactly."""
+    scoring degenerates to the exact PhraseQuery ranking fp-exactly.
+    The three calls on one phrase share the Engine's term-meta memo:
+    the dictionary lookup runs at most once."""
+    from torchtrajectory_spark import engine as engine_mod
+    from torchtrajectory_spark.operators import phrase as phrase_mod
+
+    calls = []
+    real = engine_mod.query_term_meta
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(engine_mod, "query_term_meta", counting)
+    monkeypatch.setattr(phrase_mod, "query_term_meta", counting)
     eng, _ = engine
     ph = ["table", "hash"]
     exact = [(r["doc_id"], r["score"])
@@ -952,3 +966,4 @@ def test_phrase_scored_slop_zero_equals_exact(spark, engine):
     s3 = {r["doc_id"]: r["score"]
           for r in eng.find_topk_phrase(ph, 50, slop=3).collect()}
     assert set(d for d, _ in exact) <= set(s3)
+    assert len(calls) <= 1

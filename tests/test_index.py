@@ -412,21 +412,28 @@ def test_batch_topk_rank_identical_to_single(spark, corpus, index_dir):
         assert by_q.get(qid, []) == exp, qid
 
 
-def test_index_stats_consistent(spark, corpus, index_dir):
+def test_index_stats_consistent(spark, corpus, index_dir, tmp_path):
     """index_stats derives from block metadata only and must agree with
-    the manifest and the decoded index."""
+    the manifest and the decoded index — on a positional index too,
+    where both byte counts include the position payload."""
     from torchtrajectory_spark.operators.index import index_stats
 
-    st = index_stats(spark, index_dir).toPandas().set_index("segment")
-    assert sorted(st.index) == list(range(SEGS))
-    assert st["row_count"].sum() == N_ROWS
-    # postings == decoded (term, doc) pairs per segment
-    flat_n = postings_flat(spark, index_dir).count()
-    assert st["postings"].sum() == flat_n
-    assert (st["payload_bytes"] > 0).all()
-    assert (st["compression_ratio"] > 1.0).all()
-    m = read_manifest(spark, index_dir).toPandas().set_index("segment")
-    assert (st["blocks"] == m["block_count"]).all()
+    pos_dir = str(tmp_path / "idx_pos")
+    build_index(spark, corpus, pos_dir, id_col="doc_id",
+                text_col="content", analyzer="code", n_segments=SEGS,
+                buckets=BUCKETS, with_positions=True)
+    for d in (index_dir, pos_dir):
+        st = index_stats(spark, d).toPandas().set_index("segment")
+        assert sorted(st.index) == list(range(SEGS))
+        assert st["row_count"].sum() == N_ROWS
+        # postings == decoded (term, doc) pairs per segment
+        flat_n = postings_flat(spark, d).count()
+        assert st["postings"].sum() == flat_n
+        assert (st["payload_bytes"] > 0).all()
+        assert (st["compression_ratio"] > 1.0).all()
+        m = read_manifest(spark, d).toPandas().set_index("segment")
+        assert (st["blocks"] == m["block_count"]).all()
+        assert (st["payload_bytes"] == m["bytes"]).all()
 
 
 def test_index_stats_reports_empty_segment(spark, tmp_path):

@@ -1,21 +1,23 @@
 """Positional payload (Z2 analog) + phrase query correctness.
 
 Mirrors the reference's positions-compression roundtrip pattern
-(``InvertedIndexTest.java:90-147``) for the new ``encode_positions`` /
-``decode_positions`` pair, then checks both phrase strategies against a
-brute-force Python phrase matcher and against each other.
+(``InvertedIndexTest.java:90-147``) for the block encoder's position
+payload and ``decode_blocks``, then checks both phrase strategies
+against a brute-force Python phrase matcher.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from torchtrajectory_spark.operators.index import (
-    decode_positions,
-    encode_positions,
+    SEG_COL,
+    _build_blocks,
+    decode_blocks,
 )
 
 
@@ -28,16 +30,30 @@ from torchtrajectory_spark.operators.index import (
 )
 @settings(max_examples=60, deadline=None)
 def test_positions_roundtrip(pos_lists):
+    """One term's postings (doc i holds ``pos_lists[i]``) through the
+    block encoder with a flat position stream, rows given in reverse doc
+    order so the encoder's sort must carry the stream along, cut into
+    several blocks, then ``decode_blocks``: docs, tfs and positions come
+    back in doc order."""
     arrays = [np.asarray(p, dtype=np.int64) for p in pos_lists]
-    buf = encode_positions(arrays)
+    n = len(arrays)
     tfs = np.array([len(p) for p in arrays], dtype=np.int64)
-    if not arrays:
-        assert buf == b""
-        return
-    flat, starts = decode_positions(buf, tfs)
-    expected = np.concatenate(arrays) if arrays else np.empty(0, dtype=np.int64)
-    assert np.array_equal(flat, expected)
-    assert np.array_equal(starts, np.concatenate(([0], np.cumsum(tfs)[:-1])))
+    rows = pd.DataFrame({
+        SEG_COL: np.zeros(n, dtype=np.int64), "bucket": 0, "term": "t",
+        "salt": 0, "doc_id": np.arange(n, dtype=np.int64) * 3,
+        "tf": tfs, "dl": tfs + 1,
+    })
+    flat = (np.concatenate(arrays) if arrays
+            else np.empty(0, dtype=np.int64))
+    rev = (np.concatenate(arrays[::-1]) if arrays
+           else np.empty(0, dtype=np.int64))
+    blocks = _build_blocks(rows.iloc[::-1], 4, with_positions=True,
+                           flat_positions=rev)
+    assert len(blocks) == -(-n // 4)
+    d = decode_blocks(blocks, ("poss",))
+    assert np.array_equal(d["docs"], rows["doc_id"].to_numpy())
+    assert np.array_equal(d["tfs"], tfs)
+    assert np.array_equal(d["poss"], flat)
 
 
 def brute_phrase(tokens: list[str], phrase: list[str]) -> int:
@@ -100,23 +116,6 @@ def test_phrase_unknown_term_empty(spark, pos_index):
     sf, idx = pos_index
     assert phrase_count_index(spark, idx, ["zzz_not_a_term", "hash"],
                               buckets=8).count() == 0
-
-
-def test_phrase_arrow_matches_catalyst(spark):
-    """The Arrow phrase scan == the Catalyst formulation (plan parity)."""
-    from torchtrajectory_spark.operators.phrase import (
-        phrase_count, phrase_count_catalyst,
-    )
-    from torchtrajectory_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    for ph, expect_hits in ((["table", "hash"], True),
-                            (["slow", "hash", "batch"], False)):
-        got = sorted(map(tuple, phrase_count(docs, ph).collect()))
-        exp = sorted(map(tuple, phrase_count_catalyst(docs, ph).collect()))
-        assert got == exp
-        if expect_hits:
-            assert len(got) > 0
 
 
 def brute_near(tokens: list[str], terms: list[str], slop: int) -> int:

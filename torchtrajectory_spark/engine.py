@@ -153,6 +153,7 @@ class Engine:
         return topk_bm25_index_phrase(
             self.spark, self.index_dir, phrase, k,
             buckets=self._buckets, k1=self.k1, b=self.b, slop=slop,
+            meta=self._term_meta(phrase),
         )
 
     def find_topk_msm(self, terms: list[str], min_should_match: int,
@@ -663,19 +664,12 @@ class Engine:
         prunes partitions/row groups of the doc_stats table. Tombstoned
         docs are masked out (broadcast anti-join — the tombstone set is
         bounded by deletes-since-compaction)."""
-        from pyspark.sql import functions as F
+        from .operators.index import drop_docs, tombstone_ids
 
-        from .operators.index import read_tombstones
-
-        out = (
+        return drop_docs(
             read_doc_stats(self.spark, self.index_dir)
-            .where(predicate)
-            .select("doc_id")
-        )
-        dead = read_tombstones(self.spark, self.index_dir)
-        if dead is not None:
-            out = out.join(F.broadcast(dead), "doc_id", "left_anti")
-        return out
+            .where(predicate).select("doc_id"),
+            tombstone_ids(self.index_dir))
 
     @staticmethod
     def find_in_radius(points: DataFrame, lat: float, lng: float,

@@ -155,19 +155,23 @@ def decode_u64_concat(bufs, counts: np.ndarray) -> np.ndarray:
     return out
 
 
-def decode_sorted_concat(bufs, counts: np.ndarray) -> np.ndarray:
-    """Decode a sequence of ``encode_sorted`` buffers in ONE pass.
-
-    Each buffer's delta chain restarts at its own first value, so after a
-    global cumsum the bases of later buffers must be re-zeroed using the
-    known per-buffer counts (same trick as ``decode_positions``)."""
-    counts = np.asarray(counts, dtype=np.int64)
-    gaps = decode_u64_concat(bufs, counts)
+def restart_cumsum(gaps: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Prefix sums of ``gaps`` that restart at every run: run i covers
+    the next ``lens[i]`` values (zero-length runs allowed), and its sums
+    start from its own first gap. One global cumsum, then each run's
+    base is subtracted — the inverse of a delta chain reset at every run
+    start (docIDs per block, positions per posting). Returns int64."""
+    lens = np.asarray(lens, dtype=np.int64)
     if gaps.size == 0:
         return np.empty(0, dtype=np.int64)
-    nz = counts[counts > 0]
+    nz = lens[lens > 0]
     starts = np.concatenate(([0], np.cumsum(nz)[:-1]))
     flat = np.cumsum(gaps, dtype=np.uint64)
-    base = flat[starts] - gaps[starts]
-    flat = flat - np.repeat(base, nz)
-    return flat.astype(np.int64)
+    base = flat[starts] - gaps[starts].astype(np.uint64)
+    return (flat - np.repeat(base, nz)).astype(np.int64)
+
+
+def decode_sorted_concat(bufs, counts: np.ndarray) -> np.ndarray:
+    """Decode a sequence of ``encode_sorted`` buffers in ONE pass: each
+    buffer's delta chain restarts at its own first value."""
+    return restart_cumsum(decode_u64_concat(bufs, counts), counts)

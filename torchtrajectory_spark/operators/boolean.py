@@ -28,8 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import codec
-from .index import read_doc_stats, sorted_isin
+from .index import decode_blocks, read_doc_stats, sorted_isin
 from .stats import tokenized
 from .wand import _per_segment, _terms
 
@@ -92,11 +91,8 @@ def decode_match_docs(pdf, mode: str, nq: int):
     ``_bool_index_blocks``, ``facet_counts``, and the must/must_not
     clause sets of ``wand.topk_bm25_index_boolean`` — a codec or salting
     change lands in one place."""
-    per_term = [
-        np.unique(codec.decode_sorted_concat(grp["doc_gaps"],
-                                             grp["n_docs"].to_numpy()))
-        for _term, grp in pdf.groupby("term")
-    ]
+    per_term = [np.unique(decode_blocks(grp)["docs"])
+                for _term, grp in pdf.groupby("term")]
     if not per_term or (mode == "and" and len(per_term) < nq):
         return None
     if mode == "or":

@@ -21,7 +21,8 @@ segmented, resumable Spark job:
   sub-lists as extra block streams, so no re-merge is ever needed.
 * **blocks**: per term(+salt), docID-sorted postings are cut into
   <=BLOCK_SIZE-doc blocks; docIDs delta+varint, tfs varint, dls varint
-  (codec.py = analog of JavaFastPFOR at ``InvertedIndex.java:116-117``).
+  (codec.py = analog of JavaFastPFOR at ``InvertedIndex.java:116-117``);
+  every reader decodes them through the one decoder, ``decode_blocks``.
   Per-block metadata ``(first_doc, last_doc, n_docs, max_tf, min_dl)``
   yields a sound BM25 upper bound at query time
   (``idf * tf_sat(max_tf, min_dl)``) — the block-max analog of the
@@ -44,6 +45,7 @@ driver, and the only global state is the tiny (N, avgdl) scalar pair.
 
 from __future__ import annotations
 
+import operator
 import os
 import re
 import shutil
@@ -52,10 +54,11 @@ import zlib
 from collections.abc import Iterator
 from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import (
@@ -234,37 +237,6 @@ def _emit_chunks(emit_chunk, batches: Iterator[pd.DataFrame]):
                 yield r
 
 
-def encode_positions(pos_arrays: list[np.ndarray]) -> bytes:
-    """Varint stream of within-doc position deltas for a block.
-
-    Per-doc boundaries are NOT stored — they are recoverable from the tfs
-    column (position count per doc == tf), mirroring the reference's
-    parallel-file layout (``InvertedIndex.java:92-126``).
-    """
-    if not pos_arrays:
-        return b""
-    flat = np.concatenate([np.asarray(p, dtype=np.int64) for p in pos_arrays])
-    lens = np.fromiter((len(p) for p in pos_arrays), dtype=np.int64,
-                       count=len(pos_arrays))
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    d = np.empty_like(flat)
-    d[0] = flat[0]
-    np.subtract(flat[1:], flat[:-1], out=d[1:])
-    d[starts] = flat[starts]  # reset delta at each doc boundary
-    return codec.encode_u32s(d)
-
-
-def decode_positions(buf: bytes, tfs: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_positions: (flat_positions, doc_start_offsets)."""
-    d = codec.decode_u32s(buf)
-    lens = np.asarray(tfs, dtype=np.int64)
-    starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-    flat = np.cumsum(d)
-    base = flat[starts] - d[starts]
-    flat = flat - np.repeat(base, lens)
-    return flat, starts
-
-
 _BLOCK_COLS = [SEG_COL, "bucket", "term", "salt", "block_id", "n_docs",
                "first_doc", "last_doc", "max_tf", "min_dl", "doc_gaps", "tfs",
                "dls"]
@@ -287,45 +259,40 @@ def _build_blocks(pdf: pd.DataFrame, block_size: int,
                   with_positions: bool = False,
                   presorted: bool = False,
                   flat_positions: np.ndarray | None = None) -> pd.DataFrame:
-    """Posting rows (_seg, term, doc_id, tf, dl, bucket, salt[, positions])
-    -> compressed <=block_size blocks.
+    """Posting rows (_seg, term, doc_id, tf, dl, bucket, salt) ->
+    compressed <=block_size blocks. A positional build passes
+    ``flat_positions``: the position stream row-aligned with ``pdf``,
+    ``tf`` ascending positions per row.
 
-    Sorts by (_seg, term, salt, doc_id) once (the frame may span many
-    segments / buckets / salts — the SPIMI map path), then cuts every
-    (_seg, term, salt) run into
-    <=block_size blocks FULLY VECTORIZED: block boundaries via repeat/
-    cumsum, per-block metadata via ``ufunc.reduceat``, and all three
-    payload streams via the batch run-sliced codec (one varint pass over
-    the whole column, byte-identical to per-block encodes — the SPIMI map
-    emits hundreds of thousands of ~6-posting mini-blocks per task, where
+    Unless ``presorted``, sorts by (_seg, term, salt, doc_id) once (the
+    frame may span many segments / buckets / salts — the SPIMI map
+    path), then cuts every (_seg, term, salt) run into <=block_size
+    blocks FULLY VECTORIZED: block boundaries via repeat/cumsum,
+    per-block metadata via ``ufunc.reduceat``, and every payload stream
+    via the batch run-sliced codec (one varint pass over the whole
+    column, byte-identical to per-block encodes — the SPIMI map emits
+    hundreds of thousands of ~6-posting mini-blocks per task, where
     per-block numpy-call overhead used to dominate the build: measured
     ~4.6s of an ~8s segment at bench scale).
     """
     keys = _BLOCK_COLS + (["poss"] if with_positions else [])
     if len(pdf) == 0:
         return pd.DataFrame({k: [] for k in keys})
+    if with_positions:
+        flat_positions = np.ascontiguousarray(flat_positions, dtype=np.int64)
     if not presorted:
-        if flat_positions is None:
-            pdf = pdf.sort_values([SEG_COL, "term", "salt", "doc_id"],
-                                  kind="mergesort")
-        else:
-            # explicit permutation so the row-aligned flat position
-            # stream can be gathered under the SAME order (a pandas
-            # re-sort would desync it). factorize(sort=True) + lexsort
-            # reproduces sort_values' codepoint string order exactly;
-            # (_seg, term, salt, doc_id) is a total order here (doc unique
-            # per term within a map task), so stability is moot.
-            t_codes, _ = pd.factorize(pdf["term"], sort=True)
-            order = np.lexsort((pdf["doc_id"].to_numpy(dtype=np.int64),
-                                pdf["salt"].to_numpy(dtype=np.int64),
-                                t_codes,
-                                pdf[SEG_COL].to_numpy(dtype=np.int64)))
-            tf0 = pdf["tf"].to_numpy(dtype=np.int64)
+        # one stable sort; its index labels (a RangeIndex before it) are
+        # the permutation that keeps the row-aligned position stream in
+        # step with the rows
+        pdf = pdf.reset_index(drop=True)
+        tf0 = pdf["tf"].to_numpy(dtype=np.int64)
+        pdf = pdf.sort_values([SEG_COL, "term", "salt", "doc_id"],
+                              kind="mergesort")
+        if with_positions:
+            order = pdf.index.to_numpy()
             starts0 = np.concatenate(([0], np.cumsum(tf0)[:-1]))
-            flat_positions = _gather_runs(
-                np.ascontiguousarray(flat_positions, dtype=np.int64),
-                starts0[order], tf0[order])
-            pdf = pdf.iloc[order]
+            flat_positions = _gather_runs(flat_positions, starts0[order],
+                                          tf0[order])
     n = len(pdf)
     segs = pdf[SEG_COL].to_numpy(dtype=np.int64)
     terms = pdf["term"].to_numpy()
@@ -364,32 +331,44 @@ def _build_blocks(pdf: pd.DataFrame, block_size: int,
         "dls": codec.encode_u64_runs(dls, bs),
     })
     if with_positions:
-        # One global pass over the flattened position stream: delta reset
-        # at every doc boundary (exactly what encode_positions does per
-        # block), sliced at block boundaries — which are doc boundaries.
-        # ``flat_positions`` (row-aligned with pdf, tf values per row)
-        # skips the per-row list flattening when the caller already holds
-        # the stream flat (the merge path).
-        if flat_positions is not None:
-            flat = np.ascontiguousarray(flat_positions, dtype=np.int64)
-        else:
-            poss = pdf["positions"].to_numpy()
-            flat = np.concatenate(
-                [np.asarray(p, dtype=np.int64) for p in poss]
-            ) if n else np.empty(0, dtype=np.int64)
+        # within-doc position deltas, the delta reset at every doc
+        # (posting) start, sliced at block starts — which are doc starts.
+        # Per-doc boundaries are not stored: the tfs column gives them
+        # (the reference's parallel positions file,
+        # ``InvertedIndex.java:92-126``).
+        flat = flat_positions
         pos_cum = np.concatenate(([0], np.cumsum(tfs)))
         doc_starts = pos_cum[:-1]
         g = np.empty_like(flat)
-        if flat.size:
-            g[0] = flat[0]
-            np.subtract(flat[1:], flat[:-1], out=g[1:])
-            g[doc_starts] = flat[doc_starts]
-        buf, bounds = codec._varint_bytes_and_offsets(
-            g.astype(np.uint64), pos_cum[bs]
-        )
-        out["poss"] = [buf[a:b]
-                       for a, b in zip(bounds[:-1].tolist(),
-                                       bounds[1:].tolist())]
+        g[0] = flat[0]
+        np.subtract(flat[1:], flat[:-1], out=g[1:])
+        g[doc_starts] = flat[doc_starts]
+        out["poss"] = codec.encode_u64_runs(g, pos_cum[bs])
+    return out
+
+
+def decode_blocks(blocks: pd.DataFrame,
+                  payload: tuple[str, ...] = ()) -> dict[str, np.ndarray]:
+    """The one postings-block decoder (the reference's ``getKeys`` /
+    ``getPairs``, ``InvertedIndex.java:138-161``). ``blocks`` are block
+    rows with at least ``n_docs`` and ``doc_gaps``; the result holds flat
+    per-posting int64 arrays in row order (blocks in row order, docs
+    ascending within a block): ``docs`` always, plus each of ``tfs``,
+    ``dls`` and ``poss`` named in ``payload``. ``poss`` is the absolute
+    position stream, ``tfs`` positions per posting, so asking for it
+    decodes ``tfs`` too. Each column decodes in one varint pass over all
+    the blocks; docIDs and positions rebuild through one restart
+    cumsum (their delta chains restart per block and per posting)."""
+    counts = blocks["n_docs"].to_numpy(dtype=np.int64)
+    out = {"docs": codec.decode_sorted_concat(blocks["doc_gaps"], counts)}
+    for c in ("tfs", "dls"):
+        if c in payload or (c == "tfs" and "poss" in payload):
+            out[c] = codec.decode_u64_concat(blocks[c], counts).astype(
+                np.int64)
+    if "poss" in payload:
+        tfs = out["tfs"]
+        out["poss"] = codec.restart_cumsum(
+            codec.decode_u64_concat(blocks["poss"], tfs), tfs)
     return out
 
 
@@ -568,17 +547,15 @@ def _merge_minis(pdf: pd.DataFrame, block_size: int,
     re-encode. Deterministic for any shuffle arrival order (docIDs are
     unique per term within a segment, so the sort is a total order).
 
-    Fully vectorized over any number of runs: every payload column is
-    decoded in ONE concat-varint pass (streams are self-delimiting;
-    per-mini delta bases re-zeroed from the n_docs counts), postings are
-    lexsorted by (run, doc), the position stream is gather-permuted with
-    repeat/cumsum index arithmetic, and the canonical blocks are cut by
-    the same vectorized ``_build_blocks`` as the map phase."""
-    cols = _BLOCK_COLS + (["poss"] if with_positions else [])
+    Fully vectorized over any number of runs: :func:`decode_blocks`
+    decodes every payload column of all the minis in one pass, postings
+    are lexsorted by (run, doc), the position stream is gather-permuted
+    with repeat/cumsum index arithmetic, and the canonical blocks are
+    cut by the same vectorized ``_build_blocks`` as the map phase."""
     counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-    docs = codec.decode_sorted_concat(pdf["doc_gaps"].tolist(), counts)
-    tfs = codec.decode_u64_concat(pdf["tfs"].tolist(), counts).astype(np.int64)
-    dls = codec.decode_u64_concat(pdf["dls"].tolist(), counts).astype(np.int64)
+    d = decode_blocks(pdf, ("tfs", "dls")
+                      + (("poss",) if with_positions else ()))
+    docs, tfs, dls = d["docs"], d["tfs"], d["dls"]
     keys = {c: pdf[c].to_numpy() for c in _MERGE_KEY}
     new_run = np.zeros(len(pdf), dtype=bool)
     new_run[0] = True
@@ -590,21 +567,9 @@ def _merge_minis(pdf: pd.DataFrame, block_size: int,
     order = np.lexsort((docs, run_rep))
     flat_pos = None
     if with_positions:
-        # per-mini position counts = sum of its postings' tfs; the gap
-        # stream resets at every posting (doc) start, so one cumsum with
-        # per-posting base re-zeroing rebuilds absolute positions
-        mini_starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-        pos_per_mini = np.add.reduceat(tfs, mini_starts)
-        gaps = codec.decode_u64_concat(pdf["poss"].tolist(), pos_per_mini)
-        pcum = np.concatenate(([0], np.cumsum(tfs)))
-        ps = pcum[:-1]
-        flat = np.cumsum(gaps, dtype=np.uint64)
-        if flat.size:
-            base = flat[ps] - gaps[ps]
-            flat = flat - np.repeat(base, tfs)
-        flat = flat.astype(np.int64)
         # gather the per-posting position slices into sorted posting order
-        flat_pos = _gather_runs(flat, ps[order], tfs[order])
+        ps = np.concatenate(([0], np.cumsum(tfs)[:-1]))
+        flat_pos = _gather_runs(d["poss"], ps[order], tfs[order])
     run_of = run_rep[order]
     flat_df = pd.DataFrame({
         **{c: a[heads][run_of] for c, a in keys.items()},
@@ -623,8 +588,6 @@ def _merge_minis(pdf: pd.DataFrame, block_size: int,
                     np.repeat(keep, flat_df["tf"].to_numpy())
                 ]
             flat_df = flat_df[keep].reset_index(drop=True)
-            if len(flat_df) == 0:
-                return pd.DataFrame({k: [] for k in cols})
     return _build_blocks(flat_df, block_size, presorted=True,
                          with_positions=with_positions,
                          flat_positions=flat_pos)
@@ -796,6 +759,15 @@ STAGING_DIRNAME = "_staging"
 TERMS_SCHEMA = "bucket int, term string, df bigint"
 
 
+def _payload_bytes(columns) -> Column:
+    """Encoded bytes of a block row: the lengths of its payload columns
+    summed (``poss`` included on a positional index). The manifest's
+    ``bytes`` and ``index_stats``' ``payload_bytes`` both sum it."""
+    return reduce(operator.add,
+                  [F.octet_length(c) for c in ("doc_gaps", "tfs", "dls",
+                                               "poss") if c in columns])
+
+
 def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
                  blocks: DataFrame, doc_stats: DataFrame,
                  fail_after: int | None = None) -> None:
@@ -851,11 +823,10 @@ def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
                 .agg(F.sum("n_docs").alias("df"))
                 .sortWithinPartitions(SEG_COL, "bucket", "term"),
                 stage.terms)
-            payload = (F.octet_length("doc_gaps") + F.octet_length("tfs")
-                       + F.octet_length("dls"))
             for r in staged.groupBy(SEG_COL).agg(
                     F.count(F.lit(1)).alias("blocks"),
-                    F.sum(payload).alias("bytes")).collect():
+                    F.sum(_payload_bytes(staged.columns)).alias(
+                        "bytes")).collect():
                 metrics[r[SEG_COL]].update(blocks=r["blocks"],
                                            bytes=r["bytes"])
         if _staged_segments(stage.doc_stats):
@@ -996,15 +967,28 @@ def _write_terms_sorted_driver(seg_terms: str, dst: str) -> None:
     t = (pa.concat_tables(parts) if parts
          else pa.table({"term": pa.array([], pa.string()),
                         "df": pa.array([], pa.int64())}))
-    t = t.sort_by("term")
-    tmp = dst + ".__tmp__"
+    _write_table_driver(t.sort_by("term"), dst)
+
+
+def _write_table_driver(t, path: str, before_rename=None) -> None:
+    """Write a small pyarrow table driver-side as ``path/part-0.parquet``,
+    committed by write-then-rename like every segment artifact — no
+    Spark job, whose fixed cost (~0.5 s) would be paid per segment. The
+    one writer of manifest markers and single-file ``terms_sorted``
+    dictionaries. ``before_rename`` runs once the file is staged, just
+    before the rename."""
+    import pyarrow.parquet as pq
+
+    tmp = path + ".__tmp__"
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     os.makedirs(tmp)
     pq.write_table(t, os.path.join(tmp, "part-0.parquet"))
-    if os.path.exists(dst):
-        shutil.rmtree(dst)
-    os.replace(tmp, dst)
+    if before_rename is not None:
+        before_rename()
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    os.replace(tmp, path)
 
 
 def _parquet_dir_rows(path: str) -> int:
@@ -1022,23 +1006,15 @@ def _parquet_dir_rows(path: str) -> int:
 def _write_manifest_row(spark: SparkSession, pdf: pd.DataFrame,
                         path: str) -> None:
     """Commit the one-row manifest marker. Parquet default writes it
-    driver-side via pyarrow + atomic rename — a whole Spark job for one
+    driver-side (:func:`_write_table_driver`) — a whole Spark job for one
     row is pure fixed cost (~0.5s/segment that shows up directly in the
     N-vs-4N scaling ratio). Non-parquet table formats go through the
     registered writer (the marker must be a snapshot commit there)."""
     if _ACTIVE_FORMAT == "parquet":
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        tmp = path + ".__tmp__"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.makedirs(tmp, exist_ok=True)
-        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False),
-                       os.path.join(tmp, "part-0.parquet"))
-        if os.path.exists(path):
-            shutil.rmtree(path)
-        os.replace(tmp, path)
+        _write_table_driver(pa.Table.from_pandas(pdf, preserve_index=False),
+                            path)
         return
     _atomic_write(spark.createDataFrame(pdf), path)
 
@@ -1077,11 +1053,7 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     with use_table_format(cfg.get("table_format", "parquet")):
         minis = (read_postings(spark, src_dir).drop("segment")
                  .withColumn(SEG_COL, F.lit(0)))
-        ds = read_doc_stats(spark, src_dir).drop("segment")
-        if ts is not None:
-            dead = spark.createDataFrame(
-                [(int(x),) for x in ts], "doc_id bigint")
-            ds = ds.join(F.broadcast(dead), "doc_id", "left_anti")
+        ds = drop_docs(read_doc_stats(spark, src_dir).drop("segment"), ts)
         _commit_pass(spark, paths, [0],
                      _merge_blocks(minis, block_size, with_positions, ts),
                      ds.withColumn(SEG_COL, F.lit(0)))
@@ -1102,9 +1074,9 @@ def _rehome_segments(spark: SparkSession, src_dir: str, dst: "IndexPaths",
     concurrent readers never see a half-appended segment. Returns the
     number of segments re-homed."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     src = IndexPaths(src_dir)
+    markers = _read_markers(src.manifest)
     new = start_seg
     for s in sorted(_done_segments(spark, src)):
         # COMMITTED destination segments are sacrosanct: clobbering one
@@ -1134,22 +1106,17 @@ def _rehome_segments(spark: SparkSession, src_dir: str, dst: "IndexPaths",
                 shutil.copytree(seg_src, seg_dst)
         # manifest row embeds the segment id -> rewrite it, then
         # commit marker-last with the same atomic rename as a build
-        t = pq.read_table(src.seg(src.manifest, s))
+        t = markers[s]
         idx = t.schema.get_field_index("segment")
         t = t.set_column(idx, "segment",
                          pa.array([new] * t.num_rows, t.schema[idx].type))
-        tmp = dst.seg(dst.manifest, new) + ".__tmp__"
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        os.makedirs(tmp, exist_ok=True)
-        pq.write_table(t, os.path.join(tmp, "part-0.parquet"))
-        if _PRE_COMMIT_HOOK is not None:
-            # test seam: lets a concurrency test HOLD the commit here —
-            # data dirs fully copied, marker staged but not renamed — so
-            # the reader-vs-writer overlap is guaranteed by construction
-            # instead of hoped-for by timing (the r4 flaky-suite fix)
-            _PRE_COMMIT_HOOK(new)
-        os.replace(tmp, dst.seg(dst.manifest, new))
+        # test seam: _PRE_COMMIT_HOOK lets a concurrency test HOLD the
+        # commit with the data dirs fully copied and the marker staged
+        # but not renamed, so the reader-vs-writer overlap is guaranteed
+        # by construction instead of hoped-for by timing
+        hook = _PRE_COMMIT_HOOK
+        _write_table_driver(t, dst.seg(dst.manifest, new),
+                            None if hook is None else partial(hook, new))
         # the marker just made this segment visible: drop cached plans
         # IMMEDIATELY so an in-process reader that sees the new manifest
         # row also replans postings/terms over the new directory (the
@@ -1505,29 +1472,21 @@ def _committed_marker_names(manifest_dir: str) -> list[str]:
                   if re.fullmatch(r"segment=\d+", d))
 
 
-def _done_segments(spark: SparkSession, paths: IndexPaths) -> set[int]:
-    """Committed segments whose manifest marker says ``ok``. Under the
-    parquet format the markers are read driver-side with pyarrow — the
-    way ``_write_manifest_row`` writes them — instead of one Spark job
-    per marker."""
+def _read_markers(manifest_dir: str) -> dict:
+    """Every committed manifest marker as a pyarrow table, keyed by
+    segment id — the one marker reader (resume, re-homing, corpus
+    scalars). Driver-side, no Spark job: a marker is one small parquet
+    file, and a job per marker (or per scalar read) is pure fixed cost."""
     import pyarrow.parquet as pq
 
-    segs = set()
-    for d in _committed_marker_names(paths.manifest):
-        path = os.path.join(paths.manifest, d)
-        try:
-            if _ACTIVE_FORMAT == "parquet":
-                status = pq.read_table(path, columns=["status"]).column(
-                    0).to_pylist()
-                ok = bool(status) and status[0] == "ok"
-            else:
-                m = spark.read.parquet(path).first()
-                ok = bool(m) and m["status"] == "ok"
-        except Exception:
-            continue
-        if ok:
-            segs.add(int(d.split("=")[1]))
-    return segs
+    return {int(d.split("=")[1]): pq.read_table(os.path.join(manifest_dir, d))
+            for d in _committed_marker_names(manifest_dir)}
+
+
+def _done_segments(spark: SparkSession, paths: IndexPaths) -> set[int]:
+    """Committed segments whose manifest marker says ``ok``."""
+    return {s for s, t in _read_markers(paths.manifest).items()
+            if t["status"].to_pylist()[:1] == ["ok"]}
 
 
 def read_manifest(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1745,14 +1704,14 @@ def tombstone_ids(index_dir: str) -> np.ndarray | None:
     return arr if arr.size else None
 
 
-def read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    """Tombstones as a (doc_id) DataFrame for anti-joins, or None."""
-    gens = _tombstone_gens(index_dir)
-    if not gens:
-        return None
-    base = os.path.join(index_dir, TOMBSTONES_DIRNAME)
-    return spark.read.parquet(
-        *[os.path.join(base, g) for g in gens]).select("doc_id").distinct()
+def drop_docs(df: DataFrame, ids: np.ndarray | None) -> DataFrame:
+    """``df`` without the rows whose ``doc_id`` is in ``ids`` (e.g.
+    :func:`tombstone_ids`) — a broadcast anti-join; ``None`` keeps all."""
+    if ids is None:
+        return df
+    dead = df.sparkSession.createDataFrame([(int(x),) for x in ids],
+                                           "doc_id bigint")
+    return df.join(F.broadcast(dead), "doc_id", "left_anti")
 
 
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1768,11 +1727,11 @@ def read_terms(spark: SparkSession, index_dir: str) -> DataFrame:
 def read_terms_sorted(spark: SparkSession,
                       index_dir: str) -> DataFrame | None:
     """(term, df) term-RANGE-partitioned secondary dictionary (see
-    ``_write_terms``) — or ``None`` when any COMMITTED segment predates
-    the feature (e.g. a merge that re-homed segments from an old index):
-    a partial sorted dictionary would silently drop that segment's df
-    partials from an expansion, so the caller must fall back to the
-    bucketed ``read_terms`` scan instead."""
+    ``_write_terms_sorted``) — or ``None`` when any COMMITTED segment
+    predates the feature (e.g. a merge that re-homed segments from an old
+    index): a partial sorted dictionary would silently drop that
+    segment's df partials from an expansion, so the caller must fall
+    back to the bucketed ``read_terms`` scan instead."""
     p = IndexPaths(index_dir)
     names = _committed_marker_names(p.manifest)
     if not names or not all(
@@ -1799,15 +1758,11 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     ``payload_bytes`` (raw equivalent intentionally NOT inflated for
     positions — the ratio stays conservative)."""
     p = read_postings(spark, index_dir)
-    payload = (F.octet_length("doc_gaps") + F.octet_length("tfs")
-               + F.octet_length("dls"))
-    if "poss" in p.columns:
-        payload = payload + F.octet_length("poss")
     per_seg = p.groupBy("segment").agg(
         F.countDistinct("term").alias("terms"),
         F.count(F.lit(1)).alias("blocks"),
         F.sum("n_docs").alias("postings"),
-        F.sum(payload).alias("payload_bytes"),
+        F.sum(_payload_bytes(p.columns)).alias("payload_bytes"),
     )
     m = read_manifest(spark, index_dir).select(
         "segment", "row_count", "duration_ms")
@@ -1877,40 +1832,22 @@ def postings_flat(spark: SparkSession, index_dir: str,
             F.col("term").isin(q)
         )
 
-    def explode_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for r in pdf.itertuples(index=False):
-                docs = codec.decode_sorted(r.doc_gaps)
-                if dead is not None:
-                    docs = docs[~sorted_isin(dead, docs)]
-                frames.append(pd.DataFrame({"term": r.term, "doc_id": docs}))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    payload = () if docs_only else ("tfs", "dls")
 
-    def explode_blocks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            frames = []
-            for r in pdf.itertuples(index=False):
-                docs = codec.decode_sorted(r.doc_gaps)
-                tfs = codec.decode_u32s(r.tfs)
-                dls = codec.decode_u32s(r.dls)
-                if dead is not None:
-                    live = ~sorted_isin(dead, docs)
-                    docs, tfs, dls = docs[live], tfs[live], dls[live]
-                frames.append(pd.DataFrame({
-                    "term": r.term,
-                    "doc_id": docs,
-                    "tf": tfs,
-                    "dl": dls,
-                }))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            d = decode_blocks(pdf, payload)
+            out = pd.DataFrame({
+                "term": np.repeat(pdf["term"].to_numpy(),
+                                  pdf["n_docs"].to_numpy(dtype=np.int64)),
+                "doc_id": d["docs"],
+                **({} if docs_only else {"tf": d["tfs"], "dl": d["dls"]}),
+            })
+            if dead is not None:
+                out = out[~sorted_isin(dead, d["docs"])]
+            if len(out):
+                yield out
 
-    if docs_only:
-        return blocks.select("term", "doc_gaps").mapInPandas(
-            explode_docs, schema="term string, doc_id bigint"
-        )
-    return blocks.select("term", "doc_gaps", "tfs", "dls").mapInPandas(
-        explode_blocks, schema="term string, doc_id bigint, tf bigint, dl bigint"
-    )
+    return blocks.select("term", "n_docs", "doc_gaps", *payload).mapInPandas(
+        explode, schema="term string, doc_id bigint"
+        + ("" if docs_only else ", tf bigint, dl bigint"))

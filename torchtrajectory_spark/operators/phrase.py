@@ -11,8 +11,8 @@ consecutive positions.
 
 Two physical strategies (results identical, both oracle-checked):
 
-* corpus-direct: tokens array + ``filter(sequence(...))`` — a single scan,
-  the whole predicate stays in Catalyst codegen.
+* corpus-direct: one Arrow pass over the corpus — tokenize each doc and
+  slide the phrase window over its tokens.
 * index-backed: decode the phrase terms' positional postings (only their
   partition-pruned buckets), per-segment numpy position-list intersection
   inside ``applyInPandas``; segments are doc-disjoint so the union is the
@@ -21,19 +21,16 @@ Two physical strategies (results identical, both oracle-checked):
 
 from __future__ import annotations
 
-from functools import reduce
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1
-from ..functions import codec
 from ..functions.bm25 import idf_py, tf_sat_expr
-from .index import decode_positions, read_index_config, sorted_isin
-from .stats import tokenized
+from .index import decode_blocks, read_index_config, sorted_isin
 from .wand import (
+    IndexMeta,
     _TermPostings,
     _per_segment,
     _terms,
@@ -46,11 +43,10 @@ def phrase_count(df: DataFrame, phrase: list[str], id_col: str = "doc_id",
                  text_col: str = "text", analyzer: str = "ws") -> DataFrame:
     """(doc_id, n_occ) for docs containing the exact token phrase.
 
-    Arrow pass: tokenize + sliding window match per doc in Python
-    (the Catalyst ``filter(sequence(...))`` formulation pays per-element
+    Arrow pass: tokenize + sliding window match per doc in Python (a
+    Catalyst ``filter(sequence(...))`` formulation pays per-element
     higher-order-function boxing — measured ~5x slower on the bench
-    corpus; it survives as ``phrase_count_catalyst`` for plan-comparison
-    parity, asserted equal in tests).
+    corpus).
     """
     n = len(phrase)
     if n == 0:
@@ -81,42 +77,6 @@ def phrase_count(df: DataFrame, phrase: list[str], id_col: str = "doc_id",
 
     return df.select(id_col, text_col).mapInPandas(
         count_batches, schema="doc_id bigint, n_occ bigint"
-    )
-
-
-def phrase_count_catalyst(df: DataFrame, phrase: list[str],
-                          id_col: str = "doc_id", text_col: str = "text",
-                          analyzer: str = "ws") -> DataFrame:
-    """Catalyst formulation of ``phrase_count`` (plan-comparison path):
-    count i in [1, size-n+1] where tokens[i+j] == phrase[j] for all j.
-    CASE WHEN guards the short-doc branch (sequence() would otherwise run
-    backwards for size < n)."""
-    n = len(phrase)
-    if n == 0:
-        raise ValueError("empty phrase")
-    tok = tokenized(df, id_col, text_col, analyzer)
-
-    def match_at(i):
-        return reduce(
-            lambda a, b: a & b,
-            [
-                F.element_at(F.col("tokens"), i + F.lit(j)) == F.lit(t)
-                for j, t in enumerate(phrase)
-            ],
-        )
-
-    n_occ = F.when(
-        F.size("tokens") >= n,
-        F.size(
-            F.filter(
-                F.sequence(F.lit(1), F.size("tokens") - F.lit(n - 1)),
-                match_at,
-            )
-        ),
-    ).otherwise(F.lit(0))
-    return (
-        tok.select("doc_id", n_occ.cast("bigint").alias("n_occ"))
-        .where(F.col("n_occ") > 0)
     )
 
 
@@ -197,23 +157,19 @@ def _phrase_candidates(
     pdf: pd.DataFrame, terms: list[str]
 ) -> tuple[np.ndarray, list[list[np.ndarray]]] | None:
     """The candidate step both positional kernels share. Each query
-    term's positional blocks decode in one pass (docIDs, tfs, then all
-    blocks' position deltas at once — they restart at every doc, so the
-    concatenated stream decodes as one) and sort by doc. Candidates are
-    the docs holding every term; each entry of ``terms`` (repeats
-    included) gets its position arrays aligned to the candidates. None
-    when no doc can match: a term absent from the segment (segments are
-    doc-disjoint, so absence is final) or an empty intersection."""
+    term's positional blocks decode in one pass (:func:`decode_blocks`)
+    and sort by doc. Candidates are the docs holding every term; each
+    entry of ``terms`` (repeats included) gets its position arrays
+    aligned to the candidates. None when no doc can match: a term absent
+    from the segment (segments are doc-disjoint, so absence is final) or
+    an empty intersection."""
     term_docs: dict[str, np.ndarray] = {}
     term_pos: dict[str, list[np.ndarray]] = {}
     for term, grp in pdf.groupby("term", sort=False):
-        counts = grp["n_docs"].to_numpy(dtype=np.int64)
-        docs = codec.decode_sorted_concat(grp["doc_gaps"], counts)
-        tfs = codec.decode_u64_concat(grp["tfs"], counts)
-        flat, starts = decode_positions(b"".join(grp["poss"]), tfs)
-        pos = np.split(flat, starts[1:])
-        order = np.argsort(docs, kind="mergesort")
-        term_docs[term] = docs[order]
+        d = decode_blocks(grp, ("poss",))
+        pos = np.split(d["poss"], np.cumsum(d["tfs"])[:-1])
+        order = np.argsort(d["docs"], kind="mergesort")
+        term_docs[term] = d["docs"][order]
         term_pos[term] = [pos[i] for i in order.tolist()]
     uniq = list(dict.fromkeys(terms))
     if any(t not in term_docs for t in uniq):
@@ -419,7 +375,8 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
                            buckets: int | None = None,
                            k1: float | None = None,
                            b: float | None = None,
-                           slop: int | None = None) -> DataFrame:
+                           slop: int | None = None,
+                           meta: IndexMeta | None = None) -> DataFrame:
     """PhraseQuery as a SCORING query (Lucene ``PhraseQuery`` ranking,
     not just the match-count surface): docs containing the exact phrase
     ranked by BM25 with the PHRASE frequency as tf —
@@ -443,7 +400,9 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     doc-store join), the summed idf is a driver-side constant from the
     per-query dictionary lookup, scoring is a codegen'd expression over
     match-set-sized rows, and the global merge is one
-    TakeOrderedAndProject."""
+    TakeOrderedAndProject. ``meta`` is a memoized term meta for the
+    phrase's terms (``Engine``'s per-term-set memo); without it one is
+    fetched."""
     k1 = BM25_K1 if k1 is None else float(k1)
     b = BM25_B if b is None else float(b)
     _require_positions(index_dir)
@@ -451,7 +410,8 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     if not phrase:
         raise ValueError("empty phrase")
     q = _terms(phrase)
-    meta = query_term_meta(spark, index_dir, q, buckets)
+    if meta is None:
+        meta = query_term_meta(spark, index_dir, q, buckets)
     idf_total = float(sum(idf_py(meta.term_df.get(t, 0.0), meta.n_docs)
                           for t in phrase))
     t0 = min(q, key=lambda t: meta.term_df.get(t, 0.0))  # rarest term

@@ -60,14 +60,15 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
-from ..functions import codec
 from ..functions.bm25 import idf_py, tf_sat_expr, tf_sat_np
 from .index import (
+    IndexPaths,
+    _read_markers,
     bucket_of,
+    decode_blocks,
     postings_flat,
     read_doc_stats,
     read_index_config,
-    read_manifest,
     read_postings,
     read_terms,
     read_terms_sorted,
@@ -85,11 +86,12 @@ class IndexMeta:
 
 
 def _corpus_scalars(spark: SparkSession, index_dir: str) -> tuple[float, float]:
-    """(n_docs, avgdl) straight from the manifest rows — no data scan."""
-    row = read_manifest(spark, index_dir).agg(
-        F.sum("row_count").alias("n"), F.sum("sum_dl").alias("sdl")).first()
-    n = float(row["n"] or 0)
-    return n, (float(row["sdl"] or 0) / n if n else 0.0)
+    """(n_docs, avgdl) summed over the committed manifest markers, read
+    driver-side — no Spark job, no data scan."""
+    rows = [r for t in _read_markers(IndexPaths(index_dir).manifest).values()
+            for r in t.select(["row_count", "sum_dl"]).to_pylist()]
+    n = float(sum(r["row_count"] or 0 for r in rows))
+    return n, (sum(r["sum_dl"] or 0 for r in rows) / n if n else 0.0)
 
 
 def open_index_meta(spark: SparkSession, index_dir: str) -> IndexMeta:
@@ -232,9 +234,9 @@ def _sorted_ids(rows: pd.DataFrame | None) -> np.ndarray | None:
 class _TermPostings:
     """One query term's postings in a segment, decoded in one pass.
 
-    All of the term's blocks (salted sub-lists included) decode through
-    the concatenating codec helpers — one varint pass per column — then
-    sort by doc. ``member_ub`` is each posting's block bound
+    All of the term's blocks (salted sub-lists included) decode in one
+    :func:`decode_blocks` call — one varint pass per column — then sort
+    by doc. ``member_ub`` is each posting's block bound
     tf_sat(max_tf, min_dl) repeated over the block's docs: times a
     clause weight, it bounds the posting's score contribution (A2).
 
@@ -245,18 +247,15 @@ class _TermPostings:
 
     def __init__(self, grp: pd.DataFrame, avgdl: float, k1: float,
                  b: float):
-        counts = grp["n_docs"].to_numpy(dtype=np.int64)
-        docs = codec.decode_sorted_concat(grp["doc_gaps"], counts)
-        order = np.argsort(docs, kind="mergesort")
-        self.docs = docs[order]
-        self.tf = codec.decode_u64_concat(grp["tfs"], counts)[order] \
-            .astype(np.float64)
-        self.dl = codec.decode_u64_concat(grp["dls"], counts)[order] \
-            .astype(np.float64)
+        d = decode_blocks(grp, ("tfs", "dls"))
+        order = np.argsort(d["docs"], kind="mergesort")
+        self.docs = d["docs"][order]
+        self.tf = d["tfs"][order].astype(np.float64)
+        self.dl = d["dls"][order].astype(np.float64)
         bound = tf_sat_np(grp["max_tf"].to_numpy(dtype=np.float64),
                           grp["min_dl"].to_numpy(dtype=np.float64),
                           avgdl, k1, b)
-        self.member_ub = np.repeat(bound, counts)[order]
+        self.member_ub = np.repeat(bound, grp["n_docs"].to_numpy())[order]
 
 
 def _build_term_arrays(pdf: pd.DataFrame, avgdl: float, k1: float,
@@ -755,7 +754,7 @@ def expand_prefix(spark: SparkSession, index_dir: str, prefix: str,
     prefix hashes into EVERY bucket file and the StartsWith scan touches
     the whole dictionary. Indexes built since the ``terms_sorted``
     secondary dictionary exists (Lucene's sorted term dictionary / FST
-    analog, ``_write_terms``) route through it instead: the prefix
+    analog, ``_write_terms_sorted``) route through it instead: the prefix
     becomes a [prefix, succ(prefix)) range over term-range-partitioned
     files, so file/row-group min-max statistics reduce the read to O(1)
     of the vocabulary. Pre-feature indexes (``read_terms_sorted`` →

@@ -10,7 +10,6 @@ value encodings.
 from __future__ import annotations
 
 import os
-import re
 import shutil
 import tempfile
 from collections.abc import Callable
@@ -58,46 +57,58 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "events")
 
 
-def ensure_index(spark: SparkSession, sf_dir: str,
-                 with_positions: bool = False) -> str:
-    """Build (or reuse) the compressed inverted index for a test sf_dir."""
+def _cached_index(name: str, complete, build) -> str:
+    """The fixture-index cache: ``<tmpdir>/<name>`` is reused when
+    ``complete(path)`` holds and its recorded format version is current
+    (a cached index from an older engine build must rebuild, not fail
+    obscurely at decode time); otherwise it is removed and
+    ``build(path)`` rebuilds it from scratch."""
     from ..config import INDEX_FORMAT_VERSION
     from ..operators.index import read_index_config
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    prefix = "tts_posindex" if with_positions else "tts_index"
-    index_dir = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
-    marker = os.path.join(index_dir, "manifest")
-    need = not (
-        os.path.isdir(marker)
-        and os.path.isdir(os.path.join(index_dir, "terms"))
-        and len([d for d in os.listdir(marker) if re.fullmatch(r"segment=\d+", d)])
-        >= _INDEX_SEGMENTS
-    )
-    if not need:
-        # stale-format guard: a cached index from an older engine build
-        # must rebuild, not fail obscurely at decode time
+    path = os.path.join(tempfile.gettempdir(), name)
+    if complete(path):
         try:
-            cfg = read_index_config(index_dir)
-        except Exception:
-            cfg = {}
-        if cfg.get("format_version") != INDEX_FORMAT_VERSION:
-            shutil.rmtree(index_dir, ignore_errors=True)
-            need = True
-    if need:
-        build_index(
-            spark,
-            _docs(spark, sf_dir),
-            index_dir,
-            id_col="doc_id",
-            text_col="text",
-            analyzer="ws",
-            meta_cols=("lang", "source"),
-            n_segments=_INDEX_SEGMENTS,
-            buckets=_INDEX_BUCKETS,
-            with_positions=with_positions,
-        )
-    return index_dir
+            if (read_index_config(path).get("format_version")
+                    == INDEX_FORMAT_VERSION):
+                return path
+        except (OSError, ValueError):
+            pass
+    shutil.rmtree(path, ignore_errors=True)
+    build(path)
+    return path
+
+
+def _all_segments(path: str) -> bool:
+    """Every fixture segment committed (a crashed partial build has
+    fewer markers) and the dictionary present."""
+    from ..operators.index import _committed_marker_names
+
+    return (os.path.isdir(os.path.join(path, "terms"))
+            and len(_committed_marker_names(os.path.join(path, "manifest")))
+            >= _INDEX_SEGMENTS)
+
+
+def _compacted(path: str) -> bool:
+    return os.path.isdir(os.path.join(path, "manifest", "segment=0"))
+
+
+def _tag(sf_dir: str) -> str:
+    return os.path.basename(os.path.normpath(sf_dir))
+
+
+def ensure_index(spark: SparkSession, sf_dir: str,
+                 with_positions: bool = False) -> str:
+    """Build (or reuse) the compressed inverted index for a test sf_dir."""
+    prefix = "tts_posindex" if with_positions else "tts_index"
+    return _cached_index(
+        f"{prefix}_{_tag(sf_dir)}", _all_segments,
+        lambda path: build_index(
+            spark, _docs(spark, sf_dir), path,
+            id_col="doc_id", text_col="text", analyzer="ws",
+            meta_cols=("lang", "source"), n_segments=_INDEX_SEGMENTS,
+            buckets=_INDEX_BUCKETS, with_positions=with_positions,
+        ))
 
 
 # chunk uid = doc_id * MUL + chunk_id, bit-packed so the two halves can
@@ -113,32 +124,9 @@ def ensure_chunk_index(spark: SparkSession, sf_dir: str) -> str:
     """Build (or reuse) an index over the CHUNKED corpus — the RAG
     retrieval shape: chunk_documents output becomes the indexed corpus,
     with a composite chunk uid as the doc id."""
-    from ..config import INDEX_FORMAT_VERSION
-    from ..operators.index import read_index_config
     from ..operators.textstats import chunk_documents
 
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    # uid packing is part of the cache identity: an index built under a
-    # different CHUNK_UID_MUL carries different doc ids
-    index_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"tts_chunkidx_{tag}_m{CHUNK_UID_MUL.bit_length() - 1}")
-    marker = os.path.join(index_dir, "manifest")
-    need = not (
-        os.path.isdir(marker)
-        and os.path.isdir(os.path.join(index_dir, "terms"))
-        and len([d for d in os.listdir(marker) if re.fullmatch(r"segment=\d+", d)])
-        >= _INDEX_SEGMENTS
-    )
-    if not need:
-        try:
-            cfg = read_index_config(index_dir)
-        except Exception:
-            cfg = {}
-        if cfg.get("format_version") != INDEX_FORMAT_VERSION:
-            shutil.rmtree(index_dir, ignore_errors=True)
-            need = True
-    if need:
+    def build(path: str) -> None:
         # loud overflow guard (codegen'd, one comparison per row): a uid
         # outside its packed field would silently alias another doc
         oob = (F.col("chunk_id") >= CHUNK_UID_MUL) | \
@@ -155,11 +143,16 @@ def ensure_chunk_index(spark: SparkSession, sf_dir: str) -> str:
             F.col("chunk_text").alias("text"),
         )
         build_index(
-            spark, chunks, index_dir,
+            spark, chunks, path,
             id_col="doc_id", text_col="text", analyzer="ws",
             n_segments=_INDEX_SEGMENTS, buckets=_INDEX_BUCKETS,
         )
-    return index_dir
+
+    # uid packing is part of the cache identity: an index built under a
+    # different CHUNK_UID_MUL carries different doc ids
+    return _cached_index(
+        f"tts_chunkidx_{_tag(sf_dir)}_m{CHUNK_UID_MUL.bit_length() - 1}",
+        _all_segments, build)
 
 
 def q_topk_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,24 +168,9 @@ def ensure_compacted_index(spark: SparkSession, sf_dir: str) -> str:
     queries against it must be indistinguishable from the original."""
     from ..operators.index import compact_index
 
-    from ..config import INDEX_FORMAT_VERSION
-    from ..operators.index import read_index_config
-
     src = ensure_index(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(tempfile.gettempdir(), f"tts_compacted_{tag}")
-    marker = os.path.join(dst, "manifest", "segment=0")
-    if os.path.isdir(marker):
-        # stale-format guard (same as ensure_index)
-        try:
-            cfg = read_index_config(dst)
-        except Exception:
-            cfg = {}
-        if cfg.get("format_version") != INDEX_FORMAT_VERSION:
-            shutil.rmtree(dst, ignore_errors=True)
-    if not os.path.isdir(marker):
-        compact_index(spark, src, dst)
-    return dst
+    return _cached_index(f"tts_compacted_{_tag(sf_dir)}", _compacted,
+                         lambda path: compact_index(spark, src, path))
 
 
 def q_topk_bm25_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,55 +188,35 @@ DEL_PRED_SQL = f"doc_id % {DEL_MOD} = {DEL_REM}"
 def ensure_deleted_index(spark: SparkSession, sf_dir: str) -> str:
     """A copy of the fixture index with the DEL_PRED docs tombstoned —
     masked-delete semantics (stats still count them; ranking excludes)."""
-    from ..config import INDEX_FORMAT_VERSION
     from ..operators.index import (
+        TOMBSTONES_DIRNAME,
         delete_docs,
         read_doc_stats,
-        read_index_config,
     )
 
     src = ensure_index(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(tempfile.gettempdir(), f"tts_delindex_{tag}")
-    marker = os.path.join(dst, "tombstones")
-    if os.path.isdir(marker):
-        try:
-            cfg = read_index_config(dst)
-        except Exception:
-            cfg = {}
-        if cfg.get("format_version") == INDEX_FORMAT_VERSION:
-            return dst
-    shutil.rmtree(dst, ignore_errors=True)
-    shutil.copytree(src, dst)
-    delete_docs(
-        spark, dst,
-        read_doc_stats(spark, dst)
-        .where(F.col("doc_id") % DEL_MOD == DEL_REM)
-        .select("doc_id"),
-    )
-    return dst
+
+    def build(path: str) -> None:
+        shutil.copytree(src, path)
+        delete_docs(spark, path,
+                    read_doc_stats(spark, path)
+                    .where(F.col("doc_id") % DEL_MOD == DEL_REM)
+                    .select("doc_id"))
+
+    return _cached_index(
+        f"tts_delindex_{_tag(sf_dir)}",
+        lambda path: os.path.isdir(os.path.join(path, TOMBSTONES_DIRNAME)),
+        build)
 
 
 def ensure_purged_index(spark: SparkSession, sf_dir: str) -> str:
     """The deleted fixture index COMPACTED — tombstones physically purged,
     statistics recomputed over the surviving docs."""
-    from ..config import INDEX_FORMAT_VERSION
-    from ..operators.index import compact_index, read_index_config
+    from ..operators.index import compact_index
 
     src = ensure_deleted_index(spark, sf_dir)
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    dst = os.path.join(tempfile.gettempdir(), f"tts_purged_{tag}")
-    marker = os.path.join(dst, "manifest", "segment=0")
-    if os.path.isdir(marker):
-        try:
-            cfg = read_index_config(dst)
-        except Exception:
-            cfg = {}
-        if cfg.get("format_version") == INDEX_FORMAT_VERSION:
-            return dst
-    shutil.rmtree(dst, ignore_errors=True)
-    compact_index(spark, src, dst)
-    return dst
+    return _cached_index(f"tts_purged_{_tag(sf_dir)}", _compacted,
+                         lambda path: compact_index(spark, src, path))
 
 
 PREFIX_Q = "s"  # expands over the fixture vocabulary: scan slow small
@@ -304,34 +262,13 @@ FIELDED_BOOSTS = {"text": 1.0, "source": 2.0}
 def ensure_source_index(spark: SparkSession, sf_dir: str) -> str:
     """Second per-field index over the ``source`` column (the Lucene
     one-inverted-index-per-field layout); same corpus, same doc_ids."""
-    from ..config import INDEX_FORMAT_VERSION
-    from ..operators.index import read_index_config
-
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    index_dir = os.path.join(tempfile.gettempdir(), f"tts_srcindex_{tag}")
-    marker = os.path.join(index_dir, "manifest")
-    # same completeness guard as ensure_index: a crashed partial build
-    # (marker dir exists with fewer committed segments) must rebuild
-    need = not (
-        os.path.isdir(marker)
-        and len([d for d in os.listdir(marker)
-                 if re.fullmatch(r"segment=\d+", d)]) >= _INDEX_SEGMENTS
-    )
-    if not need:
-        try:
-            cfg = read_index_config(index_dir)
-        except Exception:
-            cfg = {}
-        if cfg.get("format_version") != INDEX_FORMAT_VERSION:
-            shutil.rmtree(index_dir, ignore_errors=True)
-            need = True
-    if need:
-        build_index(
-            spark, _docs(spark, sf_dir), index_dir,
+    return _cached_index(
+        f"tts_srcindex_{_tag(sf_dir)}", _all_segments,
+        lambda path: build_index(
+            spark, _docs(spark, sf_dir), path,
             id_col="doc_id", text_col="source", analyzer="ws",
             n_segments=_INDEX_SEGMENTS, buckets=_INDEX_BUCKETS,
-        )
-    return index_dir
+        ))
 
 
 def q_topk_bm25_fielded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -426,8 +363,9 @@ def q_topk_bm25_boosted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index statistics from the build MANIFEST alone (the per-partition
     lineage/metrics checkpoint rows, S16): total docs and total token
-    count summed over committed segments' Observation-collected metrics
-    — no postings or doc-store read. The oracle recomputes both numbers
+    count summed over committed segments' manifest metrics (aggregated
+    from the staged doc_stats at commit) — no postings or doc-store
+    read. The oracle recomputes both numbers
     from the raw corpus, so this row proves the checkpointed build
     metrics against ground truth (the north rule's 'resumable from
     per-partition checkpoints carrying lineage and build metrics')."""
