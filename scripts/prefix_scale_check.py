@@ -22,7 +22,7 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     from torchtrajectory_spark.operators.index import (
-        build_index, invalidate_index_cache, read_terms,
+        build_index, read_terms,
     )
     from torchtrajectory_spark.operators import wand
     from torchtrajectory_spark.sources.corpus import synth_corpus
@@ -69,15 +69,14 @@ def main() -> None:
     res["vocab"] = read_terms(spark, idx).select("term").distinct().count()
 
     def cold(fn):
-        invalidate_index_cache(idx)
         t = time.monotonic()
         r = fn()
         return time.monotonic() - t, r
 
     for prefix in ("re", "id_42", "ua1234"):
         s_sec, s_res = cold(lambda: wand.expand_prefix(spark, idx, prefix))
-        f_sec, f_res = cold(lambda: wand._expand_terms(
-            spark, idx, F.col("term").startswith(prefix), 64))
+        f_sec, f_res = cold(lambda: wand._expand_from(
+            read_terms(spark, idx), F.col("term").startswith(prefix), 64))
         assert s_res == f_res, (prefix, s_res, f_res)
         res[f"prefix_{prefix}"] = {
             "sorted_cold_sec": round(s_sec, 3),

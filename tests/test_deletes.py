@@ -281,12 +281,19 @@ def test_prefix_no_match_is_empty(spark, base_dir):
     assert [f.name for f in df.schema.fields] == ["doc_id", "score"]
 
 
-def test_engine_prefix_memoizes_expansion(spark, base_dir):
+def test_engine_prefix_memoizes_expansion(spark, base_dir, monkeypatch):
+    from torchtrajectory_spark.operators import wand as wand_mod
+
+    calls = []
+    real = wand_mod.expand_prefix
+    monkeypatch.setattr(wand_mod, "expand_prefix",
+                        lambda *a, **kw: calls.append(a) or real(*a, **kw))
     eng = Engine.from_index(spark, base_dir)
     a = eng.find_topk_prefix("de", K).collect()
-    key = ("prefix", "de", 64)
-    assert key in eng._meta_cache
+    assert len(calls) <= 1  # one expansion (none if already memoized)
+    n = len(calls)
     b = eng.find_topk_prefix("de", K).collect()  # warm: no dictionary scan
+    assert len(calls) == n
     assert [(r["doc_id"], r["score"]) for r in a] == [
         (r["doc_id"], r["score"]) for r in b
     ]

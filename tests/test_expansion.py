@@ -114,14 +114,28 @@ def test_empty_expansion_stable_schema(spark, idx):
         assert df.count() == 0
 
 
-def test_engine_facade_memoizes_expansion(spark, idx):
+def test_engine_facade_memoizes_expansion(spark, idx, monkeypatch):
+    from torchtrajectory_spark.operators import wand as wand_mod
+
+    calls = []
+    for name in ("expand_wildcard", "expand_fuzzy"):
+        real = getattr(wand_mod, name)
+        monkeypatch.setattr(
+            wand_mod, name,
+            lambda *a, _real=real, _name=name, **kw:
+                calls.append(_name) or _real(*a, **kw))
     eng = Engine.from_index(spark, idx)
     a = eng.find_topk_wildcard("re*rn", K).collect()
-    assert ("wildcard", "re*rn", 64) in eng._meta_cache
+    n = len(calls)
+    assert calls.count("expand_wildcard") <= 1
     b = eng.find_topk_wildcard("re*rn", K).collect()  # warm: memo hit
     assert a == b
+    assert len(calls) == n
     f = eng.find_topk_fuzzy("clas", K, max_edits=1).collect()
-    assert ("fuzzy", "clas", 1, 64) in eng._meta_cache
+    n = len(calls)
+    assert calls.count("expand_fuzzy") <= 1
+    eng.find_topk_fuzzy("clas", K, max_edits=1).collect()  # memo hit
+    assert len(calls) == n
     assert [r["doc_id"] for r in f] == [
         r["doc_id"]
         for r in topk_bm25_index_fuzzy(

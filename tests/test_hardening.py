@@ -8,7 +8,9 @@ leaves behind and asserts readers/writers stay correct:
   segment;
 - ``add_documents`` enforces the single-writer lock;
 - the chunk uid packing fails loudly on field overflow;
-- simple query syntax rejects unsupported patterns loudly.
+- simple query syntax rejects unsupported patterns loudly;
+- every read of a query comes from ONE index snapshot, and the next
+  query sees a commit in full — whoever made it.
 """
 
 from __future__ import annotations
@@ -16,9 +18,12 @@ from __future__ import annotations
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from torchtrajectory_spark import engine as engine_mod
 from torchtrajectory_spark.engine import Engine
 from torchtrajectory_spark.operators.index import (
     IndexPaths,
@@ -30,12 +35,16 @@ from torchtrajectory_spark.operators.index import (
     add_documents,
     build_index,
     delete_docs,
-    invalidate_index_cache,
+    open_snapshot,
     read_doc_stats,
     read_manifest,
     tombstone_ids,
 )
-from torchtrajectory_spark.operators.wand import topk_bm25_index
+from torchtrajectory_spark.operators.wand import (
+    _corpus_scalars,
+    query_term_meta,
+    topk_bm25_index,
+)
 from torchtrajectory_spark.sources.corpus import synth_corpus
 
 N = 120
@@ -82,14 +91,12 @@ def test_staged_marker_invisible_to_all_manifest_readers(spark, idx, corpus):
         assert read_manifest(spark, idx).count() == baseline
         assert _done_segments(spark, IndexPaths(idx)) == {0, 1}
         # full query path: stats AND data reads ignore the staging dirs
-        invalidate_index_cache(idx)
         now = [(r["doc_id"], round(r["score"], 9))
                for r in topk_bm25_index(spark, idx, Q, K).collect()]
         assert now == before
     finally:
         for p in junk:
             shutil.rmtree(p, ignore_errors=True)
-        invalidate_index_cache(idx)
 
 
 def test_staged_marker_invisible_before_first_commit(spark, tmp_path):
@@ -113,7 +120,6 @@ def test_staged_marker_invisible_before_first_commit(spark, tmp_path):
     # build_index writes the config BEFORE the segment loop, so a
     # crashed first build leaves it behind
     _write_index_config(idx, {"buckets": BUCKETS, "analyzer": "code"})
-    invalidate_index_cache(idx)
     with pytest.raises((AnalysisException, Py4JJavaError)) as ei:
         read_manifest(spark, idx).count()
     assert "PATH_NOT_FOUND" in str(ei.value) or "Path does not exist" \
@@ -169,7 +175,6 @@ def test_rehome_refuses_committed_destination(spark, corpus,
     with pytest.raises(FileExistsError, match="COMMITTED segment 0"):
         _rehome_segments(spark, b, IndexPaths(a), start_seg=0)
     # the committed segment's data survived the refused attempt
-    invalidate_index_cache(a)
     assert read_doc_stats(spark, a).count() == stats_before
 
 
@@ -224,3 +229,199 @@ def test_search_rejects_midterm_patterns(spark, idx):
             eng.search(bad, k=3)
     # the supported trailing-'*' prefix still works
     assert eng.search("de* return", k=3).count() > 0
+
+
+# ------------------------------------------------ one snapshot per query --
+#
+# Each scenario starts from a 60-doc index and commits the other 60 docs
+# (``NEW``: only they hold the term ``zzdelta``). The reference is a
+# fresh single build of the 120 docs: statistics are associative over
+# segments, so a correct reader ranks and scores identically.
+
+NEW_TERM = "zzdelta"
+
+
+def _old(corpus):
+    return corpus.where(F.col("doc_id") < 60)
+
+
+def _new(corpus):
+    return corpus.where(F.col("doc_id") >= 60).withColumn(
+        "content", F.concat_ws(" ", "content", F.lit(NEW_TERM)))
+
+
+def _build(spark, df, d, **kw):
+    build_index(spark, df, d, id_col="doc_id", text_col="content",
+                analyzer="code", meta_cols=("repo", "lang"), n_segments=1,
+                buckets=BUCKETS, **kw)
+
+
+def _rows(df):
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def union(spark, corpus, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("race_union"))
+    _build(spark, _old(corpus).unionByName(_new(corpus)), d)
+    return d
+
+
+def _assert_one_listing(spark, idx, union, dead=None):
+    """The snapshot's segment ids, scalars, dictionary, postings and
+    tombstones all describe the listing of the index as it is now."""
+    snap = open_snapshot(spark, idx)
+    assert snap.segments == (0, 1)
+    assert snap.scalars == _corpus_scalars(spark, union)
+    assert query_term_meta(spark, snap, Q + [NEW_TERM]) == \
+        query_term_meta(spark, union, Q + [NEW_TERM])
+    assert sorted(r["segment"] for r in
+                  snap.postings.select("segment").distinct().collect()) \
+        == [0, 1]
+    assert (None if snap.tombstones is None
+            else snap.tombstones.tolist()) == dead
+
+
+def test_commit_by_another_process_seen_by_next_query(spark, corpus, union,
+                                                      tmp_path_factory):
+    """A segment renamed into place with no in-process call — as another
+    process commits — is seen in full by the next free-function query,
+    after the same query warmed every read of the index."""
+    d = str(tmp_path_factory.mktemp("race_rename"))
+    side = str(tmp_path_factory.mktemp("race_side"))
+    _build(spark, _old(corpus), d)
+    _build(spark, _new(corpus), side)
+    delete_docs(spark, d, [3])
+    ref = str(tmp_path_factory.mktemp("race_ref"))
+    shutil.copytree(union, ref, dirs_exist_ok=True)
+    delete_docs(spark, ref, [3])
+    for q in (Q, [NEW_TERM]):
+        _rows(topk_bm25_index(spark, d, q, K))  # warm
+    src, dst = IndexPaths(side), IndexPaths(d)
+    for a in ("postings", "doc_stats", "terms", "terms_sorted"):
+        os.rename(src.seg(getattr(src, a), 0), dst.seg(getattr(dst, a), 1))
+    marker = pq.read_table(src.seg(src.manifest, 0))
+    marker = marker.set_column(
+        marker.schema.get_field_index("segment"), "segment",
+        pa.array([1], marker.schema.field("segment").type))
+    tmp = dst.seg(dst.manifest, 1) + ".__tmp__"
+    os.makedirs(tmp)
+    pq.write_table(marker, os.path.join(tmp, "part-0.parquet"))
+    os.rename(tmp, dst.seg(dst.manifest, 1))  # the commit
+    for q in (Q, [NEW_TERM]):
+        assert _rows(topk_bm25_index(spark, d, q, K)) == \
+            _rows(topk_bm25_index(spark, ref, q, K))
+    _assert_one_listing(spark, d, union, dead=[3])
+
+
+def test_open_engine_sees_free_function_add(spark, corpus, union,
+                                            tmp_path_factory):
+    """An Engine kept open across a free-function ``add_documents``
+    scores a term only the new segment holds exactly as a reopened
+    Engine does."""
+    d = str(tmp_path_factory.mktemp("race_add"))
+    _build(spark, _old(corpus), d)
+    eng = Engine.from_index(spark, d)
+    assert _rows(eng.find_topk([NEW_TERM], 3)) == []  # memo: df 0
+    eng.find_topk(Q, K).collect()
+    add_documents(spark, d, _new(corpus), meta_cols=("repo", "lang"))
+    for q in ([NEW_TERM], Q):
+        got = _rows(eng.find_topk(q, 3))
+        assert got == _rows(Engine.from_index(spark, d).find_topk(q, 3))
+        assert got == _rows(topk_bm25_index(spark, union, q, 3))
+    assert len(_rows(eng.find_topk([NEW_TERM], 3))) == 3
+    _assert_one_listing(spark, d, union)
+
+
+def test_rebuild_in_place_serves_new_data(spark, corpus, union,
+                                          tmp_path_factory):
+    """A ``resume=False`` rebuild into the same path recommits the same
+    marker names; the next query must read the new data, not the plans
+    or statistics of the old build."""
+    d = str(tmp_path_factory.mktemp("race_rebuild"))
+    _build(spark, _old(corpus), d)
+    eng = Engine.from_index(spark, d)
+    before = _rows(eng.find_topk(Q, K))
+    _rows(topk_bm25_index(spark, d, Q, K))
+    _build(spark, _old(corpus).unionByName(_new(corpus)), d, resume=False)
+    want = _rows(topk_bm25_index(spark, union, Q, K))
+    assert want != before
+    assert _rows(eng.find_topk(Q, K)) == want
+    assert _rows(topk_bm25_index(spark, d, Q, K)) == want
+    assert open_snapshot(spark, d).scalars == _corpus_scalars(spark, union)
+
+
+def test_delete_keeps_term_meta_memo(spark, corpus, tmp_path_factory,
+                                     monkeypatch):
+    """A delete changes no statistic: the snapshot after it keeps the
+    term-meta memo, so a repeat query runs no dictionary lookup — and
+    masks the deleted doc."""
+    d = str(tmp_path_factory.mktemp("race_delete"))
+    _build(spark, _old(corpus), d)
+    eng = Engine.from_index(spark, d)
+    first = _rows(eng.find_topk(Q, K))
+    calls = []
+    real = engine_mod.query_term_meta
+
+    def counting(*a, **kw):
+        calls.append(a)
+        return real(*a, **kw)
+
+    monkeypatch.setattr(engine_mod, "query_term_meta", counting)
+    eng.delete([first[0][0]])
+    again = _rows(eng.find_topk(Q, K))
+    assert calls == []
+    assert first[0][0] not in {doc for doc, _ in again}
+    assert again == _rows(Engine.from_index(spark, d).find_topk(Q, K))
+    assert calls == []
+
+
+def test_concurrent_opens_see_whole_snapshots(spark, idx):
+    """More threads than cores open snapshots while deletes commit: each
+    snapshot's tombstones are exactly those of the generations in its
+    listing, and a delete-only change keeps the segment set's memo."""
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from torchtrajectory_spark.operators.index import (
+        _listing,
+        _read_tombstones,
+    )
+
+    def ids(arr):
+        return None if arr is None else arr.tolist()
+
+    base = open_snapshot(spark, idx)
+    stop = threading.Event()
+    seen = [base]
+
+    def reader():
+        while not stop.is_set():
+            seen.append(open_snapshot(spark, idx))
+
+    n = 2 * (os.cpu_count() or 4)
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(n) as pool:
+            futs = [pool.submit(reader) for _ in range(n)]
+            for i in range(5):  # ids past the corpus: masks nothing
+                delete_docs(spark, idx, [10_000 + i])
+            final = _listing(os.path.abspath(idx))
+            deadline = time.monotonic() + 60
+            while (seen[-1].identity != final
+                   and time.monotonic() < deadline):
+                time.sleep(0.01)
+            stop.set()
+            for f in futs:
+                f.result(timeout=120)
+    finally:
+        stop.set()
+        sys.setswitchinterval(prev)
+    assert seen[-1].identity == final
+    for snap in seen:
+        assert snap.memo is base.memo and snap.segments == base.segments
+        assert ids(snap.tombstones) == ids(
+            _read_tombstones(idx, snap.identity[1]))

@@ -127,16 +127,24 @@ def test_add_meta_cols_default_and_mismatch(spark, corpus,
 
 
 def test_engine_add_invalidates_statistic_memos(spark, corpus, union_build,
-                                                tmp_path_factory):
+                                                tmp_path_factory,
+                                                monkeypatch):
+    from torchtrajectory_spark import engine as engine_mod
+
     d = str(tmp_path_factory.mktemp("incmemo"))
     _build(spark, corpus.where(F.col("doc_id") < N_BASE), d)
     eng = Engine.from_index(spark, d)
     eng.find_topk(Q, K).collect()  # warms the (term-set) df/scalars memo
-    assert eng._meta_cache
+    calls = []
+    real = engine_mod.query_term_meta
+    monkeypatch.setattr(engine_mod, "query_term_meta",
+                        lambda *a, **kw: calls.append(a) or real(*a, **kw))
+    eng.find_topk(Q, K).collect()
+    assert calls == []  # warm repeat: a memo hit
     eng.add_documents(corpus.where(F.col("doc_id") >= N_BASE),
                       meta_cols=("repo", "lang"))
-    assert not eng._meta_cache and eng._scalars is None
     got = eng.find_topk(Q, K).collect()  # must see the NEW statistics
+    assert len(calls) == 1  # the add's snapshot starts with no memo
     want = topk_bm25_index(spark, union_build, Q, K).collect()
     assert [(r["doc_id"], r["score"]) for r in got] == [
         (r["doc_id"], r["score"]) for r in want
@@ -216,7 +224,6 @@ def test_query_while_add_commits(spark, corpus, tmp_path_factory):
         if not err:
             # writer is HELD mid-commit: the reader must see exactly the
             # pre-add result, repeatedly (covers cached and cold plans)
-            index_mod.invalidate_index_cache(d)
             for _ in range(3):
                 assert q() == before, "torn read while marker staged"
         release_commit.set()
@@ -232,3 +239,43 @@ def test_query_while_add_commits(spark, corpus, tmp_path_factory):
     # test_add_documents_matches_fresh_build; here we just sanity-check
     # the post-add read is a valid superset-corpus result
     assert len(after) == K
+
+
+def test_open_engine_lifecycle_delete_add_compact(spark, corpus,
+                                                  tmp_path_factory):
+    """One Engine kept open across delete -> add_documents -> a compacted
+    index swapped into its directory: after each step, fielded, collapse
+    and sorted queries equal a freshly opened Engine's; after the
+    compaction they also equal a fresh build of the live docs."""
+    import os
+
+    from torchtrajectory_spark.operators.index import compact_index
+
+    d = str(tmp_path_factory.mktemp("lifecycle"))
+    _build(spark, corpus.where(F.col("doc_id") < N_BASE), d)
+    eng = Engine.from_index(spark, d)
+
+    def answers(e):
+        fielded = Engine.find_topk_fielded({"a": (e, 1.0), "b": (e, 0.5)},
+                                           Q, K)
+        return ([tuple(r) for r in fielded.collect()],
+                [tuple(r) for r in
+                 e.find_topk_collapse(Q, "lang", K).collect()],
+                [tuple(r) for r in e.find_sorted(Q, "dl", K).collect()])
+
+    answers(eng)  # warm every memo of the open Engine
+    dead = [r["doc_id"] for r in eng.find_topk(Q, 3).collect()]
+    eng.delete(dead)
+    assert answers(eng) == answers(Engine.from_index(spark, d))
+    eng.add_documents(corpus.where(F.col("doc_id") >= N_BASE),
+                      meta_cols=("repo", "lang"))
+    assert answers(eng) == answers(Engine.from_index(spark, d))
+    compacted = d + "_compacted"
+    compact_index(spark, d, compacted)
+    os.rename(d, d + "_old")
+    os.rename(compacted, d)
+    got = answers(eng)
+    assert got == answers(Engine.from_index(spark, d))
+    fresh = str(tmp_path_factory.mktemp("lifecycle_fresh"))
+    _build(spark, corpus.where(~F.col("doc_id").isin(dead)), fresh)
+    assert got == answers(Engine.from_index(spark, fresh))

@@ -384,27 +384,3 @@ def test_streamed_index_serves_expansion_and_facets(spark, chunked_input,
         .collect()
     ]
     assert [(r["value"], r["n_docs"]) for r in facets] == want_f
-
-
-def test_term_meta_clamps_df_to_reader_n_docs(spark, tmp_path):
-    """Racing-commit statistics coherence: if the dictionary read sees a
-    segment the manifest-scalars read did not (df > N), idf would go
-    NEGATIVE and a match could score <= 0 — the clamp pins df <= N, a
-    no-op under any single consistent snapshot. Reproduced here by
-    passing a stale scalars pair, exactly what a commit between the two
-    reads produces."""
-    from torchtrajectory_spark.functions.bm25 import idf_py
-    from torchtrajectory_spark.operators.index import build_index
-    from torchtrajectory_spark.operators.wand import query_term_meta
-
-    d = str(tmp_path / "clamp_idx")
-    rows = [(i, "stream doc word") for i in range(50)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    build_index(spark, df, d, id_col="doc_id", text_col="text",
-                analyzer="ws", n_segments=1, buckets=4, resume=False)
-    # stale scalars: the reader believes only 10 docs exist, while the
-    # dictionary counts 50 for every term
-    meta = query_term_meta(spark, d, ["stream"], buckets=4,
-                           scalars=(10.0, 3.0))
-    assert meta.term_df["stream"] == 10.0  # clamped to the reader's N
-    assert idf_py(meta.term_df["stream"], meta.n_docs) > 0

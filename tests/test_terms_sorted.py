@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 from torchtrajectory_spark.operators.index import (
     IndexPaths,
     build_index,
-    invalidate_index_cache,
     read_terms,
     read_terms_sorted,
 )
@@ -176,7 +175,6 @@ def test_expansion_identical_on_all_paths(spark, idx, tmp_path):
     old = str(tmp_path / "old_idx")
     shutil.copytree(idx, old)
     shutil.rmtree(IndexPaths(old).terms_sorted)
-    invalidate_index_cache(old)
     assert read_terms_sorted(spark, old) is None
     assert expand_prefix(spark, old, "re") == sorted_res
     assert expand_wildcard(spark, old, "re*rn") == wc_sorted
@@ -190,6 +188,5 @@ def test_partial_sorted_dictionary_is_refused(spark, idx, tmp_path):
     shutil.copytree(idx, part)
     pp = IndexPaths(part)
     shutil.rmtree(pp.seg(pp.terms_sorted, 0))
-    invalidate_index_cache(part)
     assert read_terms_sorted(spark, part) is None
     assert expand_prefix(spark, part, "re") == expand_prefix(spark, idx, "re")

@@ -16,24 +16,20 @@ mapping each call:
     engine.update("simFunc", ...)           -> engine.with_bm25(k1, b)
 
 Every method returns a lazy DataFrame — compose further or ``.collect()``.
+Each call reads one snapshot of the index (``operators.index.open_snapshot``),
+and a returned DataFrame keeps it.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import BM25_B, BM25_K1, DEFAULT_K
 from .operators import boolean, phrase as phrase_ops
-from .operators.index import (
-    build_index,
-    postings_flat,
-    read_doc_stats,
-    read_index_config,
-    read_manifest,
-)
+from .operators.index import build_index, open_snapshot
 from .operators.wand import (
     IndexMeta,
     query_term_meta,
@@ -63,29 +59,27 @@ def parse_simple_query(query: str) -> tuple[list[str], list[str], list[str]]:
 
 @dataclass
 class Engine:
+    """An opened index. Each call reads the index's current snapshot,
+    so a commit — a streamed segment, ``add_documents``, a compacted
+    index swapped into place, or a write by another process — is visible
+    in full from the next call on, with no reopen. Term statistics are
+    memoized per snapshot (``IndexSnapshot.memo``): warm repeats skip the
+    dictionary job, and the memo survives a delete (masking changes no
+    statistic). ``index_dir`` may also be an ``IndexSnapshot``, which
+    pins every call to it."""
+
     spark: SparkSession
     index_dir: str
     k1: float = BM25_K1
     b: float = BM25_B
-    _buckets: int = field(default=0, repr=False)
-    _analyzer: str = field(default="ws", repr=False)
-    _scalars: tuple | None = field(default=None, repr=False)
-    # per-term-set IndexMeta memo: term df values are immutable for an
-    # opened index (segments are append-only and an Engine instance is
-    # scoped to one index snapshot — reopen after streamed segment
-    # commits, same scope as the plan cache / _scalars), so repeated
-    # queries skip the per-query dictionary-lookup job entirely. Driver
-    # state stays bounded: entries hold only the queried terms' df floats.
-    _meta_cache: dict = field(default_factory=dict, repr=False)
 
     # ------------------------------------------------- construction ----
     @classmethod
     def from_index(cls, spark: SparkSession, index_dir: str) -> "Engine":
         """Open an existing index (the reference's query-time bootstrap,
-        ``QueryPool`` ctor)."""
-        cfg = read_index_config(index_dir)
-        return cls(spark, index_dir, _buckets=int(cfg["buckets"]),
-                   _analyzer=str(cfg.get("analyzer", "ws")))
+        ``QueryPool`` ctor); raises if there is none."""
+        open_snapshot(spark, index_dir).config  # raises without an index
+        return cls(spark, index_dir)
 
     @classmethod
     def build(cls, spark: SparkSession, corpus: DataFrame, index_dir: str,
@@ -97,8 +91,14 @@ class Engine:
 
     def with_bm25(self, k1: float, b: float) -> "Engine":
         """Runtime scorer-parameter swap (Engine.update analog)."""
-        return Engine(self.spark, self.index_dir, k1, b,
-                      _buckets=self._buckets, _analyzer=self._analyzer)
+        return replace(self, k1=k1, b=b)
+
+    def _snap(self):
+        return open_snapshot(self.spark, self.index_dir)
+
+    @property
+    def _analyzer(self) -> str:
+        return self._snap().analyzer
 
     # --------------------------------------------------- query API -----
     def find_topk(self, terms: list[str], k: int = DEFAULT_K,
@@ -120,10 +120,10 @@ class Engine:
         bucket-pruned dictionary lookup for just the query terms) — never
         the full dictionary, which is unbounded driver state at the
         10^12-file / hash-bounded-vocabulary posture (SURVEY.md §7.6)."""
+        snap = self._snap()
         return topk_bm25_index(
-            self.spark, self.index_dir, terms, k,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(terms), after=after, predicate=where,
+            self.spark, snap, terms, k, k1=self.k1, b=self.b,
+            meta=self._term_meta(terms, snap), after=after, predicate=where,
         )
 
     def find_topk_boosted(self, weights: dict, k: int = DEFAULT_K) -> DataFrame:
@@ -132,10 +132,10 @@ class Engine:
         by its weight, block-max bounds scale with it, so the pruned scan
         stays exact. weight=1.0 for every term == plain ``find_topk``."""
         terms = sorted({str(t) for t in weights})
+        snap = self._snap()
         return topk_bm25_index(
-            self.spark, self.index_dir, terms, k,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(terms),
+            self.spark, snap, terms, k, k1=self.k1, b=self.b,
+            meta=self._term_meta(terms, snap),
             boosts={str(t): float(w) for t, w in weights.items()},
         )
 
@@ -150,10 +150,10 @@ class Engine:
         (``with_positions=True``)."""
         from .operators.phrase import topk_bm25_index_phrase
 
+        snap = self._snap()
         return topk_bm25_index_phrase(
-            self.spark, self.index_dir, phrase, k,
-            buckets=self._buckets, k1=self.k1, b=self.b, slop=slop,
-            meta=self._term_meta(phrase),
+            self.spark, snap, phrase, k, k1=self.k1, b=self.b, slop=slop,
+            meta=self._term_meta(phrase, snap),
         )
 
     def find_topk_msm(self, terms: list[str], min_should_match: int,
@@ -165,10 +165,10 @@ class Engine:
         from .operators.queryext import topk_bm25_index_msm
 
         sq = sorted({str(t) for t in terms})
+        snap = self._snap()
         return topk_bm25_index_msm(
-            self.spark, self.index_dir, sq, min_should_match, k,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(sq),
+            self.spark, snap, sq, min_should_match, k, k1=self.k1, b=self.b,
+            meta=self._term_meta(sq, snap),
         )
 
     def find_topk_synonyms(self, groups: list[list[str]],
@@ -180,10 +180,10 @@ class Engine:
         from .operators.queryext import topk_bm25_index_synonym
 
         all_terms = sorted({str(t) for g in groups for t in g})
+        snap = self._snap()
         return topk_bm25_index_synonym(
-            self.spark, self.index_dir, groups, k,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(all_terms),
+            self.spark, snap, groups, k, k1=self.k1, b=self.b,
+            meta=self._term_meta(all_terms, snap),
         )
 
     def find_topk_many(self, queries: dict[str, list[str]],
@@ -204,10 +204,10 @@ class Engine:
         pagination inside the batch — mixed page-1 and page-N members
         share the one scan."""
         all_terms = sorted({str(t) for q in queries.values() for t in q})
+        snap = self._snap()
         return topk_bm25_index_many(
-            self.spark, self.index_dir, queries, k,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(all_terms), predicate=where,
+            self.spark, snap, queries, k, k1=self.k1, b=self.b,
+            meta=self._term_meta(all_terms, snap), predicate=where,
             afters=afters,
         )
 
@@ -221,14 +221,14 @@ class Engine:
         so warm repeats skip the dictionary scan."""
         from .operators.wand import expand_prefix, topk_bm25_index_prefix
 
+        snap = self._snap()
         meta = self._expansion_meta(
-            ("prefix", str(prefix), int(max_terms)),
-            lambda: expand_prefix(self.spark, self.index_dir, prefix,
-                                  max_terms),
+            snap, ("prefix", str(prefix), int(max_terms)),
+            lambda s: expand_prefix(self.spark, s, prefix, max_terms),
         )
         return topk_bm25_index_prefix(
-            self.spark, self.index_dir, prefix, k, max_terms=max_terms,
-            buckets=self._buckets, k1=self.k1, b=self.b, meta=meta,
+            self.spark, snap, prefix, k, max_terms=max_terms,
+            k1=self.k1, b=self.b, meta=meta,
         )
 
     def find_topk_wildcard(self, pattern: str, k: int = DEFAULT_K,
@@ -239,14 +239,14 @@ class Engine:
         as a multi-term query and is memoized per (pattern, cap)."""
         from .operators.wand import expand_wildcard, topk_bm25_index_wildcard
 
+        snap = self._snap()
         meta = self._expansion_meta(
-            ("wildcard", str(pattern), int(max_terms)),
-            lambda: expand_wildcard(self.spark, self.index_dir, pattern,
-                                    max_terms),
+            snap, ("wildcard", str(pattern), int(max_terms)),
+            lambda s: expand_wildcard(self.spark, s, pattern, max_terms),
         )
         return topk_bm25_index_wildcard(
-            self.spark, self.index_dir, pattern, k, max_terms=max_terms,
-            buckets=self._buckets, k1=self.k1, b=self.b, meta=meta,
+            self.spark, snap, pattern, k, max_terms=max_terms,
+            k1=self.k1, b=self.b, meta=meta,
         )
 
     def find_topk_fuzzy(self, term: str, k: int = DEFAULT_K,
@@ -258,15 +258,15 @@ class Engine:
         (term, edits, cap)."""
         from .operators.wand import expand_fuzzy, topk_bm25_index_fuzzy
 
+        snap = self._snap()
         meta = self._expansion_meta(
-            ("fuzzy", str(term), int(max_edits), int(max_terms)),
-            lambda: expand_fuzzy(self.spark, self.index_dir, term,
-                                 max_edits, max_terms),
+            snap, ("fuzzy", str(term), int(max_edits), int(max_terms)),
+            lambda s: expand_fuzzy(self.spark, s, term, max_edits,
+                                   max_terms),
         )
         return topk_bm25_index_fuzzy(
-            self.spark, self.index_dir, term, k, max_edits=max_edits,
-            max_terms=max_terms, buckets=self._buckets, k1=self.k1,
-            b=self.b, meta=meta,
+            self.spark, snap, term, k, max_edits=max_edits,
+            max_terms=max_terms, k1=self.k1, b=self.b, meta=meta,
         )
 
     def find_topk_regexp(self, pattern: str, k: int = DEFAULT_K,
@@ -278,14 +278,14 @@ class Engine:
         multi-term query. Expansion memoized per (pattern, cap)."""
         from .operators.wand import expand_regexp, topk_bm25_index_regexp
 
+        snap = self._snap()
         meta = self._expansion_meta(
-            ("regexp", str(pattern), int(max_terms)),
-            lambda: expand_regexp(self.spark, self.index_dir, pattern,
-                                  max_terms),
+            snap, ("regexp", str(pattern), int(max_terms)),
+            lambda s: expand_regexp(self.spark, s, pattern, max_terms),
         )
         return topk_bm25_index_regexp(
-            self.spark, self.index_dir, pattern, k, max_terms=max_terms,
-            buckets=self._buckets, k1=self.k1, b=self.b, meta=meta,
+            self.spark, snap, pattern, k, max_terms=max_terms,
+            k1=self.k1, b=self.b, meta=meta,
         )
 
     def spell(self, term: str, k: int = 5,
@@ -296,7 +296,7 @@ class Engine:
         dist ASC, df DESC, term ASC."""
         from .operators.wand import spell_suggest_terms
 
-        return spell_suggest_terms(self.spark, self.index_dir, term, k,
+        return spell_suggest_terms(self.spark, self._snap(), term, k,
                                    max_edits)
 
     def find_topk_collapse(self, terms: list[str], group_col: str,
@@ -309,10 +309,10 @@ class Engine:
         from .operators.grouping import collapse_topk
 
         sq = sorted({str(t) for t in terms})
+        snap = self._snap()
         return collapse_topk(
-            self.spark, self.index_dir, sq, group_col, k,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(sq),
+            self.spark, snap, sq, group_col, k, k1=self.k1, b=self.b,
+            meta=self._term_meta(sq, snap),
         )
 
     @staticmethod
@@ -332,24 +332,22 @@ class Engine:
         sq = sorted({str(t) for t in terms})
         parts = []
         for _name, (eng, boost) in sorted(fields.items()):
+            snap = eng._snap()
             s = scores_bm25_index_all(
-                eng.spark, eng.index_dir, sq, buckets=eng._buckets,
-                k1=eng.k1, b=eng.b, meta=eng._term_meta(sq),
+                eng.spark, snap, sq, k1=eng.k1, b=eng.b,
+                meta=eng._term_meta(sq, snap),
             )
             parts.append((s, float(boost)))
         return combine_fielded(parts, k)
 
-    def _expansion_meta(self, key: tuple, expand) -> IndexMeta:
-        """Memoized MultiTermQuery expansion: one dictionary scan per
-        (kind, pattern, cap) per Engine; warm repeats skip it."""
-        meta = self._meta_cache.get(key)
+    def _expansion_meta(self, snap, key: tuple, expand) -> IndexMeta:
+        """Memoized MultiTermQuery expansion: one dictionary scan
+        (``expand(snap)``) per (kind, pattern, cap) per snapshot; warm
+        repeats skip it."""
+        meta = snap.memo.get(key)
         if meta is None:
-            if self._scalars is None:
-                from .operators.wand import _corpus_scalars
-
-                self._scalars = _corpus_scalars(self.spark, self.index_dir)
-            meta = IndexMeta(self._scalars[0], self._scalars[1], expand())
-            self._meta_cache[key] = meta
+            meta = IndexMeta(*snap.scalars, expand(snap))
+            snap.memo[key] = meta
         return meta
 
     def find_topk_boolean(self, should: list[str], k: int = DEFAULT_K,
@@ -363,10 +361,10 @@ class Engine:
         from .operators.wand import topk_bm25_index_boolean
 
         sq = sorted({str(t) for t in should})
+        snap = self._snap()
         return topk_bm25_index_boolean(
-            self.spark, self.index_dir, sq, k, must=must, must_not=must_not,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(sq),
+            self.spark, snap, sq, k, must=must, must_not=must_not,
+            k1=self.k1, b=self.b, meta=self._term_meta(sq, snap),
         )
 
     def search(self, query: str, k: int = DEFAULT_K,
@@ -402,23 +400,24 @@ class Engine:
                     "Engine.find_topk_wildcard / expand_wildcard for "
                     "mid-term '*' or '?' patterns"
                 )
+        from .operators.wand import expand_prefix
+
+        snap = self._snap()
         bare = [t for t in should if not t.endswith("*")]
         for pat in [t for t in should if t.endswith("*")]:
-            from .operators.wand import expand_prefix
-
             meta = self._expansion_meta(
-                ("prefix", pat[:-1], int(max_terms)),
-                lambda p=pat[:-1]: expand_prefix(self.spark,
-                                                 self.index_dir, p,
-                                                 max_terms),
+                snap, ("prefix", pat[:-1], int(max_terms)),
+                lambda s, p=pat[:-1]: expand_prefix(self.spark, s, p,
+                                                    max_terms),
             )
             bare.extend(meta.term_df)
         if not bare:
             raise ValueError(
                 f"query {query!r} has no scoring terms (bare or prefix)"
             )
-        return self.find_topk_boolean(sorted(set(bare)), k,
-                                      must=must, must_not=must_not)
+        # the expansion and the scoring read the same snapshot
+        return replace(self, index_dir=snap).find_topk_boolean(
+            sorted(set(bare)), k, must=must, must_not=must_not)
 
     def find_sorted(self, terms: list[str], sort_col: str,
                     k: int = DEFAULT_K, mode: str = "or",
@@ -428,9 +427,8 @@ class Engine:
         of relevance — (doc_id, sort_value), NULL values dropped."""
         from .operators.boolean import sort_by_field
 
-        return sort_by_field(self.spark, self.index_dir, terms, sort_col,
-                             k, mode=mode, ascending=ascending,
-                             buckets=self._buckets)
+        return sort_by_field(self.spark, self._snap(), terms, sort_col,
+                             k, mode=mode, ascending=ascending)
 
     def count(self, terms: list[str], mode: str = "or") -> DataFrame:
         """Total-hits count (Lucene ``TotalHitCountCollector`` analog):
@@ -442,7 +440,7 @@ class Engine:
         if mode not in ("or", "and"):
             raise ValueError(f"count: unknown mode {mode!r}")
         fn = bool_or_index_blocks if mode == "or" else bool_and_index_blocks
-        m = fn(self.spark, self.index_dir, terms, self._buckets)
+        m = fn(self.spark, self._snap(), terms)
         return m.agg(F.count("doc_id").alias("n_docs"))
 
     def facet_counts(self, terms: list[str], facet_col: str,
@@ -452,8 +450,8 @@ class Engine:
         matching the terms (``mode`` = "or" / "and")."""
         from .operators.boolean import facet_counts
 
-        return facet_counts(self.spark, self.index_dir, terms, facet_col,
-                            k=k, mode=mode, buckets=self._buckets)
+        return facet_counts(self.spark, self._snap(), terms, facet_col,
+                            k=k, mode=mode)
 
     def facet_ranges(self, terms: list[str], facet_col: str, width: float,
                      mode: str = "or") -> DataFrame:
@@ -463,8 +461,8 @@ class Engine:
         always works), bucket ASC."""
         from .operators.boolean import facet_ranges
 
-        return facet_ranges(self.spark, self.index_dir, terms, facet_col,
-                            width, mode=mode, buckets=self._buckets)
+        return facet_ranges(self.spark, self._snap(), terms, facet_col,
+                            width, mode=mode)
 
     def highlight(self, result: DataFrame, docs: DataFrame,
                   terms: list[str], width: int = 5,
@@ -531,7 +529,7 @@ class Engine:
         a range scan over ``terms_sorted`` when present."""
         from .operators.wand import suggest_terms
 
-        return suggest_terms(self.spark, self.index_dir, prefix, k)
+        return suggest_terms(self.spark, self._snap(), prefix, k)
 
     def more_like_this(self, text: str, k: int = DEFAULT_K,
                        max_terms: int = 6,
@@ -550,11 +548,12 @@ class Engine:
         from .functions.bm25 import idf_py
         from .functions.tokenizer import tokenize_py
 
-        an = "code" if self._analyzer == "code_jvm" else self._analyzer
+        snap = self._snap()
+        an = "code" if snap.analyzer == "code_jvm" else snap.analyzer
         tf = Counter(tokenize_py(str(text), an))
         if not tf:
             raise ValueError("empty MoreLikeThis source text")
-        meta = self._term_meta(sorted(tf))
+        meta = self._term_meta(sorted(tf), snap)
         scored = sorted(
             (-int(round(n * idf_py(meta.term_df[t], meta.n_docs) * 1e6)), t)
             for t, n in tf.items()
@@ -565,7 +564,8 @@ class Engine:
             terms = ["\x00__no_indexed_source_terms__"]  # 0 rows, stable schema
         where = (F.col("doc_id") != int(exclude_doc_id)
                  if exclude_doc_id is not None else None)
-        return self.find_topk(terms, k, where=where)
+        # term selection and scoring read the same snapshot
+        return replace(self, index_dir=snap).find_topk(terms, k, where=where)
 
     def explain_score(self, terms: list[str], doc_id: int) -> DataFrame:
         """Per-term BM25 breakdown for one document (Lucene
@@ -574,10 +574,10 @@ class Engine:
         (tested). Rides the memoized per-term-set statistics."""
         from .operators.wand import explain_score
 
+        snap = self._snap()
         return explain_score(
-            self.spark, self.index_dir, terms, doc_id,
-            buckets=self._buckets, k1=self.k1, b=self.b,
-            meta=self._term_meta(sorted({str(t) for t in terms})),
+            self.spark, snap, terms, doc_id, k1=self.k1, b=self.b,
+            meta=self._term_meta(sorted({str(t) for t in terms}), snap),
         )
 
     def add_documents(self, corpus: DataFrame,
@@ -587,75 +587,57 @@ class Engine:
         """Incremental batch ingest into the opened index
         (``IndexWriter.addDocuments`` analog): new docs become fresh
         appended segments; queries afterwards are rank- and
-        score-identical to a fresh build over the union corpus. The
-        per-term-set statistic memos are invalidated — n_docs / avgdl /
-        df all change with the new docs."""
+        score-identical to a fresh build over the union corpus (the next
+        call reads the new snapshot, with its own statistics)."""
         from .operators.index import add_documents
 
-        n = add_documents(self.spark, self.index_dir, corpus,
-                          meta_cols=meta_cols, n_segments=n_segments,
-                          verify_disjoint=verify_disjoint)
-        self._meta_cache.clear()
-        self._scalars = None
-        return n
+        return add_documents(self.spark, self.index_dir, corpus,
+                             meta_cols=meta_cols, n_segments=n_segments,
+                             verify_disjoint=verify_disjoint)
 
     def delete(self, doc_ids) -> int:
         """Tombstone documents (Lucene live-docs semantics): every
         subsequent query masks them out; corpus statistics keep counting
         them until ``compact_index`` physically purges. Accepts an
         iterable of ids or a one-column DataFrame; returns the count
-        recorded. Per-term-set statistic memos stay valid (masking does
-        not change df/avgdl by design)."""
+        recorded. The next snapshot keeps the term-statistics memo
+        (masking does not change df/avgdl by design)."""
         from .operators.index import delete_docs
 
         return delete_docs(self.spark, self.index_dir, doc_ids)
 
-    def _term_meta(self, terms: list[str]) -> IndexMeta:
-        """Memoized per-(index, term-set) statistics lookup: the df job
-        (a bucket-pruned dictionary scan) runs once per distinct term
+    def _term_meta(self, terms: list[str], snap=None) -> IndexMeta:
+        """Memoized per-(snapshot, term-set) statistics lookup: the df
+        job (a bucket-pruned dictionary scan) runs once per distinct term
         set; warm repeats are driver-side dict hits."""
+        snap = self._snap() if snap is None else snap
         key = frozenset(str(t) for t in terms)
-        m = self._meta_cache.get(key)
+        m = snap.memo.get(key)
         if m is None:
-            if self._scalars is None:
-                # (n_docs, avgdl) — two floats, cached per opened index
-                from .operators.wand import _corpus_scalars
-
-                self._scalars = _corpus_scalars(self.spark, self.index_dir)
-            m = query_term_meta(
-                self.spark, self.index_dir, sorted(key),
-                buckets=self._buckets, scalars=self._scalars,
-            )
-            self._meta_cache[key] = m
+            m = query_term_meta(self.spark, snap, sorted(key))
+            snap.memo[key] = m
         return m
 
     def find_on_path(self, terms: list[str]) -> DataFrame:
         """Boolean OR — docs sharing >=1 term (findOnPath / J2)."""
-        return boolean.bool_or_index_blocks(
-            self.spark, self.index_dir, terms, buckets=self._buckets
-        )
+        return boolean.bool_or_index_blocks(self.spark, self._snap(), terms)
 
     def find_on_strict_path(self, terms: list[str]) -> DataFrame:
         """Boolean AND — docs containing all terms (findOnStrictPath /
         J3)."""
-        return boolean.bool_and_index_blocks(
-            self.spark, self.index_dir, terms, buckets=self._buckets
-        )
+        return boolean.bool_and_index_blocks(self.spark, self._snap(), terms)
 
     def find_phrase(self, phrase: list[str]) -> DataFrame:
         """Exact consecutive-token phrase (positional index required)."""
-        return phrase_ops.phrase_count_index(
-            self.spark, self.index_dir, phrase, buckets=self._buckets
-        )
+        return phrase_ops.phrase_count_index(self.spark, self._snap(), phrase)
 
     def find_near(self, terms: list[str], slop: int = 0) -> DataFrame:
         """Ordered proximity query (SpanNear analog, positional index
         required): terms in query order, whole window bounded by
         (n-1) + slop; n_occ counts the qualifying position tuples.
         slop=0 equals :meth:`find_phrase` (tested)."""
-        return phrase_ops.near_count_index(
-            self.spark, self.index_dir, terms, slop, buckets=self._buckets
-        )
+        return phrase_ops.near_count_index(self.spark, self._snap(), terms,
+                                           slop)
 
     def find_in_range(self, predicate: Column) -> DataFrame:
         """Range/window query over the doc store metadata (findInRange /
@@ -664,12 +646,11 @@ class Engine:
         prunes partitions/row groups of the doc_stats table. Tombstoned
         docs are masked out (broadcast anti-join — the tombstone set is
         bounded by deletes-since-compaction)."""
-        from .operators.index import drop_docs, tombstone_ids
+        from .operators.index import drop_docs
 
-        return drop_docs(
-            read_doc_stats(self.spark, self.index_dir)
-            .where(predicate).select("doc_id"),
-            tombstone_ids(self.index_dir))
+        snap = self._snap()
+        return drop_docs(snap.doc_stats.where(predicate).select("doc_id"),
+                         snap.tombstones)
 
     @staticmethod
     def find_in_radius(points: DataFrame, lat: float, lng: float,
@@ -695,15 +676,10 @@ class Engine:
     def resolve(self, result: DataFrame) -> DataFrame:
         """Join a (doc_id, ...) result against the doc store metadata —
         the TrajectoryResolver step (J7)."""
-        ds = read_doc_stats(self.spark, self.index_dir).drop("segment")
+        ds = self._snap().doc_stats.drop("segment")
         return result.join(ds, "doc_id", "left")
 
     # ------------------------------------------------- introspection ---
     def manifest(self) -> DataFrame:
         """Per-segment lineage + metrics rows."""
-        return read_manifest(self.spark, self.index_dir)
-
-    # ------------------------------------------------------ helpers ----
-    def _flat(self, terms: list[str]) -> DataFrame:
-        return postings_flat(self.spark, self.index_dir, docs_only=True,
-                             terms=terms, buckets=self._buckets)
+        return self._snap().manifest

@@ -28,7 +28,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .index import decode_blocks, read_doc_stats, sorted_isin
+from .index import decode_blocks, open_snapshot, sorted_isin
 from .stats import tokenized
 from .wand import _per_segment, _terms
 
@@ -135,13 +135,13 @@ def _match_analyze(spark, index_dir: str, query_terms: list[str],
     if mode not in ("or", "and"):
         raise ValueError(f"{op}: unknown mode {mode!r}")
     q = _terms(query_terms)
-    stats = read_doc_stats(spark, index_dir).select("segment", "doc_id",
-                                                    value)
+    snap = open_snapshot(spark, index_dir)
+    stats = snap.doc_stats.select("segment", "doc_id", value)
 
     def run(blk, _meta, dead, st):
         return kernel(match_hit_rows(blk, st, mode, len(q), dead))
 
-    return _per_segment(spark, index_dir, q, run, schema, cols=_MATCH_COLS,
+    return _per_segment(spark, snap, q, run, schema, cols=_MATCH_COLS,
                         buckets=buckets, scored=False, side=stats)
 
 

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
-from .index import read_doc_stats
+from .index import open_snapshot
 from .wand import IndexMeta, _per_segment, _segment_topk, _terms
 
 
@@ -47,14 +47,14 @@ def collapse_topk(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Top-k groups by best BM25 hit. Returns (value, doc_id, score):
     the group value (cast to string), its best-scoring matching doc, and
     that doc's score; ordered (score DESC, value ASC), limit k."""
     q = _terms(query_terms)
-    stats = read_doc_stats(spark, index_dir).select(
+    snap = open_snapshot(spark, index_dir)
+    stats = snap.doc_stats.select(
         "segment", "doc_id",
         F.col(group_col).cast("string").alias("value"),
     )
@@ -76,9 +76,9 @@ def collapse_topk(
         return best[["value", "doc_id", "score"]]
 
     per_seg = _per_segment(
-        spark, index_dir, q, kernel,
+        spark, snap, q, kernel,
         "value string, doc_id bigint, score double",
-        buckets=buckets, meta=meta, scalars=scalars, side=stats)
+        buckets=buckets, meta=meta, side=stats)
     # cross-segment combine: lexicographic struct max == argmax by
     # (score DESC, doc_id ASC); a doc's score is complete within its
     # one segment, so the combine is pure selection, no float re-adds

@@ -37,6 +37,11 @@ segmented, resumable Spark job:
   filters the segments whose manifest row says ``ok`` out of its one pass
   (the reference has no real resume — SURVEY.md §4.3.4; this is new
   engineering).
+* **reads**: every query-side read goes through one point-in-time
+  ``IndexSnapshot`` (``open_snapshot``): one listing of the committed
+  manifest markers and tombstone generations fixes the segment set the
+  statistics, dictionary, postings, doc_stats and tombstones are read
+  over, and the next read after a commit sees it in full.
 
 At 10^12-file scale: S = O(10^4) segments, B = O(10^3) buckets; every stage
 is bounded by segment x bucket, nothing ever collects postings to the
@@ -53,7 +58,7 @@ import time
 import zlib
 from collections.abc import Iterator
 from contextlib import contextmanager
-from dataclasses import dataclass
+from dataclasses import dataclass, field, replace
 from functools import partial, reduce
 
 import numpy as np
@@ -873,7 +878,6 @@ def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
                 "status": "ok",
                 "attempt": 1,
             }]), paths.seg(paths.manifest, s))
-            invalidate_index_cache(paths.root)
             if fail_after is not None and i + 1 >= fail_after:
                 raise RuntimeError(
                     f"injected failure after {i + 1} segments")
@@ -1034,7 +1038,8 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     their sums. Writing to a fresh directory keeps the source readable
     throughout — swap directories (or catalog pointers) after it commits.
     """
-    cfg = read_index_config(src_dir)
+    src = open_snapshot(spark, src_dir)
+    cfg = src.config
     if block_size is None:
         block_size = int(cfg.get("block_size", BLOCK_SIZE))
     with_positions = bool(cfg.get("with_positions", False))
@@ -1045,19 +1050,17 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
     # docs, doc_stats filters, and the manifest's row_count/sum_dl (hence
     # n_docs/avgdl) shift to the purged corpus. The compacted index
     # carries NO tombstones.
-    ts = tombstone_ids(src_dir)
+    ts = src.tombstones
     _write_index_config(dst_dir, {**cfg, "n_segments": 1,
                                   "compacted_from": src_dir,
                                   "purged_tombstones":
                                       int(ts.size) if ts is not None else 0})
     with use_table_format(cfg.get("table_format", "parquet")):
-        minis = (read_postings(spark, src_dir).drop("segment")
-                 .withColumn(SEG_COL, F.lit(0)))
-        ds = drop_docs(read_doc_stats(spark, src_dir).drop("segment"), ts)
+        minis = src.postings.drop("segment").withColumn(SEG_COL, F.lit(0))
+        ds = drop_docs(src.doc_stats.drop("segment"), ts)
         _commit_pass(spark, paths, [0],
                      _merge_blocks(minis, block_size, with_positions, ts),
                      ds.withColumn(SEG_COL, F.lit(0)))
-    invalidate_index_cache(dst_dir)
 
 
 # test-only commit gate (see _rehome_segments); None in production
@@ -1117,12 +1120,6 @@ def _rehome_segments(spark: SparkSession, src_dir: str, dst: "IndexPaths",
         hook = _PRE_COMMIT_HOOK
         _write_table_driver(t, dst.seg(dst.manifest, new),
                             None if hook is None else partial(hook, new))
-        # the marker just made this segment visible: drop cached plans
-        # IMMEDIATELY so an in-process reader that sees the new manifest
-        # row also replans postings/terms over the new directory (the
-        # old ordering invalidated once at the end, leaving a window of
-        # new-statistics-over-stale-plan reads)
-        invalidate_index_cache(dst.root)
         new += 1
     return new - start_seg
 
@@ -1254,7 +1251,6 @@ def add_documents(spark: SparkSession, index_dir: str, corpus: DataFrame,
             _write_index_config(index_dir, {**cfg,
                                             "meta_cols": list(meta_cols),
                                             "n_segments": start + added})
-            invalidate_index_cache(index_dir)
             return added
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
@@ -1288,7 +1284,7 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], dst_dir: str,
     """
     if not src_dirs:
         raise ValueError("merge_indexes: no source indexes given")
-    cfgs = [read_index_config(d) for d in src_dirs]
+    cfgs = [open_snapshot(spark, d).config for d in src_dirs]
     keys = ("buckets", "block_size", "with_positions", "analyzer")
     for key in keys:
         vals = {c.get(key) for c in cfgs}
@@ -1320,7 +1316,6 @@ def merge_indexes(spark: SparkSession, src_dirs: list[str], dst_dir: str,
             next_del += 1
     _write_index_config(dst_dir, {**cfgs[0], "n_segments": next_seg,
                                   "merged_from": list(src_dirs)})
-    invalidate_index_cache(dst_dir)
     if verify_disjoint:
         _raise_on_duplicate_docs(spark, dst_dir, "merge_indexes")
 
@@ -1469,18 +1464,22 @@ def _committed_marker_names(manifest_dir: str) -> list[str]:
     if not os.path.isdir(manifest_dir):
         return []
     return sorted(d for d in os.listdir(manifest_dir)
-                  if re.fullmatch(r"segment=\d+", d))
+                  if _MARKER_RE.fullmatch(d))
 
 
-def _read_markers(manifest_dir: str) -> dict:
-    """Every committed manifest marker as a pyarrow table, keyed by
-    segment id — the one marker reader (resume, re-homing, corpus
-    scalars). Driver-side, no Spark job: a marker is one small parquet
-    file, and a job per marker (or per scalar read) is pure fixed cost."""
+def _read_markers(manifest_dir: str, segments=None) -> dict:
+    """The manifest markers of ``segments`` (default: every committed
+    one) as pyarrow tables, keyed by segment id — the one marker reader
+    (resume, re-homing, corpus scalars). Read with pyarrow in this
+    process, no Spark job: a marker is one small parquet file, and a job
+    per marker (or per scalar read) is pure fixed cost."""
     import pyarrow.parquet as pq
 
-    return {int(d.split("=")[1]): pq.read_table(os.path.join(manifest_dir, d))
-            for d in _committed_marker_names(manifest_dir)}
+    if segments is None:
+        segments = [int(d.split("=")[1])
+                    for d in _committed_marker_names(manifest_dir)]
+    return {s: pq.read_table(os.path.join(manifest_dir, f"segment={s}"))
+            for s in segments}
 
 
 def _done_segments(spark: SparkSession, paths: IndexPaths) -> set[int]:
@@ -1489,75 +1488,175 @@ def _done_segments(spark: SparkSession, paths: IndexPaths) -> set[int]:
             if t["status"].to_pylist()[:1] == ["ok"]}
 
 
+# ------------------------------------------------------- index snapshot --
+#
+# The one point-in-time reader (Lucene's DirectoryReader; T-Torch loads
+# its index once per QueryPool, ``QueryPool.java:128-134``). A snapshot
+# comes from ONE listing — the committed manifest markers and the
+# tombstone generations — and every query-side read goes through it:
+# corpus scalars, dictionary, postings, doc_stats and tombstones all
+# describe one segment set, so a commit racing a query can never hand it
+# two index states. Readers stay lock-free: the marker is renamed into
+# place last, so a listed segment's data directories are complete.
+
+_MARKER_RE = re.compile(r"segment=\d+")
+
+
+@dataclass(frozen=True, eq=False)
+class IndexSnapshot:
+    """One committed state of an index: ``segments`` (the committed
+    segment ids) and ``tombstones`` (sorted deleted doc_ids, or None).
+    Its config, DataFrames, corpus scalars and ``memo`` (``IndexMeta``
+    per term set or expansion) are built lazily over exactly
+    ``segments``, and a snapshot that differs only in tombstones shares
+    them: masking changes no statistic."""
+
+    spark: SparkSession
+    root: str
+    segments: tuple[int, ...]
+    tombstones: np.ndarray | None
+    identity: tuple = field(repr=False)
+    memo: dict = field(default_factory=dict, repr=False)
+    _lazy: dict = field(default_factory=dict, repr=False)
+
+    @property
+    def config(self) -> dict:
+        """index_config.json, read on first use: a directory of segments
+        committed by ``commit_segment`` alone has none, and its manifest
+        and data stay readable."""
+        return self._once("config", lambda: read_index_config(self.root))
+
+    @property
+    def buckets(self) -> int:
+        return int(self.config["buckets"])
+
+    @property
+    def analyzer(self) -> str:
+        return str(self.config.get("analyzer", "ws"))
+
+    @property
+    def with_positions(self) -> bool:
+        return bool(self.config.get("with_positions"))
+
+    def _once(self, key: str, build):
+        if key not in self._lazy:
+            self._lazy[key] = build()
+        return self._lazy[key]
+
+    def _read(self, kind: str) -> DataFrame | None:
+        """``kind``'s directories of the snapshot's segments as one
+        DataFrame; the ``segment`` column comes from the directory names
+        (manifest rows carry their own)."""
+        def build():
+            base = os.path.join(self.root, kind)
+            paths = [p for p in (os.path.join(base, f"segment={s}")
+                                 for s in self.segments) if os.path.isdir(p)]
+            if kind == "terms_sorted" and (
+                    not paths or len(paths) < len(self.segments)):
+                return None  # see read_terms_sorted
+            if not paths:
+                # No committed segment: the historical PATH_NOT_FOUND,
+                # through a glob a writer's ``segment=<n>.__tmp__``
+                # staging dir can never satisfy — a reader racing the
+                # first commit must error, not scan a half-written file.
+                paths = [os.path.join(base, "segment=*",
+                                      "__no_committed_segments__")]
+            reader = self.spark.read
+            if kind != "manifest":
+                reader = reader.option("basePath", base)
+            return reader.parquet(*paths)
+        return self._once(kind, build)
+
+    @property
+    def postings(self) -> DataFrame:
+        return self._read("postings")
+
+    @property
+    def terms(self) -> DataFrame:
+        return self._read("terms")
+
+    @property
+    def terms_sorted(self) -> DataFrame | None:
+        return self._read("terms_sorted")
+
+    @property
+    def doc_stats(self) -> DataFrame:
+        return self._read("doc_stats")
+
+    @property
+    def manifest(self) -> DataFrame:
+        return self._read("manifest")
+
+    @property
+    def scalars(self) -> tuple[float, float]:
+        """(n_docs, avgdl) of the segment set, computed once through
+        ``wand._corpus_scalars``."""
+        from . import wand  # wand imports this module
+
+        return self._once("scalars",
+                          lambda: wand._corpus_scalars(self.spark, self))
+
+    def term_filter(self, terms, buckets: int | None = None) -> Column:
+        """The predicate selecting ``terms``' rows of a bucketed table
+        (postings, terms): the crc32 bucket, then the term, both pushed
+        into the parquet scan."""
+        q = sorted({str(t) for t in terms})
+        n = self.buckets if buckets is None else int(buckets)
+        return (F.col("bucket").isin(sorted({bucket_of(t, n) for t in q}))
+                & F.col("term").isin(q))
+
+
+# one snapshot per (Spark application, index path), replaced when the
+# listing changes
+_SNAPSHOTS: dict[tuple, IndexSnapshot] = {}
+
+
+def _listing(root: str) -> tuple:
+    """An index's listing identity: the committed marker names, each
+    with its directory's inode and mtime (a rebuild into the same path
+    recommits the same names), and the tombstone generation names. Two
+    directory scans, no Spark job."""
+    try:
+        with os.scandir(os.path.join(root, "manifest")) as it:
+            markers = tuple(sorted(
+                (e.name, e.inode(), e.stat().st_mtime_ns)
+                for e in it if _MARKER_RE.fullmatch(e.name)))
+    except FileNotFoundError:
+        markers = ()
+    return markers, _tombstone_gens(root)
+
+
+def open_snapshot(spark: SparkSession, index) -> IndexSnapshot:
+    """The current snapshot of the index at path ``index``, or ``index``
+    itself if it is a snapshot already. The snapshot is memoized and
+    served while the listing is unchanged, so warm queries reuse its
+    DataFrames (building one re-lists the index files, ~0.15 s a query)
+    and statistics, and the first call after a commit — by this process
+    or another — sees the commit in full. A change in tombstone
+    generations alone keeps the segment set's DataFrames, scalars and
+    memo."""
+    if isinstance(index, IndexSnapshot):
+        return index
+    root = os.path.abspath(index)
+    key = (spark.sparkContext.applicationId, root)
+    ident = _listing(root)
+    old = _SNAPSHOTS.get(key)
+    if old is not None and old.identity == ident:
+        return old
+    dead = _read_tombstones(root, ident[1])
+    if old is not None and old.identity[0] == ident[0]:
+        snap = replace(old, tombstones=dead, identity=ident)
+    else:
+        snap = IndexSnapshot(
+            spark, root,
+            tuple(sorted(int(m[0].split("=")[1]) for m in ident[0])),
+            dead, ident)
+    _SNAPSHOTS[key] = snap
+    return snap
+
+
 def read_manifest(spark: SparkSession, index_dir: str) -> DataFrame:
-    mdir = IndexPaths(index_dir).manifest
-    names = _committed_marker_names(mdir)
-    if not names:
-        # No COMMITTED segments. Preserve the historical failure mode
-        # (AnalysisException PATH_NOT_FOUND names the missing path) —
-        # but via a glob that can never match a live writer's
-        # `segment=<n>.__tmp__` staging dir: a bare `segment=*` here
-        # would hand a reader racing the FIRST commit a half-written
-        # marker (same torn-statistics mechanism _committed_marker_names
-        # closes for the committed case).
-        return spark.read.parquet(
-            os.path.join(mdir, "segment=*", "__no_committed_segments__"))
-    return spark.read.parquet(*(os.path.join(mdir, d) for d in names))
-
-
-# Lazy-plan cache: building a parquet DataFrame re-lists the index files
-# (InMemoryFileIndex) on every call — ~0.15s per query on a warm index.
-# Index directories are immutable between builds, so the resolved plan is
-# cached per (session, path) and invalidated whenever a segment commits.
-_PLAN_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _cached_read(spark: SparkSession, base: str, kind: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, kind, os.path.abspath(base))
-    df = _PLAN_CACHE.get(key)
-    if df is None:
-        # COMMITTED-segments-only read: the manifest marker directory is
-        # renamed into place last, so its presence == the segment's
-        # postings/doc_stats/terms are all complete. Restricting the scan
-        # to marked segments closes the window where a live stream's
-        # half-committed segment was visible to concurrent readers
-        # (postings present, doc_stats not yet). Plain directory listing —
-        # no Spark jobs.
-        root = os.path.dirname(os.path.abspath(base))
-        mdir = os.path.join(root, "manifest")
-        paths = []
-        for d in _committed_marker_names(mdir):  # strict: never .__tmp__
-            seg_path = os.path.join(base, d)
-            if os.path.isdir(seg_path):
-                paths.append(seg_path)
-        if paths:
-            df = spark.read.option("basePath", base).parquet(*paths)
-        else:
-            # No committed segments: historical PATH_NOT_FOUND, through
-            # a glob a `.__tmp__` staging dir can never satisfy (see
-            # read_manifest) — pre-first-commit readers must error, not
-            # scan half-written postings.
-            df = spark.read.option("basePath", base).parquet(
-                os.path.join(base, "segment=*", "__no_committed_segments__")
-            )
-        _PLAN_CACHE[key] = df
-    return df
-
-
-def invalidate_index_cache(index_dir: str) -> None:
-    """Drop cached plans for an index (called after every segment commit).
-
-    Scope: in-process only — a second Spark session querying a
-    streaming-updated index must reopen (or re-read) after new segments
-    commit; the cache key is (applicationId, kind, path) so other
-    sessions in THIS process are invalidated correctly.
-    """
-    root = os.path.abspath(index_dir)
-    prefix = root + os.sep
-    for k in [k for k in _PLAN_CACHE
-              if k[2] == root or k[2].startswith(prefix)]:
-        # pop, not del: a concurrent commit may race the snapshot
-        _PLAN_CACHE.pop(k, None)
+    return open_snapshot(spark, index_dir).manifest
 
 
 # ------------------------------------------------------------ deletions --
@@ -1665,43 +1764,30 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     raise RuntimeError(f"delete_docs: could not commit a generation under {base}")
 
 
-# keyed by index path; holds (generation set, ids) — ONE entry per
-# index, so a long-lived driver issuing many deletes replaces rather
-# than accumulates (each delete creates a new generation set; caching
-# per (path, gens) pinned every superseded array forever)
-_TOMBSTONE_CACHE: dict[str, tuple[tuple, np.ndarray]] = {}
+def _read_tombstones(index_dir: str, gens: tuple) -> np.ndarray | None:
+    """Sorted unique doc_ids of the tombstone generations ``gens``, or
+    None if there are none. Read with pyarrow, no Spark job."""
+    import pyarrow.parquet as pq
 
-
-def tombstone_ids(index_dir: str) -> np.ndarray | None:
-    """Sorted unique tombstoned doc_ids, or None if there are none.
-
-    Pure driver-side metadata read (pyarrow, no Spark job — the same
-    footing as the manifest listing); cached per generation set, so new
-    ``delete_docs`` calls invalidate naturally via the directory listing."""
-    gens = _tombstone_gens(index_dir)
-    if not gens:
+    base = os.path.join(index_dir, TOMBSTONES_DIRNAME)
+    parts = [
+        pq.read_table(os.path.join(base, g, f), columns=["doc_id"])["doc_id"]
+        .to_numpy(zero_copy_only=False)
+        for g in gens for f in sorted(os.listdir(os.path.join(base, g)))
+        if f.endswith(".parquet")
+    ]
+    if not parts:
         return None
-    key = os.path.abspath(index_dir)
-    hit = _TOMBSTONE_CACHE.get(key)
-    arr = hit[1] if hit is not None and hit[0] == gens else None
-    if arr is None:
-        import pyarrow.parquet as pq
-
-        base = os.path.join(index_dir, TOMBSTONES_DIRNAME)
-        parts = []
-        for g in gens:
-            gd = os.path.join(base, g)
-            for f in sorted(os.listdir(gd)):
-                if f.endswith(".parquet"):
-                    parts.append(
-                        pq.read_table(os.path.join(gd, f),
-                                      columns=["doc_id"])["doc_id"]
-                        .to_numpy(zero_copy_only=False)
-                    )
-        arr = (np.unique(np.concatenate(parts)).astype(np.int64)
-               if parts else np.empty(0, dtype=np.int64))
-        _TOMBSTONE_CACHE[key] = (gens, arr)
+    arr = np.unique(np.concatenate(parts)).astype(np.int64)
     return arr if arr.size else None
+
+
+def tombstone_ids(index_dir) -> np.ndarray | None:
+    """Sorted unique tombstoned doc_ids, or None if there are none: a
+    snapshot's, or those of an index path's current generations."""
+    if isinstance(index_dir, IndexSnapshot):
+        return index_dir.tombstones
+    return _read_tombstones(index_dir, _tombstone_gens(index_dir))
 
 
 def drop_docs(df: DataFrame, ids: np.ndarray | None) -> DataFrame:
@@ -1715,13 +1801,13 @@ def drop_docs(df: DataFrame, ids: np.ndarray | None) -> DataFrame:
 
 
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
-    return _cached_read(spark, IndexPaths(index_dir).postings, "postings")
+    return open_snapshot(spark, index_dir).postings
 
 
 def read_terms(spark: SparkSession, index_dir: str) -> DataFrame:
     """(bucket, term, df) dictionary — per-segment df partials; global df
     per term = sum over segments."""
-    return _cached_read(spark, IndexPaths(index_dir).terms, "terms")
+    return open_snapshot(spark, index_dir).terms
 
 
 def read_terms_sorted(spark: SparkSession,
@@ -1732,17 +1818,11 @@ def read_terms_sorted(spark: SparkSession,
     index): a partial sorted dictionary would silently drop that
     segment's df partials from an expansion, so the caller must fall
     back to the bucketed ``read_terms`` scan instead."""
-    p = IndexPaths(index_dir)
-    names = _committed_marker_names(p.manifest)
-    if not names or not all(
-        os.path.isdir(os.path.join(p.terms_sorted, d)) for d in names
-    ):
-        return None
-    return _cached_read(spark, p.terms_sorted, "terms_sorted")
+    return open_snapshot(spark, index_dir).terms_sorted
 
 
 def read_doc_stats(spark: SparkSession, index_dir: str) -> DataFrame:
-    return _cached_read(spark, IndexPaths(index_dir).doc_stats, "doc_stats")
+    return open_snapshot(spark, index_dir).doc_stats
 
 
 def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
@@ -1757,15 +1837,15 @@ def index_stats(spark: SparkSession, index_dir: str) -> DataFrame:
     bytes/posting). Positional indexes include the ``poss`` payload in
     ``payload_bytes`` (raw equivalent intentionally NOT inflated for
     positions — the ratio stays conservative)."""
-    p = read_postings(spark, index_dir)
+    snap = open_snapshot(spark, index_dir)
+    p = snap.postings
     per_seg = p.groupBy("segment").agg(
         F.countDistinct("term").alias("terms"),
         F.count(F.lit(1)).alias("blocks"),
         F.sum("n_docs").alias("postings"),
         F.sum(_payload_bytes(p.columns)).alias("payload_bytes"),
     )
-    m = read_manifest(spark, index_dir).select(
-        "segment", "row_count", "duration_ms")
+    m = snap.manifest.select("segment", "row_count", "duration_ms")
     # manifest drives the join: a committed segment with zero postings
     # blocks (all-empty documents) must still be reported, with zeros
     return (
@@ -1816,21 +1896,16 @@ def postings_flat(spark: SparkSession, index_dir: str,
     read honors deletes; pass False for index forensics on the raw bytes
     (``write_debug_index``).
     """
-    blocks = read_postings(spark, index_dir)
-    dead = tombstone_ids(index_dir) if live_only else None
+    snap = open_snapshot(spark, index_dir)
+    blocks = snap.postings
+    dead = snap.tombstones if live_only else None
     if segments is not None:
         # partition pruning on the segment=<s> directory layout — point
         # lookups (explain_score) decode one doc-disjoint segment only
         blocks = blocks.where(F.col("segment").isin([int(s)
                                                      for s in segments]))
     if terms is not None:
-        q = sorted(set(str(t) for t in terms))
-        if buckets is None:
-            buckets = int(read_index_config(index_dir)["buckets"])
-        bks = sorted({bucket_of(t, buckets) for t in q})
-        blocks = blocks.where(F.col("bucket").isin(bks)).where(
-            F.col("term").isin(q)
-        )
+        blocks = blocks.where(snap.term_filter(terms, buckets))
 
     payload = () if docs_only else ("tfs", "dls")
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1
 from ..functions.bm25 import idf_py, tf_sat_expr
-from .index import decode_blocks, read_index_config, sorted_isin
+from .index import decode_blocks, open_snapshot, sorted_isin
 from .wand import (
     IndexMeta,
     _TermPostings,
@@ -329,9 +329,12 @@ _EMPTY_OCC = {"doc_id": pd.Series(dtype="int64"),
               "n_occ": pd.Series(dtype="int64")}
 
 
-def _require_positions(index_dir: str) -> None:
-    if not read_index_config(index_dir).get("with_positions"):
-        raise ValueError(f"index at {index_dir} has no positions")
+def _positional(spark: SparkSession, index_dir: str):
+    """The index's snapshot; raises unless the index stores positions."""
+    snap = open_snapshot(spark, index_dir)
+    if not snap.with_positions:
+        raise ValueError(f"index at {snap.root} has no positions")
+    return snap
 
 
 def _live(r: pd.DataFrame, dead) -> pd.DataFrame:
@@ -345,10 +348,10 @@ def _occ_index(spark: SparkSession, index_dir: str, terms: list[str],
     prologue (only the queried terms' buckets are read) around the
     per-segment occurrence kernel; doc-disjoint segments union without
     dedup."""
-    _require_positions(index_dir)
+    snap = _positional(spark, index_dir)
     terms = list(terms)
     return _per_segment(
-        spark, index_dir, _terms(terms),
+        spark, snap, _terms(terms),
         lambda blk, _meta, dead: _live(_segment_occ(blk, terms, slop), dead),
         _OCC_SCHEMA, cols=_POS_COLS, buckets=buckets, scored=False)
 
@@ -405,13 +408,13 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     fetched."""
     k1 = BM25_K1 if k1 is None else float(k1)
     b = BM25_B if b is None else float(b)
-    _require_positions(index_dir)
+    snap = _positional(spark, index_dir)
     phrase = [str(t) for t in phrase]
     if not phrase:
         raise ValueError("empty phrase")
     q = _terms(phrase)
     if meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets)
+        meta = query_term_meta(spark, snap, q, buckets)
     idf_total = float(sum(idf_py(meta.term_df.get(t, 0.0), meta.n_docs)
                           for t in phrase))
     t0 = min(q, key=lambda t: meta.term_df.get(t, 0.0))  # rarest term
@@ -429,7 +432,7 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
         return r.assign(dl=tp.dl[pos].astype(np.int64))
 
     per_seg = _per_segment(
-        spark, index_dir, q, kernel,
+        spark, snap, q, kernel,
         "doc_id bigint, n_occ bigint, dl bigint",
         cols=_POS_COLS + ("max_tf", "min_dl", "dls"), buckets=buckets,
         meta=meta)

@@ -31,8 +31,9 @@ Every indexed query runs on one core (Lucene's Weight/Scorer split,
 Koios' bound-then-verify loop with pluggable candidate rules):
 
 * ``_per_segment`` — the driver prologue: term meta, the bucket+term
-  pruned postings scan, the tombstone set, and one per-segment
-  ``applyInPandas`` (or a cogroup with a doc_stats side frame);
+  pruned postings scan, the tombstone set (all from one index snapshot,
+  ``index.open_snapshot``), and one per-segment ``applyInPandas`` (or a
+  cogroup with a doc_stats side frame);
   ``_topk_merge`` is the global (score DESC, doc_id ASC) merge.
 * ``_TermPostings`` — one term's blocks in a segment, decoded in one pass.
 * ``_segment_scores`` — the one per-segment BM25 primitive: a doc set
@@ -51,6 +52,7 @@ than the query terms' postings for one segment.
 from __future__ import annotations
 
 import math
+import os
 import re
 from dataclasses import dataclass
 
@@ -62,33 +64,29 @@ from pyspark.sql import functions as F
 from ..config import BM25_B, BM25_K1, DEFAULT_K
 from ..functions.bm25 import idf_py, tf_sat_expr, tf_sat_np
 from .index import (
-    IndexPaths,
     _read_markers,
-    bucket_of,
     decode_blocks,
+    open_snapshot,
     postings_flat,
-    read_doc_stats,
-    read_index_config,
-    read_postings,
-    read_terms,
-    read_terms_sorted,
     sorted_isin,
-    tombstone_ids,
 )
 
 
 @dataclass(frozen=True)
 class IndexMeta:
-    """Global scalars + per-term df, computed once per opened index."""
+    """Global scalars + per-term df of one index snapshot."""
     n_docs: float
     avgdl: float
     term_df: dict  # term -> df (float)
 
 
-def _corpus_scalars(spark: SparkSession, index_dir: str) -> tuple[float, float]:
-    """(n_docs, avgdl) summed over the committed manifest markers, read
-    driver-side — no Spark job, no data scan."""
-    rows = [r for t in _read_markers(IndexPaths(index_dir).manifest).values()
+def _corpus_scalars(spark: SparkSession, index_dir) -> tuple[float, float]:
+    """(n_docs, avgdl) summed over a snapshot's manifest markers, read
+    with pyarrow — no Spark job, no data scan. ``IndexSnapshot.scalars``
+    memoizes it per segment set."""
+    snap = open_snapshot(spark, index_dir)
+    rows = [r for t in _read_markers(os.path.join(snap.root, "manifest"),
+                                     snap.segments).values()
             for r in t.select(["row_count", "sum_dl"]).to_pylist()]
     n = float(sum(r["row_count"] or 0 for r in rows))
     return n, (sum(r["sum_dl"] or 0 for r in rows) / n if n else 0.0)
@@ -101,68 +99,27 @@ def open_index_meta(spark: SparkSession, index_dir: str) -> IndexMeta:
     Small-index convenience ONLY (collects the whole dictionary to the
     driver — unbounded in vocabulary size). Query paths use
     ``query_term_meta``, which touches just the query terms' buckets."""
-    n_docs, avgdl = _corpus_scalars(spark, index_dir)
-    dfs = (
-        read_terms(spark, index_dir)
-        .groupBy("term").agg(F.sum("df").alias("df"))
-        .collect()
-    )
-    return IndexMeta(
-        n_docs=n_docs,
-        avgdl=avgdl,
-        # clamped for the same racing-commit reason as query_term_meta
-        term_df={r["term"]: min(float(r["df"]), n_docs) for r in dfs},
-    )
+    snap = open_snapshot(spark, index_dir)
+    dfs = snap.terms.groupBy("term").agg(F.sum("df").alias("df")).collect()
+    return IndexMeta(*snap.scalars, {r["term"]: float(r["df"]) for r in dfs})
 
 
 def query_term_meta(spark: SparkSession, index_dir: str,
                     query_terms: list[str],
-                    buckets: int | None = None,
-                    scalars: tuple[float, float] | None = None) -> IndexMeta:
+                    buckets: int | None = None) -> IndexMeta:
     """Per-query variant: df only for the query terms, from the terms
     dictionary with the bucket predicate pushed into the scan.
 
-    ``scalars`` = a cached (n_docs, avgdl) pair (two floats — bounded
-    driver state, cacheable per opened index) skips the per-query
-    manifest aggregation job.
-
-    df is CLAMPED to n_docs: the manifest scalars and the dictionary are
-    two separate reads, so a segment committing between them (streaming
-    ingest, in-place add) can hand this reader a df that counts a
-    segment its n_docs does not — df > N makes the BM25 idf NEGATIVE
-    (ln of < 1) and a match can score <= 0. Under any single consistent
-    snapshot df <= N holds and the clamp is a no-op; under racing
-    commits it pins the reader to a coherent-statistics view (the full
-    fix — a point-in-time segment list pinned across all of a query's
-    reads, Lucene's IndexReader contract — is the documented seam)."""
-    n_docs, avgdl = (scalars if scalars is not None
-                     else _corpus_scalars(spark, index_dir))
-    q = sorted(set(query_terms))
-    if buckets is None:
-        buckets = int(read_index_config(index_dir)["buckets"])
-    bks = sorted({bucket_of(t, buckets) for t in q})
+    df and the (n_docs, avgdl) scalars come from one snapshot, so
+    df <= n_docs holds: a segment's df is at most its row count, even
+    when a segment commits while the query runs."""
+    snap = open_snapshot(spark, index_dir)
     dfs = (
-        read_terms(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
+        snap.terms.where(snap.term_filter(query_terms, buckets))
         .groupBy("term").agg(F.sum("df").alias("df"))
         .collect()
     )
-    return IndexMeta(n_docs, avgdl,
-                     {r["term"]: min(float(r["df"]), n_docs) for r in dfs})
-
-
-def _q_blocks(spark: SparkSession, index_dir: str, q: list[str],
-              buckets: int | None = None) -> DataFrame:
-    """Query terms' blocks with bucket predicate for partition pruning."""
-    if buckets is None:
-        buckets = int(read_index_config(index_dir)["buckets"])
-    bks = sorted({bucket_of(t, buckets) for t in q})
-    return (
-        read_postings(spark, index_dir)
-        .where(F.col("bucket").isin(bks))
-        .where(F.col("term").isin(q))
-    )
+    return IndexMeta(*snap.scalars, {r["term"]: float(r["df"]) for r in dfs})
 
 
 # block columns the scorer reads: payloads + bound metadata, never
@@ -181,23 +138,25 @@ def _terms(terms) -> list[str]:
 def _per_segment(spark: SparkSession, index_dir: str, q: list[str],
                  kernel, schema: str, *, cols=_SCORE_COLS,
                  buckets: int | None = None, meta: IndexMeta | None = None,
-                 scalars: tuple[float, float] | None = None,
                  scored: bool = True,
                  side: DataFrame | None = None) -> DataFrame:
-    """The driver prologue every indexed query shares.
+    """The prologue every indexed query shares, over one snapshot of
+    the index (``index_dir`` is a path or an ``IndexSnapshot``).
 
     For a scoring query without a memoized ``meta``, fetches the term
     meta of ``q`` (``query_term_meta``). Scans ``q``'s postings blocks
     with the bucket+term predicates pushed into parquet and only
-    ``cols`` projected, reads the tombstone set once, and runs
-    ``kernel(blocks, meta, dead)`` once per segment, ``blocks`` without
-    the ``segment`` column. A ``side`` frame (rows carrying ``segment``,
+    ``cols`` projected, and runs ``kernel(blocks, meta, dead)`` once per
+    segment, ``blocks`` without the ``segment`` column and ``dead`` the
+    snapshot's tombstones. A ``side`` frame (rows carrying ``segment``,
     e.g. doc_stats) cogroups with the blocks per segment instead, and
     the kernel gets the segment's side rows as a fourth argument."""
+    snap = open_snapshot(spark, index_dir)
     if scored and meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets, scalars)
-    blocks = _q_blocks(spark, index_dir, q, buckets).select("segment", *cols)
-    dead = tombstone_ids(index_dir)
+        meta = query_term_meta(spark, snap, q, buckets)
+    blocks = snap.postings.where(snap.term_filter(q, buckets)).select(
+        "segment", *cols)
+    dead = snap.tombstones
     if side is None:
         def run(pdf: pd.DataFrame) -> pd.DataFrame:
             return kernel(pdf.drop(columns=["segment"]), meta, dead)
@@ -218,12 +177,12 @@ def _topk_merge(df: DataFrame, k: int) -> DataFrame:
                       F.col("doc_id").asc()).limit(int(k))
 
 
-def _allowed_docs(spark: SparkSession, index_dir: str, predicate) -> DataFrame:
+def _allowed_docs(snap, predicate) -> DataFrame | None:
     """(segment, doc_id) of the docs a doc_stats predicate admits — the
     side frame of the metadata-filtered scorers (predicate pushed into
-    the doc_stats parquet scan)."""
-    return (read_doc_stats(spark, index_dir).where(predicate)
-            .select("segment", "doc_id"))
+    the doc_stats parquet scan); None without a predicate."""
+    return (None if predicate is None
+            else snap.doc_stats.where(predicate).select("segment", "doc_id"))
 
 
 def _sorted_ids(rows: pd.DataFrame | None) -> np.ndarray | None:
@@ -456,7 +415,6 @@ def topk_bm25_index(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     after: tuple[float, int] | None = None,
     boosts: dict | None = None,
     predicate=None,
@@ -487,8 +445,7 @@ def topk_bm25_index(
         bad = {t: w for t, w in boosts.items() if not float(w) > 0}
         if bad:
             raise ValueError(f"topk_bm25_index: boosts must be > 0: {bad}")
-    side = (None if predicate is None
-            else _allowed_docs(spark, index_dir, predicate))
+    snap = open_snapshot(spark, index_dir)
 
     def kernel(blk, meta, dead, alw=None):
         return _segment_topk(blk, q, k, meta, k1, b,
@@ -496,8 +453,8 @@ def topk_bm25_index(
                              after=after, boosts=boosts)
 
     return _topk_merge(_per_segment(
-        spark, index_dir, q, kernel, _TOPK_SCHEMA, buckets=buckets,
-        meta=meta, scalars=scalars, side=side), k)
+        spark, snap, q, kernel, _TOPK_SCHEMA, buckets=buckets, meta=meta,
+        side=_allowed_docs(snap, predicate)), k)
 
 
 def scores_bm25_index_all(
@@ -507,7 +464,6 @@ def scores_bm25_index_all(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     meta: IndexMeta | None = None,
 ) -> DataFrame:
     """(doc_id, score) for EVERY live document matching any query term —
@@ -521,7 +477,7 @@ def scores_bm25_index_all(
         spark, index_dir, q,
         lambda blk, meta, dead: _segment_topk(blk, q, None, meta, k1, b,
                                               blocked=dead),
-        _TOPK_SCHEMA, buckets=buckets, meta=meta, scalars=scalars)
+        _TOPK_SCHEMA, buckets=buckets, meta=meta)
 
 
 def topk_bm25_index_many(
@@ -532,7 +488,6 @@ def topk_bm25_index_many(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     meta: IndexMeta | None = None,
     predicate=None,
     afters: dict | None = None,
@@ -576,8 +531,7 @@ def topk_bm25_index_many(
             raise ValueError(
                 f"topk_bm25_index_many: afters keys {unknown} are not "
                 "query ids")
-    side = (None if predicate is None
-            else _allowed_docs(spark, index_dir, predicate))
+    snap = open_snapshot(spark, index_dir)
 
     def kernel(blk, meta, dead, alw=None):
         return _segment_topk_many(blk, qmap, k, meta, k1, b,
@@ -585,9 +539,9 @@ def topk_bm25_index_many(
                                   afters=afters)
 
     per_seg = _per_segment(
-        spark, index_dir, _terms(t for _, q in qmap for t in q), kernel,
+        spark, snap, _terms(t for _, q in qmap for t in q), kernel,
         "query_id string, doc_id bigint, score double", buckets=buckets,
-        meta=meta, scalars=scalars, side=side)
+        meta=meta, side=_allowed_docs(snap, predicate))
     # per-query merge of the tiny per-segment lists: Q x segments x k
     # rows through one window — the same (score DESC, doc_id ASC)
     # tie-break as the single-query TakeOrderedAndProject
@@ -674,8 +628,9 @@ def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
     doc-disjoint — measured 1.66 s -> the single-segment share on a
     16-segment 1M index)."""
     q = _terms(terms)
+    snap = open_snapshot(spark, index_dir)
     if meta is None:
-        meta = query_term_meta(spark, index_dir, q, buckets=buckets)
+        meta = query_term_meta(spark, snap, q, buckets=buckets)
     known = [t for t in q if t in meta.term_df]
     schema = ("term string, tf bigint, df double, idf double, "
               "contribution double")
@@ -689,12 +644,11 @@ def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
         F.lit(x) for t in known for x in (t, float(meta.term_df[t]))
     ])
     seg = (
-        read_doc_stats(spark, index_dir)
-        .where(F.col("doc_id") == int(doc_id))
+        snap.doc_stats.where(F.col("doc_id") == int(doc_id))
         .select("segment").first()
     )
     return (
-        postings_flat(spark, index_dir, terms=known, buckets=buckets,
+        postings_flat(spark, snap, terms=known, buckets=buckets,
                       segments=None if seg is None else [seg["segment"]])
         .where(F.col("doc_id") == int(doc_id))
         .withColumn("df", F.element_at(df_map, F.col("term")))
@@ -760,19 +714,17 @@ def expand_prefix(spark: SparkSession, index_dir: str, prefix: str,
     of the vocabulary. Pre-feature indexes (``read_terms_sorted`` →
     ``None``) fall back to the bucketed scan — identical results, only
     the pruning differs."""
-    return _expand_from(*_prefix_scan(spark, index_dir, str(prefix)),
-                        max_terms)
+    return _expand_from(*_prefix_scan(open_snapshot(spark, index_dir),
+                                      str(prefix)), max_terms)
 
 
-def _prefix_scan(spark: SparkSession, index_dir: str,
-                 prefix: str) -> tuple[DataFrame, object]:
+def _prefix_scan(snap, prefix: str) -> tuple[DataFrame, object]:
     """(terms table, predicate) selecting the indexed terms starting with
     ``prefix``: the ``terms_sorted`` range scan when the index has it,
     the bucketed StartsWith scan otherwise."""
-    srt = read_terms_sorted(spark, index_dir)
-    if srt is not None and prefix:
-        return srt, _prefix_range_pred(prefix)
-    return read_terms(spark, index_dir), F.col("term").startswith(prefix)
+    if snap.terms_sorted is not None and prefix:
+        return snap.terms_sorted, _prefix_range_pred(prefix)
+    return snap.terms, F.col("term").startswith(prefix)
 
 
 def _expand_with_prefix(spark: SparkSession, index_dir: str, lit: str,
@@ -781,21 +733,13 @@ def _expand_with_prefix(spark: SparkSession, index_dir: str, lit: str,
     with the literal ``lit``: the literal becomes a range pre-filter on
     ``terms_sorted`` (a StartsWith on the bucketed table otherwise); no
     literal scans the whole dictionary."""
+    snap = open_snapshot(spark, index_dir)
     if lit:
-        srt = read_terms_sorted(spark, index_dir)
-        if srt is not None:
-            return _expand_from(srt, _prefix_range_pred(lit) & pred,
-                                max_terms)
+        if snap.terms_sorted is not None:
+            return _expand_from(snap.terms_sorted,
+                                _prefix_range_pred(lit) & pred, max_terms)
         pred = F.col("term").startswith(lit) & pred
-    return _expand_terms(spark, index_dir, pred, max_terms)
-
-
-def _expand_terms(spark: SparkSession, index_dir: str, pred,
-                  max_terms: int) -> dict[str, float]:
-    """Dictionary expansion over the PRIMARY (crc32-bucketed) terms
-    table — the path for predicates with no literal prefix to range on
-    (fuzzy, leading wildcard) and for pre-``terms_sorted`` indexes."""
-    return _expand_from(read_terms(spark, index_dir), pred, max_terms)
+    return _expand_from(snap.terms, pred, max_terms)
 
 
 def _expand_from(terms: DataFrame, pred, max_terms: int) -> dict[str, float]:
@@ -824,7 +768,7 @@ def suggest_terms(spark: SparkSession, index_dir: str, prefix: str,
     pruning: O(1) of the vocabulary at any corpus size), the bucketed
     scan otherwise — but returned as a DataFrame: here the ranked terms
     ARE the product, not a query rewrite."""
-    src, pred = _prefix_scan(spark, index_dir, str(prefix))
+    src, pred = _prefix_scan(open_snapshot(spark, index_dir), str(prefix))
     return (
         src.where(pred)
         .groupBy("term").agg(F.sum("df").cast("bigint").alias("df"))
@@ -887,7 +831,8 @@ def expand_fuzzy(spark: SparkSession, index_dir: str, term: str,
         & (F.length("term") <= F.lit(len(q) + d))
         & (F.levenshtein(F.col("term"), F.lit(q)) <= d)
     )
-    return _expand_terms(spark, index_dir, pred, max_terms)
+    return _expand_from(open_snapshot(spark, index_dir).terms, pred,
+                        max_terms)
 
 
 def regexp_literal_prefix(pattern: str) -> str:
@@ -976,7 +921,7 @@ def spell_suggest_terms(spark: SparkSession, index_dir: str, term: str,
         & (F.levenshtein(F.col("term"), F.lit(q)) <= d)
     )
     return (
-        read_terms(spark, index_dir)
+        open_snapshot(spark, index_dir).terms
         .where(pred)
         .groupBy("term").agg(F.sum("df").cast("bigint").alias("df"))
         .withColumn("dist",
@@ -997,7 +942,6 @@ def topk_bm25_index_prefix(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Prefix top-k BM25 (Lucene ``PrefixQuery`` with the scoring boolean
@@ -1008,8 +952,8 @@ def topk_bm25_index_prefix(
     dictionary lookup happens."""
     return _topk_expansion(
         spark, index_dir,
-        lambda: expand_prefix(spark, index_dir, prefix, max_terms),
-        k, buckets=buckets, k1=k1, b=b, scalars=scalars, meta=meta,
+        lambda snap: expand_prefix(spark, snap, prefix, max_terms),
+        k, buckets=buckets, k1=k1, b=b, meta=meta,
     )
 
 
@@ -1022,7 +966,6 @@ def topk_bm25_index_wildcard(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Wildcard top-k BM25 (Lucene ``WildcardQuery``, scoring boolean
@@ -1030,8 +973,8 @@ def topk_bm25_index_wildcard(
     multi-term block-max WAND scan over the expansion."""
     return _topk_expansion(
         spark, index_dir,
-        lambda: expand_wildcard(spark, index_dir, pattern, max_terms),
-        k, buckets=buckets, k1=k1, b=b, scalars=scalars, meta=meta,
+        lambda snap: expand_wildcard(spark, snap, pattern, max_terms),
+        k, buckets=buckets, k1=k1, b=b, meta=meta,
     )
 
 
@@ -1044,7 +987,6 @@ def topk_bm25_index_regexp(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Regexp top-k BM25 (Lucene ``RegexpQuery``, scoring boolean
@@ -1053,8 +995,8 @@ def topk_bm25_index_regexp(
     expansion."""
     return _topk_expansion(
         spark, index_dir,
-        lambda: expand_regexp(spark, index_dir, pattern, max_terms),
-        k, buckets=buckets, k1=k1, b=b, scalars=scalars, meta=meta,
+        lambda snap: expand_regexp(spark, snap, pattern, max_terms),
+        k, buckets=buckets, k1=k1, b=b, meta=meta,
     )
 
 
@@ -1068,7 +1010,6 @@ def topk_bm25_index_fuzzy(
     buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    scalars: tuple[float, float] | None = None,
     meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Fuzzy top-k BM25 (Lucene ``FuzzyQuery``, scoring boolean rewrite):
@@ -1079,26 +1020,26 @@ def topk_bm25_index_fuzzy(
     so the oracle semantics stay exact)."""
     return _topk_expansion(
         spark, index_dir,
-        lambda: expand_fuzzy(spark, index_dir, term, max_edits, max_terms),
-        k, buckets=buckets, k1=k1, b=b, scalars=scalars, meta=meta,
+        lambda snap: expand_fuzzy(spark, snap, term, max_edits, max_terms),
+        k, buckets=buckets, k1=k1, b=b, meta=meta,
     )
 
 
-def _topk_expansion(spark, index_dir, dfs_factory, k, *, buckets, k1, b,
-                    scalars, meta) -> DataFrame:
+def _topk_expansion(spark, index_dir, expand, k, *, buckets, k1, b,
+                    meta) -> DataFrame:
     """Shared MultiTermQuery scorer: resolve the expansion (or accept a
-    memoized ``meta``), then run the multi-term WAND scan; an empty
-    expansion short-circuits to an empty result with the stable schema."""
+    memoized ``meta``) and score it with the multi-term WAND scan, N and
+    the dictionary from one snapshot; an empty expansion short-circuits
+    to an empty result with the stable schema."""
+    snap = open_snapshot(spark, index_dir)
     if meta is None:
-        dfs = dfs_factory()
+        dfs = expand(snap)
         if not dfs:
             return spark.createDataFrame([], _TOPK_SCHEMA)
-        n_docs, avgdl = (scalars if scalars is not None
-                         else _corpus_scalars(spark, index_dir))
-        meta = IndexMeta(n_docs, avgdl, dfs)
+        meta = IndexMeta(*snap.scalars, dfs)
     elif not meta.term_df:
         return spark.createDataFrame([], _TOPK_SCHEMA)
     return topk_bm25_index(
-        spark, index_dir, sorted(meta.term_df), k,
+        spark, snap, sorted(meta.term_df), k,
         meta=meta, buckets=buckets, k1=k1, b=b,
     )

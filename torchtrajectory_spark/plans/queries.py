@@ -582,24 +582,15 @@ def q_topk_bm25_purged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _score_u6(_engine(spark, idx).find_topk(Q_TOPK, K))
 
 
-# One opened Engine per (session, index): the registry's indexed queries
-# ride the same serving facade a user would, so per-(index, term-set)
-# statistics are memoized across queries (e.g. Q_TOPK is shared by
-# topk_bm25_indexed / resolve_topk / resolve_topk_json) — warm repeats
-# run exactly one Spark job. Keyed by applicationId so a fresh session
-# (new process, restarted JVM) never sees stale state.
-_ENGINES: dict[tuple, object] = {}
-
-
 def _engine(spark: SparkSession, index_dir: str):
+    """The registry's indexed queries ride the same serving facade a user
+    would. Per-(snapshot, term-set) statistics live in the index's
+    memoized snapshot, so they are shared across queries (e.g. Q_TOPK by
+    topk_bm25_indexed / resolve_topk / resolve_topk_json): warm repeats
+    run exactly one Spark job."""
     from ..engine import Engine
 
-    key = (spark.sparkContext.applicationId, index_dir)
-    eng = _ENGINES.get(key)
-    if eng is None:
-        eng = Engine.from_index(spark, index_dir)
-        _ENGINES[key] = eng
-    return eng
+    return Engine.from_index(spark, index_dir)
 
 
 def _score_u6(df: DataFrame) -> DataFrame:
@@ -984,9 +975,11 @@ def q_best_then_combine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_resolve_topk_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     """C8 analog (QueryResult.toJSON -> visualization/Formater.java:19-36):
-    the resolved top-k serialized as one JSON column."""
+    the resolved top-k serialized as one JSON column. The top-k comes
+    from the index (the ``topk_bm25_indexed`` ranking)."""
     d = _docs(spark, sf_dir)
-    tk = topk.topk_bm25(d, Q_TOPK, K)
+    tk = _score_u6(_engine(spark, ensure_index(spark, sf_dir))
+                   .find_topk(Q_TOPK, K))
     return tk.join(d, "doc_id").select(
         "doc_id",
         F.to_json(
