@@ -287,7 +287,8 @@ def main() -> None:
 
     # --- query latency p50/p99 over the reference query set, through the
     # documented serving facade (Engine.find_topk). Warm = the per-term-set
-    # df lookup is memoized (Engine._term_meta) after the warmup pass, so
+    # df lookup is memoized (the index snapshot's memo, filled through
+    # wand.query_term_meta) after the warmup pass, so
     # the timed loop measures exactly one job per query — the steady-state
     # repeated-query latency a serving deployment sees.
     _wait_idle("topk_loop")

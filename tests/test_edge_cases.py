@@ -287,7 +287,7 @@ def test_near_single_term_and_zero_width_snippet(spark, weird_corpus,
     # single-term proximity degenerates to tf
     got = {r["doc_id"]: r["n_occ"]
            for r in near_count_index(spark, weird_index,
-                                     ["beta"], 0, buckets=4).collect()}
+                                     ["beta"], 0).collect()}
     assert got == {0: 2}
     # width=0 snippet is exactly the first matched token
     s = {r["doc_id"]: (r["pos"], r["snippet"])

@@ -106,8 +106,10 @@ def test_find_topk_many_rank_identical_and_memoized(spark, engine):
         assert sorted(by_q.get(qid, []), key=lambda t: (-t[1], t[0])) == exp
 
     # memoization: same term set (any order) -> same IndexMeta object
-    m1 = eng._term_meta(["join", "spark"])
-    m2 = eng._term_meta(["spark", "join"])
+    from torchtrajectory_spark.operators.wand import query_term_meta
+
+    m1 = query_term_meta(spark, eng.index_dir, ["join", "spark"])
+    m2 = query_term_meta(spark, eng.index_dir, ["spark", "join"])
     assert m1 is m2
     assert set(m1.term_df) <= {"spark", "join"}
 
@@ -474,6 +476,7 @@ def test_more_like_this_excludes_source_and_ranks(spark, engine):
 
     from torchtrajectory_spark.functions.bm25 import idf_py
     from torchtrajectory_spark.functions.tokenizer import tokenize_py
+    from torchtrajectory_spark.operators.wand import query_term_meta
 
     eng, docs = engine
     src_id = 3
@@ -483,7 +486,7 @@ def test_more_like_this_excludes_source_and_ranks(spark, engine):
     assert out and all(r["doc_id"] != src_id for r in out)
     # reproduce the interesting-term selection by hand
     tf = Counter(tokenize_py(text, "ws"))
-    meta = eng._term_meta(sorted(tf))
+    meta = query_term_meta(spark, eng.index_dir, sorted(tf))
     scored = sorted(
         (-int(round(n * idf_py(meta.term_df[t], meta.n_docs) * 1e6)), t)
         for t, n in tf.items() if meta.term_df.get(t, 0.0) > 0)
@@ -941,20 +944,18 @@ def test_phrase_scored_requires_positions(spark, tmp_path):
 def test_phrase_scored_slop_zero_equals_exact(spark, engine, monkeypatch):
     """slop=0 counts exactly the exact-phrase matches, so the sloppy
     scoring degenerates to the exact PhraseQuery ranking fp-exactly.
-    The three calls on one phrase share the Engine's term-meta memo:
-    the dictionary lookup runs at most once."""
-    from torchtrajectory_spark import engine as engine_mod
-    from torchtrajectory_spark.operators import phrase as phrase_mod
+    The three calls on one phrase share the snapshot's term-meta memo:
+    the dictionary read runs at most once."""
+    from torchtrajectory_spark.operators import wand as wand_mod
 
     calls = []
-    real = engine_mod.query_term_meta
+    real = wand_mod._read_term_df
 
     def counting(*a, **kw):
         calls.append(a)
         return real(*a, **kw)
 
-    monkeypatch.setattr(engine_mod, "query_term_meta", counting)
-    monkeypatch.setattr(phrase_mod, "query_term_meta", counting)
+    monkeypatch.setattr(wand_mod, "_read_term_df", counting)
     eng, _ = engine
     ph = ["table", "hash"]
     exact = [(r["doc_id"], r["score"])

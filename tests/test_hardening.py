@@ -23,7 +23,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from torchtrajectory_spark import engine as engine_mod
+from torchtrajectory_spark.operators import wand as wand_mod
 from torchtrajectory_spark.engine import Engine
 from torchtrajectory_spark.operators.index import (
     IndexPaths,
@@ -361,13 +361,13 @@ def test_delete_keeps_term_meta_memo(spark, corpus, tmp_path_factory,
     eng = Engine.from_index(spark, d)
     first = _rows(eng.find_topk(Q, K))
     calls = []
-    real = engine_mod.query_term_meta
+    real = wand_mod._read_term_df
 
     def counting(*a, **kw):
         calls.append(a)
         return real(*a, **kw)
 
-    monkeypatch.setattr(engine_mod, "query_term_meta", counting)
+    monkeypatch.setattr(wand_mod, "_read_term_df", counting)
     eng.delete([first[0][0]])
     again = _rows(eng.find_topk(Q, K))
     assert calls == []
@@ -425,3 +425,54 @@ def test_concurrent_opens_see_whole_snapshots(spark, idx):
         assert snap.memo is base.memo and snap.segments == base.segments
         assert ids(snap.tombstones) == ids(
             _read_tombstones(idx, snap.identity[1]))
+
+
+def test_query_term_meta_buckets_is_a_check(spark, tmp_path):
+    """The bucket count is the index's own: a wrong ``buckets`` raises
+    instead of pruning the dictionary read to the wrong buckets (at 8 on
+    a 16-bucket index only some of the terms were found), and the
+    index's own value equals the call without it."""
+    vocab = ["spark", "join", "hash", "table", "window", "batch"]
+    rows = [(i, " ".join(vocab[(i + j) % len(vocab)]
+                         for j in range(1 + i % 4))) for i in range(64)]
+    d = str(tmp_path / "b16")
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    build_index(spark, docs, d, n_segments=2, buckets=16)
+    q = ["hash", "join", "spark"]
+    with pytest.raises(ValueError, match="buckets"):
+        query_term_meta(spark, d, q, 8)
+    meta = query_term_meta(spark, d, q)
+    assert query_term_meta(spark, d, q, 16) == meta
+    assert sorted(meta.term_df) == q
+
+
+def test_free_function_memoizes_term_meta(spark, idx, monkeypatch):
+    """Free-function callers share the snapshot's memo: a repeated
+    ``topk_bm25_index`` reads the dictionary once, and ``explain_score``
+    on the same terms afterwards reads it not at all."""
+    from torchtrajectory_spark.operators.wand import explain_score
+
+    calls = []
+    real = wand_mod._read_term_df
+    monkeypatch.setattr(wand_mod, "_read_term_df",
+                        lambda *a, **kw: calls.append(a) or real(*a, **kw))
+    q = Q + ["zz_memo_probe"]  # a term set no other test reads
+    first = _rows(topk_bm25_index(spark, idx, q, K))
+    assert _rows(topk_bm25_index(spark, idx, q, K)) == first
+    assert len(calls) == 1
+    parts = explain_score(spark, idx, q, first[0][0]).collect()
+    assert len(calls) == 1
+    assert abs(sum(r["contribution"] for r in parts) - first[0][1]) < 1e-9
+
+
+def test_add_verify_disjoint_leaves_no_temp_snapshot(spark, corpus,
+                                                     tmp_path_factory):
+    """``add_documents(verify_disjoint=True)`` reads its temporary build
+    and then deletes it; no memoized snapshot may keep naming it."""
+    from torchtrajectory_spark.operators.index import _SNAPSHOTS
+
+    d = str(tmp_path_factory.mktemp("addtmp")) + "/idx"
+    _build(spark, _old(corpus), d)
+    add_documents(spark, d, _new(corpus), verify_disjoint=True)
+    assert not [key for key in _SNAPSHOTS if "__add_tmp__" in key[1]]
+    assert read_doc_stats(spark, d).count() == N

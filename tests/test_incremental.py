@@ -121,23 +121,22 @@ def test_add_meta_cols_default_and_mismatch(spark, corpus,
     add_documents(spark, d, corpus.where(F.col("doc_id") >= N_BASE))
     from torchtrajectory_spark.operators.boolean import facet_counts
 
-    rows = facet_counts(spark, d, ["def"], "lang", 10,
-                        buckets=BUCKETS).collect()
+    rows = facet_counts(spark, d, ["def"], "lang", 10).collect()
     assert rows and sum(r["n_docs"] for r in rows) > 0
 
 
 def test_engine_add_invalidates_statistic_memos(spark, corpus, union_build,
                                                 tmp_path_factory,
                                                 monkeypatch):
-    from torchtrajectory_spark import engine as engine_mod
+    from torchtrajectory_spark.operators import wand as wand_mod
 
     d = str(tmp_path_factory.mktemp("incmemo"))
     _build(spark, corpus.where(F.col("doc_id") < N_BASE), d)
     eng = Engine.from_index(spark, d)
     eng.find_topk(Q, K).collect()  # warms the (term-set) df/scalars memo
     calls = []
-    real = engine_mod.query_term_meta
-    monkeypatch.setattr(engine_mod, "query_term_meta",
+    real = wand_mod._read_term_df
+    monkeypatch.setattr(wand_mod, "_read_term_df",
                         lambda *a, **kw: calls.append(a) or real(*a, **kw))
     eng.find_topk(Q, K).collect()
     assert calls == []  # warm repeat: a memo hit
@@ -165,7 +164,7 @@ def test_add_positional_index_carries_positions(spark, corpus,
                   meta_cols=("repo", "lang"))
     ph = ["def", "def"]
     via_index = sorted(
-        map(tuple, phrase_count_index(spark, d, ph, buckets=BUCKETS)
+        map(tuple, phrase_count_index(spark, d, ph)
             .collect())
     )
     direct = sorted(

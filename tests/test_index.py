@@ -101,7 +101,7 @@ def test_doc_stats_sha_invariant(spark, corpus, index_dir):
     ],
 )
 def test_wand_rank_identical_to_brute(spark, corpus, index_dir, q, k):
-    got = topk_bm25_index(spark, index_dir, q, k, buckets=BUCKETS).collect()
+    got = topk_bm25_index(spark, index_dir, q, k).collect()
     exp = (
         topk_bm25(corpus, q, k, id_col="doc_id", text_col="content",
                   analyzer="code")
@@ -180,7 +180,7 @@ def test_index_results_partition_invariant(spark, tmp_path):
         build_index(spark, docs.repartition(nparts), out, id_col="doc_id",
                     text_col="text", analyzer="ws", n_segments=2, buckets=8,
                     resume=False)
-        rows = topk_bm25_index(spark, out, q, 10, buckets=8).collect()
+        rows = topk_bm25_index(spark, out, q, 10).collect()
         results.append([(r["doc_id"], round(r["score"], 9)) for r in rows])
     assert results[0] == results[1]
 
@@ -190,12 +190,8 @@ def test_reference_query_set_rank_identical(spark, corpus, index_dir):
     must match the brute-force BM25 scorer (north-rule rank-identity)."""
     import bench
 
-    from torchtrajectory_spark.operators.wand import open_index_meta
-
-    meta = open_index_meta(spark, index_dir)
     for q in bench.QUERY_SET:
-        got = topk_bm25_index(spark, index_dir, q, 10, meta=meta,
-                              buckets=BUCKETS).collect()
+        got = topk_bm25_index(spark, index_dir, q, 10).collect()
         exp = topk_bm25(corpus, q, 10, id_col="doc_id",
                         text_col="content", analyzer="code").collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in exp], q
@@ -222,8 +218,8 @@ def test_compact_index_preserves_results(spark, corpus, index_dir,
     assert b.subtract(a).count() == 0
 
     q = ["def", "return", "id_0"]
-    got = topk_bm25_index(spark, dst, q, 10, buckets=BUCKETS).collect()
-    exp = topk_bm25_index(spark, index_dir, q, 10, buckets=BUCKETS).collect()
+    got = topk_bm25_index(spark, dst, q, 10).collect()
+    exp = topk_bm25_index(spark, index_dir, q, 10).collect()
     assert [(r["doc_id"], round(r["score"], 9)) for r in got] == \
            [(r["doc_id"], round(r["score"], 9)) for r in exp]
 
@@ -241,47 +237,6 @@ def test_compact_index_preserves_results(spark, corpus, index_dir,
     df_dst = read_terms(spark, dst).groupBy("term").agg(
         F.sum("df").alias("df"))
     assert df_src.subtract(df_dst).count() == 0
-
-
-def test_table_writer_seam(spark, tmp_path):
-    """Every segment commit routes through the registered table-format
-    writer (the Iceberg adapter seam); parquet default is restored."""
-    from torchtrajectory_spark.operators import index as ix
-
-    calls = []
-    reads = []
-
-    def fake_writer(df, path):
-        calls.append(path)
-        ix._atomic_write_parquet(df, path)
-
-    def fake_reader(spark_, path):
-        reads.append(path)
-        return spark_.read.parquet(path)
-
-    ix.register_table_writer("fake", fake_writer)
-    ix.register_table_reader("fake", fake_reader)
-    df = spark.createDataFrame([(1, "a b"), (2, "b c")],
-                               "doc_id bigint, text string")
-    d = str(tmp_path / "fmt_idx")
-    ix.build_index(spark, df, d, id_col="doc_id", text_col="text",
-                   n_segments=1, buckets=2, resume=False,
-                   table_format="fake")
-    # postings + doc_stats + terms + manifest all went through the writer,
-    # and the intra-build read-back (terms derivation) through the reader
-    assert len(calls) >= 4
-    assert reads, "terms derivation bypassed the registered reader"
-    assert ix._ACTIVE_FORMAT == "parquet"
-    assert ix.postings_flat(spark, d).count() > 0
-
-
-def test_unknown_table_format_raises(spark, tmp_path):
-    from torchtrajectory_spark.operators import index as ix
-
-    df = spark.createDataFrame([(1, "a")], "doc_id bigint, text string")
-    with pytest.raises(ValueError, match="no registered writer"):
-        ix.build_index(spark, df, str(tmp_path / "x"), n_segments=1,
-                       buckets=2, resume=False, table_format="nope")
 
 
 def test_write_debug_index_roundtrip(spark, tmp_path):
@@ -363,7 +318,7 @@ def test_min_input_partitions_resplits_and_preserves_results(
         build_index(spark, docs.coalesce(1), out, id_col="doc_id",
                     text_col="text", analyzer="ws", n_segments=1,
                     buckets=8, resume=False, **kw)
-        rows = topk_bm25_index(spark, out, q, 10, buckets=8).collect()
+        rows = topk_bm25_index(spark, out, q, 10).collect()
         results.append([(r["doc_id"], round(r["score"], 9)) for r in rows])
     assert results[0] == results[1]
 
@@ -390,25 +345,20 @@ def test_batch_topk_rank_identical_to_single(spark, corpus, index_dir):
     semantic drift."""
     import bench
 
-    from torchtrajectory_spark.operators.wand import (
-        open_index_meta,
-        topk_bm25_index_many,
-    )
+    from torchtrajectory_spark.operators.wand import topk_bm25_index_many
 
     queries = {f"q{i:02d}": q for i, q in enumerate(bench.QUERY_SET)}
     queries["q_unknown"] = ["zzz_not_a_term_zzz"]
     batch = topk_bm25_index_many(
-        spark, index_dir, queries, 10, buckets=BUCKETS
+        spark, index_dir, queries, 10
     ).collect()
     by_q: dict[str, list] = {}
     for r in batch:
         by_q.setdefault(r["query_id"], []).append(
             (r["doc_id"], round(r["score"], 9)))
-    meta = open_index_meta(spark, index_dir)
     for qid, q in queries.items():
         exp = [(r["doc_id"], round(r["score"], 9))
-               for r in topk_bm25_index(spark, index_dir, q, 10, meta=meta,
-                                        buckets=BUCKETS).collect()]
+               for r in topk_bm25_index(spark, index_dir, q, 10).collect()]
         assert by_q.get(qid, []) == exp, qid
 
 

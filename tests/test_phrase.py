@@ -97,7 +97,7 @@ def test_phrase_both_paths_match_bruteforce(spark, pos_index, phrase):
     }
     via_index = {
         r["doc_id"]: r["n_occ"]
-        for r in phrase_count_index(spark, idx, phrase, buckets=8).collect()
+        for r in phrase_count_index(spark, idx, phrase).collect()
     }
     pdf = docs.select("doc_id", "text").toPandas()
     expected = {}
@@ -114,8 +114,8 @@ def test_phrase_unknown_term_empty(spark, pos_index):
     from torchtrajectory_spark.operators.phrase import phrase_count_index
 
     sf, idx = pos_index
-    assert phrase_count_index(spark, idx, ["zzz_not_a_term", "hash"],
-                              buckets=8).count() == 0
+    assert phrase_count_index(spark, idx,
+                              ["zzz_not_a_term", "hash"]).count() == 0
 
 
 def brute_near(tokens: list[str], terms: list[str], slop: int) -> int:
@@ -155,8 +155,7 @@ def test_near_both_paths_match_bruteforce(spark, pos_index, terms, slop):
     }
     via_index = {
         r["doc_id"]: r["n_occ"]
-        for r in near_count_index(spark, idx, terms, slop,
-                                  buckets=8).collect()
+        for r in near_count_index(spark, idx, terms, slop).collect()
     }
     pdf = docs.select("doc_id", "text").toPandas()
     expected = {}
@@ -181,11 +180,9 @@ def test_near_slop_zero_equals_exact_phrase(spark, pos_index):
     for terms, expect_hits in ((["table", "hash"], True),
                                (["slow", "hash", "batch"], False)):
         near = sorted(map(tuple,
-                          near_count_index(spark, idx, terms, 0,
-                                           buckets=8).collect()))
+                          near_count_index(spark, idx, terms, 0).collect()))
         ph = sorted(map(tuple,
-                        phrase_count_index(spark, idx, terms,
-                                           buckets=8).collect()))
+                        phrase_count_index(spark, idx, terms).collect()))
         assert near == ph
         if expect_hits:
             assert len(near) > 0
@@ -200,7 +197,7 @@ def test_near_monotone_in_slop(spark, pos_index):
     for slop in (0, 2, 5):
         cur = {r["doc_id"]: r["n_occ"]
                for r in near_count_index(spark, idx, ["table", "hash"],
-                                         slop, buckets=8).collect()}
+                                         slop).collect()}
         for d, c in prev.items():
             assert cur.get(d, 0) >= c
         prev = cur
@@ -215,15 +212,15 @@ def test_near_masks_tombstones(spark, pos_index, tmp_path_factory):
 
     _, idx = pos_index
     base = {r["doc_id"]: r["n_occ"]
-            for r in near_count_index(spark, idx, ["table", "hash"], 3,
-                                      buckets=8).collect()}
+            for r in near_count_index(spark, idx, ["table", "hash"],
+                                      3).collect()}
     victim = min(base)
     d = str(tmp_path_factory.mktemp("neardel")) + "/idx"
     shutil.copytree(idx, d)
     delete_docs(spark, d, [int(victim)])
     after = {r["doc_id"]: r["n_occ"]
-             for r in near_count_index(spark, d, ["table", "hash"], 3,
-                                       buckets=8).collect()}
+             for r in near_count_index(spark, d, ["table", "hash"],
+                                       3).collect()}
     assert victim not in after
     assert after == {k: v for k, v in base.items() if k != victim}
 

@@ -31,7 +31,6 @@ from .config import BM25_B, BM25_K1, DEFAULT_K
 from .operators import boolean, phrase as phrase_ops
 from .operators.index import build_index, open_snapshot
 from .operators.wand import (
-    IndexMeta,
     query_term_meta,
     topk_bm25_index,
     topk_bm25_index_many,
@@ -62,9 +61,12 @@ class Engine:
     """An opened index. Each call reads the index's current snapshot,
     so a commit — a streamed segment, ``add_documents``, a compacted
     index swapped into place, or a write by another process — is visible
-    in full from the next call on, with no reopen. Term statistics are
-    memoized per snapshot (``IndexSnapshot.memo``): warm repeats skip the
-    dictionary job, and the memo survives a delete (masking changes no
+    in full from the next call on, with no reopen. Each query method is
+    one operator call on that snapshot with the Engine's (k1, b); the
+    bucket count and the term statistics come from the snapshot, whose
+    memo (``IndexSnapshot.memo``, filled by ``wand.query_term_meta`` and
+    the expansions) lets warm repeats skip the dictionary job — for the
+    free functions too — and survives a delete (masking changes no
     statistic). ``index_dir`` may also be an ``IndexSnapshot``, which
     pins every call to it."""
 
@@ -120,22 +122,18 @@ class Engine:
         bucket-pruned dictionary lookup for just the query terms) — never
         the full dictionary, which is unbounded driver state at the
         10^12-file / hash-bounded-vocabulary posture (SURVEY.md §7.6)."""
-        snap = self._snap()
-        return topk_bm25_index(
-            self.spark, snap, terms, k, k1=self.k1, b=self.b,
-            meta=self._term_meta(terms, snap), after=after, predicate=where,
-        )
+        return topk_bm25_index(self.spark, self._snap(), terms, k,
+                               k1=self.k1, b=self.b, after=after,
+                               predicate=where)
 
     def find_topk_boosted(self, weights: dict, k: int = DEFAULT_K) -> DataFrame:
         """Top-k BM25 with per-term query boosts (Lucene ``BoostQuery``):
         ``weights`` maps term -> positive weight; each term's idf scales
         by its weight, block-max bounds scale with it, so the pruned scan
         stays exact. weight=1.0 for every term == plain ``find_topk``."""
-        terms = sorted({str(t) for t in weights})
-        snap = self._snap()
         return topk_bm25_index(
-            self.spark, snap, terms, k, k1=self.k1, b=self.b,
-            meta=self._term_meta(terms, snap),
+            self.spark, self._snap(), sorted({str(t) for t in weights}), k,
+            k1=self.k1, b=self.b,
             boosts={str(t): float(w) for t, w in weights.items()},
         )
 
@@ -150,11 +148,8 @@ class Engine:
         (``with_positions=True``)."""
         from .operators.phrase import topk_bm25_index_phrase
 
-        snap = self._snap()
-        return topk_bm25_index_phrase(
-            self.spark, snap, phrase, k, k1=self.k1, b=self.b, slop=slop,
-            meta=self._term_meta(phrase, snap),
-        )
+        return topk_bm25_index_phrase(self.spark, self._snap(), phrase, k,
+                                      k1=self.k1, b=self.b, slop=slop)
 
     def find_topk_msm(self, terms: list[str], min_should_match: int,
                       k: int = DEFAULT_K) -> DataFrame:
@@ -164,12 +159,8 @@ class Engine:
         OR ranking, m=len(terms) the AND ranking."""
         from .operators.queryext import topk_bm25_index_msm
 
-        sq = sorted({str(t) for t in terms})
-        snap = self._snap()
-        return topk_bm25_index_msm(
-            self.spark, snap, sq, min_should_match, k, k1=self.k1, b=self.b,
-            meta=self._term_meta(sq, snap),
-        )
+        return topk_bm25_index_msm(self.spark, self._snap(), terms,
+                                   min_should_match, k, k1=self.k1, b=self.b)
 
     def find_topk_synonyms(self, groups: list[list[str]],
                            k: int = DEFAULT_K) -> DataFrame:
@@ -179,12 +170,8 @@ class Engine:
         Single-term groups are plain terms, so mixed queries compose."""
         from .operators.queryext import topk_bm25_index_synonym
 
-        all_terms = sorted({str(t) for g in groups for t in g})
-        snap = self._snap()
-        return topk_bm25_index_synonym(
-            self.spark, snap, groups, k, k1=self.k1, b=self.b,
-            meta=self._term_meta(all_terms, snap),
-        )
+        return topk_bm25_index_synonym(self.spark, self._snap(), groups, k,
+                                       k1=self.k1, b=self.b)
 
     def find_topk_many(self, queries: dict[str, list[str]],
                        k: int = DEFAULT_K,
@@ -203,13 +190,9 @@ class Engine:
         query_id -> (score, doc_id) cursor for per-query searchAfter
         pagination inside the batch — mixed page-1 and page-N members
         share the one scan."""
-        all_terms = sorted({str(t) for q in queries.values() for t in q})
-        snap = self._snap()
-        return topk_bm25_index_many(
-            self.spark, snap, queries, k, k1=self.k1, b=self.b,
-            meta=self._term_meta(all_terms, snap), predicate=where,
-            afters=afters,
-        )
+        return topk_bm25_index_many(self.spark, self._snap(), queries, k,
+                                    k1=self.k1, b=self.b, predicate=where,
+                                    afters=afters)
 
     def find_topk_prefix(self, prefix: str, k: int = DEFAULT_K,
                          max_terms: int = 64) -> DataFrame:
@@ -219,17 +202,11 @@ class Engine:
         multi-term query — each matched term with its own idf. The
         expansion (terms + their df) is memoized per (prefix, max_terms),
         so warm repeats skip the dictionary scan."""
-        from .operators.wand import expand_prefix, topk_bm25_index_prefix
+        from .operators.wand import topk_bm25_index_prefix
 
-        snap = self._snap()
-        meta = self._expansion_meta(
-            snap, ("prefix", str(prefix), int(max_terms)),
-            lambda s: expand_prefix(self.spark, s, prefix, max_terms),
-        )
-        return topk_bm25_index_prefix(
-            self.spark, snap, prefix, k, max_terms=max_terms,
-            k1=self.k1, b=self.b, meta=meta,
-        )
+        return topk_bm25_index_prefix(self.spark, self._snap(), prefix, k,
+                                      max_terms=max_terms, k1=self.k1,
+                                      b=self.b)
 
     def find_topk_wildcard(self, pattern: str, k: int = DEFAULT_K,
                            max_terms: int = 64) -> DataFrame:
@@ -237,17 +214,11 @@ class Engine:
         rewrite): ``*`` matches any run, ``?`` one character; the
         dictionary expansion (df-descending cap at ``max_terms``) scores
         as a multi-term query and is memoized per (pattern, cap)."""
-        from .operators.wand import expand_wildcard, topk_bm25_index_wildcard
+        from .operators.wand import topk_bm25_index_wildcard
 
-        snap = self._snap()
-        meta = self._expansion_meta(
-            snap, ("wildcard", str(pattern), int(max_terms)),
-            lambda s: expand_wildcard(self.spark, s, pattern, max_terms),
-        )
-        return topk_bm25_index_wildcard(
-            self.spark, snap, pattern, k, max_terms=max_terms,
-            k1=self.k1, b=self.b, meta=meta,
-        )
+        return topk_bm25_index_wildcard(self.spark, self._snap(), pattern, k,
+                                        max_terms=max_terms, k1=self.k1,
+                                        b=self.b)
 
     def find_topk_fuzzy(self, term: str, k: int = DEFAULT_K,
                         max_edits: int = 2,
@@ -256,18 +227,12 @@ class Engine:
         rewrite): every indexed term within ``max_edits`` Levenshtein
         edits of ``term`` scores with its own idf. Expansion memoized per
         (term, edits, cap)."""
-        from .operators.wand import expand_fuzzy, topk_bm25_index_fuzzy
+        from .operators.wand import topk_bm25_index_fuzzy
 
-        snap = self._snap()
-        meta = self._expansion_meta(
-            snap, ("fuzzy", str(term), int(max_edits), int(max_terms)),
-            lambda s: expand_fuzzy(self.spark, s, term, max_edits,
-                                   max_terms),
-        )
-        return topk_bm25_index_fuzzy(
-            self.spark, snap, term, k, max_edits=max_edits,
-            max_terms=max_terms, k1=self.k1, b=self.b, meta=meta,
-        )
+        return topk_bm25_index_fuzzy(self.spark, self._snap(), term, k,
+                                     max_edits=max_edits,
+                                     max_terms=max_terms, k1=self.k1,
+                                     b=self.b)
 
     def find_topk_regexp(self, pattern: str, k: int = DEFAULT_K,
                          max_terms: int = 64) -> DataFrame:
@@ -276,17 +241,11 @@ class Engine:
         dictionary (engine-portable regex subset — no backreferences or
         lookaround; df-descending cap at ``max_terms``) and scores as a
         multi-term query. Expansion memoized per (pattern, cap)."""
-        from .operators.wand import expand_regexp, topk_bm25_index_regexp
+        from .operators.wand import topk_bm25_index_regexp
 
-        snap = self._snap()
-        meta = self._expansion_meta(
-            snap, ("regexp", str(pattern), int(max_terms)),
-            lambda s: expand_regexp(self.spark, s, pattern, max_terms),
-        )
-        return topk_bm25_index_regexp(
-            self.spark, snap, pattern, k, max_terms=max_terms,
-            k1=self.k1, b=self.b, meta=meta,
-        )
+        return topk_bm25_index_regexp(self.spark, self._snap(), pattern, k,
+                                      max_terms=max_terms, k1=self.k1,
+                                      b=self.b)
 
     def spell(self, term: str, k: int = 5,
               max_edits: int = 2) -> DataFrame:
@@ -308,12 +267,8 @@ class Engine:
         a post-filter over a retrieved top-N)."""
         from .operators.grouping import collapse_topk
 
-        sq = sorted({str(t) for t in terms})
-        snap = self._snap()
-        return collapse_topk(
-            self.spark, snap, sq, group_col, k, k1=self.k1, b=self.b,
-            meta=self._term_meta(sq, snap),
-        )
+        return collapse_topk(self.spark, self._snap(), terms, group_col, k,
+                             k1=self.k1, b=self.b)
 
     @staticmethod
     def find_topk_fielded(fields: dict, terms: list[str],
@@ -324,31 +279,15 @@ class Engine:
         similarity, and every query term queries every field:
         score(doc) = sum over fields of boost * BM25_field. EXACT
         semantics (each field contributes its full match-set scores, not
-        a top-k fusion); per-field term statistics ride each engine's
-        memo."""
+        a top-k fusion); per-field term statistics ride each field
+        snapshot's memo."""
         from .operators.fielded import combine_fielded
         from .operators.wand import scores_bm25_index_all
 
-        sq = sorted({str(t) for t in terms})
-        parts = []
-        for _name, (eng, boost) in sorted(fields.items()):
-            snap = eng._snap()
-            s = scores_bm25_index_all(
-                eng.spark, snap, sq, k1=eng.k1, b=eng.b,
-                meta=eng._term_meta(sq, snap),
-            )
-            parts.append((s, float(boost)))
-        return combine_fielded(parts, k)
-
-    def _expansion_meta(self, snap, key: tuple, expand) -> IndexMeta:
-        """Memoized MultiTermQuery expansion: one dictionary scan
-        (``expand(snap)``) per (kind, pattern, cap) per snapshot; warm
-        repeats skip it."""
-        meta = snap.memo.get(key)
-        if meta is None:
-            meta = IndexMeta(*snap.scalars, expand(snap))
-            snap.memo[key] = meta
-        return meta
+        return combine_fielded([
+            (scores_bm25_index_all(eng.spark, eng._snap(), terms, k1=eng.k1,
+                                   b=eng.b), float(boost))
+            for _name, (eng, boost) in sorted(fields.items())], k)
 
     def find_topk_boolean(self, should: list[str], k: int = DEFAULT_K,
                           must: list[str] | tuple = (),
@@ -357,15 +296,12 @@ class Engine:
         terms score, ``must`` terms all required (non-scoring filters),
         ``must_not`` excludes. One pruned postings scan + one kernel
         stage for all three clause sets; statistics memoized on the
-        should terms."""
+        union of the clause terms."""
         from .operators.wand import topk_bm25_index_boolean
 
-        sq = sorted({str(t) for t in should})
-        snap = self._snap()
-        return topk_bm25_index_boolean(
-            self.spark, snap, sq, k, must=must, must_not=must_not,
-            k1=self.k1, b=self.b, meta=self._term_meta(sq, snap),
-        )
+        return topk_bm25_index_boolean(self.spark, self._snap(), should, k,
+                                       must=must, must_not=must_not,
+                                       k1=self.k1, b=self.b)
 
     def search(self, query: str, k: int = DEFAULT_K,
                max_terms: int = 64) -> DataFrame:
@@ -400,17 +336,15 @@ class Engine:
                     "Engine.find_topk_wildcard / expand_wildcard for "
                     "mid-term '*' or '?' patterns"
                 )
-        from .operators.wand import expand_prefix
+        from .operators.wand import _memo_meta, expand_prefix
 
         snap = self._snap()
         bare = [t for t in should if not t.endswith("*")]
-        for pat in [t for t in should if t.endswith("*")]:
-            meta = self._expansion_meta(
-                snap, ("prefix", pat[:-1], int(max_terms)),
-                lambda s, p=pat[:-1]: expand_prefix(self.spark, s, p,
-                                                    max_terms),
-            )
-            bare.extend(meta.term_df)
+        for pat in [t[:-1] for t in should if t.endswith("*")]:
+            bare.extend(_memo_meta(
+                snap, ("prefix", pat, int(max_terms)),
+                lambda p=pat: expand_prefix(self.spark, snap, p, max_terms),
+            ).term_df)
         if not bare:
             raise ValueError(
                 f"query {query!r} has no scoring terms (bare or prefix)"
@@ -553,7 +487,7 @@ class Engine:
         tf = Counter(tokenize_py(str(text), an))
         if not tf:
             raise ValueError("empty MoreLikeThis source text")
-        meta = self._term_meta(sorted(tf), snap)
+        meta = query_term_meta(self.spark, snap, list(tf))
         scored = sorted(
             (-int(round(n * idf_py(meta.term_df[t], meta.n_docs) * 1e6)), t)
             for t, n in tf.items()
@@ -574,11 +508,8 @@ class Engine:
         (tested). Rides the memoized per-term-set statistics."""
         from .operators.wand import explain_score
 
-        snap = self._snap()
-        return explain_score(
-            self.spark, snap, terms, doc_id, k1=self.k1, b=self.b,
-            meta=self._term_meta(sorted({str(t) for t in terms}), snap),
-        )
+        return explain_score(self.spark, self._snap(), terms, doc_id,
+                             k1=self.k1, b=self.b)
 
     def add_documents(self, corpus: DataFrame,
                       meta_cols: tuple[str, ...] | None = None,
@@ -605,18 +536,6 @@ class Engine:
         from .operators.index import delete_docs
 
         return delete_docs(self.spark, self.index_dir, doc_ids)
-
-    def _term_meta(self, terms: list[str], snap=None) -> IndexMeta:
-        """Memoized per-(snapshot, term-set) statistics lookup: the df
-        job (a bucket-pruned dictionary scan) runs once per distinct term
-        set; warm repeats are driver-side dict hits."""
-        snap = self._snap() if snap is None else snap
-        key = frozenset(str(t) for t in terms)
-        m = snap.memo.get(key)
-        if m is None:
-            m = query_term_meta(self.spark, snap, sorted(key))
-            snap.memo[key] = m
-        return m
 
     def find_on_path(self, terms: list[str]) -> DataFrame:
         """Boolean OR — docs sharing >=1 term (findOnPath / J2)."""

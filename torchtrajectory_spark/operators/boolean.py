@@ -14,7 +14,8 @@ Two physical strategies:
 * index-backed: per-segment union / intersection of the query terms'
   docID streams, decoded from the compressed postings blocks (see
   ``index.py``) — the 10^12-file path, where only matching term buckets
-  are read.
+  are read. The bucket count is the index snapshot's own
+  (``IndexSnapshot.term_filter``); no caller passes it.
 Both return identical (doc_id) sets; tests assert it.
 """
 
@@ -59,7 +60,7 @@ _MATCH_COLS = ("term", "n_docs", "doc_gaps")
 
 
 def _bool_index_blocks(spark, index_dir: str, query_terms: list[str],
-                       mode: str, buckets: int | None = None) -> DataFrame:
+                       mode: str) -> DataFrame:
     """Segment-local boolean retrieval straight from compressed blocks.
 
     One ``applyInPandas`` group per segment decodes ONLY the query terms'
@@ -78,7 +79,7 @@ def _bool_index_blocks(spark, index_dir: str, query_terms: list[str],
                              if out is None else out})
 
     return _per_segment(spark, index_dir, q, kernel, "doc_id bigint",
-                        cols=_MATCH_COLS, buckets=buckets, scored=False)
+                        cols=_MATCH_COLS, scored=False)
 
 
 def decode_match_docs(pdf, mode: str, nq: int):
@@ -127,7 +128,7 @@ def match_hit_rows(blk, st, mode: str, nq: int, dead):
 
 def _match_analyze(spark, index_dir: str, query_terms: list[str],
                    mode: str, value, kernel, schema: str,
-                   buckets: int | None, op: str) -> DataFrame:
+                   op: str) -> DataFrame:
     """Driver of the match-then-analyze operators: the boolean match
     cogrouped per segment with the segment's doc_stats (doc_id,
     ``value``) rows, and ``kernel(hit_rows)`` — see
@@ -142,25 +143,24 @@ def _match_analyze(spark, index_dir: str, query_terms: list[str],
         return kernel(match_hit_rows(blk, st, mode, len(q), dead))
 
     return _per_segment(spark, snap, q, run, schema, cols=_MATCH_COLS,
-                        buckets=buckets, scored=False, side=stats)
+                        scored=False, side=stats)
 
 
-def bool_or_index_blocks(spark, index_dir: str, query_terms: list[str],
-                         buckets: int | None = None) -> DataFrame:
+def bool_or_index_blocks(spark, index_dir: str,
+                         query_terms: list[str]) -> DataFrame:
     """OR (J2) from the compressed index — see ``_bool_index_blocks``."""
-    return _bool_index_blocks(spark, index_dir, query_terms, "or", buckets)
+    return _bool_index_blocks(spark, index_dir, query_terms, "or")
 
 
-def bool_and_index_blocks(spark, index_dir: str, query_terms: list[str],
-                          buckets: int | None = None) -> DataFrame:
+def bool_and_index_blocks(spark, index_dir: str,
+                          query_terms: list[str]) -> DataFrame:
     """AND (J3) from the compressed index — see ``_bool_index_blocks``."""
-    return _bool_index_blocks(spark, index_dir, query_terms, "and", buckets)
+    return _bool_index_blocks(spark, index_dir, query_terms, "and")
 
 
 def sort_by_field(spark, index_dir: str, query_terms: list[str],
                   sort_col: str, k: int = 10, mode: str = "or",
-                  ascending: bool = False,
-                  buckets: int | None = None) -> DataFrame:
+                  ascending: bool = False) -> DataFrame:
     """Doc-values sort (Lucene ``Sort``/``SortField`` analog): the docs
     matching the boolean query, ordered by a NUMERIC doc-store column
     instead of relevance — (doc_id, sort_value), ties doc_id ASC,
@@ -188,15 +188,15 @@ def sort_by_field(spark, index_dir: str, query_terms: list[str],
     per_seg = _match_analyze(
         spark, index_dir, query_terms, mode,
         F.col(sort_col).cast("double").alias("sort_value"), kernel,
-        "doc_id bigint, sort_value double", buckets, "sort_by_field")
+        "doc_id bigint, sort_value double", "sort_by_field")
     key = (F.col("sort_value").asc() if ascending
            else F.col("sort_value").desc())
     return per_seg.orderBy(key, F.col("doc_id").asc()).limit(kk)
 
 
 def facet_counts(spark, index_dir: str, query_terms: list[str],
-                 facet_col: str, k: int = 10, mode: str = "or",
-                 buckets: int | None = None) -> DataFrame:
+                 facet_col: str, k: int = 10,
+                 mode: str = "or") -> DataFrame:
     """Facet counts over a boolean match (Lucene facets analog): docs
     matching the query (OR / AND over distinct terms) grouped by a
     doc-store metadata column, top-k by (count DESC, value ASC).
@@ -219,7 +219,7 @@ def facet_counts(spark, index_dir: str, query_terms: list[str],
     per_seg = _match_analyze(
         spark, index_dir, query_terms, mode,
         F.col(facet_col).cast("string").alias("value"), kernel,
-        "value string, cnt bigint", buckets, "facet_counts")
+        "value string, cnt bigint", "facet_counts")
     return (
         per_seg.groupBy("value").agg(F.sum("cnt").alias("n_docs"))
         # asc_nulls_last: Spark default sorts NULL FIRST in ASC while
@@ -231,8 +231,8 @@ def facet_counts(spark, index_dir: str, query_terms: list[str],
 
 
 def facet_ranges(spark, index_dir: str, query_terms: list[str],
-                 facet_col: str, width: float, mode: str = "or",
-                 buckets: int | None = None) -> DataFrame:
+                 facet_col: str, width: float,
+                 mode: str = "or") -> DataFrame:
     """Numeric range facet over a boolean match (Lucene
     ``LongRangeFacetCounts`` / Elasticsearch ``histogram`` aggregation
     analog): docs matching the query bucketed by
@@ -263,7 +263,7 @@ def facet_ranges(spark, index_dir: str, query_terms: list[str],
     per_seg = _match_analyze(
         spark, index_dir, query_terms, mode,
         F.col(facet_col).cast("double").alias("v"), kernel,
-        "bucket_lo double, cnt bigint", buckets, "facet_ranges")
+        "bucket_lo double, cnt bigint", "facet_ranges")
     return (
         per_seg.groupBy("bucket_lo").agg(F.sum("cnt").alias("n_docs"))
         .orderBy(F.col("bucket_lo").asc())

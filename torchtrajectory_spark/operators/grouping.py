@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from ..config import BM25_B, BM25_K1, DEFAULT_K
 from .index import open_snapshot
-from .wand import IndexMeta, _per_segment, _segment_topk, _terms
+from .wand import _per_segment, _segment_topk, _terms
 
 
 def collapse_topk(
@@ -44,10 +44,8 @@ def collapse_topk(
     query_terms: list[str],
     group_col: str,
     k: int = DEFAULT_K,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Top-k groups by best BM25 hit. Returns (value, doc_id, score):
     the group value (cast to string), its best-scoring matching doc, and
@@ -77,8 +75,7 @@ def collapse_topk(
 
     per_seg = _per_segment(
         spark, snap, q, kernel,
-        "value string, doc_id bigint, score double",
-        buckets=buckets, meta=meta, side=stats)
+        "value string, doc_id bigint, score double", side=stats)
     # cross-segment combine: lexicographic struct max == argmax by
     # (score DESC, doc_id ASC); a doc's score is complete within its
     # one segment, so the combine is pure selection, no float re-adds

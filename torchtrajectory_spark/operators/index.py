@@ -651,7 +651,6 @@ def build_index(
     resume: bool = True,
     fail_after_segments: int | None = None,
     with_positions: bool = False,
-    table_format: str = "parquet",
     min_input_partitions: int | None = None,
 ) -> None:
     """Full segmented, resumable index build.
@@ -668,9 +667,6 @@ def build_index(
 
     ``fail_after_segments`` injects a crash after that many segments have
     committed — used by the resume test (FIXTURES.md §5).
-    ``table_format`` selects the registered commit writer (parquet
-    default; ``register_table_writer`` adds e.g. an Iceberg snapshot
-    writer — see the table-format seam notes above).
 
     ``min_input_partitions`` guards against an UNDER-SPLIT input table:
     the emit stage's parallelism comes from the corpus scan's splits, so
@@ -692,7 +688,7 @@ def build_index(
         "block_size": block_size, "analyzer": analyzer,
         "id_col": id_col, "text_col": text_col,
         "meta_cols": list(meta_cols),
-        "with_positions": with_positions, "table_format": table_format,
+        "with_positions": with_positions,
         "format_version": INDEX_FORMAT_VERSION,
     })
 
@@ -705,19 +701,18 @@ def build_index(
     # cache build costs more than the extra doc_stats re-scan it saves
     # and anti-scales with cores (measured; BASELINE.md scaling notes).
     # Inputs are parquet/synthetic — cheap to re-scan in parallel.
-    with use_table_format(table_format):
-        done = _done_segments(spark, paths) if resume else set()
-        todo = [s for s in range(n_segments) if s not in done]
-        if not todo:
-            return
-        shard = (F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_segments))
-                 if n_segments > 1 else F.lit(0))
-        tagged = corpus.withColumn(SEG_COL, shard.cast("int"))
-        if done:
-            tagged = tagged.where(~F.col(SEG_COL).isin(sorted(done)))
-        _build_and_commit(spark, tagged, todo, paths, id_col, text_col,
-                          analyzer, meta_cols, buckets, block_size,
-                          with_positions, fail_after_segments)
+    done = _done_segments(spark, paths) if resume else set()
+    todo = [s for s in range(n_segments) if s not in done]
+    if not todo:
+        return
+    shard = (F.pmod(F.xxhash64(F.col(id_col)), F.lit(n_segments))
+             if n_segments > 1 else F.lit(0))
+    tagged = corpus.withColumn(SEG_COL, shard.cast("int"))
+    if done:
+        tagged = tagged.where(~F.col(SEG_COL).isin(sorted(done)))
+    _build_and_commit(spark, tagged, todo, paths, id_col, text_col,
+                      analyzer, meta_cols, buckets, block_size,
+                      with_positions, fail_after_segments)
 
 
 def commit_segment(
@@ -795,10 +790,7 @@ def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
        into place, its ``terms_sorted`` copy is written, and its manifest
        marker is written LAST — the resume marker, and the point at which
        readers see the segment. ``fail_after`` raises after that many
-       commits (the resume test's crash injection).
-
-    Every artifact write and read-back goes through the table-format
-    seam."""
+       commits (the resume test's crash injection)."""
     from concurrent.futures import ThreadPoolExecutor
 
     t0 = time.monotonic()
@@ -822,7 +814,7 @@ def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
         metrics = {s: dict(fp=0, rows=0, sum_dl=0, blocks=0, bytes=0)
                    for s in segs}
         if _staged_segments(stage.postings):
-            staged = _read_table(spark, stage.postings)
+            staged = spark.read.parquet(stage.postings)
             _atomic_write(
                 staged.groupBy(SEG_COL, "bucket", "term")
                 .agg(F.sum("n_docs").alias("df"))
@@ -835,7 +827,7 @@ def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
                 metrics[r[SEG_COL]].update(blocks=r["blocks"],
                                            bytes=r["bytes"])
         if _staged_segments(stage.doc_stats):
-            for r in _read_table(spark, stage.doc_stats).groupBy(SEG_COL).agg(
+            for r in spark.read.parquet(stage.doc_stats).groupBy(SEG_COL).agg(
                     F.expr("bit_xor(xxhash64(doc_id, content_sha256))")
                     .alias("fp"),
                     F.count(F.lit(1)).alias("rows"),
@@ -866,7 +858,7 @@ def _commit_pass(spark: SparkSession, paths: IndexPaths, segs: list[int],
                     _atomic_write(spark.createDataFrame([], schema), dst)
             _write_terms_sorted(spark, paths, s)
             m = metrics[s]
-            _write_manifest_row(spark, pd.DataFrame([{
+            _write_manifest_row(pd.DataFrame([{
                 "segment": s,
                 "input_fingerprint":
                     format((m["fp"] or 0) & (2**64 - 1), "016x"),
@@ -922,17 +914,6 @@ def _write_terms_sorted(spark: SparkSession, paths: IndexPaths,
       counting job) to size the range partitioning."""
     seg_terms = paths.seg(paths.terms, s)
     dst = paths.seg(paths.terms_sorted, s)
-    if _ACTIVE_FORMAT != "parquet":
-        # No parquet directory to footer-count or pyarrow-read under a
-        # custom table format: read the primary back through the
-        # format's registered reader and let the shuffle setting size
-        # the range files.
-        srt = (_read_table(spark, seg_terms)
-               .select("term", "df")
-               .repartitionByRange(F.col("term"))
-               .sortWithinPartitions("term"))
-        _atomic_write(srt, dst)
-        return
     n_rows = _parquet_dir_rows(seg_terms)
     n_parts = max(1, -(-n_rows // TERMS_SORTED_ROWS_PER_FILE))
     if n_parts == 1:
@@ -1007,20 +988,15 @@ def _parquet_dir_rows(path: str) -> int:
     return n
 
 
-def _write_manifest_row(spark: SparkSession, pdf: pd.DataFrame,
-                        path: str) -> None:
-    """Commit the one-row manifest marker. Parquet default writes it
-    driver-side (:func:`_write_table_driver`) — a whole Spark job for one
-    row is pure fixed cost (~0.5s/segment that shows up directly in the
-    N-vs-4N scaling ratio). Non-parquet table formats go through the
-    registered writer (the marker must be a snapshot commit there)."""
-    if _ACTIVE_FORMAT == "parquet":
-        import pyarrow as pa
+def _write_manifest_row(pdf: pd.DataFrame, path: str) -> None:
+    """Commit the one-row manifest marker, written driver-side
+    (:func:`_write_table_driver`) — a whole Spark job for one row is
+    pure fixed cost (~0.5s/segment that shows up directly in the
+    N-vs-4N scaling ratio)."""
+    import pyarrow as pa
 
-        _write_table_driver(pa.Table.from_pandas(pdf, preserve_index=False),
-                            path)
-        return
-    _atomic_write(spark.createDataFrame(pdf), path)
+    _write_table_driver(pa.Table.from_pandas(pdf, preserve_index=False),
+                        path)
 
 
 def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
@@ -1055,12 +1031,11 @@ def compact_index(spark: SparkSession, src_dir: str, dst_dir: str,
                                   "compacted_from": src_dir,
                                   "purged_tombstones":
                                       int(ts.size) if ts is not None else 0})
-    with use_table_format(cfg.get("table_format", "parquet")):
-        minis = src.postings.drop("segment").withColumn(SEG_COL, F.lit(0))
-        ds = drop_docs(src.doc_stats.drop("segment"), ts)
-        _commit_pass(spark, paths, [0],
-                     _merge_blocks(minis, block_size, with_positions, ts),
-                     ds.withColumn(SEG_COL, F.lit(0)))
+    minis = src.postings.drop("segment").withColumn(SEG_COL, F.lit(0))
+    ds = drop_docs(src.doc_stats.drop("segment"), ts)
+    _commit_pass(spark, paths, [0],
+                 _merge_blocks(minis, block_size, with_positions, ts),
+                 ds.withColumn(SEG_COL, F.lit(0)))
 
 
 # test-only commit gate (see _rehome_segments); None in production
@@ -1227,7 +1202,6 @@ def add_documents(spark: SparkSession, index_dir: str, corpus: DataFrame,
                 n_segments=int(n_segments), buckets=int(cfg["buckets"]),
                 block_size=int(cfg["block_size"]),
                 with_positions=bool(cfg.get("with_positions")),
-                table_format=cfg.get("table_format", "parquet"),
                 resume=False,
             )
             if verify_disjoint:
@@ -1254,6 +1228,10 @@ def add_documents(spark: SparkSession, index_dir: str, corpus: DataFrame,
             return added
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
+            # the temp build's snapshot (read by verify_disjoint) names
+            # a deleted directory
+            _SNAPSHOTS.pop((spark.sparkContext.applicationId,
+                            os.path.abspath(tmp)), None)
 
 
 def merge_indexes(spark: SparkSession, src_dirs: list[str], dst_dir: str,
@@ -1342,7 +1320,7 @@ def read_index_config(index_dir: str) -> dict:
         return json.load(f)
 
 
-def _atomic_write_parquet(df: DataFrame, path: str) -> None:
+def _atomic_write(df: DataFrame, path: str) -> None:
     """Write-then-rename for atomic per-segment commit. A frame carrying
     ``SEG_COL`` (a build's staged artifact) is laid out by it, one
     ``_seg=<s>/`` directory per segment."""
@@ -1356,98 +1334,6 @@ def _atomic_write_parquet(df: DataFrame, path: str) -> None:
     if os.path.exists(path):
         shutil.rmtree(path)
     os.replace(tmp, path)
-
-
-# ---------------------------- table-format seam ---------------------------
-#
-# The north rule's input/output tables are Iceberg; this sandbox has no
-# Iceberg runtime jar, so the commit path is pluggable instead of
-# hard-coding one format. The mapping is 1:1:
-#
-#   segment directory write  ->  Iceberg snapshot-producing append
-#   manifest-row-last commit ->  Iceberg snapshot commit (atomic swap of
-#                                table metadata; our manifest row's
-#                                lineage/metrics become snapshot summary
-#                                properties)
-#   write-then-rename        ->  unnecessary under Iceberg (the catalog
-#                                pointer swap IS the atomic commit)
-#   segment=<s> path suffix  ->  partition spec (segment identity column)
-#
-# A build writes each artifact once for all its segments: the frame
-# carries the segment id in ``SEG_COL`` and the writer lays it out as
-# the partition spec (``_seg=<s>/`` under parquet) in a staging
-# location; each segment then commits by renaming its partition into
-# place, manifest marker last.
-#
-# Register a writer + reader pair once per process and pass
-# ``table_format=`` to build_index / compact_index; with an
-# Iceberg-enabled Spark session:
-#
-#   register_table_writer("iceberg", lambda df, path:
-#       df.writeTo(_table_for(path)).using("iceberg").createOrReplace())
-#   register_table_reader("iceberg", lambda spark, path:
-#       spark.read.table(_table_for(path)))
-#
-# where ``_table_for`` maps the directory layout onto catalog table +
-# partition values. The reader covers the build's own read-backs (terms
-# derivation over just-committed postings, purged-scalar aggregation);
-# the parquet default keeps this repo runnable anywhere.
-
-_TABLE_WRITERS: dict = {"parquet": _atomic_write_parquet}
-_TABLE_READERS: dict = {
-    "parquet": lambda spark, path: spark.read.parquet(path)}
-
-
-def register_table_writer(name: str, fn) -> None:
-    """Register a table-format writer ``fn(df, path) -> None`` whose write
-    must be atomic-or-invisible (like write-then-rename / a snapshot
-    commit): readers may race with it."""
-    _TABLE_WRITERS[name] = fn
-
-
-def register_table_reader(name: str, fn) -> None:
-    """Register the matching reader ``fn(spark, path) -> DataFrame`` for
-    the INTRA-BUILD read-backs (a just-committed artifact re-read within
-    the same build/compact — terms derivation, purged-scalar agg). The
-    steady-state QUERY path stays the caller's concern: an Iceberg
-    deployment queries through its catalog, not these helpers."""
-    _TABLE_READERS[name] = fn
-
-
-def _read_table(spark: SparkSession, path: str) -> DataFrame:
-    reader = _TABLE_READERS.get(_ACTIVE_FORMAT)
-    if reader is None:
-        raise ValueError(
-            f"table format {_ACTIVE_FORMAT!r} has no registered reader; "
-            f"call register_table_reader({_ACTIVE_FORMAT!r}, fn) first"
-        )
-    return reader(spark, path)
-
-
-_ACTIVE_FORMAT = "parquet"
-
-
-@contextmanager
-def use_table_format(name: str):
-    """Scope the commit-path table format (parquet default; see the
-    Iceberg mapping above)."""
-    global _ACTIVE_FORMAT
-    prev = _ACTIVE_FORMAT
-    _ACTIVE_FORMAT = name
-    try:
-        yield
-    finally:
-        _ACTIVE_FORMAT = prev
-
-
-def _atomic_write(df: DataFrame, path: str) -> None:
-    writer = _TABLE_WRITERS.get(_ACTIVE_FORMAT)
-    if writer is None:
-        raise ValueError(
-            f"table format {_ACTIVE_FORMAT!r} has no registered writer; "
-            f"call register_table_writer({_ACTIVE_FORMAT!r}, fn) first"
-        )
-    writer(df, path)
 
 
 def _committed_marker_names(manifest_dir: str) -> list[str]:
@@ -1596,13 +1482,13 @@ class IndexSnapshot:
         return self._once("scalars",
                           lambda: wand._corpus_scalars(self.spark, self))
 
-    def term_filter(self, terms, buckets: int | None = None) -> Column:
+    def term_filter(self, terms) -> Column:
         """The predicate selecting ``terms``' rows of a bucketed table
-        (postings, terms): the crc32 bucket, then the term, both pushed
-        into the parquet scan."""
+        (postings, terms): the crc32 bucket under the index's own bucket
+        count, then the term, both pushed into the parquet scan."""
         q = sorted({str(t) for t in terms})
-        n = self.buckets if buckets is None else int(buckets)
-        return (F.col("bucket").isin(sorted({bucket_of(t, n) for t in q}))
+        return (F.col("bucket").isin(sorted({bucket_of(t, self.buckets)
+                                             for t in q}))
                 & F.col("term").isin(q))
 
 
@@ -1879,7 +1765,6 @@ def write_debug_index(spark: SparkSession, index_dir: str,
 def postings_flat(spark: SparkSession, index_dir: str,
                   docs_only: bool = False,
                   terms: list[str] | None = None,
-                  buckets: int | None = None,
                   live_only: bool = True,
                   segments: list[int] | None = None) -> DataFrame:
     """Decode blocks back to (term, doc_id[, tf, dl]) rows — index-backed
@@ -1905,7 +1790,7 @@ def postings_flat(spark: SparkSession, index_dir: str,
         blocks = blocks.where(F.col("segment").isin([int(s)
                                                      for s in segments]))
     if terms is not None:
-        blocks = blocks.where(snap.term_filter(terms, buckets))
+        blocks = blocks.where(snap.term_filter(terms))
 
     payload = () if docs_only else ("tfs", "dls")
 

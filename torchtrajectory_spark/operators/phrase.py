@@ -16,7 +16,9 @@ Two physical strategies (results identical, both oracle-checked):
 * index-backed: decode the phrase terms' positional postings (only their
   partition-pruned buckets), per-segment numpy position-list intersection
   inside ``applyInPandas``; segments are doc-disjoint so the union is the
-  answer.
+  answer. The bucket count and, for the scored PhraseQuery, the term
+  statistics come from the index snapshot (its per-term-set memo), never
+  from an argument.
 """
 
 from __future__ import annotations
@@ -30,7 +32,6 @@ from ..config import BM25_B, BM25_K1
 from ..functions.bm25 import idf_py, tf_sat_expr
 from .index import decode_blocks, open_snapshot, sorted_isin
 from .wand import (
-    IndexMeta,
     _TermPostings,
     _per_segment,
     _terms,
@@ -343,7 +344,7 @@ def _live(r: pd.DataFrame, dead) -> pd.DataFrame:
 
 
 def _occ_index(spark: SparkSession, index_dir: str, terms: list[str],
-               slop: int | None, buckets: int | None) -> DataFrame:
+               slop: int | None) -> DataFrame:
     """Positional match counts from the index: the shared driver
     prologue (only the queried terms' buckets are read) around the
     per-segment occurrence kernel; doc-disjoint segments union without
@@ -353,33 +354,29 @@ def _occ_index(spark: SparkSession, index_dir: str, terms: list[str],
     return _per_segment(
         spark, snap, _terms(terms),
         lambda blk, _meta, dead: _live(_segment_occ(blk, terms, slop), dead),
-        _OCC_SCHEMA, cols=_POS_COLS, buckets=buckets, scored=False)
+        _OCC_SCHEMA, cols=_POS_COLS, scored=False)
 
 
 def near_count_index(spark: SparkSession, index_dir: str,
-                     terms: list[str], slop: int = 0,
-                     buckets: int | None = None) -> DataFrame:
+                     terms: list[str], slop: int = 0) -> DataFrame:
     """Index-backed ordered proximity query over a positional index —
     same bucket+term-pruned scan shape as :func:`phrase_count_index`."""
     if not terms:
         raise ValueError("empty proximity query")
-    return _occ_index(spark, index_dir, terms, int(slop), buckets)
+    return _occ_index(spark, index_dir, terms, int(slop))
 
 
 def phrase_count_index(spark: SparkSession, index_dir: str,
-                       phrase: list[str],
-                       buckets: int | None = None) -> DataFrame:
+                       phrase: list[str]) -> DataFrame:
     """Index-backed phrase query over a positional index."""
-    return _occ_index(spark, index_dir, phrase, None, buckets)
+    return _occ_index(spark, index_dir, phrase, None)
 
 
 def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
                            phrase: list[str], k: int = 10,
-                           buckets: int | None = None,
                            k1: float | None = None,
                            b: float | None = None,
-                           slop: int | None = None,
-                           meta: IndexMeta | None = None) -> DataFrame:
+                           slop: int | None = None) -> DataFrame:
     """PhraseQuery as a SCORING query (Lucene ``PhraseQuery`` ranking,
     not just the match-count surface): docs containing the exact phrase
     ranked by BM25 with the PHRASE frequency as tf —
@@ -403,9 +400,9 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     doc-store join), the summed idf is a driver-side constant from the
     per-query dictionary lookup, scoring is a codegen'd expression over
     match-set-sized rows, and the global merge is one
-    TakeOrderedAndProject. ``meta`` is a memoized term meta for the
-    phrase's terms (``Engine``'s per-term-set memo); without it one is
-    fetched."""
+    TakeOrderedAndProject. The phrase terms' statistics come from the
+    snapshot's per-term-set memo (``query_term_meta``), which the
+    per-segment scan reads too: one dictionary read at most."""
     k1 = BM25_K1 if k1 is None else float(k1)
     b = BM25_B if b is None else float(b)
     snap = _positional(spark, index_dir)
@@ -413,8 +410,7 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     if not phrase:
         raise ValueError("empty phrase")
     q = _terms(phrase)
-    if meta is None:
-        meta = query_term_meta(spark, snap, q, buckets)
+    meta = query_term_meta(spark, snap, q)
     idf_total = float(sum(idf_py(meta.term_df.get(t, 0.0), meta.n_docs)
                           for t in phrase))
     t0 = min(q, key=lambda t: meta.term_df.get(t, 0.0))  # rarest term
@@ -434,8 +430,7 @@ def topk_bm25_index_phrase(spark: SparkSession, index_dir: str,
     per_seg = _per_segment(
         spark, snap, q, kernel,
         "doc_id bigint, n_occ bigint, dl bigint",
-        cols=_POS_COLS + ("max_tf", "min_dl", "dls"), buckets=buckets,
-        meta=meta)
+        cols=_POS_COLS + ("max_tf", "min_dl", "dls"))
     return _topk_merge(per_seg.select(
         "doc_id",
         (F.lit(idf_total) * tf_sat_expr(

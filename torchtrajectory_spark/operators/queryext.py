@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import BM25_B, BM25_K1, DEFAULT_K
 from .wand import (
     _TOPK_SCHEMA,
-    IndexMeta,
     _per_segment,
     _segment_topk,
     _terms,
@@ -43,8 +42,6 @@ def topk_bm25_index_msm(
     query_terms: list[str],
     min_should_match: int,
     k: int = DEFAULT_K,
-    meta: IndexMeta | None = None,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
@@ -60,7 +57,7 @@ def topk_bm25_index_msm(
         spark, index_dir, q,
         lambda blk, meta, dead: _segment_topk(blk, q, k, meta, k1, b,
                                               blocked=dead, min_match=m),
-        _TOPK_SCHEMA, buckets=buckets, meta=meta), k)
+        _TOPK_SCHEMA), k)
 
 
 def topk_bm25_index_synonym(
@@ -68,8 +65,6 @@ def topk_bm25_index_synonym(
     index_dir: str,
     groups: list[list[str]],
     k: int = DEFAULT_K,
-    meta: IndexMeta | None = None,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
 ) -> DataFrame:
@@ -84,4 +79,4 @@ def topk_bm25_index_synonym(
         spark, index_dir, _terms(t for g in groups for t in g),
         lambda blk, meta, dead: _segment_topk(blk, groups, k, meta, k1, b,
                                               blocked=dead),
-        _TOPK_SCHEMA, buckets=buckets, meta=meta), k)
+        _TOPK_SCHEMA), k)

@@ -35,6 +35,11 @@ Koios' bound-then-verify loop with pluggable candidate rules):
   ``index.open_snapshot``), and one per-segment ``applyInPandas`` (or a
   cogroup with a doc_stats side frame);
   ``_topk_merge`` is the global (score DESC, doc_id ASC) merge.
+* ``_memo_meta`` — term statistics, memoized in the snapshot
+  (``IndexSnapshot.memo``) per term set (``query_term_meta``) or per
+  expansion (``_topk_expansion``); only a miss reads the dictionary.
+  The bucket count and the statistics come from the snapshot alone, so
+  no operator takes them as arguments.
 * ``_TermPostings`` — one term's blocks in a segment, decoded in one pass.
 * ``_segment_scores`` — the one per-segment BM25 primitive: a doc set
   scored against weighted clauses (a plain term, or a synonym group
@@ -92,34 +97,46 @@ def _corpus_scalars(spark: SparkSession, index_dir) -> tuple[float, float]:
     return n, (sum(r["sum_dl"] or 0 for r in rows) / n if n else 0.0)
 
 
-def open_index_meta(spark: SparkSession, index_dir: str) -> IndexMeta:
-    """Full-dictionary meta: manifest scalars + the precomputed terms
-    table (df from block metadata at build time — no payload decode).
+def _memo_meta(snap, key, read) -> IndexMeta:
+    """The snapshot's term statistics under ``key`` (a term set, or an
+    expansion's (kind, pattern, cap)), held in ``snap.memo``:
+    ``read()`` — a term -> df dictionary read, the one Spark job — runs
+    on a miss only, so warm repeats are driver-side dict hits."""
+    meta = snap.memo.get(key)
+    if meta is None:
+        meta = snap.memo[key] = IndexMeta(*snap.scalars, read())
+    return meta
 
-    Small-index convenience ONLY (collects the whole dictionary to the
-    driver — unbounded in vocabulary size). Query paths use
-    ``query_term_meta``, which touches just the query terms' buckets."""
-    snap = open_snapshot(spark, index_dir)
-    dfs = snap.terms.groupBy("term").agg(F.sum("df").alias("df")).collect()
-    return IndexMeta(*snap.scalars, {r["term"]: float(r["df"]) for r in dfs})
+
+def _read_term_df(snap, terms: list[str]) -> dict:
+    """The uncached dictionary read: df of ``terms`` from the terms
+    table, the bucket+term predicates pushed into the scan."""
+    dfs = (
+        snap.terms.where(snap.term_filter(terms))
+        .groupBy("term").agg(F.sum("df").alias("df"))
+        .collect()
+    )
+    return {r["term"]: float(r["df"]) for r in dfs}
 
 
 def query_term_meta(spark: SparkSession, index_dir: str,
                     query_terms: list[str],
                     buckets: int | None = None) -> IndexMeta:
-    """Per-query variant: df only for the query terms, from the terms
-    dictionary with the bucket predicate pushed into the scan.
+    """Term statistics of ``query_terms``: df for just those terms from
+    the bucket-pruned dictionary (:func:`_read_term_df`), and the
+    snapshot's (n_docs, avgdl), memoized per snapshot and term set.
 
-    df and the (n_docs, avgdl) scalars come from one snapshot, so
-    df <= n_docs holds: a segment's df is at most its row count, even
-    when a segment commits while the query runs."""
+    df and the scalars come from one snapshot, so df <= n_docs holds: a
+    segment's df is at most its row count, even when a segment commits
+    while the query runs. ``buckets`` is a check, not a knob: the bucket
+    count is the index's own, and any other value raises."""
     snap = open_snapshot(spark, index_dir)
-    dfs = (
-        snap.terms.where(snap.term_filter(query_terms, buckets))
-        .groupBy("term").agg(F.sum("df").alias("df"))
-        .collect()
-    )
-    return IndexMeta(*snap.scalars, {r["term"]: float(r["df"]) for r in dfs})
+    if buckets is not None and int(buckets) != snap.buckets:
+        raise ValueError(
+            f"query_term_meta: buckets={buckets} but the index at "
+            f"{snap.root} has {snap.buckets}")
+    q = _terms(query_terms)
+    return _memo_meta(snap, frozenset(q), lambda: _read_term_df(snap, q))
 
 
 # block columns the scorer reads: payloads + bound metadata, never
@@ -137,14 +154,13 @@ def _terms(terms) -> list[str]:
 
 def _per_segment(spark: SparkSession, index_dir: str, q: list[str],
                  kernel, schema: str, *, cols=_SCORE_COLS,
-                 buckets: int | None = None, meta: IndexMeta | None = None,
                  scored: bool = True,
                  side: DataFrame | None = None) -> DataFrame:
     """The prologue every indexed query shares, over one snapshot of
     the index (``index_dir`` is a path or an ``IndexSnapshot``).
 
-    For a scoring query without a memoized ``meta``, fetches the term
-    meta of ``q`` (``query_term_meta``). Scans ``q``'s postings blocks
+    For a scoring query, takes the term meta of ``q`` from the
+    snapshot's memo (``query_term_meta``). Scans ``q``'s postings blocks
     with the bucket+term predicates pushed into parquet and only
     ``cols`` projected, and runs ``kernel(blocks, meta, dead)`` once per
     segment, ``blocks`` without the ``segment`` column and ``dead`` the
@@ -152,9 +168,8 @@ def _per_segment(spark: SparkSession, index_dir: str, q: list[str],
     e.g. doc_stats) cogroups with the blocks per segment instead, and
     the kernel gets the segment's side rows as a fourth argument."""
     snap = open_snapshot(spark, index_dir)
-    if scored and meta is None:
-        meta = query_term_meta(spark, snap, q, buckets)
-    blocks = snap.postings.where(snap.term_filter(q, buckets)).select(
+    meta = query_term_meta(spark, snap, q) if scored else None
+    blocks = snap.postings.where(snap.term_filter(q)).select(
         "segment", *cols)
     dead = snap.tombstones
     if side is None:
@@ -411,8 +426,6 @@ def topk_bm25_index(
     index_dir: str,
     query_terms: list[str],
     k: int = DEFAULT_K,
-    meta: IndexMeta | None = None,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
     after: tuple[float, int] | None = None,
@@ -453,7 +466,7 @@ def topk_bm25_index(
                              after=after, boosts=boosts)
 
     return _topk_merge(_per_segment(
-        spark, snap, q, kernel, _TOPK_SCHEMA, buckets=buckets, meta=meta,
+        spark, snap, q, kernel, _TOPK_SCHEMA,
         side=_allowed_docs(snap, predicate)), k)
 
 
@@ -461,10 +474,8 @@ def scores_bm25_index_all(
     spark: SparkSession,
     index_dir: str,
     query_terms: list[str],
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
 ) -> DataFrame:
     """(doc_id, score) for EVERY live document matching any query term —
     the exact-scoring scan with no top-k heap (the all-matches rule of
@@ -477,7 +488,7 @@ def scores_bm25_index_all(
         spark, index_dir, q,
         lambda blk, meta, dead: _segment_topk(blk, q, None, meta, k1, b,
                                               blocked=dead),
-        _TOPK_SCHEMA, buckets=buckets, meta=meta)
+        _TOPK_SCHEMA)
 
 
 def topk_bm25_index_many(
@@ -485,10 +496,8 @@ def topk_bm25_index_many(
     index_dir: str,
     queries: dict[str, list[str]],
     k: int = DEFAULT_K,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
     predicate=None,
     afters: dict | None = None,
 ) -> DataFrame:
@@ -540,8 +549,8 @@ def topk_bm25_index_many(
 
     per_seg = _per_segment(
         spark, snap, _terms(t for _, q in qmap for t in q), kernel,
-        "query_id string, doc_id bigint, score double", buckets=buckets,
-        meta=meta, side=_allowed_docs(snap, predicate))
+        "query_id string, doc_id bigint, score double",
+        side=_allowed_docs(snap, predicate))
     # per-query merge of the tiny per-segment lists: Q x segments x k
     # rows through one window — the same (score DESC, doc_id ASC)
     # tie-break as the single-query TakeOrderedAndProject
@@ -561,10 +570,8 @@ def topk_bm25_index_boolean(
     k: int = DEFAULT_K,
     must: list[str] | tuple = (),
     must_not: list[str] | tuple = (),
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Lucene ``BooleanQuery`` analog: ``should`` terms score (BM25 sum,
     index-wide statistics), ``must`` terms are non-scoring filter clauses
@@ -605,15 +612,12 @@ def topk_bm25_index_boolean(
                              allowed=allowed, blocked=blocked)
 
     return _topk_merge(_per_segment(
-        spark, index_dir, _terms(sq + sm + sn), kernel, _TOPK_SCHEMA,
-        buckets=buckets, meta=meta), k)
+        spark, index_dir, _terms(sq + sm + sn), kernel, _TOPK_SCHEMA), k)
 
 
 def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
                   doc_id: int,
-                  buckets: int | None = None,
-                  k1: float = BM25_K1, b: float = BM25_B,
-                  meta: IndexMeta | None = None) -> DataFrame:
+                  k1: float = BM25_K1, b: float = BM25_B) -> DataFrame:
     """Per-term BM25 score breakdown for ONE document — the Lucene
     ``Explanation`` analog (the reference prints per-edge weights ad hoc
     in its demo, ``EdgeInvertedIndex.java:196-233``; this is that
@@ -629,8 +633,7 @@ def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
     16-segment 1M index)."""
     q = _terms(terms)
     snap = open_snapshot(spark, index_dir)
-    if meta is None:
-        meta = query_term_meta(spark, snap, q, buckets=buckets)
+    meta = query_term_meta(spark, snap, q)
     known = [t for t in q if t in meta.term_df]
     schema = ("term string, tf bigint, df double, idf double, "
               "contribution double")
@@ -648,7 +651,7 @@ def explain_score(spark: SparkSession, index_dir: str, terms: list[str],
         .select("segment").first()
     )
     return (
-        postings_flat(spark, snap, terms=known, buckets=buckets,
+        postings_flat(spark, snap, terms=known,
                       segments=None if seg is None else [seg["segment"]])
         .where(F.col("doc_id") == int(doc_id))
         .withColumn("df", F.element_at(df_map, F.col("term")))
@@ -939,10 +942,8 @@ def topk_bm25_index_prefix(
     prefix: str,
     k: int = DEFAULT_K,
     max_terms: int = 64,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Prefix top-k BM25 (Lucene ``PrefixQuery`` with the scoring boolean
     rewrite): expand ``prefix`` against the term dictionary, then run the
@@ -951,10 +952,9 @@ def topk_bm25_index_prefix(
     expansion's df values double as the term meta, so no second
     dictionary lookup happens."""
     return _topk_expansion(
-        spark, index_dir,
-        lambda snap: expand_prefix(spark, snap, prefix, max_terms),
-        k, buckets=buckets, k1=k1, b=b, meta=meta,
-    )
+        spark, index_dir, ("prefix", str(prefix), int(max_terms)),
+        lambda snap: expand_prefix(spark, snap, prefix, max_terms), k,
+        k1=k1, b=b)
 
 
 def topk_bm25_index_wildcard(
@@ -963,19 +963,16 @@ def topk_bm25_index_wildcard(
     pattern: str,
     k: int = DEFAULT_K,
     max_terms: int = 64,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Wildcard top-k BM25 (Lucene ``WildcardQuery``, scoring boolean
     rewrite): :func:`expand_wildcard` the pattern, then the standard
     multi-term block-max WAND scan over the expansion."""
     return _topk_expansion(
-        spark, index_dir,
-        lambda snap: expand_wildcard(spark, snap, pattern, max_terms),
-        k, buckets=buckets, k1=k1, b=b, meta=meta,
-    )
+        spark, index_dir, ("wildcard", str(pattern), int(max_terms)),
+        lambda snap: expand_wildcard(spark, snap, pattern, max_terms), k,
+        k1=k1, b=b)
 
 
 def topk_bm25_index_regexp(
@@ -984,20 +981,17 @@ def topk_bm25_index_regexp(
     pattern: str,
     k: int = DEFAULT_K,
     max_terms: int = 64,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Regexp top-k BM25 (Lucene ``RegexpQuery``, scoring boolean
     rewrite): :func:`expand_regexp` the pattern against the dictionary,
     then the standard multi-term block-max WAND scan over the
     expansion."""
     return _topk_expansion(
-        spark, index_dir,
-        lambda snap: expand_regexp(spark, snap, pattern, max_terms),
-        k, buckets=buckets, k1=k1, b=b, meta=meta,
-    )
+        spark, index_dir, ("regexp", str(pattern), int(max_terms)),
+        lambda snap: expand_regexp(spark, snap, pattern, max_terms), k,
+        k1=k1, b=b)
 
 
 def topk_bm25_index_fuzzy(
@@ -1007,10 +1001,8 @@ def topk_bm25_index_fuzzy(
     k: int = DEFAULT_K,
     max_edits: int = 2,
     max_terms: int = 64,
-    buckets: int | None = None,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    meta: IndexMeta | None = None,
 ) -> DataFrame:
     """Fuzzy top-k BM25 (Lucene ``FuzzyQuery``, scoring boolean rewrite):
     :func:`expand_fuzzy` the term within ``max_edits`` Levenshtein edits,
@@ -1020,26 +1012,23 @@ def topk_bm25_index_fuzzy(
     so the oracle semantics stay exact)."""
     return _topk_expansion(
         spark, index_dir,
+        ("fuzzy", str(term), int(max_edits), int(max_terms)),
         lambda snap: expand_fuzzy(spark, snap, term, max_edits, max_terms),
-        k, buckets=buckets, k1=k1, b=b, meta=meta,
-    )
+        k, k1=k1, b=b)
 
 
-def _topk_expansion(spark, index_dir, expand, k, *, buckets, k1, b,
-                    meta) -> DataFrame:
-    """Shared MultiTermQuery scorer: resolve the expansion (or accept a
-    memoized ``meta``) and score it with the multi-term WAND scan, N and
-    the dictionary from one snapshot; an empty expansion short-circuits
+def _topk_expansion(spark, index_dir, key: tuple, expand, k, *, k1,
+                    b) -> DataFrame:
+    """Shared MultiTermQuery scorer: the expansion ``expand(snap)``,
+    memoized in the snapshot under ``key`` (kind, pattern, cap), scored
+    with the multi-term WAND scan — N and the dictionary from one
+    snapshot. The expansion's dfs also fill the memo of its term set,
+    so the scan reads no dictionary; an empty expansion short-circuits
     to an empty result with the stable schema."""
     snap = open_snapshot(spark, index_dir)
-    if meta is None:
-        dfs = expand(snap)
-        if not dfs:
-            return spark.createDataFrame([], _TOPK_SCHEMA)
-        meta = IndexMeta(*snap.scalars, dfs)
-    elif not meta.term_df:
+    dfs = _memo_meta(snap, key, lambda: expand(snap)).term_df
+    if not dfs:
         return spark.createDataFrame([], _TOPK_SCHEMA)
-    return topk_bm25_index(
-        spark, snap, sorted(meta.term_df), k,
-        meta=meta, buckets=buckets, k1=k1, b=b,
-    )
+    q = sorted(dfs)
+    _memo_meta(snap, frozenset(q), lambda: dfs)
+    return topk_bm25_index(spark, snap, q, k, k1=k1, b=b)

@@ -657,14 +657,12 @@ def q_bool_and(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_bool_or_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_index(spark, sf_dir)
-    return boolean.bool_or_index_blocks(spark, idx, Q_OR,
-                                        buckets=_INDEX_BUCKETS)
+    return boolean.bool_or_index_blocks(spark, idx, Q_OR)
 
 
 def q_bool_and_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_index(spark, sf_dir)
-    return boolean.bool_and_index_blocks(spark, idx, Q_AND,
-                                         buckets=_INDEX_BUCKETS)
+    return boolean.bool_and_index_blocks(spark, idx, Q_AND)
 
 
 def q_term_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -795,14 +793,12 @@ def q_topk_bm25_near(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_phrase_bigram_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_index(spark, sf_dir, with_positions=True)
-    return phrase.phrase_count_index(spark, idx, PHRASE_2,
-                                     buckets=_INDEX_BUCKETS)
+    return phrase.phrase_count_index(spark, idx, PHRASE_2)
 
 
 def q_phrase_trigram_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx = ensure_index(spark, sf_dir, with_positions=True)
-    return phrase.phrase_count_index(spark, idx, PHRASE_3,
-                                     buckets=_INDEX_BUCKETS)
+    return phrase.phrase_count_index(spark, idx, PHRASE_3)
 
 
 NEAR_Q, NEAR_SLOP = ["spark", "window"], 4  # ordered, window <= 1 + 4
@@ -817,8 +813,7 @@ def q_phrase_near_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered proximity over the positional index (bucket+term-pruned
     scan, per-segment Arrow kernel)."""
     idx = ensure_index(spark, sf_dir, with_positions=True)
-    return phrase.near_count_index(spark, idx, NEAR_Q, NEAR_SLOP,
-                                   buckets=_INDEX_BUCKETS)
+    return phrase.near_count_index(spark, idx, NEAR_Q, NEAR_SLOP)
 
 
 def q_topk_bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -82,7 +82,6 @@ def stream_index_build(
         "buckets": buckets, "block_size": block_size, "analyzer": analyzer,
         "id_col": id_col, "text_col": text_col,
         "with_positions": with_positions, "streaming": True,
-        "table_format": "parquet",
         "format_version": INDEX_FORMAT_VERSION,
     })
     if checkpoint_dir is None:
