@@ -311,7 +311,7 @@ def main() -> None:
     results["topk_qps"] = round(len(lats) / sum(lats), 2)
 
     # --- batch: the SAME reference query set in ONE call
-    # (Engine.find_topk_many — one postings scan + one Python stage for
+    # (Engine.find_topk_many — one postings read + one Python stage for
     # all queries; per-query rows are rank-identical to the loop above,
     # tested). qps contrast with topk_qps shows the per-query fixed-cost
     # amortization.

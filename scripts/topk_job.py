@@ -30,7 +30,7 @@ def main() -> None:
     p.add_argument("-k", type=int, default=10)
     p.add_argument("--batch", action="store_true",
                    help="evaluate ALL queries in one batch call (one "
-                        "postings scan + one Python stage for the set)")
+                        "postings read + one Python stage for the set)")
     p.add_argument("--lang", action="append", default=None,
                    help="restrict candidates to these doc-store langs "
                         "(F2-in-the-loop: heap membership filtered, "

@@ -278,6 +278,13 @@ def _assert_one_listing(spark, idx, union, dead=None):
     assert sorted(r["segment"] for r in
                   snap.postings.select("segment").distinct().collect()) \
         == [0, 1]
+    # the segment tasks' reader reads exactly the listed segments' files
+    files = snap.files("postings")
+    assert sorted(files) == [0, 1]
+    for s, fs in files.items():
+        d = os.path.join(snap.root, "postings", f"segment={s}")
+        assert fs and fs == sorted(os.path.join(d, f) for f in os.listdir(d)
+                                   if f.endswith(".parquet"))
     assert (None if snap.tombstones is None
             else snap.tombstones.tolist()) == dead
 

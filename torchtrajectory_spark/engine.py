@@ -65,7 +65,7 @@ class Engine:
     one operator call on that snapshot with the Engine's (k1, b); the
     bucket count and the term statistics come from the snapshot, whose
     memo (``IndexSnapshot.memo``, filled by ``wand.query_term_meta`` and
-    the expansions) lets warm repeats skip the dictionary job — for the
+    the expansions) lets warm repeats skip the dictionary read — for the
     free functions too — and survives a delete (masking changes no
     statistic). ``index_dir`` may also be an ``IndexSnapshot``, which
     pins every call to it."""
@@ -294,7 +294,7 @@ class Engine:
                           must_not: list[str] | tuple = ()) -> DataFrame:
         """Boolean-clause top-k (Lucene ``BooleanQuery``): ``should``
         terms score, ``must`` terms all required (non-scoring filters),
-        ``must_not`` excludes. One pruned postings scan + one kernel
+        ``must_not`` excludes. One filtered postings read + one kernel
         stage for all three clause sets; statistics memoized on the
         union of the clause terms."""
         from .operators.wand import topk_bm25_index_boolean

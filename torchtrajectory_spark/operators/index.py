@@ -41,7 +41,11 @@ segmented, resumable Spark job:
   ``IndexSnapshot`` (``open_snapshot``): one listing of the committed
   manifest markers and tombstone generations fixes the segment set the
   statistics, dictionary, postings, doc_stats and tombstones are read
-  over, and the next read after a commit sees it in full.
+  over, and the next read after a commit sees it in full. Queries on a
+  small index (``IndexSnapshot.one_task``) read postings blocks and
+  dictionary rows with pyarrow, filtered to the query terms' buckets and
+  terms (``_read_bucketed``): postings inside the query's one task, the
+  dictionary on the driver.
 
 At 10^12-file scale: S = O(10^4) segments, B = O(10^3) buckets; every stage
 is bounded by segment x bucket, nothing ever collects postings to the
@@ -63,6 +67,7 @@ from functools import partial, reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,6 +91,17 @@ POSTINGS_SCHEMA = (
 # the analog of the reference's parallel ``*_pos.compressed`` file,
 # ``InvertedIndex.java:117``).
 POSTINGS_POS_SCHEMA = POSTINGS_SCHEMA + ", poss binary"
+TERMS_SCHEMA = "bucket int, term string, df bigint"
+# the same columns' Arrow types, for the pyarrow reads of these tables
+# (``_read_bucketed``)
+ARROW_COLUMNS = pa.schema([
+    ("bucket", pa.int32()), ("term", pa.string()), ("salt", pa.int32()),
+    ("block_id", pa.int32()), ("n_docs", pa.int32()),
+    ("first_doc", pa.int64()), ("last_doc", pa.int64()),
+    ("max_tf", pa.int32()), ("min_dl", pa.int64()),
+    ("doc_gaps", pa.binary()), ("tfs", pa.binary()), ("dls", pa.binary()),
+    ("poss", pa.binary()), ("df", pa.int64()),
+])
 
 EMIT_SCHEMA = "term string, doc_id bigint, tf int, dl bigint"
 EMIT_POS_SCHEMA = EMIT_SCHEMA + ", positions array<int>"
@@ -105,6 +121,14 @@ def _stage_schema(with_positions: bool) -> str:
 def bucket_of(term: str, buckets: int) -> int:
     """crc32-based term bucket — identical in Python and Spark (F.crc32)."""
     return zlib.crc32(term.encode("utf-8")) % buckets
+
+
+def _query_buckets(terms, buckets: int) -> tuple[list[str], list[int]]:
+    """(the sorted distinct ``terms``, their sorted buckets): the two
+    sides of the bucket+term filter every query read of a bucketed table
+    (postings, terms) applies."""
+    q = sorted({str(t) for t in terms})
+    return q, sorted({bucket_of(t, buckets) for t in q})
 
 
 @dataclass
@@ -756,7 +780,6 @@ def _build_and_commit(spark: SparkSession, tagged: DataFrame,
 
 
 STAGING_DIRNAME = "_staging"
-TERMS_SCHEMA = "bucket int, term string, df bigint"
 
 
 def _payload_bytes(columns) -> Column:
@@ -942,7 +965,6 @@ def _write_terms_sorted_driver(seg_terms: str, dst: str) -> None:
     segment artifact. Only taken when the segment vocabulary fits one
     target file (``TERMS_SORTED_ROWS_PER_FILE``) and the active table
     format is plain parquet."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     parts = [
@@ -993,8 +1015,6 @@ def _write_manifest_row(pdf: pd.DataFrame, path: str) -> None:
     (:func:`_write_table_driver`) — a whole Spark job for one row is
     pure fixed cost (~0.5s/segment that shows up directly in the
     N-vs-4N scaling ratio)."""
-    import pyarrow as pa
-
     _write_table_driver(pa.Table.from_pandas(pdf, preserve_index=False),
                         path)
 
@@ -1051,8 +1071,6 @@ def _rehome_segments(spark: SparkSession, src_dir: str, dst: "IndexPaths",
     new id and committed LAST via the same atomic rename as a build, so
     concurrent readers never see a half-appended segment. Returns the
     number of segments re-homed."""
-    import pyarrow as pa
-
     src = IndexPaths(src_dir)
     markers = _read_markers(src.manifest)
     new = start_seg
@@ -1336,6 +1354,17 @@ def _atomic_write(df: DataFrame, path: str) -> None:
     os.replace(tmp, path)
 
 
+def _parquet_files(d: str) -> list[os.DirEntry]:
+    """The parquet data files of directory ``d``, by name; none if ``d``
+    does not exist."""
+    try:
+        with os.scandir(d) as it:
+            return sorted((e for e in it if e.name.endswith(".parquet")
+                           and e.name[0] not in "_."), key=lambda e: e.name)
+    except FileNotFoundError:
+        return []
+
+
 def _committed_marker_names(manifest_dir: str) -> list[str]:
     """Strictly-committed manifest marker dir names (``segment=<n>``).
 
@@ -1392,10 +1421,10 @@ _MARKER_RE = re.compile(r"segment=\d+")
 class IndexSnapshot:
     """One committed state of an index: ``segments`` (the committed
     segment ids) and ``tombstones`` (sorted deleted doc_ids, or None).
-    Its config, DataFrames, corpus scalars and ``memo`` (``IndexMeta``
-    per term set or expansion) are built lazily over exactly
-    ``segments``, and a snapshot that differs only in tombstones shares
-    them: masking changes no statistic."""
+    Its config, DataFrames, corpus scalars, per-segment file lists and
+    ``memo`` (``IndexMeta`` per term set or expansion) are built lazily
+    over exactly ``segments``, and a snapshot that differs only in
+    tombstones shares them: masking changes no statistic."""
 
     spark: SparkSession
     root: str
@@ -1424,7 +1453,7 @@ class IndexSnapshot:
     def with_positions(self) -> bool:
         return bool(self.config.get("with_positions"))
 
-    def _once(self, key: str, build):
+    def _once(self, key, build):
         if key not in self._lazy:
             self._lazy[key] = build()
         return self._lazy[key]
@@ -1482,14 +1511,54 @@ class IndexSnapshot:
         return self._once("scalars",
                           lambda: wand._corpus_scalars(self.spark, self))
 
+    def files(self, kind: str) -> dict[int, list[str]]:
+        """Each segment's parquet files of ``kind`` (``postings``,
+        ``terms``), listed once: the file lists :func:`_read_bucketed`
+        reads. A committed segment without a ``kind`` directory (a
+        zero-posting segment re-homed by ``_rehome_segments``) lists
+        none. With no committed segment it raises the historical
+        PATH_NOT_FOUND, as the Spark read of ``kind`` does."""
+        def build():
+            if not self.segments:
+                self._read(kind)  # raises: nothing committed
+            return {s: [e.path for e in _parquet_files(self._seg_dir(kind, s))]
+                    for s in self.segments}
+        return self._once(("files", kind), build)
+
+    def one_task(self) -> bool:
+        """Whether the snapshot's postings files are one task's worth of
+        data by Spark's own measure: their sizes sum to at most
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` (read from
+        the session on each call), the size AQE coalesces a shuffle's
+        partitions to. Queries then read the postings in one task and
+        the dictionary on the driver, with pyarrow. That read decodes
+        every row group it opens, so its cost grows with the index; up
+        to this size it beat or tied Spark's parquet scan in every
+        measurement (EXPLAIN.md). The listing stops at the first segment
+        past the cap."""
+        cap = int(self.spark.sparkContext._jvm.org.apache.spark.network
+                  .util.JavaUtils.byteStringAsBytes(self.spark.conf.get(
+                      "spark.sql.adaptive.advisoryPartitionSizeInBytes")))
+
+        def build():
+            left = cap
+            for s in self.segments:
+                for e in _parquet_files(self._seg_dir("postings", s)):
+                    left -= e.stat().st_size
+                if left < 0:
+                    return False
+            return True
+        return self._once(("one_task", cap), build)
+
+    def _seg_dir(self, kind: str, s: int) -> str:
+        return os.path.join(self.root, kind, f"segment={s}")
+
     def term_filter(self, terms) -> Column:
         """The predicate selecting ``terms``' rows of a bucketed table
         (postings, terms): the crc32 bucket under the index's own bucket
         count, then the term, both pushed into the parquet scan."""
-        q = sorted({str(t) for t in terms})
-        return (F.col("bucket").isin(sorted({bucket_of(t, self.buckets)
-                                             for t in q}))
-                & F.col("term").isin(q))
+        q, bs = _query_buckets(terms, self.buckets)
+        return F.col("bucket").isin(bs) & F.col("term").isin(q)
 
 
 # one snapshot per (Spark application, index path), replaced when the
@@ -1621,7 +1690,6 @@ def delete_docs(spark: SparkSession, index_dir: str, doc_ids) -> int:
     count in df/avgdl until ``compact_index`` purges them (documented
     Lucene-parity semantics; the ``topk_bm25_deleted`` vs
     ``topk_bm25_purged`` oracle pair pins both sides)."""
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     if isinstance(doc_ids, DataFrame):
@@ -1688,6 +1756,28 @@ def drop_docs(df: DataFrame, ids: np.ndarray | None) -> DataFrame:
 
 def read_postings(spark: SparkSession, index_dir: str) -> DataFrame:
     return open_snapshot(spark, index_dir).postings
+
+
+def _read_bucketed(files: list[str], terms, buckets: int, cols):
+    """THE query-side read of a bucketed table (postings blocks, the
+    terms dictionary): the rows of ``terms`` in the parquet ``files``
+    (from ``IndexSnapshot.files``), as a pyarrow Table of ``cols``. Read
+    in this process, no Spark job: the crc32 bucket and the term are
+    pushed into the read as a filter, and only ``cols`` are projected.
+    A query's task reads its postings with it and the driver reads the
+    dictionary with it, both on the calling thread: a Spark task slot
+    is one core, and on the driver a pyarrow thread pool did not speed
+    up the read. An empty ``files`` reads zero rows of the same column
+    types."""
+    import pyarrow.dataset as ds
+
+    q, bs = _query_buckets(terms, buckets)
+    schema = pa.schema([ARROW_COLUMNS.field(c) for c in
+                        dict.fromkeys(("bucket", "term", *cols))])
+    return ds.dataset(list(files), schema=schema, format="parquet").to_table(
+        columns=list(cols),
+        filter=ds.field("bucket").isin(bs) & ds.field("term").isin(q),
+        use_threads=False)
 
 
 def read_terms(spark: SparkSession, index_dir: str) -> DataFrame:

@@ -5,9 +5,12 @@ Distributed re-expression of T-Torch's flagship top-k scan
 
 reference (single JVM)                      -> this engine (Spark)
 --------------------------------------------------------------------------
-posting probe per query edge  (J1)          -> parquet scan filtered to
-                                               query terms + their crc32
-                                               buckets (partition pruning)
+posting probe per query edge  (J1)          -> postings read filtered to
+                                               the query terms + their
+                                               crc32 buckets: by the task
+                                               itself (pyarrow) on a small
+                                               index, else a pruned
+                                               parquet scan
 UB(doc) = sum of matched term weights (A2)  -> per-segment numpy UB
                                                accumulation from block-max
                                                metadata (idf * tf_sat(max_tf,
@@ -30,10 +33,10 @@ heap pop                      (T7)          -> per-segment top-k ->
 Every indexed query runs on one core (Lucene's Weight/Scorer split,
 Koios' bound-then-verify loop with pluggable candidate rules):
 
-* ``_per_segment`` — the driver prologue: term meta, the bucket+term
-  pruned postings scan, the tombstone set (all from one index snapshot,
-  ``index.open_snapshot``), and one per-segment ``applyInPandas`` (or a
-  cogroup with a doc_stats side frame);
+* ``_per_segment`` — the driver prologue: term meta, the tombstone set
+  and the postings (all from one index snapshot, ``index.open_snapshot``),
+  and the per-segment kernel over each segment's bucket+term filtered
+  blocks (restricted by a doc_stats side frame when there is one);
   ``_topk_merge`` is the global (score DESC, doc_id ASC) merge.
 * ``_memo_meta`` — term statistics, memoized in the snapshot
   (``IndexSnapshot.memo``) per term set (``query_term_meta``) or per
@@ -47,10 +50,14 @@ Koios' bound-then-verify loop with pluggable candidate rules):
   UB-pruned theta scan (with a searchAfter cursor), all live matches, or
   at least m clauses matched.
 
-The index is doc-sharded into segments; each segment task runs the whole
-pruned scan locally over numpy arrays (one ``applyInPandas`` group per
-segment), then Spark merges the tiny per-segment top-k lists. At 10^12-file
-scale parallelism = number of segments; no stage ever materializes more
+The index is doc-sharded into segments; each segment's kernel runs the
+whole pruned scan locally over numpy arrays, then Spark merges the tiny
+per-segment top-k lists. An index whose postings are one task's worth of
+data (``IndexSnapshot.one_task``) is queried by one task that reads the
+blocks itself: a warm query is one Spark job with one stage and no
+shuffle. A larger one is scanned by Spark and its blocks grouped by
+segment (one ``applyInPandas`` group per segment): at 10^12-file scale
+parallelism = number of segments, and no stage ever materializes more
 than the query terms' postings for one segment.
 """
 
@@ -69,6 +76,7 @@ from pyspark.sql import functions as F
 from ..config import BM25_B, BM25_K1, DEFAULT_K
 from ..functions.bm25 import idf_py, tf_sat_expr, tf_sat_np
 from .index import (
+    _read_bucketed,
     _read_markers,
     decode_blocks,
     open_snapshot,
@@ -100,8 +108,8 @@ def _corpus_scalars(spark: SparkSession, index_dir) -> tuple[float, float]:
 def _memo_meta(snap, key, read) -> IndexMeta:
     """The snapshot's term statistics under ``key`` (a term set, or an
     expansion's (kind, pattern, cap)), held in ``snap.memo``:
-    ``read()`` — a term -> df dictionary read, the one Spark job — runs
-    on a miss only, so warm repeats are driver-side dict hits."""
+    ``read()`` — a term -> df dictionary read — runs on a miss only, so
+    warm repeats are driver-side dict hits."""
     meta = snap.memo.get(key)
     if meta is None:
         meta = snap.memo[key] = IndexMeta(*snap.scalars, read())
@@ -109,8 +117,19 @@ def _memo_meta(snap, key, read) -> IndexMeta:
 
 
 def _read_term_df(snap, terms: list[str]) -> dict:
-    """The uncached dictionary read: df of ``terms`` from the terms
-    table, the bucket+term predicates pushed into the scan."""
+    """The uncached dictionary read: df of ``terms``, summed over the
+    snapshot's segments, the bucket+term filter pushed into the read.
+    A small index (``IndexSnapshot.one_task``) is read on the driver
+    through the one reader of bucketed tables
+    (:func:`index._read_bucketed`), with no Spark job; a larger one by a
+    Spark scan of the terms table."""
+    if snap.one_task():
+        t = _read_bucketed(
+            [f for fs in snap.files("terms").values() for f in fs], terms,
+            snap.buckets, ("term", "df"))
+        g = t.group_by("term").aggregate([("df", "sum")])
+        return dict(zip(g["term"].to_pylist(),
+                        map(float, g["df_sum"].to_pylist())))
     dfs = (
         snap.terms.where(snap.term_filter(terms))
         .groupBy("term").agg(F.sum("df").alias("df"))
@@ -160,29 +179,68 @@ def _per_segment(spark: SparkSession, index_dir: str, q: list[str],
     the index (``index_dir`` is a path or an ``IndexSnapshot``).
 
     For a scoring query, takes the term meta of ``q`` from the
-    snapshot's memo (``query_term_meta``). Scans ``q``'s postings blocks
-    with the bucket+term predicates pushed into parquet and only
-    ``cols`` projected, and runs ``kernel(blocks, meta, dead)`` once per
-    segment, ``blocks`` without the ``segment`` column and ``dead`` the
-    snapshot's tombstones. A ``side`` frame (rows carrying ``segment``,
-    e.g. doc_stats) cogroups with the blocks per segment instead, and
-    the kernel gets the segment's side rows as a fourth argument."""
+    snapshot's memo (``query_term_meta``). Then runs ``kernel(blocks,
+    meta, dead)`` once per segment that holds blocks of ``q``, where
+    ``dead`` is the snapshot's tombstones and ``blocks`` is that
+    segment's blocks of ``q``, ``cols`` only. A ``side`` frame (rows
+    carrying ``segment``, e.g. doc_stats) restricts the kernel to its
+    segments' docs: the kernel gets the segment's side rows as a fourth
+    argument, and a segment without side rows returns nothing.
+
+    A small index (``IndexSnapshot.one_task``, e.g. the perfbench
+    reference index) is read by the task itself: ONE task reads every
+    segment's blocks with :func:`index._read_bucketed` (the bucket+term
+    filter pushed into the read) and runs the kernels; the plan is a
+    ``mapInPandas`` over a one-row range, one stage, and no postings row
+    passes through the JVM or a shuffle. With a side frame, the side is
+    grouped by segment and each group's task reads its own segment's
+    blocks (empty ones for a segment without blocks of ``q``), so only
+    the side shuffles; a segment with blocks but no side rows is not
+    called, which returns the same rows.
+
+    A larger index keeps the Spark parquet scan: pyarrow decodes every
+    row group it opens, so the task's read grows with the index, where
+    the scan's cost stayed flat (EXPLAIN.md). The blocks are scanned
+    with the bucket+term predicates pushed down and grouped (or
+    cogrouped with the side) by segment."""
     snap = open_snapshot(spark, index_dir)
     meta = query_term_meta(spark, snap, q) if scored else None
-    blocks = snap.postings.where(snap.term_filter(q)).select(
-        "segment", *cols)
     dead = snap.tombstones
+    if not snap.one_task():
+        scan = snap.postings.where(snap.term_filter(q)).select(
+            "segment", *cols)
+        if side is None:
+            def run_scan(pdf: pd.DataFrame) -> pd.DataFrame:
+                return kernel(pdf.drop(columns=["segment"]), meta, dead)
+
+            return scan.groupBy("segment").applyInPandas(run_scan, schema)
+
+        def run_cogroup(pdf: pd.DataFrame,
+                        rows: pd.DataFrame) -> pd.DataFrame:
+            return kernel(pdf.drop(columns=["segment"]), meta, dead, rows)
+
+        return scan.groupBy("segment").cogroup(
+            side.groupBy("segment")).applyInPandas(run_cogroup, schema)
+
+    files, buckets = snap.files("postings"), snap.buckets
+
+    def blocks(s: int) -> pd.DataFrame:
+        return _read_bucketed(files[s], q, buckets, cols).to_pandas()
+
     if side is None:
-        def run(pdf: pd.DataFrame) -> pd.DataFrame:
-            return kernel(pdf.drop(columns=["segment"]), meta, dead)
+        def run(batches):
+            for _ in batches:  # the range's one row
+                for s in files:
+                    blk = blocks(s)
+                    if len(blk):
+                        yield kernel(blk, meta, dead)
 
-        return blocks.groupBy("segment").applyInPandas(run, schema)
+        return spark.range(0, 1, 1, 1).mapInPandas(run, schema)
 
-    def run_side(pdf: pd.DataFrame, rows: pd.DataFrame) -> pd.DataFrame:
-        return kernel(pdf.drop(columns=["segment"]), meta, dead, rows)
+    def run_side(rows: pd.DataFrame) -> pd.DataFrame:
+        return kernel(blocks(int(rows["segment"].iloc[0])), meta, dead, rows)
 
-    return blocks.groupBy("segment").cogroup(
-        side.groupBy("segment")).applyInPandas(run_side, schema)
+    return side.groupBy("segment").applyInPandas(run_side, schema)
 
 
 def _topk_merge(df: DataFrame, k: int) -> DataFrame:
@@ -450,9 +508,9 @@ def topk_bm25_index(
     ``F.col("lang").isin("en")``) restricts heap membership while scores
     keep index-wide statistics — F2-in-the-loop
     (``EdgeInvertedIndex.java:155``). The allowed-doc set is pushed into
-    the doc_stats scan and COGROUPED per segment into the same pruned
-    scorer, so theta-pruning survives the filter; ``after`` composes
-    (Lucene searchAfter with a filter clause)."""
+    the doc_stats scan and brought per segment to the segment's blocks
+    in the same pruned scorer, so theta-pruning survives the filter;
+    ``after`` composes (Lucene searchAfter with a filter clause)."""
     q = _terms(query_terms)
     if boosts is not None:
         bad = {t: w for t, w in boosts.items() if not float(w) > 0}
@@ -507,9 +565,10 @@ def topk_bm25_index_many(
     score-identical to ``topk_bm25_index`` run alone (tested). The win
     over a per-query loop is structural, not incidental:
 
-    * ONE postings scan covers the union of all queries' terms
-      (bucket+term pushed filters, one job instead of one per query);
-    * ONE term-meta lookup job for all terms;
+    * ONE postings read covers the union of all queries' terms
+      (bucket+term filtered, one job instead of one per query);
+    * ONE term-meta lookup for all terms (driver-side, with no job, on
+      a small index);
     * within each segment task every term's blocks are decoded ONCE and
       shared across the queries that reference it (reference workloads'
       query sets share hot terms heavily);
@@ -579,14 +638,14 @@ def topk_bm25_index_boolean(
     ``should`` must be non-empty — a pure-filter query is
     ``bool_and_index_blocks``' job, not a ranking.
 
-    ONE bucket+term-pruned postings scan covers the union of all three
+    ONE bucket+term-filtered postings read covers the union of all three
     clause sets and ONE per-segment kernel resolves them: the must /
     must_not terms' docID streams decode into an allowed set
     (intersection) and an extra blocked set (union, merged with the
     tombstones), then the standard pruned scan runs over the should
     blocks with heap membership restricted — theta-pruning stays fully
     effective under the clauses (same shape as the metadata-filtered
-    path, without the doc_stats cogroup).
+    path, without the doc_stats side frame).
     """
     from .boolean import decode_match_docs
 
